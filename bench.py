@@ -21,274 +21,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import medallion_architecture_using_apache_iceberg_table_buckets_spark as mats
+from __spark_entry__ import queries
 from medallion_architecture_using_apache_iceberg_table_buckets_spark.operators import (
-    llm_queries as L,
     relational as R,
 )
 
-HEADLINE = {
-    "q1_pricing_summary": R.q1_pricing_summary,
-    "q3_shipping_priority": R.q3_shipping_priority,
-    "q5_region_revenue": R.q5_region_revenue,
-    "w1_latest_per_key": R.w1_latest_per_key,
-    "o1_topk_latest": R.o1_topk_latest,
-    "join_broadcast_brand_stats": R.join_broadcast_brand_stats,
-    "agg_rollup_orders": R.agg_rollup_orders,
-    "asof_click_purchase": R.asof_click_purchase,
-    "events_daily_summary": R.events_daily_summary,
-    "medallion_merge_state": R.medallion_merge_state,
-    "dedup_minhash_lsh_pairs": L.dedup_minhash_lsh_pairs,
-    "dedup_simhash_pairs": L.dedup_simhash_pairs,
-    "ann_bruteforce_topk": L.ann_bruteforce_topk,
-    "text_quality": L.text_quality,
-    # round-3 additions: cover the newer machinery so regressions in
-    # it show up in the per-round bench record
-    "dedup_embedding_lsh_pairs": L.dedup_embedding_lsh_pairs,
-    "string_distance_pairs": L.string_distance_pairs,
-    "sql_dispatch_pipeline": L.sql_dispatch_pipeline,
-    "sql_ctas_time_travel": L.sql_ctas_time_travel,
-    "range_join_incidents": L.range_join_incidents,
-    "text_top_ngrams": L.text_top_ngrams,
-    # round-3 curation surface: group closure (iterative), quality
-    # filter, TF-IDF, chunk+pack, z-order key
-    "dedup_components": L.dedup_components,
-    "text_quality_filter": L.text_quality_filter,
-    "text_tfidf_topk": L.text_tfidf_topk,
-    "pack_training_sequences": L.pack_training_sequences,
-    "zorder_cluster_events": L.zorder_cluster_events,
-    # round-3 TPC-H sweep + decontamination: the heaviest of the new
-    # shapes (fact-fact late join, outer-join histogram, disjunctive
-    # residual join, double-correlated semi/anti, 8-gram broadcast probe)
-    "q12_late_lines_by_status": R.q12_late_lines_by_status,
-    "q13_customer_order_distribution": R.q13_customer_order_distribution,
-    "q19_disjunctive_predicates": R.q19_disjunctive_predicates,
-    "q21_waiting_supplier": R.q21_waiting_supplier,
-    "text_decontaminate": L.text_decontaminate,
-    # round-4 fold-in: the rest of the registry's heavy/representative
-    # tail, so a regression in any rotated-out query moves a recorded
-    # number, not just an oracle. (Trivial scans and the streaming
-    # drains — availableNow checkpoint setup dominates their time —
-    # stay out; the oracle mirror covers them.)
-    "q4_priority_late_exists": R.q4_priority_late_exists,
-    "q6_forecast_revenue": R.q6_forecast_revenue,
-    "q7_volume_shipping": R.q7_volume_shipping,
-    "q8_market_share": R.q8_market_share,
-    "q10_returned_items": R.q10_returned_items,
-    "q14_promo_revenue_share": R.q14_promo_revenue_share,
-    "q15_top_supplier": R.q15_top_supplier,
-    "q17_small_quantity_revenue": R.q17_small_quantity_revenue,
-    "q18_large_orders": R.q18_large_orders,
-    "q22_dormant_customers": R.q22_dormant_customers,
-    "join_semi_big_spenders": R.join_semi_big_spenders,
-    "join_anti_never_ordered": R.join_anti_never_ordered,
-    "agg_cube_status_priority": R.agg_cube_status_priority,
-    "agg_percentiles": R.agg_percentiles,
-    "dedup_exact_groups": L.dedup_exact_groups,
-    "dedup_ngram_jaccard_pairs": L.dedup_ngram_jaccard_pairs,
-    "dedup_embedding_pairs_brute": L.dedup_embedding_pairs_brute,
-    "ann_lsh_topk": L.ann_lsh_topk,
-    "ann_ivf_topk": L.ann_ivf_topk,
-    "skew_salted_agg": L.skew_salted_agg,
-    "medallion_gold_mart": L.medallion_gold_mart,
-    "curation_end_to_end": L.curation_end_to_end,
-    "sample_mixture_documents": L.sample_mixture_documents,
-    "sketch_hll_rollup_merge": L.sketch_hll_rollup_merge,
-    "sketch_quantiles": L.sketch_quantiles,
-    # round-4 additions
-    "text_repetition_scores": L.text_repetition_scores,
-    "text_leakage_safe_split": L.text_leakage_safe_split,
-    # round-5 additions: real image decode + ANN recall evidence
-    "multimodal_decode_image": L.multimodal_decode_image,
-    # NOTE: since r6 this trains all four ANN variants (LSH, IVF,
-    # PQ, IVF-PQ) against the brute ground truth in one query —
-    # ~12s at sf0.1 is four quantizer trainings' worth of QUALITY
-    # evidence, not a hot-path regression (each variant's own
-    # search-path time is its separate bench entry).
-    "ann_recall_at_k": L.ann_recall_at_k,
-    # round-5 TPC-H completion (derived-partsupp shapes) + PII scrub
-    # + paragraph dedup
-    "q2_min_cost_supplier": R.q2_min_cost_supplier,
-    "q9_product_type_profit": R.q9_product_type_profit,
-    "q11_important_part_value": R.q11_important_part_value,
-    "q16_parts_supplier_counts": R.q16_parts_supplier_counts,
-    "q20_promotable_suppliers": R.q20_promotable_suppliers,
-    "text_pii_scrub": L.text_pii_scrub,
-    "text_paragraph_dedup": L.text_paragraph_dedup,
-    "text_token_rarity": L.text_token_rarity,
-    "dedup_containment_pairs": L.dedup_containment_pairs,
-    "dedup_incremental_probe": L.dedup_incremental_probe,
-    "corpus_data_card": L.corpus_data_card,
-    "multimodal_decode_audio": L.multimodal_decode_audio,
-    "multimodal_decode_video": L.multimodal_decode_video,
-    # round-5 late additions: theta set algebra, KLL rollup-merge,
-    # branch-staged WAP, SemDeDup
-    "sketch_theta_set_ops": L.sketch_theta_set_ops,
-    "sketch_kll_rollup_quantiles": L.sketch_kll_rollup_quantiles,
-    "sql_branch_wap": L.sql_branch_wap,
-    "dedup_semantic": L.dedup_semantic,
-    # round-5 final block: position deletes, SCD2 family, mixture
-    # weights, bloom point lookups, changelog gold, sort-order
-    # lineage, partition-spec evolution, BPE induction
-    "position_delete_mor": L.position_delete_mor,
-    "scd2_user_status_history": L.scd2_user_status_history,
-    "scd2_temporal_enrich": L.scd2_temporal_enrich,
-    "corpus_mixture_weights": L.corpus_mixture_weights,
-    "bloom_point_lookup": L.bloom_point_lookup,
-    "incremental_gold_rollup": L.incremental_gold_rollup,
-    "write_ordered_lineage": L.write_ordered_lineage,
-    "partition_evolution_scan": L.partition_evolution_scan,
-    "bpe_vocab_merges": L.bpe_vocab_merges,
-    "ann_pq_topk": L.ann_pq_topk,
-    "type_promotion_scan": L.type_promotion_scan,
-    "cdc_changelog_diff": L.cdc_changelog_diff,
-    "mor_update_positions": L.mor_update_positions,
-    "incremental_join_view": L.incremental_join_view,
-    "text_repeated_spans": L.text_repeated_spans,
-    "range_join_event_windows": R.range_join_event_windows,
-    "table_quality_checks": R.table_quality_checks,
-    "sketch_cms_frequencies": L.sketch_cms_frequencies,
-    # round-6 additions: real PNG decode (zlib inflate + unfilter),
-    # bigram-LM surprisal scoring, composed IVF-PQ search
-    "multimodal_decode_png": L.multimodal_decode_png,
-    "text_ngram_lm_score": L.text_ngram_lm_score,
-    "ann_ivfpq_topk": L.ann_ivfpq_topk,
-    "multimodal_resize_pixels": L.multimodal_resize_pixels,
-    "text_bm25_topk": L.text_bm25_topk,
-    "bpe_encode_tokens": L.bpe_encode_tokens,
-    "sample_weighted_by_source": L.sample_weighted_by_source,
-    # round-7 additions: hybrid BM25+IVFPQ reciprocal-rank fusion,
-    # residual-encoded IVF-PQ, real baseline JPEG codec
-    "hybrid_bm25_ann_topk": L.hybrid_bm25_ann_topk,
-    "ann_ivfpq_residual_topk": L.ann_ivfpq_residual_topk,
-    "multimodal_decode_jpeg": L.multimodal_decode_jpeg,
-    "ann_ivfsq_topk": L.ann_ivfsq_topk,
-    "curation_ccnet_buckets": L.curation_ccnet_buckets,
-    "decontaminate_semantic": L.decontaminate_semantic,
-    "multimodal_audio_features": L.multimodal_audio_features,
-    "multimodal_video_motion": L.multimodal_video_motion,
-    "sample_epoch_shuffle": L.sample_epoch_shuffle,
-    "tokenizer_unigram_vocab": L.tokenizer_unigram_vocab,
-    "tokenizer_unigram_encode": L.tokenizer_unigram_encode,
-    "tokenizer_wordpiece_vocab": L.tokenizer_wordpiece_vocab,
-    "tokenizer_wordpiece_encode": L.tokenizer_wordpiece_encode,
-    "sample_doremi_mixture": L.sample_doremi_mixture,
-    "curation_nb_classifier": L.curation_nb_classifier,
-    "text_cdc_chunks": L.text_cdc_chunks,
-    "dedup_cdc_chunk_pairs": L.dedup_cdc_chunk_pairs,
-    "dedup_keep_best_quality": L.dedup_keep_best_quality,
-    "metadata_agg_pushdown": L.metadata_agg_pushdown,
-    # round-8 additions: MOR-count manifest fold, paletted PNG decode
-    "metadata_agg_mor_count": L.metadata_agg_mor_count,
-    "multimodal_decode_png_palette": L.multimodal_decode_png_palette,
-    "text_sparse_retrieval_topk": L.text_sparse_retrieval_topk,
-    "sample_dsir_selection": L.sample_dsir_selection,
-    "text_kn_lm_score": L.text_kn_lm_score,
-    "multimodal_decode_gif": L.multimodal_decode_gif,
-    "multimodal_decode_mulaw": L.multimodal_decode_mulaw,
-    "text_phrase_retrieval": L.text_phrase_retrieval,
-    "metadata_ndv_sketch": L.metadata_ndv_sketch,
-    "maintenance_rewrite_posdeletes": L.maintenance_rewrite_posdeletes,
-    "events_funnel": R.events_funnel,
-    "events_cohort_retention": R.events_cohort_retention,
-    "sample_temperature_mixture": L.sample_temperature_mixture,
-    "graph_pagerank_dedup": L.graph_pagerank_dedup,
-    "ann_matryoshka_recall": L.ann_matryoshka_recall,
-    "ann_index_health": L.ann_index_health,
-    "text_langid_confusion": L.text_langid_confusion,
-    "dedup_source_matrix": L.dedup_source_matrix,
-    # round-9 additions: ExactSubstr verbatim dedup, Adam7 PNG,
-    # winnowing (MOSS) fingerprints + pairs, encoding screen, robust
-    # outliers, reservoir sampling, novelty, cluster histogram,
-    # cosine range search, attribution, funnel latency, Heaps curve,
-    # channel stats, LTV deciles, SQL views
-    "dedup_exact_substr_pairs": L.dedup_exact_substr_pairs,
-    "multimodal_decode_png_interlaced": L.multimodal_decode_png_interlaced,
-    "text_winnowing_fingerprints": L.text_winnowing_fingerprints,
-    "text_mojibake_score": L.text_mojibake_score,
-    "text_length_outliers": L.text_length_outliers,
-    "sample_reservoir_source": L.sample_reservoir_source,
-    "dedup_ngram_novelty": L.dedup_ngram_novelty,
-    "dedup_cluster_size_histogram": L.dedup_cluster_size_histogram,
-    "ann_range_search": L.ann_range_search,
-    "events_attribution": R.events_attribution,
-    "events_funnel_latency": R.events_funnel_latency,
-    "dedup_winnowing_pairs": L.dedup_winnowing_pairs,
-    "corpus_heaps_law": L.corpus_heaps_law,
-    "multimodal_channel_stats": L.multimodal_channel_stats,
-    "events_user_ltv_deciles": R.events_user_ltv_deciles,
-    "sql_view_dispatch": L.sql_view_dispatch,
-    "dedup_exact_substr_removal": L.dedup_exact_substr_removal,
-    "multimodal_decode_png16": L.multimodal_decode_png16,
-    "multimodal_decode_png_sub8": L.multimodal_decode_png_sub8,
-    # round-10 additions: within-doc ExactSubstr unified removal,
-    # winnowing pairs closed to components, interlaced GIF decode,
-    # plus three previously-unbenched non-trivial entries folded in
-    # (the r9 verdict's bench-coverage audit)
-    "dedup_exact_substr_self": L.dedup_exact_substr_self,
-    "dedup_winnowing_components": L.dedup_winnowing_components,
-    "multimodal_decode_gif_interlaced": L.multimodal_decode_gif_interlaced,
-    "sessionize_events": R.sessionize_events,
-    "mor_merge_compact": L.mor_merge_compact,
-    "maintenance_procedures": L.maintenance_procedures,
-    "retrieval_hard_negatives": L.retrieval_hard_negatives,
-    "dedup_prefix_filter_pairs": L.dedup_prefix_filter_pairs,
-    "dedup_exact_substr_apply": L.dedup_exact_substr_apply,
-    "graph_triangle_count": L.graph_triangle_count,
-    "text_feature_hashing": L.text_feature_hashing,
-    "dedup_lsh_recall": L.dedup_lsh_recall,
-    "multimodal_decode_qoi": L.multimodal_decode_qoi,
-    "source_webdataset_roundtrip": L.source_webdataset_roundtrip,
-    "embedding_gram_matrix": L.embedding_gram_matrix,
-    "events_markov_transitions": R.events_markov_transitions,
-    "dedup_minhash_estimator_error": L.dedup_minhash_estimator_error,
-    "text_source_divergence": L.text_source_divergence,
-    "multimodal_transcode_qoi": L.multimodal_transcode_qoi,
-    "corpus_token_budget": L.corpus_token_budget,
-    # round-10 third window: association mining, robust anomaly
-    # screen, governance audits, and the three new codec families
-    "events_basket_lift": R.events_basket_lift,
-    "events_rfm_segments": R.events_rfm_segments,
-    "events_rolling_mad_anomaly": R.events_rolling_mad_anomaly,
-    "events_user_diversity": R.events_user_diversity,
-    "events_kanonymity": R.events_kanonymity,
-    "dedup_split_leakage": L.dedup_split_leakage,
-    "multimodal_decode_adpcm": L.multimodal_decode_adpcm,
-    "multimodal_decode_tiff": L.multimodal_decode_tiff,
-    "multimodal_decode_tga": L.multimodal_decode_tga,
-    "events_churn_hazard": R.events_churn_hazard,
-    "graph_kcore_dedup": L.graph_kcore_dedup,
-    "dedup_image_phash_pairs": L.dedup_image_phash_pairs,
-    "dedup_image_phash_components": L.dedup_image_phash_components,
-    "text_segment_ttr": L.text_segment_ttr,
-    # round-11 additions: incremental IVF index maintenance (new-batch
-    # assignment to stale centroids + full-corpus drift audit) and
-    # incremental dup-group components (supernode contraction)
-    "ann_incremental_ivf_append": L.ann_incremental_ivf_append,
-    "dedup_incremental_components": L.dedup_incremental_components,
-    # round-12 additions: the sampled-history staleness audit (the
-    # O(|hist|/m + |batch|) configuration a scheduled maintenance job
-    # runs — benched next to the exact audit so the saving is a
-    # recorded number, not a docstring claim) and the delta output
-    # contract (only changed+new labels, the MERGE-able upsert set —
-    # benched next to the full-rewrite mode for the same reason)
-    "ann_incremental_ivf_sampled": L.ann_incremental_ivf_sampled,
-    "dedup_incremental_delta": L.dedup_incremental_delta,
-    # the statistics members of the incremental family: stored
-    # gram-count table merged by one batch-only pass, and the
-    # maintained per-slice data card (touched-slices-only upsert)
-    "lm_incremental_gram_update": L.lm_incremental_gram_update,
-    "card_incremental_update": L.card_incremental_update,
-    # the retrieval member: BM25 answered from the maintained
-    # (appended per-doc index + additively merged stats) artifacts
-    "retrieval_incremental_bm25": L.retrieval_incremental_bm25,
-    # LASER-style margin-based bitext mining: one probe-shard
-    # broadcast scan, two neighborhood windows, exact-integer margins
-    "mine_bitext_margin": L.mine_bitext_margin,
-}
-
-# Registry entries deliberately NOT benched, each with its reason (the
-# no-silent-caps rule: the bench record carries this list verbatim so
-# coverage is auditable). Classes:
+# Registry entries deliberately NOT benched, each with its reason; every
+# other entry is benched (the no-silent-caps rule: the bench record
+# carries this list verbatim so coverage is auditable). Classes:
 #   trivial    — single-scan / scalar-expression / one-window shapes
 #                whose cost is a strict subset of a benched query;
 #                `sibling` names the benched query that covers the
@@ -345,6 +85,12 @@ EXCLUDED_REASONS = {
     "streaming_incremental_grams": ("streaming", None),
 }
 
+# every registry entry not excluded above, sorted by name so that
+# reordering the registry never reorders the bench
+HEADLINE = {
+    n: fn for n, fn in sorted(queries().items()) if n not in EXCLUDED_REASONS
+}
+
 # the 14 queries recorded since round 1 — their sum is the anchored
 # baseline comparison (BASELINE.md: r01 = 20.605s at sf0.1)
 R01_SUBSET = [
@@ -383,28 +129,8 @@ QUERY_CONF = {
 
 
 def audited_exclusions() -> dict:
-    """Cross-check HEADLINE against the live registry: every registry
-    entry is either benched or carries an explicit reason in
-    EXCLUDED_REASONS — a new query landing in __spark_entry__ without
-    a bench decision fails the bench run loudly instead of silently
-    shrinking coverage. Returns {name: 'class:sibling-or-'} for the
-    record."""
-    import __spark_entry__ as entrymod
-
-    registry = set(entrymod.queries())
-    benched = set(HEADLINE)
-    unbenched = registry - benched
-    undocumented = sorted(unbenched - set(EXCLUDED_REASONS))
-    stale = sorted(set(EXCLUDED_REASONS) - unbenched)
-    if undocumented:
-        raise SystemExit(
-            f"bench coverage gap: {undocumented} are in the registry "
-            "but neither benched nor excluded-with-reason"
-        )
-    if stale:
-        raise SystemExit(
-            f"stale EXCLUDED_REASONS entries (now benched or gone): {stale}"
-        )
+    """{name: 'class:sibling-or-'} for every EXCLUDED_REASONS entry, so
+    the record states what was not benched and why."""
     return {
         name: f"{cls}:{sib}" if sib else cls
         for name, (cls, sib) in sorted(EXCLUDED_REASONS.items())
@@ -423,9 +149,7 @@ def sample_excluded(spark, sf_dir: str) -> dict:
     $SPARK_GRAFT_EXCL_CHUNK."""
     import glob
 
-    import __spark_entry__ as entrymod
-
-    registry = entrymod.queries()
+    registry = queries()
     names = sorted(EXCLUDED_REASONS)
     here = os.path.dirname(os.path.abspath(__file__))
     default_chunk = len(glob.glob(os.path.join(here, "BENCH_r[0-9][0-9].json")))
@@ -476,67 +200,9 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warmup: JIT/codegen + file listing + whole-stage-codegen compile
-    # for an agg-shaped plan, not measured
-    force(R.a1_count_star(spark, sf_dir))
-    force(R.q1_pricing_summary(spark, sf_dir))
-
-    # environment probe recorded WITH the numbers: median wall time of
-    # a trivial 1-partition SQL count job. A healthy local-mode JVM
-    # schedules this in ~10-30 ms; this box has been observed at
-    # 50-150 ms (PLANS.md bench-environment note), which inflates
-    # every stage/job-count-heavy query by (jobs x this latency)
-    # while leaving data-path queries untouched — read cross-round
-    # per-query deltas against this number.
-    probes = []
-    for _ in range(9):
-        t0 = time.perf_counter()
-        spark.range(0, 1, 1, 1).count()
-        probes.append(time.perf_counter() - t0)
-    sched_probe_ms = round(sorted(probes)[len(probes) // 2] * 1000, 1)
-
-    times: dict[str, float] = {}
-    spreads: dict[str, float] = {}
-    n_jobs: dict[str, int] = {}
-    sc = spark.sparkContext
-    for name, fn in HEADLINE.items():
-        overrides = QUERY_CONF.get(name, {})
-        saved = {k: spark.conf.get(k) for k in overrides}
-        for k, v in overrides.items():
-            spark.conf.set(k, v)
-        try:
-            # min of three runs: steady-state time, robust to
-            # background load spikes on a shared box (single runs
-            # varied +/-20%, ~+/-1.5s on the suite total).
-            # clearCache between runs so operators that persist
-            # intermediates don't get a free warm-cache second run.
-            runs, run_jobs = [], []
-            for i in range(3):
-                spark.catalog.clearCache()
-                # one job group per run: the status tracker then
-                # yields this run's Spark JOB COUNT, so cross-round
-                # per-query deltas can be corrected to
-                # wall - n_jobs x sched_probe (scheduler-latency
-                # adjudication by arithmetic, not argument). Jobs
-                # launched from OTHER threads (streaming drains)
-                # don't inherit the group and undercount — none of
-                # the headline queries are streaming.
-                group = f"{name}#run{i}"
-                sc.setJobGroup(group, name)
-                t0 = time.perf_counter()
-                force(fn(spark, sf_dir))
-                runs.append(time.perf_counter() - t0)
-                run_jobs.append(
-                    len(sc.statusTracker().getJobIdsForGroup(group))
-                )
-            best = min(range(len(runs)), key=runs.__getitem__)
-            times[name] = round(runs[best], 3)
-            spreads[name] = round(max(runs) - min(runs), 3)
-            n_jobs[name] = run_jobs[best]
-        finally:
-            sc.setJobGroup("", "")
-            for k, v in saved.items():
-                spark.conf.set(k, v)
+    timed = time_queries(spark, sf_dir, HEADLINE)
+    times = timed["queries"]
+    sched_probe_ms = timed["sched_probe_ms"]
 
     total = round(sum(times.values()), 3)
     # anchored comparison: same 14 queries recorded every round
@@ -545,7 +211,7 @@ def main() -> None:
     # protocol: per-query min of 3 cache-cleared runs; spread =
     # max-min observed, so round-over-round diffs smaller than the
     # spread are box noise, not regressions
-    spread = round(sum(spreads.values()), 3)
+    spread = round(sum(timed["query_spread"].values()), 3)
 
     # Truncation-proofing (BENCH_r04 lost its headline `value` when the
     # 57-query line outgrew the driver's tail-capture window, which keeps
@@ -562,8 +228,8 @@ def main() -> None:
         "protocol": "min-of-3, clearCache between runs",
         "excluded": audited_exclusions(),
         "queries": times,
-        "query_spread": spreads,
-        "query_n_jobs": n_jobs,
+        "query_spread": timed["query_spread"],
+        "query_n_jobs": timed["query_n_jobs"],
         "excluded_sampled": excluded_sampled,
         "value_r01_subset": r01_subset,
         "spread": spread,
@@ -618,6 +284,82 @@ def main() -> None:
         "n_queries": len(times),
     }
     print(json.dumps(compact))
+
+
+def time_queries(spark, sf_dir: str, names) -> dict:
+    """Warm up, probe the scheduler, then time each named HEADLINE
+    query as the min of three cache-cleared runs with its QUERY_CONF
+    overrides. Returns the per-query seconds, spreads and Spark job
+    counts plus the probe's median, keyed as in the bench record."""
+    # warmup: JIT/codegen + file listing + whole-stage-codegen compile
+    # for an agg-shaped plan, not measured
+    force(R.a1_count_star(spark, sf_dir))
+    force(R.q1_pricing_summary(spark, sf_dir))
+
+    # environment probe recorded WITH the numbers: median wall time of
+    # a trivial 1-partition SQL count job. A healthy local-mode JVM
+    # schedules this in ~10-30 ms; this box has been observed at
+    # 50-150 ms (PLANS.md bench-environment note), which inflates
+    # every stage/job-count-heavy query by (jobs x this latency)
+    # while leaving data-path queries untouched — read cross-round
+    # per-query deltas against this number.
+    probes = []
+    for _ in range(9):
+        t0 = time.perf_counter()
+        spark.range(0, 1, 1, 1).count()
+        probes.append(time.perf_counter() - t0)
+    sched_probe_ms = round(sorted(probes)[len(probes) // 2] * 1000, 1)
+
+    times: dict[str, float] = {}
+    spreads: dict[str, float] = {}
+    n_jobs: dict[str, int] = {}
+    sc = spark.sparkContext
+    for name in names:
+        fn = HEADLINE[name]
+        overrides = QUERY_CONF.get(name, {})
+        saved = {k: spark.conf.get(k) for k in overrides}
+        for k, v in overrides.items():
+            spark.conf.set(k, v)
+        try:
+            # min of three runs: steady-state time, robust to
+            # background load spikes on a shared box (single runs
+            # varied +/-20%, ~+/-1.5s on the suite total).
+            # clearCache between runs so operators that persist
+            # intermediates don't get a free warm-cache second run.
+            runs, run_jobs = [], []
+            for i in range(3):
+                spark.catalog.clearCache()
+                # one job group per run: the status tracker then
+                # yields this run's Spark JOB COUNT, so cross-round
+                # per-query deltas can be corrected to
+                # wall - n_jobs x sched_probe (scheduler-latency
+                # adjudication by arithmetic, not argument). Jobs
+                # launched from OTHER threads (streaming drains)
+                # don't inherit the group and undercount — none of
+                # the headline queries are streaming.
+                group = f"{name}#run{i}"
+                sc.setJobGroup(group, name)
+                t0 = time.perf_counter()
+                force(fn(spark, sf_dir))
+                runs.append(time.perf_counter() - t0)
+                run_jobs.append(
+                    len(sc.statusTracker().getJobIdsForGroup(group))
+                )
+            best = min(range(len(runs)), key=runs.__getitem__)
+            times[name] = round(runs[best], 3)
+            spreads[name] = round(max(runs) - min(runs), 3)
+            n_jobs[name] = run_jobs[best]
+        finally:
+            sc.setJobGroup("", "")
+            for k, v in saved.items():
+                spark.conf.set(k, v)
+
+    return {
+        "queries": times,
+        "query_spread": spreads,
+        "query_n_jobs": n_jobs,
+        "sched_probe_ms": sched_probe_ms,
+    }
 
 
 if __name__ == "__main__":

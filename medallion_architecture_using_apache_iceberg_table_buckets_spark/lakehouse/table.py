@@ -1264,43 +1264,17 @@ class Table:
         relies on."""
         base = self._current_version()
         cur = self._load(base)
-        df = self._read_files(
-            spark, touched, self.schema, attach_pos=True
+        df = self._anti_join_deleted(
+            spark,
+            cur,
+            self._read_files(spark, touched, self.schema, attach_pos=True),
         )
-        dels = self._position_deletes_df(spark, cur)
-        if dels is not None:
-            df = df.join(
-                dels,
-                (F.col(self.POS_FILE_COL) == dels["file_name"])
-                & (F.col(self.POS_POS_COL) == dels["pos"]),
-                "left_anti",
-            )
-        positions = (
-            df.filter(F.expr(condition))
-            .select(
+        added = self._write_position_deletes(
+            df.filter(F.expr(condition)).select(
                 F.col(self.POS_FILE_COL).alias("file_name"),
                 F.col(self.POS_POS_COL).alias("pos"),
             )
-            # spec-style clustering: Iceberg requires position deletes
-            # sorted by (file_path, pos) so readers can merge-stream.
-            # No pinned partition count: AQE coalesces the usual tiny
-            # delete set to one part, while a delete-most-rows commit
-            # on a huge table still fans out
-            .repartitionByRange("file_name", "pos")
-            .sortWithinPartitions("file_name", "pos")
         )
-        batch = uuid.uuid4().hex[:12]
-        staging = self.root / f"_staging-{batch}"
-        positions.write.mode("overwrite").parquet(str(staging))
-        added: list[str] = []
-        for rel in _list_parquet(staging):
-            dest_rel = f"posdel-{batch}-{Path(rel).name}"
-            os.replace(staging / rel, self.data_root / dest_rel)
-            added.append(dest_rel)
-        shutil.rmtree(staging, ignore_errors=True)
-        # keep only non-empty delete parts (a no-match predicate on a
-        # touched file produces an empty part)
-        added = [f for f in added if _file_rows(self.data_root / f) > 0]
         if not added:
             return cur
         return self._next_snapshot(
@@ -1382,36 +1356,18 @@ class Table:
         schema = schema_from_json(cur.schema_json)
         names = [f.name for f in schema.fields]
         by_name = {f.name: f for f in schema.fields}
-        df = self._read_files(spark, touched, schema, attach_pos=True)
-        dels = self._position_deletes_df(spark, cur)
-        if dels is not None:
-            df = df.join(
-                dels,
-                (F.col(self.POS_FILE_COL) == dels["file_name"])
-                & (F.col(self.POS_POS_COL) == dels["pos"]),
-                "left_anti",
-            )
+        df = self._anti_join_deleted(
+            spark,
+            cur,
+            self._read_files(spark, touched, schema, attach_pos=True),
+        )
         matched = df.filter(F.expr(condition)).persist()
-        positions = (
+        del_added = self._write_position_deletes(
             matched.select(
                 F.col(self.POS_FILE_COL).alias("file_name"),
                 F.col(self.POS_POS_COL).alias("pos"),
             )
-            .repartitionByRange("file_name", "pos")
-            .sortWithinPartitions("file_name", "pos")
         )
-        batch = uuid.uuid4().hex[:12]
-        staging = self.root / f"_staging-{batch}"
-        positions.write.mode("overwrite").parquet(str(staging))
-        del_added: list[str] = []
-        for rel in _list_parquet(staging):
-            dest_rel = f"posdel-{batch}-{Path(rel).name}"
-            os.replace(staging / rel, self.data_root / dest_rel)
-            del_added.append(dest_rel)
-        shutil.rmtree(staging, ignore_errors=True)
-        del_added = [
-            f for f in del_added if _file_rows(self.data_root / f) > 0
-        ]
         if not del_added:
             matched.unpersist()
             return cur
@@ -1920,24 +1876,58 @@ class Table:
             "file_name string, pos long"
         ).parquet(*paths)
 
-    def _apply_position_deletes(
+    def _anti_join_deleted(
         self, spark: SparkSession, snap: Snapshot, df: DataFrame
     ) -> DataFrame:
         """Anti-join the attach-column'd ``df`` against the snapshot's
-        live position deletes, then strip the attach columns. The
-        delete side is tiny relative to the table in the intended
-        regime (surgical deletes on a huge table) — AQE broadcasts it;
-        no pinned broadcast so a pathological delete-most-rows case
-        still plans a shuffle join."""
+        live position deletes, keeping the attach columns. The delete
+        side is tiny relative to the table in the intended regime
+        (surgical deletes on a huge table) — AQE broadcasts it; no
+        pinned broadcast so a pathological delete-most-rows case still
+        plans a shuffle join."""
         dels = self._position_deletes_df(spark, snap)
-        if dels is not None:
-            df = df.join(
-                dels,
-                (F.col(self.POS_FILE_COL) == dels["file_name"])
-                & (F.col(self.POS_POS_COL) == dels["pos"]),
-                "left_anti",
-            )
-        return df.drop(self.POS_FILE_COL, self.POS_POS_COL)
+        if dels is None:
+            return df
+        return df.join(
+            dels,
+            (F.col(self.POS_FILE_COL) == dels["file_name"])
+            & (F.col(self.POS_POS_COL) == dels["pos"]),
+            "left_anti",
+        )
+
+    def _apply_position_deletes(
+        self, spark: SparkSession, snap: Snapshot, df: DataFrame
+    ) -> DataFrame:
+        """_anti_join_deleted, then strip the attach columns."""
+        return self._anti_join_deleted(spark, snap, df).drop(
+            self.POS_FILE_COL, self.POS_POS_COL
+        )
+
+    def _write_position_deletes(
+        self, positions: DataFrame, tag: str = ""
+    ) -> list[str]:
+        """Write (file_name, pos) rows as position-delete files
+        ``posdel-<batch>-<tag><part>`` under data/ and return the
+        non-empty ones (a no-match predicate on a touched file
+        produces an empty part)."""
+        # spec-style clustering: Iceberg requires position deletes
+        # sorted by (file_path, pos) so readers can merge-stream.
+        # No pinned partition count: AQE coalesces the usual tiny
+        # delete set to one part, while a delete-most-rows commit
+        # on a huge table still fans out
+        positions = positions.repartitionByRange(
+            "file_name", "pos"
+        ).sortWithinPartitions("file_name", "pos")
+        batch = uuid.uuid4().hex[:12]
+        staging = self.root / f"_staging-{batch}"
+        positions.write.mode("overwrite").parquet(str(staging))
+        added: list[str] = []
+        for rel in _list_parquet(staging):
+            dest_rel = f"posdel-{batch}-{tag}{Path(rel).name}"
+            os.replace(staging / rel, self.data_root / dest_rel)
+            added.append(dest_rel)
+        shutil.rmtree(staging, ignore_errors=True)
+        return [f for f in added if _file_rows(self.data_root / f) > 0]
 
     def _read_live(
         self,
@@ -2825,18 +2815,14 @@ class Table:
                 "run compact() first"
             )
         schema = schema_from_json(snap.schema_json)
-        df = self._read_files(
-            spark, snap.files, schema,
-            renames=self._snap_renames(snap), attach_pos=True,
+        df = self._anti_join_deleted(
+            spark,
+            snap,
+            self._read_files(
+                spark, snap.files, schema,
+                renames=self._snap_renames(snap), attach_pos=True,
+            ),
         )
-        dels = self._position_deletes_df(spark, snap)
-        if dels is not None:
-            df = df.join(
-                dels,
-                (F.col(self.POS_FILE_COL) == dels["file_name"])
-                & (F.col(self.POS_POS_COL) == dels["pos"]),
-                "left_anti",
-            )
         # basename -> rel path (the broadcast-map shape _resolve_mor
         # uses; basenames are uuid-unique)
         rel_rows = [(f.rsplit("/", 1)[-1], f) for f in snap.files]
@@ -2887,21 +2873,9 @@ class Table:
         cur = self._load(base)
         if len(cur.delete_files) <= 1:
             return cur
-        merged = (
-            self._position_deletes_df(spark, cur)
-            .repartitionByRange("file_name", "pos")
-            .sortWithinPartitions("file_name", "pos")
+        added = self._write_position_deletes(
+            self._position_deletes_df(spark, cur), "consolidated-"
         )
-        batch = uuid.uuid4().hex[:12]
-        staging = self.root / f"_staging-{batch}"
-        merged.write.mode("overwrite").parquet(str(staging))
-        added: list[str] = []
-        for rel in _list_parquet(staging):
-            dest_rel = f"posdel-{batch}-consolidated-{Path(rel).name}"
-            os.replace(staging / rel, self.data_root / dest_rel)
-            added.append(dest_rel)
-        shutil.rmtree(staging, ignore_errors=True)
-        added = [f for f in added if _file_rows(self.data_root / f) > 0]
         return self._next_snapshot(
             "rewrite-deletes",
             cur.files,

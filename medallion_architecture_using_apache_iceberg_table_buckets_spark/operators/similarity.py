@@ -723,20 +723,15 @@ def pq_train_encode(
     # rows with their subvector payloads) is replaced by a map-side-
     # combining min_by over the same candidates: each task emits one
     # scalar row per (vec_id, subspace), k_sub-fold fewer shuffled
-    # rows, no sort, at any scale. The encoded ordering is exact: _d
-    # is round-6 quantized so round(_d * 1e6) is an exact integer,
-    # 131072 > any code, and minimizing d6 * 131072 + code picks the
-    # same (lowest distance, lowest code) winner as the window's
-    # (_d asc, code asc) row_number — bit-identical codes.
+    # rows, no sort, at any scale. Ordering by the struct (_d, code)
+    # picks the same (lowest distance, lowest code) winner as the
+    # window's (_d asc, code asc) row_number — bit-identical codes,
+    # with no assumption on the range of distances or codes.
     j = subs.join(F.broadcast(codebooks), "subspace").withColumn(
         "_d", F.round(l2sq_expr("sv", "cv", sub_dim), 6)
     )
-    enc = (
-        F.round(F.col("_d") * 1e6).cast("long") * F.lit(131072)
-        + F.col("code")
-    )
     codes = j.groupBy("vec_id", "subspace").agg(
-        F.min_by("code", enc).alias("code")
+        F.min_by("code", F.struct("_d", "code")).alias("code")
     ).select("vec_id", "subspace", "code")
     return codebooks, codes
 

@@ -58,12 +58,15 @@ TEXTS = [
 
 
 def test_matches_textbook_reference(spark):
-    got = [
-        (r["rank"], r["left"], r["right"], r["merged"], r["pair_count"])
-        for r in bpe_learn(spark, _docs(spark, TEXTS), num_merges=8)
-        .orderBy("rank").collect()
-    ]
-    assert got == _reference_bpe(TEXTS, 8)
+    # 8 stays below bpe_learn's rank-16 lineage checkpoint, 20 crosses it
+    for num_merges in (8, 20):
+        got = [
+            (r["rank"], r["left"], r["right"], r["merged"], r["pair_count"])
+            for r in bpe_learn(spark, _docs(spark, TEXTS), num_merges=num_merges)
+            .orderBy("rank").collect()
+        ]
+        assert got == _reference_bpe(TEXTS, num_merges)
+    assert len(got) >= 17
 
 
 def test_overlapping_runs_merge_left_to_right(spark):

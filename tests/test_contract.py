@@ -18,6 +18,19 @@ def test_query_count_floor():
     assert len(entry.queries()) >= 100
 
 
+def test_bench_decisions_name_live_queries():
+    # HEADLINE is derived from queries(); every hand-written bench
+    # decision must still name a registry entry it applies to
+    import bench
+
+    headline = set(bench.HEADLINE)
+    assert set(bench.EXCLUDED_REASONS) <= set(entry.queries())
+    siblings = {sib for _, sib in bench.EXCLUDED_REASONS.values() if sib}
+    assert siblings <= headline, siblings - headline
+    assert set(bench.QUERY_CONF) <= headline
+    assert set(bench.R01_SUBSET) <= headline
+
+
 def test_sorted_compaction_clusters(spark, tmp_path):
     from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse import Catalog
 

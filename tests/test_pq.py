@@ -33,6 +33,31 @@ def test_codebooks_and_codes_shape(spark):
     ).count() == 0
 
 
+def test_codes_are_argmin_at_large_distances(spark):
+    """Code assignment assumes no range of distances: with vectors
+    scaled so squared subvector distances pass 1e8, every stored code
+    is still the (lowest distance, lowest code) brute-force argmin."""
+    emb = _emb(spark).filter(F.col("vec_id") < 100).select(
+        "vec_id", F.transform("embedding", lambda x: x * 1e5).alias("embedding")
+    )
+    cb, codes = pq_train_encode(emb, n_subspaces=4, k_sub=16, dim=64)
+    books = {(r["subspace"], r["code"]): r["cv"] for r in cb.collect()}
+    vecs = {r["vec_id"]: r["embedding"] for r in emb.collect()}
+    got = {(r["vec_id"], r["subspace"]): r["code"] for r in codes.collect()}
+    assert len(got) == 4 * len(vecs)
+    top = 0.0
+    for (v, s), code in got.items():
+        sv = vecs[v][s * 16 : (s + 1) * 16]
+        d = {
+            c: sum((a - b) ** 2 for a, b in zip(sv, cv))
+            for (bs, c), cv in books.items()
+            if bs == s
+        }
+        assert code == min(d, key=lambda c: (d[c], c)), (v, s)
+        top = max(top, d[code])
+    assert top > 1e8
+
+
 def test_pq_is_deterministic(spark):
     emb = _emb(spark)
     q = emb.filter(F.col("vec_id") < 5)

@@ -1,9 +1,7 @@
-"""Focused re-measurement harness for optimization work: times a
-NAMED SUBSET of bench.py's HEADLINE queries with the identical
-protocol (noop sink, min-of-3, clearCache between runs, per-query
-conf overrides, job-group job counts) so before/after numbers are
-directly comparable to the committed BENCH records without paying
-for the full 200-query suite on every iteration.
+"""Times a NAMED SUBSET of bench.py's HEADLINE queries with bench.py's
+own loop (bench.time_queries), so before/after numbers compare
+directly with the committed BENCH records without running the whole
+suite on every iteration.
 
 Usage: python tools/bench_subset.py q1_pricing_summary dedup_components ...
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
@@ -16,15 +14,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
 import medallion_architecture_using_apache_iceberg_table_buckets_spark as mats
-from medallion_architecture_using_apache_iceberg_table_buckets_spark.operators import (
-    relational as R,
-)
 
 
 def main() -> None:
@@ -38,51 +32,8 @@ def main() -> None:
         extra_conf={"spark.ui.retainedJobs": "100000"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    bench.force(R.a1_count_star(spark, sf_dir))
-    bench.force(R.q1_pricing_summary(spark, sf_dir))
-    probes = []
-    for _ in range(9):
-        t0 = time.perf_counter()
-        spark.range(0, 1, 1, 1).count()
-        probes.append(time.perf_counter() - t0)
-    sched_probe_ms = round(sorted(probes)[len(probes) // 2] * 1000, 1)
-
-    times, spreads, n_jobs = {}, {}, {}
-    sc = spark.sparkContext
-    for name in names:
-        fn = bench.HEADLINE[name]
-        overrides = bench.QUERY_CONF.get(name, {})
-        saved = {k: spark.conf.get(k) for k in overrides}
-        for k, v in overrides.items():
-            spark.conf.set(k, v)
-        try:
-            runs, run_jobs = [], []
-            for i in range(3):
-                spark.catalog.clearCache()
-                group = f"{name}#run{i}"
-                sc.setJobGroup(group, name)
-                t0 = time.perf_counter()
-                bench.force(fn(spark, sf_dir))
-                runs.append(time.perf_counter() - t0)
-                run_jobs.append(
-                    len(sc.statusTracker().getJobIdsForGroup(group))
-                )
-            best = min(range(len(runs)), key=runs.__getitem__)
-            times[name] = round(runs[best], 3)
-            spreads[name] = round(max(runs) - min(runs), 3)
-            n_jobs[name] = run_jobs[best]
-        finally:
-            sc.setJobGroup("", "")
-            for k, v in saved.items():
-                spark.conf.set(k, v)
-
-    print(json.dumps({
-        "queries": times,
-        "query_spread": spreads,
-        "query_n_jobs": n_jobs,
-        "sched_probe_ms": sched_probe_ms,
-        "total": round(sum(times.values()), 3),
-    }))
+    rec = bench.time_queries(spark, sf_dir, names)
+    print(json.dumps({**rec, "total": round(sum(rec["queries"].values()), 3)}))
 
 
 if __name__ == "__main__":
