@@ -27,6 +27,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .catalog import Catalog
 from .merge import merge_into
 
@@ -436,8 +437,8 @@ class SqlSession:
             self.catalog.create_namespace(self._ns_of(m.group(1)))
             return self._empty()
         if _SHOW_NS.match(s):
-            return self.spark.createDataFrame(
-                [(ns,) for ns in self.catalog.namespaces()],
+            return local_frame(
+                self.spark, [(ns,) for ns in self.catalog.namespaces()],
                 "namespace string",
             )
         if m := _USE.match(s):
@@ -450,8 +451,8 @@ class SqlSession:
             ns = self._ns_of(m.group(1)) if m.group(1) else self.namespace
             if ns is None:
                 raise ValueError("SHOW TABLES needs USE <ns> or IN <ns>")
-            return self.spark.createDataFrame(
-                [(ns, t, False) for t in self.catalog.tables(ns)],
+            return local_frame(
+                self.spark, [(ns, t, False) for t in self.catalog.tables(ns)],
                 "namespace string, tableName string, isTemporary boolean",
             )
         if m := _DROP_TABLE.match(s):
@@ -485,8 +486,8 @@ class SqlSession:
             if ns is None:
                 raise ValueError("SHOW VIEWS needs USE <ns> or IN <ns>")
             rows = [(ns, v) for v in sorted(self.catalog.views(ns))]
-            return self.spark.createDataFrame(
-                rows or [], "namespace string, viewName string"
+            return local_frame(
+                self.spark, rows or [], "namespace string, viewName string"
             )
         if m := _ALTER.match(s):
             return self._alter_table(m)
@@ -513,7 +514,7 @@ class SqlSession:
         if m := _TRUNCATE.match(s):
             ns, name = self._table_of(m.group(1))
             t = self.catalog.table(ns, name)
-            t.overwrite(self.spark.createDataFrame([], t.schema))
+            t.overwrite(local_frame(self.spark, [], t.schema))
             return self._empty()
         if m := _UPDATE.match(s):
             ns, name = self._table_of(m.group(1))
@@ -877,8 +878,8 @@ class SqlSession:
             stmt += "\nTBLPROPERTIES (\n  " + ",\n  ".join(
                 f"'{k}' = '{props[k]}'" for k in sorted(props)
             ) + ")"
-        return self.spark.createDataFrame(
-            [(stmt,)], "createtab_stmt string"
+        return local_frame(
+            self.spark, [(stmt,)], "createtab_stmt string"
         )
 
     # -- DESCRIBE ------------------------------------------------------
@@ -891,8 +892,8 @@ class SqlSession:
         if t.partition_by:
             rows.append(("# Partition Information", "", None))
             rows.extend((spec, "", None) for spec in t.partition_by)
-        return self.spark.createDataFrame(
-            rows, "col_name string, data_type string, comment string"
+        return local_frame(
+            self.spark, rows, "col_name string, data_type string, comment string"
         )
 
     # -- CALL procedures (Iceberg system-procedure parity) -------------
@@ -923,8 +924,8 @@ class SqlSession:
         t = self.catalog.table(ns, name)
         if proc == "rewrite_position_delete_files":
             snap = t.rewrite_position_deletes(self.spark)
-            return self.spark.createDataFrame(
-                [(len(snap.delete_files),)],
+            return local_frame(
+                self.spark, [(len(snap.delete_files),)],
                 "rewritten_delete_files_count int",
             )
         if proc == "expire_snapshots":
@@ -947,8 +948,8 @@ class SqlSession:
             expired = t.expire_snapshots(
                 keep_last=keep, older_than_ms=older_ms
             )
-            return self.spark.createDataFrame(
-                [(i,) for i in expired], "expired_snapshot_id long"
+            return local_frame(
+                self.spark, [(i,) for i in expired], "expired_snapshot_id long"
             )
         if proc in ("rewrite_data_files", "compact"):
             tp = _val("target_partitions", 1)
@@ -991,14 +992,14 @@ class SqlSession:
                 raise ValueError(
                     f"unknown rewrite strategy {strategy!r} (binpack, sort, zorder)"
                 )
-            return self.spark.createDataFrame(
-                [(len(t.current_snapshot().files),)], "data_files long"
+            return local_frame(
+                self.spark, [(len(t.current_snapshot().files),)], "data_files long"
             )
         if proc in ("remove_orphan_files", "vacuum"):
             older = float(_val("older_than_seconds", 1, "3600"))
             removed = t.vacuum(older_than_seconds=older)
-            return self.spark.createDataFrame(
-                [(p,) for p in removed] or [], "orphan_file_location string"
+            return local_frame(
+                self.spark, [(p,) for p in removed] or [], "orphan_file_location string"
             )
         if proc in ("rollback_to_snapshot", "set_current_snapshot"):
             sid = _val("snapshot_id", 1)
@@ -1014,7 +1015,8 @@ class SqlSession:
             # (what current_snapshot()/time travel see afterwards) is a
             # different id; it rides along in the engine-specific third
             # column.
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(
                     prev,
                     int(snap.summary.get("rolled_back_to", snap.snapshot_id)),
@@ -1041,8 +1043,8 @@ class SqlSession:
                 )
             prev = t.current_snapshot().snapshot_id
             snap = t.fast_forward(to)
-            return self.spark.createDataFrame(
-                [(target, prev, snap.snapshot_id)],
+            return local_frame(
+                self.spark, [(target, prev, snap.snapshot_id)],
                 "branch_updated string, previous_ref long, updated_ref long",
             )
         raise ValueError(

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schema import schema_from_json, schema_to_json
+from ..session import local_frame
 
 SNAPSHOT_DIR = "snapshots"
 DATA_DIR = "data"
@@ -538,8 +539,8 @@ class Table:
         for name in sorted(self.refs()):
             r = self.refs()[name]
             rows.append((name, r["type"], r["snapshot_id"]))
-        return spark.createDataFrame(
-            rows, "name string, type string, snapshot_id long"
+        return local_frame(
+            spark, rows, "name string, type string, snapshot_id long"
         )
 
     # ------------------------------------------------------------------
@@ -870,7 +871,7 @@ class Table:
             return spark.range(1).select(
                 F.lit(0).cast("long").alias("approx_distinct")
             )
-        mdf = spark.createDataFrame([(b,) for b in blobs], "hb string")
+        mdf = local_frame(spark, [(b,) for b in blobs], "hb string")
         return mdf.agg(
             F.hll_sketch_estimate(
                 F.hll_union_agg(F.unbase64(F.col("hb")))
@@ -958,8 +959,8 @@ class Table:
         if not idents or not files:
             return files
 
-        empty = spark.createDataFrame(
-            [], T.StructType([by_name[t.col] for t in idents])
+        empty = local_frame(
+            spark, [], T.StructType([by_name[t.col] for t in idents])
         )
         probe_cols = {t.col for t in idents}
         outside = [c for c in by_name if c not in probe_cols]
@@ -1011,8 +1012,8 @@ class Table:
             for i, key in enumerate(keys)
         ]
         raw_cols = [f"_raw_{t.col}" for t in idents]
-        pdf = spark.createDataFrame(
-            rows,
+        pdf = local_frame(
+            spark, rows,
             T.StructType(
                 [T.StructField(c, T.StringType()) for c in raw_cols]
                 + [T.StructField("_pidx", T.IntegerType(), False)]
@@ -1155,7 +1156,7 @@ class Table:
                 T.StructField(f"_max_{j}", T.StringType()),
                 T.StructField(f"_has_{j}", T.BooleanType(), False),
             ]
-        sdf = spark.createDataFrame(rows, T.StructType(fields))
+        sdf = local_frame(spark, rows, T.StructType(fields))
         keep = F.lit(True)
         for j, (col, op, lit) in enumerate(supported):
             dt = by_name[col].dataType.simpleString()
@@ -1474,7 +1475,7 @@ class Table:
             for f, v in self._file_sequence().items()
             if f in set(snap.files)
         ]
-        seq_df = spark.createDataFrame(seq_rows, "base_name string, _seq long")
+        seq_df = local_frame(spark, seq_rows, "base_name string, _seq long")
         base_name = F.element_at(F.split(F.input_file_name(), "/"), -1)
         if not pre_based:
             df = df.withColumn("_base", base_name)
@@ -1759,7 +1760,7 @@ class Table:
         extra work; the signature is derived from the path alone so
         it survives snapshot expiry."""
         if not files:
-            df = spark.createDataFrame([], schema)
+            df = local_frame(spark, [], schema)
             if attach_pos:
                 df = df.withColumn(
                     self.POS_FILE_COL, F.lit(None).cast("string")
@@ -2165,8 +2166,8 @@ class Table:
         refd: list[str] = []
         if where is not None:
             refd = _word_refs(where, by_name)
-            probe = spark.createDataFrame(
-                [],
+            probe = local_frame(
+                spark, [],
                 T.StructType(
                     [by_name[c] for c in refd]
                     # column-free predicates (WHERE 1=1) still need a
@@ -2319,7 +2320,7 @@ class Table:
                 T.StructField(f"_max_{col}", T.StringType()),
                 T.StructField(f"_nn_{col}", T.LongType(), False),
             ]
-        mdf = spark.createDataFrame(rows, T.StructType(fields))
+        mdf = local_frame(spark, rows, T.StructType(fields))
 
         def typed(raw: str, col: str):
             return F.expr(
@@ -2556,8 +2557,8 @@ class Table:
             (s.timestamp_ms, s.snapshot_id, s.parent_id, True)
             for s in self.snapshots()
         ]
-        df = spark.createDataFrame(
-            rows,
+        df = local_frame(
+            spark, rows,
             "made_current_at_ms long, snapshot_id long, parent_id long, is_current_ancestor boolean",
         )
         return df.withColumn(
@@ -2575,8 +2576,8 @@ class Table:
             )
             for s in self.snapshots()
         ]
-        df = spark.createDataFrame(
-            rows,
+        df = local_frame(
+            spark, rows,
             "committed_at_ms long, snapshot_id long, parent_id long, operation string, summary string",
         )
         return df.withColumn(
@@ -2597,8 +2598,8 @@ class Table:
             for f, content in [(f, 0) for f in snap.files]
             + [(f, 1) for f in snap.delete_files]
         ]
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "file_path string, content int, record_count long, "
             "file_size_in_bytes long",
         )
@@ -2627,8 +2628,8 @@ class Table:
                     len(s.delete_files),
                 )
             )
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "path string, length long, snapshot_id long, "
             "added_data_files_count int, existing_data_files_count int, "
             "deleted_data_files_count int, delete_files_count int",
@@ -2673,8 +2674,8 @@ class Table:
                 (2, snap.snapshot_id,
                  first_seq.get(f, snap.snapshot_id), f, 0, rows_of(f))
             )
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "status int, snapshot_id long, sequence_number long, "
             "file_path string, content int, record_count long",
         )
@@ -2739,8 +2740,8 @@ class Table:
             # partition), which Python won't order against str
             for k, a in sorted(agg.items(), key=lambda kv: str(kv[0]))
         ]
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "partition map<string,string>, data_file_count long, "
             "record_count long, total_data_file_size_in_bytes long, "
             "position_delete_file_count long, "
@@ -2826,8 +2827,8 @@ class Table:
         # basename -> rel path (the broadcast-map shape _resolve_mor
         # uses; basenames are uuid-unique)
         rel_rows = [(f.rsplit("/", 1)[-1], f) for f in snap.files]
-        rel_df = spark.createDataFrame(
-            rel_rows, "_mc_base string, _file string"
+        rel_df = local_frame(
+            spark, rel_rows, "_mc_base string, _file string"
         )
         return (
             df.join(

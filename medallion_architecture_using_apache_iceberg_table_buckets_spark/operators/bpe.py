@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 END_OF_WORD = "</w>"
 WORD_RE = "[a-z]+"
 
@@ -102,8 +104,8 @@ def bpe_learn(
         # this never fires (the measured r12 two-pass win is unchanged).
         if rank % 16 == 0:
             wf = wf.localCheckpoint()
-    return spark.createDataFrame(
-        merges,
+    return local_frame(
+        spark, merges,
         "rank int, left string, right string, merged string, "
         "pair_count bigint",
     )

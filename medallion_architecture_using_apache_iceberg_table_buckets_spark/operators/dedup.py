@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import normalize_text, word_shingles, words
 from ..functions.vector import cosine_sim
+from ..session import local_frame
 
 # MinHash parameters (shared with the SQL oracles): K signatures in
 # B bands of R rows; universal-hash constants (a*j + b) mod P.
@@ -1610,8 +1611,8 @@ def pagerank_pairs(
     # bounded node set, once per call — not per iteration.
     n_nodes = nodes.count()  # scalar for the teleport term (driver int)
     if n_nodes == 0:
-        return pairs.sparkSession.createDataFrame(
-            [], "node long, pr_nano long, degree long"
+        return local_frame(
+            pairs.sparkSession, [], "node long, pr_nano long, degree long"
         )
     deg = edges.groupBy("src").agg(F.count("*").alias("degree"))
     # all-integer scalars and damping (damping expressed in percent)

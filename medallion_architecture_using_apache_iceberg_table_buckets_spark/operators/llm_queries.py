@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
 from . import dedup as D
 from . import sampling as SA
 from . import similarity as S
@@ -253,8 +254,8 @@ def ann_recall_at_k(spark, sf_dir, k: int = 5):
         .agg(F.count(F.lit(1)).alias("hits"))
     )
     truth = brute.agg(F.count(F.lit(1)).alias("truth"))
-    floors = spark.createDataFrame(
-        sorted(ANN_RECALL_FLOOR.items()), "method string, floor double"
+    floors = local_frame(
+        spark, sorted(ANN_RECALL_FLOOR.items()), "method string, floor double"
     )
     # left join from the 4-row floors frame so a zero-hit method still
     # emits its row (hits=0), exactly like the per-branch aggregates.
@@ -3141,8 +3142,8 @@ def streaming_incremental_grams(spark, sf_dir):
         if os.path.exists(store):
             stored = sess.read.parquet(store)
         else:
-            stored = sess.createDataFrame(
-                [], "gram_type string, w1 string, w2 string, cnt long"
+            stored = local_frame(
+                sess, [], "gram_type string, w1 string, w2 string, cnt long"
             )
         delta = TX.incremental_gram_counts(stored, bdf)
         untouched = stored.join(

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..functions.vector import (
     cosine_from_norms,
     cosine_sim,
@@ -1686,8 +1687,8 @@ def pca_basis(
             (c, d, float(round(v[d], 6))) for d in range(dim)
         )
     spark = df.sparkSession
-    comp = spark.createDataFrame(
-        rows, "component int, dim_idx int, weight double"
+    comp = local_frame(
+        spark, rows, "component int, dim_idx int, weight double"
     )
     return comp, explained
 

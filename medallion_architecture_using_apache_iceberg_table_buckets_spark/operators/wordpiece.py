@@ -47,6 +47,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .bpe import WORD_RE
 
 MAX_WORD_LEN = 16
@@ -205,8 +206,8 @@ def wordpiece_learn(
         if rank % 16 == 0:
             wf = wf.localCheckpoint()
     return (
-        spark.createDataFrame(
-            merges,
+        local_frame(
+            spark, merges,
             "rank int, left string, right string, merged string, "
             "pair_count bigint, left_count bigint, right_count bigint",
         ),

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..lakehouse import Catalog, Table
+from ..session import local_frame
 from .checkpoint import JsonCheckpoint
 
 
@@ -220,8 +221,8 @@ def ingest_raw_to_bronze(
     if not files:
         return 0
     # new_files() returns mtime order -> positional ingest sequence
-    file_seq = spark.createDataFrame(
-        [(strip_scheme(p), i) for i, p in enumerate(files)],
+    file_seq = local_frame(
+        spark, [(strip_scheme(p), i) for i, p in enumerate(files)],
         "input_file string, ingest_seq long",
     )
     df = enrich_for_bronze(

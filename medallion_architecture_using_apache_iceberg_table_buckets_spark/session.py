@@ -16,15 +16,33 @@ Scale notes (100 TB / 1000-executor design intent):
   a high initial number, so this is a floor not a ceiling.
 - Arrow is enabled for the (rare) Pandas-UDF paths so Python
   exchange is columnar, never row-at-a-time pickling.
+- Files a manifest names are listed on the driver, never by a Spark
+  listing job (``LISTING_THRESHOLD``), and driver-side rows become a
+  DataFrame through Arrow (:func:`local_frame`): neither costs a job.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# spark.sql.sources.parallelPartitionDiscovery.threshold: above this
+# many paths Spark lists (stats) them in a distributed job. Table reads
+# pass the files their manifest names, so that job only repeats what
+# the manifest already knows. Measured on a 4-core box with local
+# files (best of 3 schema-given reads): a listing job took 605, 2,575
+# and 8,906 ms at 64, 630 and 2,534 files; driver-side listing took
+# 63, 137 and 376 ms. Never start the job. On an object store with
+# per-call latency the driver pays one round trip per file, which
+# moves the break-even down.
+LISTING_THRESHOLD = 2147483647
 
 
 def get_spark(
@@ -69,7 +87,39 @@ def get_spark(
         # timestamp columns invisible to manifest file skipping
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(LISTING_THRESHOLD),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: Iterable[Sequence],
+    schema: T.StructType | str,
+) -> DataFrame:
+    """DataFrame over driver-side ``rows`` (tuples in field order) with
+    ``schema`` (a ``StructType`` or a DDL string).
+
+    The rows travel as one ``pyarrow.Table``, so no Python-worker task
+    runs when the frame is read (``createDataFrame`` over a Python list
+    pickles the rows and decodes them in a Python-worker job). Each row
+    first passes the type check ``createDataFrame`` applies to Python
+    rows, so whatever it rejects still raises here.
+    """
+    struct = schema if isinstance(schema, T.StructType) else T.DataType.fromDDL(schema)
+    rows = list(rows)
+    verify = T._make_type_verifier(struct)
+    for row in rows:
+        verify(row)
+    arrow_schema = to_arrow_schema(struct)
+    columns = zip(*rows) if rows else [()] * len(struct.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)

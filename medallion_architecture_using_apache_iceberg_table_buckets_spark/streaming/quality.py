@@ -24,6 +24,7 @@ from pyspark.sql import types as T
 
 from ..lakehouse import Catalog
 from ..operators.quality import constraint_report, row_violations
+from ..session import local_frame
 
 METRICS_SCHEMA = T.StructType(
     [
@@ -72,7 +73,7 @@ def monitor_stream(
             (batch_id, r["check"], r["kind"], n_rows, r["n_violations"], r["ok"])
             for r in rep.collect()
         ]
-        metrics = spark.createDataFrame(rows, METRICS_SCHEMA)
+        metrics = local_frame(spark, rows, METRICS_SCHEMA)
         if not catalog.table_exists(namespace, metrics_table):
             catalog.create_table(namespace, metrics_table, METRICS_SCHEMA)
         catalog.table(namespace, metrics_table).append(metrics)

@@ -31,6 +31,31 @@ def test_bench_decisions_name_live_queries():
     assert set(bench.R01_SUBSET) <= headline
 
 
+def test_driver_rows_build_frames_only_through_local_frame():
+    # createDataFrame over Python rows runs a Python-worker job per
+    # read; session.local_frame is the one place it may be called
+    import ast
+    from pathlib import Path
+
+    import medallion_architecture_using_apache_iceberg_table_buckets_spark as mats
+    from medallion_architecture_using_apache_iceberg_table_buckets_spark import session
+
+    session_py = Path(session.__file__)
+    fn = next(
+        n for n in ast.parse(session_py.read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == "local_frame"
+    )
+    root = Path(mats.__file__).parent
+    hits = [
+        f"{path.relative_to(root)}:{i}"
+        for path in sorted(root.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "createDataFrame(" in line
+        and not (path == session_py and fn.lineno <= i <= fn.end_lineno)
+    ]
+    assert hits == [], f"use session.local_frame instead: {hits}"
+
+
 def test_sorted_compaction_clusters(spark, tmp_path):
     from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse import Catalog
 

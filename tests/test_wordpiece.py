@@ -53,34 +53,40 @@ def test_wordpiece_merged_text_drops_inner_marker(spark):
 
 def test_greedy_segmentation_longest_match_and_unk(spark):
     df = spark.createDataFrame(
-        [(i, "banana bandana ban") for i in range(10)],
+        [(i, "banana bandana ban lemon melon yellow") for i in range(10)],
         "doc_id long, text string",
     )
-    merges, _ = wordpiece_learn(spark, df, num_merges=6)
     seed = wp_word_table(df)
-    vocab = set(_vocab(seed, [r["merged"] for r in merges.collect()]))
-    segs = {
-        r["word"]: r["pieces"]
-        for r in _greedy_pieces(seed.select("word", "c"), vocab).collect()
-    }
-    for word, pieces in segs.items():
-        # lossless: concatenated contents reproduce the word
-        joined = "".join(
-            p[2:] if p.startswith("##") else p for p in pieces
-        )
-        assert joined == word, (word, pieces)
-        # only the first piece is word-initial
-        assert not pieces[0].startswith("##")
-        assert all(p.startswith("##") for p in pieces[1:])
-    # a word with a character the vocab never saw -> [UNK]
-    segs2 = {
-        r["word"]: r["pieces"]
-        for r in _greedy_pieces(
-            spark.createDataFrame([("qx", 1)], "word string, c long"),
-            vocab,
-        ).collect()
-    }
-    assert segs2["qx"] == [UNK]
+    runs = {}
+    # 17 merges cross wordpiece_learn's rank-16 lineage checkpoint
+    for num_merges in (6, 17):
+        merges, _ = wordpiece_learn(spark, df, num_merges=num_merges)
+        runs[num_merges] = [tuple(r) for r in merges.collect()]
+        vocab = set(_vocab(seed, [r[3] for r in runs[num_merges]]))
+        segs = {
+            r["word"]: r["pieces"]
+            for r in _greedy_pieces(seed.select("word", "c"), vocab).collect()
+        }
+        for word, pieces in segs.items():
+            # lossless: concatenated contents reproduce the word
+            joined = "".join(
+                p[2:] if p.startswith("##") else p for p in pieces
+            )
+            assert joined == word, (word, pieces)
+            # only the first piece is word-initial
+            assert not pieces[0].startswith("##")
+            assert all(p.startswith("##") for p in pieces[1:])
+        # a word with a character the vocab never saw -> [UNK]
+        segs2 = {
+            r["word"]: r["pieces"]
+            for r in _greedy_pieces(
+                spark.createDataFrame([("qx", 1)], "word string, c long"),
+                vocab,
+            ).collect()
+        }
+        assert segs2["qx"] == [UNK]
+    assert len(runs[17]) >= 17
+    assert runs[17][:6] == runs[6]
 
 
 def test_wordpiece_segment_corpus_contract(spark):
