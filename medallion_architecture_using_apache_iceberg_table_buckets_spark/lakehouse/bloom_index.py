@@ -126,7 +126,7 @@ def prune_files_by_bloom(
     ``col = literal`` AND-conjunct of ``condition``. Probe positions
     are computed by Spark itself (literal cast through the declared
     column type), so build and probe can never disagree on hashing."""
-    from .table import _split_conjuncts
+    from .table import _split_conjuncts, _unwrap_conjunct
 
     index = index if index is not None else load_bloom_index(table)
     if not index or not files:
@@ -135,13 +135,7 @@ def prune_files_by_bloom(
     m, k = index["num_bits"], index["num_hashes"]
     probes: list[tuple[dict, list[int]]] = []
     for conj in _split_conjuncts(condition):
-        c = conj.strip()
-        while c.startswith("(") and c.endswith(")"):
-            inner = c[1:-1].strip()
-            if _split_conjuncts(inner) != [inner]:
-                break
-            c = inner
-        mt = _EQ_RE.match(c)
+        mt = _EQ_RE.match(_unwrap_conjunct(conj))
         if not mt:
             continue
         col, lit = mt.groups()

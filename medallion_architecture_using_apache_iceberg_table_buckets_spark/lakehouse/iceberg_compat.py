@@ -72,7 +72,7 @@ from pyspark.sql import types as T
 
 from ..schema import schema_to_json
 from .table import Snapshot, Table
-from .transforms import parse_spec
+from .transforms import parse_spec, partition_signature, partition_values
 
 _OP_MAP = {
     "create": "append",
@@ -854,20 +854,14 @@ def _partition_value(tr, file_rel: str):
     transforms.partition_segment). None = null partition."""
     import datetime
 
-    from .transforms import HIVE_DEFAULT_PARTITION, unescape_path_name
-
-    prefix = f"{tr.partition_col}="
-    for seg in file_rel.split("/")[:-1]:
-        if seg.startswith(prefix):
-            raw = unescape_path_name(seg[len(prefix):])
-            if raw == HIVE_DEFAULT_PARTITION:
-                return None
-            if tr.kind == "bucket":
-                return int(raw)
-            if tr.kind == "days":
-                return datetime.date.fromisoformat(raw)
-            return raw
-    return None
+    raw = partition_values(file_rel).get(tr.partition_col)
+    if raw is None:
+        return None
+    if tr.kind == "bucket":
+        return int(raw)
+    if tr.kind == "days":
+        return datetime.date.fromisoformat(raw)
+    return raw
 
 
 def _link_rename_if_absent(src, dst) -> bool:
@@ -974,7 +968,6 @@ def export_iceberg_dir(table: Table, dest) -> "Path":
     from pathlib import Path
 
     from ..functions.avro_codec import write_container_file
-    from .transforms import parse_spec
 
     dest = Path(dest)
     meta_dir = dest / "metadata"
@@ -1003,8 +996,7 @@ def export_iceberg_dir(table: Table, dest) -> "Path":
     multi_spec = len(specs) > 1
 
     def _spec_of(rel: str) -> int:
-        sig = tuple(seg.split("=", 1)[0] for seg in rel.split("/")[:-1])
-        return sig_to_spec.get(sig, head_spec_id)
+        return sig_to_spec.get(partition_signature(rel), head_spec_id)
 
 
     # first snapshot each file appeared in = its data sequence number
@@ -1051,19 +1043,7 @@ def export_iceberg_dir(table: Table, dest) -> "Path":
             if missing:
                 import pyarrow as pa
 
-                from .transforms import (
-                    HIVE_DEFAULT_PARTITION,
-                    unescape_path_name,
-                )
-
-                pvals: dict[str, str | None] = {}
-                for seg in f.split("/")[:-1]:
-                    if "=" in seg:
-                        c, v = seg.split("=", 1)
-                        v = unescape_path_name(v)
-                        pvals[c] = (
-                            None if v == HIVE_DEFAULT_PARTITION else v
-                        )
+                pvals = partition_values(f)
                 stypes = {sf.name: sf.dataType.simpleString()
                           for sf in table.schema.fields}
                 for k in missing:

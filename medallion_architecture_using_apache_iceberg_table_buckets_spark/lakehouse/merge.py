@@ -20,7 +20,7 @@ from DataFrame ops so Catalyst owns the physical plan):
    (drop matched rows) unioned with the source's upsert rows
    (update + insert in one pass). Untouched files are carried over in
    the manifest unchanged.
-3. AQE broadcasts the deduped source side when small (the common CDC
+3. The deduped source key set is broadcast to both joins (the CDC
    case: a micro-batch of changed keys vs a huge target).
 
 The caller is responsible for source dedup (one row per key) — the
@@ -30,12 +30,11 @@ reference's dedup-then-merge order (scripts/bronze-silver.py:258-266).
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .table import Snapshot, Table
+from .transforms import parse_spec, partition_segment
 
 # Upper bound on distinct partition-key values collected for discovery
 # pruning; beyond this the merge falls back to an unpruned discovery
@@ -62,7 +61,6 @@ def merge_into(
     source: DataFrame,
     on: str | list[str],
     delete_predicate: str | None = None,
-    broadcast_source: bool = True,
 ) -> Snapshot:
     """Upsert `source` into `table` on key columns `on`.
 
@@ -71,11 +69,9 @@ def merge_into(
     source, e.g. ``"Op = 'D'"``) instead delete their matched target
     rows and are not inserted.
 
-    ``broadcast_source`` (default True) hints the deduped source key
-    set for the touched-file discovery and rewrite joins — the right
-    call for CDC micro-batches (small source vs huge target) and it
-    avoids a probing job. Pass False for bulk merges where the source
-    rivals the target; AQE then picks the strategy from runtime stats.
+    The deduped source key set is broadcast to the touched-file
+    discovery and rewrite joins — the right call for CDC micro-batches
+    (small source vs huge target), and it avoids a probing job.
     """
     keys = [on] if isinstance(on, str) else list(on)
 
@@ -108,8 +104,7 @@ def merge_into(
         # Empty target: MERGE degenerates to INSERT *.
         return table.replace_files([], upsert_rows, operation="merge")
 
-    if broadcast_source:
-        all_keys = F.broadcast(all_keys)
+    all_keys = F.broadcast(all_keys)
 
     # 0. partition pruning for the discovery scan: when a partition
     # transform is a function of the merge keys alone (identity or
@@ -118,8 +113,6 @@ def merge_into(
     # scans those directories. Key-independent transforms (e.g.
     # days(event_ts)) are never pruned: an update may move the row
     # across those partitions.
-    from .transforms import parse_spec, partition_segment
-
     candidate_files = list(snap.files)
     prunable = [t for t in parse_spec(table.partition_by) if t.col in keys]
     if prunable:
@@ -167,17 +160,9 @@ def merge_into(
             ]
 
     # 1. touched-file discovery (column-pruned scan of key + file path)
-    target = table._read_files(spark, candidate_files, table.schema)
-    touched = (
-        target.withColumn("_file", F.input_file_name())
-        .select("_file", *keys)
-        .join(all_keys, keys, "left_semi")
-        .select("_file")
-        .distinct()
-        .collect()
+    touched_rel = table._files_matching(
+        spark, snap, candidate_files, keys=all_keys
     )
-    data_root = str(table.data_root)
-    touched_rel = sorted({_to_rel(r["_file"], data_root) for r in touched})
 
     if not touched_rel:
         # Pure insert: no file rewrite at all, just new files.
@@ -185,22 +170,7 @@ def merge_into(
 
     # 2. rewrite only touched files (live view: any position deletes
     # on them are applied, else the COW rewrite would resurrect rows)
-    touched_df = table._read_live(spark, touched_rel, table.schema)
+    touched_df = table._read_live(spark, snap, touched_rel)
     kept = touched_df.join(all_keys, keys, "left_anti")
     rewritten = kept.unionByName(upsert_rows)
     return table.replace_files(touched_rel, rewritten, operation="merge")
-
-
-def _to_rel(uri: str, data_root: str) -> str:
-    """input_file_name() yields a percent-encoded URI; decode it so
-    the stored relative path is the literal on-disk name (partition
-    dirs legitimately contain '%' from escapePathName, which arrives
-    double-encoded as %25)."""
-    from urllib.parse import unquote
-
-    p = uri
-    if p.startswith("file:"):
-        p = unquote(p[len("file:") :])
-        while p.startswith("//"):
-            p = p[1:]
-    return str(Path(p).relative_to(data_root))

@@ -44,6 +44,7 @@ from pyspark.sql import types as T
 
 from ..schema import schema_from_json, schema_to_json
 from ..session import local_frame
+from .transforms import parse_spec, partition_signature, partition_values
 
 SNAPSHOT_DIR = "snapshots"
 DATA_DIR = "data"
@@ -147,8 +148,6 @@ class Snapshot:
 def _split_conjuncts(s: str) -> list[str]:
     """Top-level AND conjuncts of a SQL boolean expression (quote- and
     paren-aware, ``''`` escapes respected)."""
-    import re
-
     parts, depth, quote, start = [], 0, None, 0
     i, n = 0, len(s)
     while i < n:
@@ -178,6 +177,28 @@ def _split_conjuncts(s: str) -> list[str]:
         i += 1
     parts.append(s[start:])
     return [p.strip() for p in parts if p.strip()]
+
+
+def _unwrap_conjunct(conj: str) -> str:
+    """One conjunct without the parentheses wrapped around all of it,
+    stripped while what they enclose is still a single conjunct."""
+    c = conj.strip()
+    while c.startswith("(") and c.endswith(")"):
+        inner = c[1:-1].strip()
+        if _split_conjuncts(inner) != [inner]:
+            break
+        c = inner
+    return c
+
+
+# ``col <op> literal`` and ``literal <op> col``: the conjunct shapes the
+# stats pruner tests against per-file min/max
+_COL_CMP_RE = re.compile(
+    r"^\s*`?([A-Za-z_]\w*)`?\s*(<=|>=|!=|<>|==|=|<|>)\s*(.+?)\s*$"
+)
+_CMP_COL_RE = re.compile(
+    r"^\s*(.+?)\s*(<=|>=|!=|<>|==|=|<|>)\s*`?([A-Za-z_]\w*)`?\s*$"
+)
 
 
 def _list_parquet(root: Path) -> list[str]:
@@ -621,8 +642,6 @@ class Table:
         partitions first, making whole FILES disjoint on the order key
         (the global-clustering trade: one extra shuffle per write).
         """
-        from .transforms import parse_spec
-
         batch = uuid.uuid4().hex[:12]
         staging = self.root / f"_staging-{batch}"
         transforms = parse_spec(list(partition_by))
@@ -779,6 +798,23 @@ class Table:
         if branch is None or branch == MAIN_BRANCH:
             return self.current_snapshot()
         return self._resolve_ref(branch)
+
+    def _commit_metadata(
+        self,
+        cur: Snapshot,
+        operation: str,
+        schema: T.StructType | None = None,
+        **changes,
+    ) -> Snapshot:
+        """Commit a snapshot on top of ``cur`` that keeps its data files
+        and changes only metadata: the schema, or any of
+        _next_snapshot's keyword changes (properties, partition spec,
+        position-delete files)."""
+        return self._next_snapshot(
+            operation, cur.files, [], [],
+            schema or schema_from_json(cur.schema_json), cur.version,
+            **changes,
+        )
 
     # Puffin twin: per-file column NDV sketches recorded at write
     # time when this property lists columns (comma-separated), merged
@@ -941,8 +977,6 @@ class Table:
         expression interpreter). Conservative by construction: any
         unresolvable conjunct, unparseable value, or missing segment
         keeps the file."""
-        from .transforms import parse_spec, unescape_path_name
-
         # identity transforms from EVERY retained spec, not just the
         # current one: after a partition-spec evolution the historical
         # layouts remain prunable (the evaluation below is per-file
@@ -982,35 +1016,23 @@ class Table:
         if not usable:
             return files
 
-        # group files by their partition-dir raw segments (driver-side
+        # group files by their partition-dir values (driver-side
         # manifest strings; O(#files), no data read)
         groups: dict[tuple, list[str]] = {}
         unpruned: list[str] = []
         for f in files:
-            kv = {}
-            for seg in f.split("/")[:-1]:
-                if "=" in seg:
-                    k, v = seg.split("=", 1)
-                    kv[k] = v
-            key = tuple(kv.get(t.col) for t in idents)
-            if any(raw is None for raw in key):
-                unpruned.append(f)  # pre-spec or opaque layout: keep
+            pv = partition_values(f)
+            if all(t.col in pv for t in idents):
+                groups.setdefault(
+                    tuple(pv[t.col] for t in idents), []
+                ).append(f)
             else:
-                groups.setdefault(key, []).append(f)
+                unpruned.append(f)  # pre-spec or opaque layout: keep
         if not groups:
             return files
 
         keys = list(groups)
-        rows = [
-            tuple(
-                None
-                if raw == "__HIVE_DEFAULT_PARTITION__"
-                else unescape_path_name(raw)
-                for raw in key
-            )
-            + (i,)
-            for i, key in enumerate(keys)
-        ]
+        rows = [key + (i,) for i, key in enumerate(keys)]
         raw_cols = [f"_raw_{t.col}" for t in idents]
         pdf = local_frame(
             spark, rows,
@@ -1050,8 +1072,6 @@ class Table:
                 out.extend(groups[key])
         return out
 
-    _CMP_RE = None  # compiled lazily in _prune_files_by_stats
-
     def _prune_files_by_stats(
         self, spark: SparkSession, files: list[str], condition: str
     ) -> list[str]:
@@ -1072,33 +1092,20 @@ class Table:
         hand-rolled comparator. All-null files drop out of comparison
         conjuncts naturally (NULL range -> NULL predicate -> no
         match), which is exactly SQL's answer."""
-        import re
-
         snap = self.current_snapshot()
         if not files or not snap.stats:
             return files
-        cmp_re = re.compile(
-            r"^\s*`?([A-Za-z_]\w*)`?\s*(<=|>=|!=|<>|==|=|<|>)\s*(.+?)\s*$"
-        )
         flip = {"<": ">", ">": "<", "<=": ">=", ">=": "<="}
         by_name = {f.name: f for f in self.schema.fields}
 
         def parse(conj: str):
-            c = conj.strip()
-            while c.startswith("(") and c.endswith(")"):
-                inner = c[1:-1].strip()
-                if _split_conjuncts(inner) != [inner]:
-                    break
-                c = inner
-            m = cmp_re.match(c)
+            c = _unwrap_conjunct(conj)
+            m = _COL_CMP_RE.match(c)
             col, op, lit = (None, None, None)
             if m and m.group(1) in by_name:
                 col, op, lit = m.groups()
             else:
-                m = re.match(
-                    r"^\s*(.+?)\s*(<=|>=|!=|<>|==|=|<|>)\s*`?([A-Za-z_]\w*)`?\s*$",
-                    c,
-                )
+                m = _CMP_COL_RE.match(c)
                 if m and m.group(3) in by_name:
                     lit, op, col = m.groups()
                     op = flip.get(op, op)
@@ -1187,37 +1194,65 @@ class Table:
         out.extend(f for i, f in enumerate(files) if i in kept_idx)
         return out
 
-    def _touched_by(self, spark: SparkSession, condition: str) -> list[str]:
-        """Data files containing at least one row matching
-        ``condition`` — the discovery scan behind row-level DELETE and
-        UPDATE (file-scoped COW, same shape as MERGE's). Partition
-        predicates prune the scan via the manifest first."""
+    def _files_matching(
+        self,
+        spark: SparkSession,
+        snap: Snapshot,
+        files: list[str],
+        where: str | None = None,
+        keys: DataFrame | None = None,
+    ) -> list[str]:
+        """The touched-file finder behind MERGE, DELETE and UPDATE:
+        sorted rel paths of the ``files`` holding at least one row that
+        satisfies ``where`` and whose key columns appear in ``keys`` (a
+        frame of key tuples). The file name is attached at the scan:
+        after ``where``, which so still pushes down into the Parquet
+        reader, and before the ``keys`` semi-join — input_file_name()
+        is only defined directly over a file source. The scan ignores
+        position deletes: a deleted row can only add a file to the
+        rewrite, whose live read drops that row anyway."""
         from urllib.parse import unquote
 
-        snap = self.current_snapshot()
-        candidates = self._prune_files_by_predicate(
-            spark, snap.files, condition
-        )
-        candidates = self._prune_files_by_stats(spark, candidates, condition)
-        if not candidates:
+        if not files:
             return []
-        df = self._read_files(spark, candidates, self.schema)
-        hits = (
-            df.filter(F.expr(condition))
-            .select(F.input_file_name().alias("_f"))
-            .distinct()
-            .collect()
+        df = self._read_files(
+            spark, files, schema_from_json(snap.schema_json),
+            renames=self._snap_renames(snap),
         )
-        root = str(self.data_root)
-        out = []
+        if where is not None:
+            df = df.filter(F.expr(where))
+        df = df.withColumn("_file", F.input_file_name())
+        if keys is not None:
+            df = df.select("_file", *keys.columns).join(
+                keys, keys.columns, "left_semi"
+            )
+        hits = df.select("_file").distinct().collect()
+        out = set()
         for r in hits:
-            p = r["_f"]
+            # a percent-encoded URI: decode it so the rel path is the
+            # literal on-disk name (partition dirs legitimately contain
+            # '%' from escapePathName, which arrives as %25)
+            p = r["_file"]
             if p.startswith("file:"):
                 p = unquote(p[len("file:"):])
                 while p.startswith("//"):
                     p = p[1:]
-            out.append(str(Path(p).relative_to(root)))
-        return sorted(set(out))
+            out.add(str(Path(p).relative_to(self.data_root)))
+        return sorted(out)
+
+    def _touched_by(
+        self, spark: SparkSession, snap: Snapshot, condition: str
+    ) -> list[str]:
+        """Data files containing at least one row matching
+        ``condition`` — the discovery scan behind row-level DELETE and
+        UPDATE (file-scoped COW, same shape as MERGE's). Partition
+        predicates and column stats prune the scan via the manifest
+        first."""
+        candidates = self._prune_files_by_predicate(
+            spark, snap.files, condition
+        )
+        candidates = self._prune_files_by_stats(spark, candidates, condition)
+        return self._files_matching(spark, snap, candidates, where=condition)
 
     DELETE_MODE_PROP = "write.delete.mode"  # Iceberg's property name
 
@@ -1242,34 +1277,33 @@ class Table:
         )
         if mode not in ("copy-on-write", "merge-on-read"):
             raise ValueError(f"unknown delete mode {mode!r}")
-        touched = self._touched_by(spark, condition)
+        cur = self.current_snapshot()
+        touched = self._touched_by(spark, cur, condition)
         if not touched:
-            return self.current_snapshot()
+            return cur
         if mode == "merge-on-read":
-            return self._delete_positions(spark, touched, condition)
-        kept = self._read_live(spark, touched, self.schema).filter(
+            return self._delete_positions(spark, cur, touched, condition)
+        kept = self._read_live(spark, cur, touched).filter(
             ~F.expr(condition) | F.expr(condition).isNull()
         )
         return self.replace_files(touched, kept, operation="delete")
 
     def _delete_positions(
-        self, spark: SparkSession, touched: list[str], condition: str
+        self,
+        spark: SparkSession,
+        cur: Snapshot,
+        touched: list[str],
+        condition: str,
     ) -> Snapshot:
         """Write one position-delete file set for the rows of
         ``touched`` matching ``condition`` and commit a metadata-only
         ``delete`` snapshot (files unchanged, delete_files grown).
 
-        Already-deleted rows are anti-joined out BEFORE the match, so
+        The live read drops already-deleted rows BEFORE the match, so
         each (file, pos) appears in at most one live delete file —
         the invariant the logical row accounting in _next_snapshot
         relies on."""
-        base = self._current_version()
-        cur = self._load(base)
-        df = self._anti_join_deleted(
-            spark,
-            cur,
-            self._read_files(spark, touched, self.schema, attach_pos=True),
-        )
+        df = self._read_live(spark, cur, touched, keep_pos=True)
         added = self._write_position_deletes(
             df.filter(F.expr(condition)).select(
                 F.col(self.POS_FILE_COL).alias("file_name"),
@@ -1278,14 +1312,8 @@ class Table:
         )
         if not added:
             return cur
-        return self._next_snapshot(
-            "delete",
-            cur.files,
-            [],
-            [],
-            schema_from_json(cur.schema_json),
-            base,
-            delete_files=cur.delete_files + added,
+        return self._commit_metadata(
+            cur, "delete", delete_files=cur.delete_files + added
         )
 
     UPDATE_MODE_PROP = "write.update.mode"  # Iceberg's property name
@@ -1320,14 +1348,15 @@ class Table:
         )
         if mode not in ("copy-on-write", "merge-on-read"):
             raise ValueError(f"unknown update mode {mode!r}")
-        touched = self._touched_by(spark, condition)
+        cur = self.current_snapshot()
+        touched = self._touched_by(spark, cur, condition)
         if not touched:
-            return self.current_snapshot()
+            return cur
         if mode == "merge-on-read":
             return self._update_positions(
-                spark, touched, assignments, condition
+                spark, cur, touched, assignments, condition
             )
-        df = self._read_live(spark, touched, schema)
+        df = self._read_live(spark, cur, touched)
         cond = F.expr(condition)
         by_name = {f.name: f for f in schema.fields}
         rewritten = df.select(
@@ -1345,6 +1374,7 @@ class Table:
     def _update_positions(
         self,
         spark: SparkSession,
+        cur: Snapshot,
         touched: list[str],
         assignments: dict[str, str],
         condition: str,
@@ -1352,16 +1382,10 @@ class Table:
         """MOR UPDATE: position-delete the matching rows and append
         their updated versions — both sides of the swap land in ONE
         snapshot, so readers never observe the intermediate state."""
-        base = self._current_version()
-        cur = self._load(base)
         schema = schema_from_json(cur.schema_json)
         names = [f.name for f in schema.fields]
         by_name = {f.name: f for f in schema.fields}
-        df = self._anti_join_deleted(
-            spark,
-            cur,
-            self._read_files(spark, touched, schema, attach_pos=True),
-        )
+        df = self._read_live(spark, cur, touched, keep_pos=True)
         matched = df.filter(F.expr(condition)).persist()
         del_added = self._write_position_deletes(
             matched.select(
@@ -1388,7 +1412,7 @@ class Table:
             data_added,
             [],
             schema,
-            base,
+            cur.version,
             delete_files=cur.delete_files + del_added,
         )
 
@@ -1437,34 +1461,27 @@ class Table:
                 delta.update(s.added_files)
         return delta & set(snap.files)
 
-    def _resolve_mor(
-        self, spark: SparkSession, snap: Snapshot, schema: T.StructType
-    ) -> DataFrame:
+    def _resolve_mor(self, spark: SparkSession, snap: Snapshot) -> DataFrame:
         """Newest-sequence-wins resolve of base + delta files."""
         from pyspark.sql import Window
 
         keys = [
             k for k in snap.properties.get("merge-on-read.key", "").split(",") if k
         ]
-        schema_plus = T.StructType(
-            schema.fields + [T.StructField(self.MOR_OP_COL, T.StringType())]
+        schema = schema_from_json(snap.schema_json)
+        # position deletes name PHYSICAL rows (base or delta files
+        # alike) — the live read applies them before the key-wise
+        # newest-wins resolve so a deleted delta row can't win its key.
+        # It then keeps the attach column, which already holds the
+        # basename: input_file_name() is illegal once the anti-join
+        # adds a second file source.
+        df = self._read_live(
+            spark, snap, keep_pos=bool(snap.delete_files),
+            schema=T.StructType(
+                schema.fields
+                + [T.StructField(self.MOR_OP_COL, T.StringType())]
+            ),
         )
-        df = self._read_files(
-            spark, snap.files, schema_plus,
-            renames=self._snap_renames(snap),
-            attach_pos=bool(snap.delete_files),
-        )
-        pre_based = False
-        if snap.delete_files:
-            # position deletes name PHYSICAL rows (base or delta
-            # files alike) — apply before the key-wise newest-wins
-            # resolve so a deleted delta row can't win its key.
-            # _base must be captured HERE: input_file_name() is
-            # illegal once the anti-join adds a second file source,
-            # and the attach column already holds the basename.
-            df = df.withColumn("_base", F.col(self.POS_FILE_COL))
-            df = self._apply_position_deletes(spark, snap, df)
-            pre_based = True
         # keyed by basename, not full rel path: input_file_name()
         # percent-encodes partition dirs (escaped chars arrive as
         # %25XX), while basenames are uuid-hex + part names — always
@@ -1476,9 +1493,12 @@ class Table:
             if f in set(snap.files)
         ]
         seq_df = local_frame(spark, seq_rows, "base_name string, _seq long")
-        base_name = F.element_at(F.split(F.input_file_name(), "/"), -1)
-        if not pre_based:
-            df = df.withColumn("_base", base_name)
+        df = df.withColumn(
+            "_base",
+            F.col(self.POS_FILE_COL)
+            if snap.delete_files
+            else F.element_at(F.split(F.input_file_name(), "/"), -1),
+        )
         df = df.join(
             F.broadcast(seq_df), F.col("_base") == F.col("base_name"), "left"
         )
@@ -1557,8 +1577,6 @@ class Table:
         return json.loads(snap.properties.get(self.RENAMES_PROP, "{}"))
 
     def _evolution_guard(self, cur: Snapshot, col: str) -> None:
-        from .transforms import parse_spec
-
         part_cols = {t.col for t in parse_spec(cur.partition_by)}
         if col in part_cols:
             raise ValueError(
@@ -1572,8 +1590,7 @@ class Table:
         files simply lack the column; the Parquet reader fills null —
         no data rewrite. ``dtype`` is a DataType or DDL string (DDL
         parsing needs an active SparkSession)."""
-        base = self._current_version()
-        cur = self._load(base)
+        cur = self.current_snapshot()
         schema = schema_from_json(cur.schema_json)
         renames = self._snap_renames(cur)
         if name in [f.name for f in schema.fields]:
@@ -1593,8 +1610,8 @@ class Table:
             cur.properties.get(FIELD_IDS_PROP), schema, "add",
             name=name, dtype=dt,
         )
-        return self._next_snapshot(
-            "evolve-schema", cur.files, [], [], new_schema, base,
+        return self._commit_metadata(
+            cur, "evolve-schema", new_schema,
             new_properties={FIELD_IDS_PROP: ids},
         )
 
@@ -1607,8 +1624,7 @@ class Table:
         widening reads — int32 under a LONG schema, float under
         DOUBLE, decimal at larger precision), so no data rewrite and
         no per-file cast bookkeeping. The field-id is KEPT."""
-        base = self._current_version()
-        cur = self._load(base)
+        cur = self.current_snapshot()
         schema = schema_from_json(cur.schema_json)
         by_name = {f.name: f for f in schema.fields}
         if name not in by_name:
@@ -1654,8 +1670,8 @@ class Table:
             cur.properties.get(FIELD_IDS_PROP), schema, "promote",
             name=name, dtype=nt,
         )
-        return self._next_snapshot(
-            "evolve-schema", cur.files, [], [], new_schema, base,
+        return self._commit_metadata(
+            cur, "evolve-schema", new_schema,
             new_properties={FIELD_IDS_PROP: ids},
         )
 
@@ -1664,8 +1680,7 @@ class Table:
         new -> physical name is stored in table properties; reads
         coalesce the physical column out of pre-rename files (chained
         renames flatten to the original physical name)."""
-        base = self._current_version()
-        cur = self._load(base)
+        cur = self.current_snapshot()
         schema = schema_from_json(cur.schema_json)
         names = [f.name for f in schema.fields]
         if old not in names:
@@ -1689,13 +1704,8 @@ class Table:
             cur.properties.get(FIELD_IDS_PROP), schema, "rename",
             name=old, new_name=new,
         )
-        return self._next_snapshot(
-            "evolve-schema",
-            cur.files,
-            [],
-            [],
-            T.StructType(fields),
-            base,
+        return self._commit_metadata(
+            cur, "evolve-schema", T.StructType(fields),
             new_properties={self.RENAMES_PROP: json.dumps(renames),
                             FIELD_IDS_PROP: ids},
         )
@@ -1703,8 +1713,7 @@ class Table:
     def drop_column(self, name: str) -> Snapshot:
         """Remove a column from the declared schema (metadata-only;
         old files keep the bytes, readers never select them)."""
-        base = self._current_version()
-        cur = self._load(base)
+        cur = self.current_snapshot()
         schema = schema_from_json(cur.schema_json)
         if name not in [f.name for f in schema.fields]:
             raise KeyError(f"no column {name!r}")
@@ -1719,13 +1728,8 @@ class Table:
         ids = evolve_field_ids(
             cur.properties.get(FIELD_IDS_PROP), schema, "drop", name=name
         )
-        return self._next_snapshot(
-            "evolve-schema",
-            cur.files,
-            [],
-            [],
-            T.StructType(fields),
-            base,
+        return self._commit_metadata(
+            cur, "evolve-schema", T.StructType(fields),
             new_properties={self.RENAMES_PROP: json.dumps(renames),
                             FIELD_IDS_PROP: ids},
         )
@@ -1774,10 +1778,7 @@ class Table:
             )
         groups: dict[tuple, list[str]] = {}
         for f in files:
-            sig = tuple(
-                seg.split("=", 1)[0] for seg in f.split("/")[:-1]
-            )
-            groups.setdefault(sig, []).append(f)
+            groups.setdefault(partition_signature(f), []).append(f)
         if len(groups) == 1:
             return self._read_file_group(
                 spark, files, schema, renames, attach_pos
@@ -1866,9 +1867,7 @@ class Table:
     # ------------------------------------------------------------------
     def _position_deletes_df(
         self, spark: SparkSession, snap: Snapshot
-    ) -> DataFrame | None:
-        if not snap.delete_files:
-            return None
+    ) -> DataFrame:
         paths = [
             str(self.data_root / f).replace("%", "[%]")
             for f in snap.delete_files
@@ -1876,33 +1875,6 @@ class Table:
         return spark.read.schema(
             "file_name string, pos long"
         ).parquet(*paths)
-
-    def _anti_join_deleted(
-        self, spark: SparkSession, snap: Snapshot, df: DataFrame
-    ) -> DataFrame:
-        """Anti-join the attach-column'd ``df`` against the snapshot's
-        live position deletes, keeping the attach columns. The delete
-        side is tiny relative to the table in the intended regime
-        (surgical deletes on a huge table) — AQE broadcasts it; no
-        pinned broadcast so a pathological delete-most-rows case still
-        plans a shuffle join."""
-        dels = self._position_deletes_df(spark, snap)
-        if dels is None:
-            return df
-        return df.join(
-            dels,
-            (F.col(self.POS_FILE_COL) == dels["file_name"])
-            & (F.col(self.POS_POS_COL) == dels["pos"]),
-            "left_anti",
-        )
-
-    def _apply_position_deletes(
-        self, spark: SparkSession, snap: Snapshot, df: DataFrame
-    ) -> DataFrame:
-        """_anti_join_deleted, then strip the attach columns."""
-        return self._anti_join_deleted(spark, snap, df).drop(
-            self.POS_FILE_COL, self.POS_POS_COL
-        )
 
     def _write_position_deletes(
         self, positions: DataFrame, tag: str = ""
@@ -1933,20 +1905,48 @@ class Table:
     def _read_live(
         self,
         spark: SparkSession,
-        files: list[str],
-        schema: T.StructType,
-        snap: Snapshot | None = None,
+        snap: Snapshot,
+        files: list[str] | None = None,
+        keep_pos: bool = False,
+        schema: T.StructType | None = None,
+        deletes: Snapshot | None = None,
     ) -> DataFrame:
-        """Read the given data files with the CURRENT snapshot's
-        position deletes applied — the row set a rewrite (COW
-        DELETE/UPDATE/MERGE) must treat as the file's live contents,
-        else a copy-on-write rewrite would resurrect
-        position-deleted rows."""
-        snap = snap or self.current_snapshot()
-        if not snap.delete_files:
-            return self._read_files(spark, files, schema)
-        df = self._read_files(spark, files, schema, attach_pos=True)
-        return self._apply_position_deletes(spark, snap, df)
+        """The live rows of ``files`` (default: every data file of
+        ``snap``) as ``snap`` sees them: read with its schema and
+        column renames, minus the rows its position deletes name.
+        Scans, time travel, the changelog and every rewrite (COW
+        DELETE/UPDATE/MERGE, binpack) read through here, so a rewrite
+        never resurrects a deleted row.
+
+        ``keep_pos`` keeps the attach columns (source basename and row
+        ordinal); ``schema`` widens the read (the MOR resolve adds
+        ``_op``); ``deletes`` takes the position deletes from another
+        snapshot (the changelog's start side).
+
+        The delete side is tiny relative to the table in the intended
+        regime (surgical deletes on a huge table) — AQE broadcasts it;
+        no pinned broadcast so a pathological delete-most-rows case
+        still plans a shuffle join."""
+        deletes = deletes or snap
+        attach = keep_pos or bool(deletes.delete_files)
+        df = self._read_files(
+            spark,
+            snap.files if files is None else files,
+            schema or schema_from_json(snap.schema_json),
+            renames=self._snap_renames(snap),
+            attach_pos=attach,
+        )
+        if deletes.delete_files:
+            dels = self._position_deletes_df(spark, deletes)
+            df = df.join(
+                dels,
+                (F.col(self.POS_FILE_COL) == dels["file_name"])
+                & (F.col(self.POS_POS_COL) == dels["pos"]),
+                "left_anti",
+            )
+        if attach and not keep_pos:
+            df = df.drop(self.POS_FILE_COL, self.POS_POS_COL)
+        return df
 
     def read(
         self,
@@ -1969,18 +1969,9 @@ class Table:
             snap = self.snapshot_by_id(snapshot_id)
         else:
             snap = self.current_snapshot()
-        schema = schema_from_json(snap.schema_json)
         if self._delta_files(snap):
-            return self._resolve_mor(spark, snap, schema)
-        if snap.delete_files:
-            df = self._read_files(
-                spark, snap.files, schema,
-                renames=self._snap_renames(snap), attach_pos=True,
-            )
-            return self._apply_position_deletes(spark, snap, df)
-        return self._read_files(
-            spark, snap.files, schema, renames=self._snap_renames(snap)
-        )
+            return self._resolve_mor(spark, snap)
+        return self._read_live(spark, snap)
 
     def scan(self, spark: SparkSession, where: str | None = None) -> DataFrame:
         """Predicate-planned scan: manifest partition pruning + file
@@ -1996,21 +1987,10 @@ class Table:
             return self.read(spark).filter(F.expr(where))
         from .bloom_index import prune_files_by_bloom
 
-        schema = schema_from_json(snap.schema_json)
         files = self._prune_files_by_predicate(spark, snap.files, where)
         files = self._prune_files_by_stats(spark, files, where)
         files = prune_files_by_bloom(spark, self, files, where)
-        if snap.delete_files:
-            df = self._read_files(
-                spark, files, schema,
-                renames=self._snap_renames(snap), attach_pos=True,
-            )
-            return self._apply_position_deletes(spark, snap, df).filter(
-                F.expr(where)
-            )
-        return self._read_files(
-            spark, files, schema, renames=self._snap_renames(snap)
-        ).filter(F.expr(where))
+        return self._read_live(spark, snap, files).filter(F.expr(where))
 
     def metadata_aggregate(
         self,
@@ -2243,25 +2223,11 @@ class Table:
             # group value: identity-partition path segment first (any
             # type, the exact written form), else a file-constant
             # stats range
-            seg = {}
-            for part in f.split("/")[:-1]:
-                if "=" in part:
-                    k, v = part.split("=", 1)
-                    seg[k] = v
+            pv = partition_values(f)
             for col in const_cols:
-                raw = None
-                for nm in names_for(col):
-                    if nm in seg:
-                        raw = seg[nm]
-                        break
-                if raw is not None:
-                    from .transforms import unescape_path_name
-
-                    row.append(
-                        None
-                        if raw == "__HIVE_DEFAULT_PARTITION__"
-                        else unescape_path_name(raw)
-                    )
+                nm = next((n for n in names_for(col) if n in pv), None)
+                if nm is not None:
+                    row.append(pv[nm])
                     continue
                 ent = next(
                     (st[nm] for nm in names_for(col) if nm in st), None
@@ -2496,14 +2462,13 @@ class Table:
             for f in (start_files & end_files)
             if f.rsplit("/", 1)[-1] in touched_bases
         )
-        schema = schema_from_json(end.schema_json)
+        # both sides through end's schema and renames; each side drops
+        # the rows its own snapshot position-deleted
         old_rows = self._read_live(
-            spark, removed + posdel_targets, schema, snap=start
+            spark, end, removed + posdel_targets, deletes=start
         )
-        new_rows = self._read_live(
-            spark, added + posdel_targets, schema, snap=end
-        )
-        names = [f.name for f in schema.fields]
+        new_rows = self._read_live(spark, end, added + posdel_targets)
+        names = [f.name for f in schema_from_json(end.schema_json).fields]
         ct = self.CHANGE_TYPE_COL
         if not keys:
             ins = new_rows.exceptAll(old_rows).withColumn(ct, F.lit("INSERT"))
@@ -2696,20 +2661,10 @@ class Table:
         touching k partitions counts toward each's file count.
         Driver-side metadata planning (one output row per partition),
         the same cost class as files_df."""
-        from .transforms import HIVE_DEFAULT_PARTITION, unescape_path_name
-
         snap = self.current_snapshot()
 
         def key_of(rel: str):
-            parts = []
-            for seg in rel.split("/")[:-1]:
-                if "=" in seg:
-                    c, v = seg.split("=", 1)
-                    v = unescape_path_name(v)
-                    parts.append(
-                        (c, None if v == HIVE_DEFAULT_PARTITION else v)
-                    )
-            return tuple(parts)
+            return tuple(partition_values(rel).items())
 
         agg: dict[tuple, list[int]] = {}
         for f in snap.files:
@@ -2766,39 +2721,23 @@ class Table:
         missing the pruned dir segment is kept). compact() rewrites
         everything into the current spec when wanted.
         """
-        from .transforms import parse_spec
-
         declared = {f.name for f in self.schema.fields}
         for t in parse_spec(list(new_spec)):
             if t.col not in declared:
                 raise KeyError(f"no such column {t.col!r} in {new_spec!r}")
-        base = self._current_version()
-        cur = self._load(base)
+        cur = self.current_snapshot()
         if list(new_spec) == list(cur.partition_by):
             return cur
-        return self._next_snapshot(
-            "evolve-spec",
-            cur.files,
-            [],
-            [],
-            schema_from_json(cur.schema_json),
-            base,
-            partition_by=list(new_spec),
+        return self._commit_metadata(
+            cur, "evolve-spec", partition_by=list(new_spec)
         )
 
     def set_properties(self, props: dict[str, str]) -> Snapshot:
         """Metadata-only property commit (ALTER TABLE ... SET
         TBLPROPERTIES): same files, new properties merged over the
         current set."""
-        base = self._current_version()
-        cur = self._load(base)
-        return self._next_snapshot(
-            "set-properties",
-            cur.files,
-            [],
-            [],
-            schema_from_json(cur.schema_json),
-            base,
+        return self._commit_metadata(
+            self.current_snapshot(), "set-properties",
             new_properties=dict(props),
         )
 
@@ -2815,15 +2754,7 @@ class Table:
                 "metadata-column read with pending merge-deltas: "
                 "run compact() first"
             )
-        schema = schema_from_json(snap.schema_json)
-        df = self._anti_join_deleted(
-            spark,
-            snap,
-            self._read_files(
-                spark, snap.files, schema,
-                renames=self._snap_renames(snap), attach_pos=True,
-            ),
-        )
+        df = self._read_live(spark, snap, keep_pos=True)
         # basename -> rel path (the broadcast-map shape _resolve_mor
         # uses; basenames are uuid-unique)
         rel_rows = [(f.rsplit("/", 1)[-1], f) for f in snap.files]
@@ -2870,21 +2801,14 @@ class Table:
         carried verbatim (including ones referencing since-removed
         files — inert but accounting-neutral), so the logical row
         count is unchanged by construction."""
-        base = self._current_version()
-        cur = self._load(base)
+        cur = self.current_snapshot()
         if len(cur.delete_files) <= 1:
             return cur
         added = self._write_position_deletes(
             self._position_deletes_df(spark, cur), "consolidated-"
         )
-        return self._next_snapshot(
-            "rewrite-deletes",
-            cur.files,
-            [],
-            [],
-            schema_from_json(cur.schema_json),
-            base,
-            delete_files=added,
+        return self._commit_metadata(
+            cur, "rewrite-deletes", delete_files=added
         )
 
     def compact_binpack(
@@ -2932,7 +2856,7 @@ class Table:
         ]
         if not chosen:
             return snap
-        rewritten = self._read_live(spark, chosen, self.schema, snap=snap)
+        rewritten = self._read_live(spark, snap, chosen)
         # one output file per partition group is the binpack target;
         # coalesce to the group count so Spark doesn't shuffle
         n_groups = sum(1 for fs in by_dir.values() if len(fs) >= min_group)

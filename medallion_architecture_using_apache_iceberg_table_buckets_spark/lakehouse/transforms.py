@@ -149,3 +149,26 @@ def partition_segment(partition_col: str, value) -> str | None:
     else:
         return None
     return f"{partition_col}={escape_path_name(s)}"
+
+
+def partition_values(rel: str) -> dict[str, str | None]:
+    """Partition column -> value, parsed back from a data file's Hive
+    ``col=value`` directory segments (path relative to the data
+    root): the inverse of partition_segment. Values come back
+    unescaped, as strings; the default partition reads back as None."""
+    out: dict[str, str | None] = {}
+    for seg in rel.split("/")[:-1]:
+        if "=" in seg:
+            col, raw = seg.split("=", 1)
+            out[col] = (
+                None if raw == HIVE_DEFAULT_PARTITION
+                else unescape_path_name(raw)
+            )
+    return out
+
+
+def partition_signature(rel: str) -> tuple[str, ...]:
+    """The ordered directory keys of a data file's path — which
+    partition-spec layout wrote it. Derived from the path alone, so it
+    survives snapshot expiry."""
+    return tuple(seg.split("=", 1)[0] for seg in rel.split("/")[:-1])

@@ -1487,6 +1487,7 @@ def partition_evolution_scan(spark, sf_dir):
     import tempfile
 
     from ..lakehouse import Catalog
+    from ..lakehouse.transforms import partition_signature
 
     e = load(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
@@ -1501,10 +1502,7 @@ def partition_evolution_scan(spark, sf_dir):
     sess.sql("ALTER TABLE ev DROP PARTITION FIELD event_type")
     sess.sql("ALTER TABLE ev ADD PARTITION FIELD bucket(4, event_id)")
     t.append(e.filter(F.col("event_id") % 2 == 1))
-    sigs = {
-        tuple(s.split("=")[0] for s in f.split("/")[:-1])
-        for f in t.current_snapshot().files
-    }
+    sigs = {partition_signature(f) for f in t.current_snapshot().files}
     assert ("event_type",) in sigs and ("_p_event_id_bucket",) in sigs, sigs
     # old identity dirs still prune under the NEW spec
     pruned = t._prune_files_by_predicate(

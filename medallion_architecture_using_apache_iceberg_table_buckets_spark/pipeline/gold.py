@@ -27,11 +27,7 @@ from pyspark.sql import functions as F
 
 from ..lakehouse import Catalog
 from ..lakehouse.merge import merge_into
-from ..lakehouse.transforms import (
-    HIVE_DEFAULT_PARTITION,
-    parse_spec,
-    unescape_path_name,
-)
+from ..lakehouse.transforms import parse_spec, partition_values
 
 
 def _affected_partition_values(
@@ -41,9 +37,9 @@ def _affected_partition_values(
     file paths alone. None = unknown -> caller falls back to full
     refresh. Path segments are escapePathName()-encoded by the writer,
     so values are unescaped before being compared against column
-    values; a change in the null/empty-string partition
-    (__HIVE_DEFAULT_PARTITION__) is not representable as a value and
-    forces the full-refresh fallback."""
+    values; a change in the null/empty-string (default) partition is
+    not representable as a value and forces the full-refresh
+    fallback."""
     specs = {t.partition_col: t for t in parse_spec(silver.partition_by)}
     if part_col not in specs:
         return None
@@ -56,14 +52,12 @@ def _affected_partition_values(
         return None
     changed = set(cur.files).symmetric_difference(prev.files)
     vals = set()
-    prefix = f"{part_col}="
     for f in changed:
-        for seg in f.split("/"):
-            if seg.startswith(prefix):
-                raw = seg[len(prefix):]
-                if raw == HIVE_DEFAULT_PARTITION:
-                    return None
-                vals.add(unescape_path_name(raw))
+        pv = partition_values(f)
+        if part_col in pv:
+            if pv[part_col] is None:
+                return None
+            vals.add(pv[part_col])
     return vals
 
 

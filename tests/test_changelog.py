@@ -72,6 +72,32 @@ def test_update_then_delete_nets_to_delete(spark, tmp_path):
     assert got == {("DELETE", 1, "a", 1.0)}  # START payload
 
 
+def test_rename_in_range_reports_only_real_changes(spark, tmp_path):
+    """Both sides read through END's schema and renames: rows a COW
+    rewrite carried from a pre-rename file cancel, even after a later
+    rename moved the current schema past ``end``."""
+    cat = Catalog(tmp_path / "wh")
+    t = cat.create_table("d", "t_ren", SCHEMA)
+    t.append(make(spark, [(1, "a", 1.0), (2, "b", 2.0)]).coalesce(1))
+    s0 = t.current_snapshot().snapshot_id
+    t.rename_column("v", "w")
+    merge_into(
+        spark, t,
+        spark.createDataFrame([(2, "B", 2.5)], "k long, w string, x double"),
+        on="k",
+    )
+    end = t.current_snapshot().snapshot_id
+    t.rename_column("w", "z")
+    got = {
+        (r["_change_type"], r["k"], r["w"], r["x"])
+        for r in t.changelog(spark, s0, end, keys=["k"]).collect()
+    }
+    assert got == {
+        ("UPDATE_BEFORE", 2, "b", 2.0),
+        ("UPDATE_AFTER", 2, "B", 2.5),
+    }
+
+
 def test_position_delete_appears_as_delete(spark, tmp_path):
     cat = Catalog(tmp_path / "wh")
     t = cat.create_table(

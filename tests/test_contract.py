@@ -56,6 +56,25 @@ def test_driver_rows_build_frames_only_through_local_frame():
     assert hits == [], f"use session.local_frame instead: {hits}"
 
 
+def test_partition_paths_parse_only_in_transforms():
+    # the on-disk partition-path format (escaping, the default
+    # partition) has one home; everything else calls partition_values
+    from pathlib import Path
+
+    import medallion_architecture_using_apache_iceberg_table_buckets_spark as mats
+
+    root = Path(mats.__file__).parent
+    home = root / "lakehouse" / "transforms.py"
+    hits = [
+        f"{path.relative_to(root)}:{i}"
+        for path in sorted(root.rglob("*.py"))
+        if path != home
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "HIVE_DEFAULT_PARTITION" in line or "unescape_path_name" in line
+    ]
+    assert hits == [], f"use transforms.partition_values instead: {hits}"
+
+
 def test_sorted_compaction_clusters(spark, tmp_path):
     from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse import Catalog
 

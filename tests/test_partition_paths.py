@@ -12,7 +12,7 @@ from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse i
 from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse.transforms import (
     escape_path_name,
     partition_segment,
-    unescape_path_name,
+    partition_values,
 )
 from medallion_architecture_using_apache_iceberg_table_buckets_spark.pipeline import (
     build_gold_mart,
@@ -28,14 +28,20 @@ NASTY = ["a:b", "x#y", "p%q", "c=d", "e f", "g'h", "i[j]", "plain"]
 def test_escape_matches_spark_writer(spark, tmp_path):
     """Our escape twin must reproduce the exact directory names the
     Spark partitioned writer creates — byte for byte."""
-    df = spark.createDataFrame([(k, 1) for k in NASTY], SCHEMA)
+    df = spark.createDataFrame([(k, 1) for k in NASTY + [None]], SCHEMA)
     out = tmp_path / "pq"
     df.write.partitionBy("k").parquet(str(out))
     on_disk = {p.name for p in out.iterdir() if p.name.startswith("k=")}
     expected = {f"k={escape_path_name(k)}" for k in NASTY}
-    assert on_disk == expected
-    # and unescape inverts what the writer produced
-    assert {unescape_path_name(d[len("k="):]) for d in on_disk} == set(NASTY)
+    assert on_disk == expected | {"k=__HIVE_DEFAULT_PARTITION__"}
+    # and partition_values inverts what the writer produced (the null
+    # partition reads back as None) and what partition_segment builds
+    assert {
+        partition_values(f"{d}/f.parquet")["k"] for d in on_disk
+    } == set(NASTY) | {None}
+    for k in NASTY:
+        seg = partition_segment("k", k)
+        assert partition_values(f"{seg}/f.parquet") == {"k": k}
 
 
 def test_partition_segment_safety():

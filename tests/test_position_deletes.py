@@ -105,6 +105,18 @@ def test_time_travel_before_delete(spark, tmp_path):
     assert t.read(spark).count() == 3
 
 
+def test_time_travel_between_deletes(spark, tmp_path):
+    # a snapshot between two MOR deletes reads with its OWN delete set
+    t = mor_table(spark, tmp_path)
+    t.delete_where(spark, "id = 1")
+    mid = t.current_snapshot().snapshot_id
+    t.delete_where(spark, "id = 4")
+    assert {r["id"] for r in t.read(spark, snapshot_id=mid).collect()} == {
+        2, 3, 4, 5,
+    }
+    assert {r["id"] for r in t.read(spark).collect()} == {2, 3, 5}
+
+
 def test_scan_prunes_and_applies_deletes(spark, tmp_path):
     t = mor_table(spark, tmp_path, partition_by=["part"])
     t.delete_where(spark, "id = 3")
