@@ -6,11 +6,12 @@ TABLES` (README.md:220-222), `spark.catalog.tableExists`
 (scripts/raw-bronze.py:180). Namespacing is a warehouse directory
 tree: ``<warehouse>/<namespace>/<table>``.
 
-``attach_views`` registers each table's current snapshot as a Spark
-temp view named ``<namespace>_<table>`` plus metadata views
-``<namespace>_<table>_history`` — so the full Spark SQL surface
-(including the reference's interactive queries, README.md:220-229)
-runs against lakehouse tables.
+``write`` is the one create-on-first-write path: the first append or
+overwrite of a missing table creates it from the frame's schema
+(scripts/raw-bronze.py:180-185). SQL runs through ``sql_session``
+(lakehouse/sql.py), which attaches the active namespace's tables as
+bare-name views with ``<table>.history``-style metadata tables — the
+reference's interactive queries (README.md:220-229).
 """
 
 from __future__ import annotations
@@ -92,6 +93,34 @@ class Catalog:
             properties=properties,
             replace=replace,
         )
+
+    def write(
+        self,
+        namespace: str,
+        name: str,
+        df: DataFrame,
+        mode: str = "append",
+        partition_by: Iterable[str] = (),
+        properties: dict[str, str] | None = None,
+    ) -> Table:
+        """Append (``mode="append"``) or overwrite ``df`` into the
+        table, creating it from ``df.schema`` first if it is missing —
+        the create commit, then the write commit. ``partition_by`` and
+        ``properties`` apply only to that create."""
+        if mode not in ("append", "overwrite"):
+            raise ValueError(f"mode must be append or overwrite, got {mode!r}")
+        if self.table_exists(namespace, name):
+            t = self.table(namespace, name)
+        else:
+            t = self.create_table(
+                namespace, name, df.schema,
+                partition_by=partition_by, properties=properties,
+            )
+        if mode == "append":
+            t.append(df)
+        else:
+            t.overwrite(df)
+        return t
 
     def drop_table(self, namespace: str, name: str) -> None:
         shutil.rmtree(self.table_path(namespace, name), ignore_errors=True)
@@ -195,26 +224,6 @@ class Catalog:
         self._write_views(namespace, views)
 
     # -- SQL surface (D4, D7; README.md:220-229) -----------------------
-    def attach_views(
-        self, spark: SparkSession, namespace: str, with_metadata: bool = True
-    ) -> list[str]:
-        """Expose every table in `namespace` to Spark SQL as temp views."""
-        names = []
-        for name in self.tables(namespace):
-            t = self.table(namespace, name)
-            view = f"{namespace}_{name}"
-            t.read(spark).createOrReplaceTempView(view)
-            names.append(view)
-            if with_metadata:
-                t.history_df(spark).createOrReplaceTempView(f"{view}_history")
-                t.snapshots_df(spark).createOrReplaceTempView(f"{view}_snapshots")
-        return names
-
-    def sql(self, spark: SparkSession, namespace: str, query: str) -> DataFrame:
-        """Attach current views then run a Spark SQL query against them."""
-        self.attach_views(spark, namespace)
-        return spark.sql(query)
-
     def sql_session(
         self, spark: SparkSession, namespace: str | None = None
     ) -> "SqlSession":

@@ -23,6 +23,7 @@ plans (merge_into's file-scoped COW, snapshot-scoped view reads).
 from __future__ import annotations
 
 import re
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -220,6 +221,26 @@ def _split_top_level(s: str) -> list[str]:
     return [p for p in (x.strip() for x in parts) if p]
 
 
+def _table_clauses(
+    part: str | None, props_raw: str | None
+) -> tuple[list[str], dict[str, str] | None]:
+    """(partition_by, properties) from the PARTITIONED BY and
+    TBLPROPERTIES bodies of a CREATE TABLE [AS SELECT]."""
+    properties = {}
+    for kv in _split_top_level(props_raw or ""):
+        k, v = kv.split("=", 1)
+        properties[k.strip().strip("'\"")] = v.strip().strip("'\"")
+    return _split_top_level(part or ""), properties or None
+
+
+def _iso_to_epoch_ms(text: str) -> int:
+    """ISO-8601 timestamp (naive = UTC) -> epoch milliseconds."""
+    dt = datetime.fromisoformat(text)
+    if dt.tzinfo is None:
+        dt = dt.replace(tzinfo=timezone.utc)
+    return int(dt.timestamp() * 1000)
+
+
 def _quote_mask(s: str) -> list[bool]:
     """Per-character flag: True where ``s[i]`` belongs to a string
     literal (quotes included, ``''`` escapes handled)."""
@@ -406,12 +427,7 @@ class SqlSession:
             # VERSION AS OF '<ref>': a named branch or tag
             sid = t._resolve_ref(m.group(4)).snapshot_id
         else:
-            from datetime import datetime, timezone
-
-            dt = datetime.fromisoformat(m.group(5))
-            if dt.tzinfo is None:
-                dt = dt.replace(tzinfo=timezone.utc)
-            ts_ms = int(dt.timestamp() * 1000)
+            ts_ms = _iso_to_epoch_ms(m.group(5))
             older = [s for s in t.snapshots() if s.timestamp_ms <= ts_ms]
             if not older:
                 raise ValueError(
@@ -691,21 +707,13 @@ class SqlSession:
                     cname, T._parse_datatype_string(ctype), nullable
                 )
             )
-        partition_by = (
-            [p.strip() for p in _split_top_level(part) if p.strip()]
-            if part else ()
-        )
-        properties = {}
-        if props_raw:
-            for kv in _split_top_level(props_raw):
-                k, v = kv.split("=", 1)
-                properties[k.strip().strip("'\"")] = v.strip().strip("'\"")
+        partition_by, properties = _table_clauses(part, props_raw)
         self.catalog.create_table(
             ns,
             name,
             T.StructType(fields),
             partition_by=partition_by,
-            properties=properties or None,
+            properties=properties,
         )
         return self._empty()
 
@@ -939,12 +947,7 @@ class SqlSession:
                 if older_raw.isdigit():
                     older_ms = int(older_raw)
                 else:
-                    from datetime import datetime, timezone
-
-                    dt = datetime.fromisoformat(older_raw)
-                    if dt.tzinfo is None:
-                        dt = dt.replace(tzinfo=timezone.utc)
-                    older_ms = int(dt.timestamp() * 1000)
+                    older_ms = _iso_to_epoch_ms(older_raw)
             expired = t.expire_snapshots(
                 keep_last=keep, older_than_ms=older_ms
             )
@@ -1072,23 +1075,10 @@ class SqlSession:
             raise ValueError(f"table {ns}.{name} already exists")
         self._attach_current()
         df = self.spark.sql(self._rewrite_refs(select.strip()))
-        partition_by = (
-            [p.strip() for p in _split_top_level(part) if p.strip()]
-            if part else ()
+        partition_by, properties = _table_clauses(part, props_raw)
+        self.catalog.write(
+            ns, name, df, partition_by=partition_by, properties=properties
         )
-        properties = {}
-        if props_raw:
-            for kv in _split_top_level(props_raw):
-                k, v = kv.split("=", 1)
-                properties[k.strip().strip("'\"")] = v.strip().strip("'\"")
-        self.catalog.create_table(
-            ns,
-            name,
-            df.schema,
-            partition_by=partition_by,
-            properties=properties or None,
-        )
-        self.catalog.table(ns, name).append(df)
         return self._empty()
 
     # -- MERGE INTO ----------------------------------------------------

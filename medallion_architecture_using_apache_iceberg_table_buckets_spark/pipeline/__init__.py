@@ -6,7 +6,7 @@ Functions orchestration (aws-step-function/step-function.json).
 """
 
 from .checkpoint import JsonCheckpoint  # noqa: F401
-from .ingest import IncrementalFileSource, ingest_raw_to_bronze  # noqa: F401
+from .ingest import HadoopIncrementalFileSource, ingest_raw_to_bronze  # noqa: F401
 from .cdc import bronze_to_silver  # noqa: F401
 from .gold import build_gold_mart  # noqa: F401
 from .runner import MedallionPipeline  # noqa: F401

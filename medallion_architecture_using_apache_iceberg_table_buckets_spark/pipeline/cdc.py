@@ -8,12 +8,12 @@ Engine equivalent of the reference's bronze->silver job
 - no-new-data short-circuit when the latest snapshot equals the
   checkpoint (T4 — :143-145);
 - snapshot-range incremental read of bronze (S7 — :149-152);
-- keep-latest-per-key window dedup: ``ROW_NUMBER() OVER (PARTITION BY
-  <key> ORDER BY <order> DESC) = 1`` (W1 — :258-266). The reference
-  orders by the bronze ingestion time ``processed_time``; both key
-  and order columns are parameters here (SURVEY.md §2.5 note). A
-  deterministic tie-break on the remaining order columns can be
-  supplied via ``order_by``;
+- keep-latest-per-key window dedup (``operators.window_ops``):
+  ``ROW_NUMBER() OVER (PARTITION BY <key> ORDER BY <order> DESC) = 1``
+  (W1 — :258-266). The reference orders by the bronze ingestion time
+  ``processed_time``; both key and order columns are parameters here
+  (SURVEY.md §2.5 note). A deterministic tie-break on the remaining
+  order columns can be supplied via ``order_by``;
 - MERGE INTO the silver table on the natural key (J1 — :254-269),
   creating it first from a declared schema if missing (S12 —
   :169-207);
@@ -26,34 +26,12 @@ from __future__ import annotations
 from pathlib import Path
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from ..lakehouse import Catalog, merge_into
+from ..operators.window_ops import keep_latest_per_key
 from .checkpoint import JsonCheckpoint
-
-
-def keep_latest_per_key(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_by: Sequence[str],
-    descending: bool = True,
-) -> DataFrame:
-    """W1: one row per key — the latest by `order_by`.
-
-    Scale note: this is a single shuffle on the key columns; Catalyst
-    plans it as WindowExec with partial sort, spilling if needed.
-    For heavily skewed keys, pre-aggregation with ``max_by`` is the
-    alternative; window form is kept for reference parity.
-    """
-    ordering = [F.desc(c) if descending else F.asc(c) for c in order_by]
-    w = Window.partitionBy(*keys).orderBy(*ordering)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 def bronze_to_silver(

@@ -30,6 +30,19 @@ from ..lakehouse.merge import merge_into
 from ..lakehouse.transforms import parse_spec, partition_values
 
 
+LAST_SILVER_PROP = "gold.last-silver-snapshot"
+
+
+def _last_built(
+    catalog: Catalog, namespace: str, gold_table: str
+) -> tuple[bool, int | None]:
+    """(mart exists, silver snapshot id it was last built from)."""
+    if not catalog.table_exists(namespace, gold_table):
+        return False, None
+    built = catalog.table(namespace, gold_table).properties.get(LAST_SILVER_PROP)
+    return True, None if built is None else int(built)
+
+
 def _affected_partition_values(
     silver, last_snapshot_id: int | None, part_col: str
 ) -> set[str] | None:
@@ -149,14 +162,9 @@ def refresh_gold_changelog(
     def with_presented(df: DataFrame) -> DataFrame:
         return df.select(*keys, *present, *combiners)
 
-    exists = catalog.table_exists(namespace, gold_table)
-    last_built = None
-    if exists:
-        props = catalog.table(namespace, gold_table).properties
-        if "gold.last-silver-snapshot" in props:
-            last_built = int(props["gold.last-silver-snapshot"])
-        if last_built == silver_snap:
-            return {"status": "up_to_date", "silver_snapshot": silver_snap}
+    exists, last_built = _last_built(catalog, namespace, gold_table)
+    if exists and last_built == silver_snap:
+        return {"status": "up_to_date", "silver_snapshot": silver_snap}
 
     mode = "full"
     if exists and last_built is not None:
@@ -187,26 +195,12 @@ def refresh_gold_changelog(
             mode = "full"  # non-append snapshot crossed: rebuild
 
     if mode == "full":
-        full = with_presented(partial(silver.read(spark)))
-        if not exists:
-            gold = catalog.create_table(
-                namespace, gold_table, full.schema, partition_by=()
-            )
-        else:
-            gold = catalog.table(namespace, gold_table)
-        gold.overwrite(full)
+        gold = catalog.write(
+            namespace, gold_table, with_presented(partial(silver.read(spark))),
+            mode="overwrite",
+        )
 
-    base = gold._current_version()
-    snap = gold._load(base)
-    gold._next_snapshot(
-        "set-properties",
-        snap.files,
-        [],
-        [],
-        gold.schema,
-        base,
-        new_properties={"gold.last-silver-snapshot": str(silver_snap)},
-    )
+    gold.set_properties({LAST_SILVER_PROP: str(silver_snap)})
     return {"status": "refreshed", "mode": mode, "silver_snapshot": silver_snap}
 
 
@@ -259,14 +253,9 @@ def build_gold_mart(
     def aggregate(df: DataFrame) -> DataFrame:
         return df.groupBy(*group_by).agg(*agg_exprs)
 
-    exists = catalog.table_exists(namespace, gold_table)
-    last_built = None
-    if exists:
-        props = catalog.table(namespace, gold_table).properties
-        if "gold.last-silver-snapshot" in props:
-            last_built = int(props["gold.last-silver-snapshot"])
-        if last_built == silver_snap:
-            return {"status": "up_to_date", "silver_snapshot": silver_snap}
+    exists, last_built = _last_built(catalog, namespace, gold_table)
+    if exists and last_built == silver_snap:
+        return {"status": "up_to_date", "silver_snapshot": silver_snap}
 
     affected = (
         _affected_partition_values(silver, last_built, group_by[0])
@@ -295,26 +284,11 @@ def build_gold_mart(
             gold.overwrite(remaining.unionByName(changed))
         mode = f"incremental({len(affected)} partitions)"
     else:
-        full = aggregate(silver.read(spark))
-        if not exists:
-            gold = catalog.create_table(
-                namespace, gold_table, full.schema, partition_by=()
-            )
-        else:
-            gold = catalog.table(namespace, gold_table)
-        gold.overwrite(full)
+        gold = catalog.write(
+            namespace, gold_table, aggregate(silver.read(spark)), mode="overwrite"
+        )
         mode = "full"
 
     # record the silver snapshot this mart reflects
-    base = gold._current_version()
-    snap = gold._load(base)
-    gold._next_snapshot(
-        "set-properties",
-        snap.files,
-        [],
-        [],
-        gold.schema,
-        base,
-        new_properties={"gold.last-silver-snapshot": str(silver_snap)},
-    )
+    gold.set_properties({LAST_SILVER_PROP: str(silver_snap)})
     return {"status": "refreshed", "mode": mode, "silver_snapshot": silver_snap}

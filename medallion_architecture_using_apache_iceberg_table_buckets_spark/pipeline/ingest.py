@@ -5,7 +5,7 @@ Engine equivalent of the reference's raw->bronze job
 
 - incremental discovery of new files under a prefix
   (`IncrementalFileProcessor`, scripts/raw-bronze.py:16-99) — here
-  `IncrementalFileSource`, which FIXES the reference's listing race
+  `HadoopIncrementalFileSource`, which FIXES the reference's listing race
   (files arriving between the listing and the `datetime.now()`
   checkpoint could be skipped — scripts/raw-bronze.py:88, SURVEY.md
   §2.9 T1) by checkpointing the max *observed file mtime* plus the
@@ -28,14 +28,13 @@ The streaming variant (Structured Streaming file source with
 
 from __future__ import annotations
 
-import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..lakehouse import Catalog, Table
+from ..lakehouse import Catalog
 from ..session import local_frame
 from .checkpoint import JsonCheckpoint
 
@@ -47,8 +46,12 @@ def strip_scheme(path: str) -> str:
     return re.sub(r"^[a-z0-9+.-]+:/+", "/", path)
 
 
-class IncrementalFileSource:
-    """New-files-since-checkpoint discovery over a local/posix prefix.
+class HadoopIncrementalFileSource:
+    """New-files-since-checkpoint discovery via the Hadoop FileSystem
+    API (S2+S3+S4 in SURVEY.md §2.1): the same code path serves
+    ``file:``, ``hdfs:``, ``s3a:`` etc. — dispatch is Hadoop's,
+    exactly as Spark's own file sources do it. Replaces the
+    reference's boto3-vs-os.walk split (scripts/raw-bronze.py:59-85).
 
     State doc: ``{"last_mtime_ns": int, "seen_at_last_mtime": [paths]}``.
     A file is "new" if its mtime is greater than the checkpointed
@@ -57,19 +60,28 @@ class IncrementalFileSource:
     files at the boundary timestamp).
     """
 
-    def __init__(self, input_path: str | Path, checkpoint: JsonCheckpoint,
-                 suffix: str = ".csv"):
-        self.input_path = Path(input_path)
+    def __init__(self, spark: SparkSession, input_path: str | Path,
+                 checkpoint: JsonCheckpoint, suffix: str = ".csv"):
+        self.spark = spark
+        self.raw_path = str(input_path)
         self.checkpoint = checkpoint
         self.suffix = suffix
 
     def _list_files(self) -> list[tuple[str, int]]:
+        jvm = self.spark._jvm
+        jpath = jvm.org.apache.hadoop.fs.Path(self.raw_path)
+        fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        if not fs.exists(jpath):
+            return []
         out = []
-        for dirpath, _dirs, names in os.walk(self.input_path):
-            for n in names:
-                if n.endswith(self.suffix):
-                    p = Path(dirpath, n)
-                    out.append((str(p), p.stat().st_mtime_ns))
+        it = fs.listFiles(jpath, True)  # recursive
+        while it.hasNext():
+            st = it.next()
+            p = st.getPath().toString()
+            if p.endswith(self.suffix):
+                # Hadoop mtime is ms; keep the ns field name for
+                # checkpoint compatibility
+                out.append((p, st.getModificationTime() * 1_000_000))
         return sorted(out)
 
     def new_files(self) -> tuple[list[str], dict]:
@@ -93,38 +105,6 @@ class IncrementalFileSource:
 
     def commit(self, state: dict) -> None:
         self.checkpoint.commit(state)
-
-
-class HadoopIncrementalFileSource(IncrementalFileSource):
-    """Scheme-agnostic discovery via the Hadoop FileSystem API
-    (S2+S3+S4 in SURVEY.md §2.1): the same code path serves
-    ``file:``, ``hdfs:``, ``s3a:`` etc. — dispatch is Hadoop's,
-    exactly as Spark's own file sources do it. Replaces the
-    reference's boto3-vs-os.walk split (scripts/raw-bronze.py:59-85).
-    """
-
-    def __init__(self, spark: SparkSession, input_path: str,
-                 checkpoint: JsonCheckpoint, suffix: str = ".csv"):
-        super().__init__(input_path, checkpoint, suffix)
-        self.spark = spark
-        self.raw_path = str(input_path)
-
-    def _list_files(self) -> list[tuple[str, int]]:
-        jvm = self.spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(self.raw_path)
-        fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        if not fs.exists(jpath):
-            return []
-        out = []
-        it = fs.listFiles(jpath, True)  # recursive
-        while it.hasNext():
-            st = it.next()
-            p = st.getPath().toString()
-            if p.endswith(self.suffix):
-                # Hadoop mtime is ms; keep the ns field name for
-                # checkpoint compatibility
-                out.append((p, st.getModificationTime() * 1_000_000))
-        return sorted(out)
 
 
 def read_csv_batch(
@@ -184,7 +164,7 @@ def enrich_for_bronze(
     if file_seq is None:
         return out.withColumn("ingest_seq", F.lit(0).cast("long"))
     # normalize Spark's file URI (file:///x, s3a://…) for the join,
-    # mirroring strip_scheme()
+    # mirroring strip_scheme() over the listing's Path.toUri()
     norm = F.regexp_replace(F.col("input_file"), "^[a-z0-9+.-]+:/+", "/")
     return (
         out.withColumn("_path", norm)
@@ -220,21 +200,22 @@ def ingest_raw_to_bronze(
     files, next_state = source.new_files()
     if not files:
         return 0
-    # new_files() returns mtime order -> positional ingest sequence
+    # new_files() returns mtime order -> positional ingest sequence.
+    # input_file_name() is the URI-escaped form (a%20b.csv); the
+    # listing is not, so key each file by its Hadoop Path.toUri().
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
     file_seq = local_frame(
-        spark, [(strip_scheme(p), i) for i, p in enumerate(files)],
+        spark,
+        [(strip_scheme(hpath(p).toUri().toString()), i) for i, p in enumerate(files)],
         "input_file string, ingest_seq long",
     )
     df = enrich_for_bronze(
         read_csv_batch(spark, files, sep=sep, schema=schema), file_seq=file_seq
     )
-    props = {"write.parquet.compression-codec": "snappy", **(properties or {})}
-    if not catalog.table_exists(namespace, table_name):
-        # first-load create (reference uses overwrite-create, :183-185)
-        catalog.create_table(
-            namespace, table_name, df.schema, partition_by=partition_by, properties=props
-        )
-    catalog.table(namespace, table_name).append(df)
+    catalog.write(
+        namespace, table_name, df, partition_by=partition_by,
+        properties={"write.parquet.compression-codec": "snappy", **(properties or {})},
+    )
     source.commit(next_state)
     return len(files)
 

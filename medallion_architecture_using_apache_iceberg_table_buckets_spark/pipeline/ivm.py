@@ -95,14 +95,10 @@ def refresh_join_view(
             mode = "full"
 
     if mode == "full":
-        full = joined(left.read(spark), right.read(spark))
-        if not exists:
-            view = catalog.create_table(
-                namespace, view_table, full.schema, partition_by=()
-            )
-        else:
-            view = catalog.table(namespace, view_table)
-        view.overwrite(full)
+        view = catalog.write(
+            namespace, view_table, joined(left.read(spark), right.read(spark)),
+            mode="overwrite",
+        )
 
     view.set_properties(
         {LEFT_SNAP_PROP: str(l_snap), RIGHT_SNAP_PROP: str(r_snap)}

@@ -1,3 +1,3 @@
 """Structured Streaming variants of the medallion pipeline."""
 
-from .file_ingest import stream_raw_to_bronze, stream_bronze_to_silver  # noqa: F401
+from .file_ingest import stream_raw_to_bronze  # noqa: F401

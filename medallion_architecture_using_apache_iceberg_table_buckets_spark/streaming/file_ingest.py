@@ -1,22 +1,18 @@
 """Streaming ingestion: the idiomatic-Spark replacement for the
 reference's hand-rolled incremental machinery (SURVEY.md §2.9).
 
-- ``stream_raw_to_bronze``: Structured Streaming file source +
-  ``Trigger.AvailableNow`` + checkpoint dir. This subsumes the
-  reference's ``IncrementalFileProcessor`` (scripts/raw-bronze.py:
-  16-99): file discovery, the listing/commit race (T1), and the
-  at-least-once checkpoint protocol (T2) are all handled by the
-  engine's write-ahead file-source log. Each micro-batch is appended
-  to the bronze lakehouse table inside ``foreachBatch``.
-- ``stream_bronze_to_silver``: consumes bronze *snapshots* as a
-  stream (one micro-batch per unprocessed snapshot — the batch
-  equivalent of an Iceberg streaming read), applying
-  dedup + MERGE INTO per batch: the standard Spark streaming-upsert
-  idiom (``foreachBatch(batch -> dedup -> merge)``, T5).
+``stream_raw_to_bronze``: Structured Streaming file source +
+``Trigger.AvailableNow`` + checkpoint dir. This subsumes the
+reference's ``IncrementalFileProcessor`` (scripts/raw-bronze.py:
+16-99): file discovery, the listing/commit race (T1), and the
+at-least-once checkpoint protocol (T2) are all handled by the
+engine's write-ahead file-source log. Each micro-batch gets the batch
+path's lineage columns (``pipeline.ingest.enrich_for_bronze``) and is
+appended to the bronze lakehouse table inside ``foreachBatch``; the
+bronze->silver hop is ``pipeline.cdc.bronze_to_silver`` for both.
 
 Scale: the file source scales to millions of files (compaction via
-maxFilesPerTrigger); foreachBatch merges inherit the file-scoped COW
-of lakehouse.merge_into.
+maxFilesPerTrigger).
 """
 
 from __future__ import annotations
@@ -28,8 +24,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..lakehouse import Catalog, merge_into
-from ..pipeline.cdc import keep_latest_per_key
+from ..lakehouse import Catalog
+from ..pipeline.ingest import enrich_for_bronze
 
 
 def stream_raw_to_bronze(
@@ -64,96 +60,20 @@ def stream_raw_to_bronze(
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     stream = reader.load(str(input_dir))
 
-    enriched = stream.select(
-        "*",
-        F.input_file_name().alias("input_file"),
-        F.current_timestamp().alias("processed_time"),
-        F.date_format(F.current_timestamp(), "yyyy-MM-dd").alias("processed_date"),
-    )
-
     def sink(batch_df, batch_id: int) -> None:
-        batch_df = batch_df.withColumn("ingest_seq", F.lit(batch_id).cast("long"))
-        if not catalog.table_exists(namespace, table_name):
-            catalog.create_table(
-                namespace,
-                table_name,
-                batch_df.schema,
-                partition_by=tuple(partition_by),
-                properties={"write.parquet.compression-codec": "snappy"},
-            )
-        catalog.table(namespace, table_name).append(batch_df)
+        catalog.write(
+            namespace, table_name,
+            batch_df.withColumn("ingest_seq", F.lit(batch_id).cast("long")),
+            partition_by=tuple(partition_by),
+            properties={"write.parquet.compression-codec": "snappy"},
+        )
         batches["n"] += 1
 
     q = (
-        enriched.writeStream.foreachBatch(sink)
+        enrich_for_bronze(stream).writeStream.foreachBatch(sink)
         .option("checkpointLocation", str(checkpoint_dir))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
     return batches["n"]
-
-
-def stream_bronze_to_silver(
-    spark: SparkSession,
-    catalog: Catalog,
-    namespace: str,
-    bronze_table: str,
-    silver_table: str,
-    checkpoint_path: str | Path,
-    key: str | Sequence[str] = "invoiceid",
-    order_by: Sequence[str] = ("processed_time", "ingest_seq"),
-    silver_schema: T.StructType | None = None,
-    silver_partition_by: Sequence[str] = (),
-) -> int:
-    """Process each unconsumed bronze snapshot as one dedup+merge
-    micro-batch; returns the number of batches merged.
-
-    This is the T5 idiom: per batch, keep-latest-per-key then MERGE.
-    Processing snapshot-by-snapshot (instead of one big range read)
-    preserves cross-batch ordering without relying on per-row
-    timestamps alone.
-    """
-    from ..pipeline.checkpoint import JsonCheckpoint
-
-    keys = [key] if isinstance(key, str) else list(key)
-    ckpt = JsonCheckpoint(checkpoint_path)
-    bronze = catalog.table(namespace, bronze_table)
-
-    state = ckpt.load() or {"last_processed_snapshot": None}
-    last = state["last_processed_snapshot"]
-    snaps = [
-        s
-        for s in bronze.snapshots()
-        if s.operation == "append" and (last is None or s.snapshot_id > last)
-    ]
-    if not snaps:
-        return 0
-
-    if silver_schema is None:
-        dropped = {"Op", "input_file", "processed_date", "processed_time", "ingest_seq"}
-        silver_schema = T.StructType(
-            [f for f in bronze.schema.fields if f.name not in dropped]
-        )
-    if not catalog.table_exists(namespace, silver_table):
-        catalog.create_table(
-            namespace,
-            silver_table,
-            silver_schema,
-            partition_by=silver_partition_by,
-            properties={"format-version": "2"},
-        )
-    silver = catalog.table(namespace, silver_table)
-
-    n = 0
-    for snap in snaps:
-        batch = bronze.read_incremental(
-            spark,
-            start_snapshot_id=snap.parent_id,
-            end_snapshot_id=snap.snapshot_id,
-        )
-        deduped = keep_latest_per_key(batch, keys, list(order_by))
-        merge_into(spark, silver, deduped, on=keys)
-        ckpt.commit({"last_processed_snapshot": snap.snapshot_id})
-        n += 1
-    return n

@@ -73,10 +73,9 @@ def monitor_stream(
             (batch_id, r["check"], r["kind"], n_rows, r["n_violations"], r["ok"])
             for r in rep.collect()
         ]
-        metrics = local_frame(spark, rows, METRICS_SCHEMA)
-        if not catalog.table_exists(namespace, metrics_table):
-            catalog.create_table(namespace, metrics_table, METRICS_SCHEMA)
-        catalog.table(namespace, metrics_table).append(metrics)
+        catalog.write(
+            namespace, metrics_table, local_frame(spark, rows, METRICS_SCHEMA)
+        )
         tripped = [r for r in rows if not r[5] and r[1] in failing]
         if tripped:
             names = ", ".join(f"{r[1]} ({r[4]} rows)" for r in tripped)

@@ -75,6 +75,65 @@ def test_partition_paths_parse_only_in_transforms():
     assert hits == [], f"use transforms.partition_values instead: {hits}"
 
 
+def test_commits_and_first_write_have_one_home():
+    # snapshot plumbing stays inside Table (callers commit through its
+    # public methods), and create-on-first-write is Catalog.write alone
+    import ast
+    from pathlib import Path
+
+    import medallion_architecture_using_apache_iceberg_table_buckets_spark as mats
+
+    root = Path(mats.__file__).parent
+    home = root / "lakehouse" / "table.py"
+    private = ("_next_snapshot(", "_current_version(", "._load(")
+    hits = [
+        f"{path.relative_to(root)}:{i}"
+        for path in sorted(root.rglob("*.py"))
+        if path != home
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if any(p in line for p in private)
+    ]
+    assert hits == [], f"commit through Table's public methods: {hits}"
+
+    # create_table under an `if` on table_exists (directly or through a
+    # name bound to it), in a function that also appends or overwrites,
+    # is a second copy of Catalog.write
+    def calls(node, attr):
+        return any(
+            isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+            and n.func.attr == attr
+            for n in ast.walk(node)
+        )
+
+    first_write = []
+    for path in sorted(root.rglob("*.py")):
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            exists_names = {
+                t.id
+                for n in ast.walk(fn)
+                if isinstance(n, ast.Assign) and calls(n.value, "table_exists")
+                for t in n.targets
+                if isinstance(t, ast.Name)
+            }
+            guarded = any(
+                isinstance(n, ast.If)
+                and (
+                    calls(n.test, "table_exists")
+                    or any(
+                        isinstance(x, ast.Name) and x.id in exists_names
+                        for x in ast.walk(n.test)
+                    )
+                )
+                and any(calls(b, "create_table") for b in n.body + n.orelse)
+                for n in ast.walk(fn)
+            )
+            if guarded and (calls(fn, "append") or calls(fn, "overwrite")):
+                first_write.append(f"{path.relative_to(root)}:{fn.name}")
+    assert first_write == ["lakehouse/catalog.py:write"], first_write
+
+
 def test_sorted_compaction_clusters(spark, tmp_path):
     from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse import Catalog
 

@@ -159,9 +159,10 @@ def test_catalog_namespaces_and_views(spark, cat):
     t = cat.create_table("ns1", "tbl", SCHEMA)
     t.append(make_df(spark, [(1, "a", 1.0, "SC")]))
     assert cat.tables("ns1") == ["tbl"]
-    out = cat.sql(spark, "ns1", "SELECT count(*) AS n FROM ns1_tbl").collect()
+    sess = cat.sql_session(spark, "ns1")
+    out = sess.sql("SELECT count(*) AS n FROM tbl").collect()
     assert out[0]["n"] == 1
-    hist = cat.sql(spark, "ns1", "SELECT snapshot_id FROM ns1_tbl_history")
+    hist = sess.sql("SELECT snapshot_id FROM tbl.history")
     assert hist.count() == 2
 
 

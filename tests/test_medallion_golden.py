@@ -131,14 +131,14 @@ def test_ingest_race_fix(spark, tmp_path):
     """Files landing with the same mtime as the checkpoint boundary
     are not skipped on the next run (reference bug, SURVEY.md §2.9 T1)."""
     from medallion_architecture_using_apache_iceberg_table_buckets_spark.pipeline import (
-        IncrementalFileSource,
+        HadoopIncrementalFileSource,
         JsonCheckpoint,
     )
     import os
 
     raw = tmp_path / "raw"
     raw.mkdir()
-    src = IncrementalFileSource(raw, JsonCheckpoint(tmp_path / "ck.json"))
+    src = HadoopIncrementalFileSource(spark, raw, JsonCheckpoint(tmp_path / "ck.json"))
     (raw / "a.csv").write_text("x")
     files, state = src.new_files()
     assert [f.endswith("a.csv") for f in files] == [True]

@@ -13,6 +13,7 @@ Spark reads straight from the foreign scheme.
 """
 
 import os
+from urllib.parse import unquote
 
 import pytest
 
@@ -82,7 +83,8 @@ def test_foreign_scheme_listing_and_checkpoint_boundary(
 def test_ingest_end_to_end_over_foreign_scheme(spark, tmp_path, viewfs_prefix):
     """Full raw->bronze over viewfs://: discovery, Spark CSV read,
     lineage enrichment (input_file keeps the remote URI; the
-    ingest_seq join normalizes schemes identically on both sides),
+    ingest_seq join keys both sides by the scheme-less, URI-escaped
+    path),
     partitioned append, committed checkpoint."""
     from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse import (
         Catalog,
@@ -94,27 +96,37 @@ def test_ingest_end_to_end_over_foreign_scheme(spark, tmp_path, viewfs_prefix):
     uri, raw = viewfs_prefix
     _write(raw, "a.csv", "k\tv\n1\talpha\n2\tbeta\n", mtime_s=2_000_000.0)
     _write(raw, "b.csv", "k\tv\n3\tgamma\n", mtime_s=2_000_001.0)
+    # names that input_file_name() reports URI-escaped (a%20b.csv,
+    # c%25d.csv, e%23f.csv; '+' stays literal)
+    escaped = ["a b.csv", "c%d.csv", "e#f.csv", "g+h.csv"]
+    for i, name in enumerate(escaped):
+        _write(raw, name, f"k\tv\n{4 + i}\tx\n", mtime_s=2_000_002.0 + i)
 
     cat = Catalog(tmp_path / "wh")
     n = ingest_raw_to_bronze(
         spark, cat, uri, "bronze", "t", tmp_path / "ck.json"
     )
-    assert n == 2
+    assert n == 6
     rows = cat.table("bronze", "t").read(spark).collect()
     # inferSchema types k as bigint, exactly as over file:
     assert sorted((r.k, r.v) for r in rows) == [
-        (1, "alpha"), (2, "beta"), (3, "gamma")
+        (1, "alpha"), (2, "beta"), (3, "gamma"),
+        (4, "x"), (5, "x"), (6, "x"), (7, "x"),
     ]
     # lineage keeps the object-store URI; seq follows mtime order
-    by_file = {r.input_file.rsplit("/", 1)[1]: r.ingest_seq for r in rows}
-    assert by_file == {"a.csv": 0, "b.csv": 1}
+    by_file = {
+        unquote(r.input_file.rsplit("/", 1)[1]): r.ingest_seq for r in rows
+    }
+    assert by_file == {
+        name: i for i, name in enumerate(["a.csv", "b.csv", *escaped])
+    }
     assert all(r.input_file.startswith("viewfs://") for r in rows)
 
     # idempotent second run: no new files, no new rows
     assert ingest_raw_to_bronze(
         spark, cat, uri, "bronze", "t", tmp_path / "ck.json"
     ) == 0
-    assert cat.table("bronze", "t").read(spark).count() == 3
+    assert cat.table("bronze", "t").read(spark).count() == 7
 
 
 def test_strip_scheme_normalizes_authorities():

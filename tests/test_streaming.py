@@ -1,4 +1,4 @@
-"""Structured Streaming ingest + streaming upsert tests."""
+"""Structured Streaming ingest and stateful streaming operator tests."""
 
 import time
 
@@ -6,8 +6,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse import Catalog
+from medallion_architecture_using_apache_iceberg_table_buckets_spark.pipeline import (
+    bronze_to_silver,
+    ingest_raw_to_bronze,
+)
 from medallion_architecture_using_apache_iceberg_table_buckets_spark.streaming import (
-    stream_bronze_to_silver,
     stream_raw_to_bronze,
 )
 
@@ -25,9 +28,15 @@ HEADER = "Op\tinvoiceid\tcategory\tprice\tdestinationstate"
 
 
 def test_streaming_medallion_roundtrip(spark, tmp_path):
+    """Streaming raw->bronze, then the one bronze->silver hop."""
     raw = tmp_path / "raw"
     raw.mkdir()
     cat = Catalog(tmp_path / "wh")
+
+    def to_silver():
+        return bronze_to_silver(
+            spark, cat, "sales", "bronze", "silver", tmp_path / "ck_silver.json"
+        )["status"]
 
     (raw / "b1.csv").write_text(
         HEADER + "\nI\t1\tdegree\t53.51\tSC\nI\t2\tbit\t40.94\tPW\n"
@@ -38,10 +47,7 @@ def test_streaming_medallion_roundtrip(spark, tmp_path):
     assert n1 >= 1
     assert cat.table("sales", "bronze").read(spark).count() == 2
 
-    m1 = stream_bronze_to_silver(
-        spark, cat, "sales", "bronze", "silver", tmp_path / "ck_silver.json"
-    )
-    assert m1 >= 1
+    assert to_silver() == "merged"
     assert cat.table("sales", "silver").read(spark).count() == 2
 
     # second file: update invoice 1 — the file source must pick up ONLY
@@ -54,23 +60,38 @@ def test_streaming_medallion_roundtrip(spark, tmp_path):
     assert n2 >= 1
     assert cat.table("sales", "bronze").read(spark).count() == 3  # append-only
 
-    m2 = stream_bronze_to_silver(
-        spark, cat, "sales", "bronze", "silver", tmp_path / "ck_silver.json"
-    )
-    assert m2 >= 1
+    assert to_silver() == "merged"
     silver = cat.table("sales", "silver").read(spark)
     rows = {r["invoiceid"]: r for r in silver.collect()}
     assert len(rows) == 2
     assert rows[1]["category"] == "degree####"
     assert "Op" not in silver.columns
 
-    # no new data -> zero batches on both hops
+    # no new data -> zero batches, then the no-new-data short-circuit
     assert stream_raw_to_bronze(
         spark, cat, raw, "sales", "bronze", tmp_path / "ck_stream", SCHEMA
     ) == 0
-    assert stream_bronze_to_silver(
-        spark, cat, "sales", "bronze", "silver", tmp_path / "ck_silver.json"
-    ) == 0
+    assert to_silver() == "no_new_data"
+
+
+def test_batch_and_stream_bronze_share_schema(spark, tmp_path):
+    """Both raw->bronze paths enrich through enrich_for_bronze: same
+    data columns, then the same lineage columns in the same order."""
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    (raw / "b1.csv").write_text(HEADER + "\nI\t1\tdegree\t53.51\tSC\n")
+    cat = Catalog(tmp_path / "wh")
+    ingest_raw_to_bronze(
+        spark, cat, raw, "sales", "batch", tmp_path / "ck.json", schema=SCHEMA
+    )
+    stream_raw_to_bronze(
+        spark, cat, raw, "sales", "stream", tmp_path / "ck_stream", SCHEMA
+    )
+    batch = cat.table("sales", "batch").schema
+    assert batch == cat.table("sales", "stream").schema
+    assert batch.names == SCHEMA.names + [
+        "input_file", "processed_time", "processed_date", "ingest_seq"
+    ]
 
 
 def test_windowed_counts_with_watermark_drops_late_data(spark, tmp_path):
