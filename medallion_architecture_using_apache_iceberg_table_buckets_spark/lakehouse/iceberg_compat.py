@@ -524,11 +524,22 @@ def snapshot_from_iceberg(snap_entry: dict, manifest: list[dict],
     """Import one exported snapshot back into the native shape. The
     semantic fields (ids, lineage, operation, live/added/removed file
     sets) round-trip exactly; per-file stats are not reconstructed
-    (a real migration re-derives them from parquet footers)."""
+    (a real migration re-derives them from parquet footers).
+
+    Equality-delete entries (content=2) raise ``ValueError``: the
+    engine's one merge-on-read form is position deletes, and filing
+    a delete file's key rows as data would import them as rows."""
     live, added, removed, dels = [], [], [], []
     for e in manifest:
         path = e["data-file"]["file-path"].removeprefix("data/")
-        if e["data-file"].get("content", 0) == 1:
+        content = e["data-file"].get("content", 0)
+        if content == 2:
+            raise ValueError(
+                f"equality-delete file {path!r} in snapshot "
+                f"{snap_entry['snapshot-id']}: equality deletes are not "
+                f"supported (rewrite them as position deletes first)"
+            )
+        if content == 1:
             # position-delete file: live set only (a DELETED entry
             # means it was materialized away — nothing to keep)
             if e["status"] != DELETED:
@@ -737,12 +748,6 @@ def _manifest_entry_schema(transforms) -> dict:
             {"name": "upper_bounds",
              "type": ["null", _kv_int_bytes("k129_v130", 129, 130)],
              "default": None, "field-id": 128},
-            # set only on content=2 entries (equality delete files):
-            # the field ids whose values identify deleted rows
-            {"name": "equality_ids",
-             "type": ["null", {"type": "array", "items": "int",
-                              "element-id": 136}],
-             "default": None, "field-id": 135},
         ],
     }
     return {
@@ -959,10 +964,11 @@ def export_iceberg_dir(table: Table, dest) -> "Path":
 
     The export dir is SELF-CONTAINED: data files are hardlinked
     (copy-free; copy fallback across devices) under ``dest/data/``,
-    and pending MOR delta files are translated into Iceberg v2
-    equality-delete + data file pairs under ``dest/data/__mor__/``
-    with a per-snapshot DELETE manifest (content=1) alongside the
-    data manifest. Every ``file_path`` resolves against ``dest``.
+    and the table's merge-on-read state — position deletes, the one
+    MOR form — is translated into Iceberg v2 position-delete files
+    under ``dest/data/__posdel__/`` with a per-snapshot DELETE
+    manifest (content=1) alongside the data manifest. Every
+    ``file_path`` resolves against ``dest``.
     """
     import os
     from pathlib import Path
@@ -1008,96 +1014,6 @@ def export_iceberg_dir(table: Table, dest) -> "Path":
             st = s.stats.get(f)
             if st and st.get(":rows:") is not None:
                 rows_of.setdefault(f, st[":rows:"])
-
-    # ---- MOR delta translation: v2 equality-delete + data pairs ----
-    # The engine's merge-delta file holds full rows tagged _op=u/d.
-    # Iceberg's spelling of the same state: an equality DELETE file
-    # (key values of every delta row — an upsert equality-deletes its
-    # older copy too) at the delta's sequence number, plus a plain
-    # data file holding the upserted rows. The sequence rule
-    # (equality deletes hit data files with seq STRICTLY LESS) gives
-    # exactly the engine's newest-sequence-wins resolve, including
-    # across chained deltas. Translation happens offline via pyarrow;
-    # the translated pair lives under data/__mor__/<snap>/ inside the
-    # export dir, with the ORIGINAL relative path flattened into the
-    # file name so import can fuse the pair back into a native delta.
-    delta_info: dict[str, dict] = {}
-    for s in snaps:
-        if s.operation == "merge-delta":
-            keys = [
-                k for k in s.properties.get("merge-on-read.key", "").split(",") if k
-            ]
-            for f in s.added_files:
-                delta_info.setdefault(f, {"snap": s.snapshot_id, "keys": keys})
-    if delta_info:
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        for f, info in delta_info.items():
-            tbl = pq.read_table(table.data_root / f)
-            # identity-partition key columns live only in the Hive
-            # path of a partitioned delta parquet — re-inject them
-            # (typed per the table schema) so an equality delete
-            # keyed on a partition column exports its key values
-            missing = [k for k in info["keys"] if k not in tbl.column_names]
-            if missing:
-                import pyarrow as pa
-
-                pvals = partition_values(f)
-                stypes = {sf.name: sf.dataType.simpleString()
-                          for sf in table.schema.fields}
-                for k in missing:
-                    if k not in pvals:
-                        raise ValueError(
-                            f"equality-delete key column {k!r} absent "
-                            f"from delta file {f} and its partition path"
-                        )
-                    raw = pvals[k]
-                    st = stypes.get(k, "string")
-                    if raw is None:
-                        val, typ = None, pa.string()
-                    elif st in ("int", "integer"):
-                        val, typ = int(raw), pa.int32()
-                    elif st in ("bigint", "long"):
-                        val, typ = int(raw), pa.int64()
-                    elif st == "date":
-                        import datetime
-
-                        val = datetime.date.fromisoformat(raw)
-                        typ = pa.date32()
-                    elif st == "double":
-                        val, typ = float(raw), pa.float64()
-                    elif st == "float":
-                        val, typ = float(raw), pa.float32()
-                    elif st == "string":
-                        val, typ = raw, pa.string()
-                    else:
-                        # stringifying silently would never equality-
-                        # match the typed data-file side
-                        # (_cast_partition) and deleted rows would
-                        # resurrect in the round-trip — fail loud,
-                        # mirroring _cast_partition's contract
-                        raise NotImplementedError(
-                            f"equality-delete partition-key"
-                            f" re-injection for type {st!r} is not"
-                            f" implemented"
-                        )
-                    tbl = tbl.append_column(
-                        k, pa.array([val] * tbl.num_rows, type=typ)
-                    )
-            flat = f.replace("/", "%2F")
-            d = dest / "data" / "__mor__" / str(info["snap"])
-            d.mkdir(parents=True, exist_ok=True)
-            data_part = tbl.filter(pc.equal(tbl.column("_op"), "u")).drop(["_op"])
-            del_part = tbl.select(info["keys"])
-            data_rel = f"data/__mor__/{info['snap']}/{flat}.data.parquet"
-            del_rel = f"data/__mor__/{info['snap']}/{flat}.eqdel.parquet"
-            pq.write_table(data_part, dest / data_rel)
-            pq.write_table(del_part, dest / del_rel)
-            info.update(
-                data_rel=data_rel, del_rel=del_rel,
-                data_rows=data_part.num_rows, del_rows=del_part.num_rows,
-            )
 
     # ---- position-delete translation: v2 position-delete files ----
     # The engine's delete file stores (file_name basename, pos);
@@ -1173,7 +1089,7 @@ def export_iceberg_dir(table: Table, dest) -> "Path":
         all_files.update(s.removed_files)
     import shutil as _shutil
 
-    for f in all_files - set(delta_info):
+    for f in all_files:
         src, dst = table.data_root / f, dest / "data" / f
         if dst.exists() or not src.exists():
             continue
@@ -1219,36 +1135,6 @@ def export_iceberg_dir(table: Table, dest) -> "Path":
             ]
         return rec
 
-    def _mor_records(f: str):
-        """(data-part record | None, delete-part record) for one
-        translated delta file. Partition values parse from the
-        ORIGINAL relative path (delta files are partition-laid-out);
-        file paths point at the translated pair."""
-        info = delta_info[f]
-        part = {
-            _spec_field_name(tr): _partition_value(tr, f)
-            for tr in spec_transforms[_spec_of(f)]
-        }
-
-        def rec(rel: str, rows: int, content: int) -> dict:
-            r = {
-                "content": content,
-                "file_path": rel,
-                "file_format": "PARQUET",
-                "partition": part,
-                "record_count": rows,
-                "file_size_in_bytes": os.stat(dest / rel).st_size,
-            }
-            if content == 2:
-                r["equality_ids"] = [field_ids[k] for k in info["keys"]]
-            return r
-
-        data_rec = (
-            rec(info["data_rel"], info["data_rows"], 0)
-            if info["data_rows"] else None
-        )
-        return data_rec, rec(info["del_rel"], info["del_rows"], 2)
-
     def _posdel_record(part: dict) -> dict:
         prt = {
             _spec_field_name(tr): _partition_value(tr, part["sample"])
@@ -1284,23 +1170,9 @@ def export_iceberg_dir(table: Table, dest) -> "Path":
         delete_entries: list[dict] = []
         for f in sorted(snap.files):
             status = ADDED if f in added else EXISTING
-            if f in delta_info:
-                data_rec, del_rec = _mor_records(f)
-                if data_rec is not None:
-                    entries.append(_entry(status, f, data_rec))
-                delete_entries.append(_entry(status, f, del_rec))
-            else:
-                entries.append(_entry(status, f, _data_file_record(f, snap)))
+            entries.append(_entry(status, f, _data_file_record(f, snap)))
         for f in sorted(snap.removed_files):
-            if f in delta_info:
-                data_rec, del_rec = _mor_records(f)
-                if data_rec is not None:
-                    entries.append(_entry(DELETED, f, data_rec))
-                delete_entries.append(_entry(DELETED, f, del_rec))
-            else:
-                entries.append(
-                    _entry(DELETED, f, _data_file_record(f, snap))
-                )
+            entries.append(_entry(DELETED, f, _data_file_record(f, snap)))
         # position-delete entries: ADDED on first appearance,
         # EXISTING while carried, DELETED when a rewrite materializes
         # them away (sequence number = the delete's commit snapshot,
@@ -1442,19 +1314,7 @@ def import_iceberg_dir(dest) -> list[Snapshot]:
             _, entries = read_container_file(man_file)
             for e in entries:
                 path = e["data_file"]["file_path"]
-                # fuse a translated MOR pair (data/__mor__/<snap>/
-                # <flattened-orig>.{data,eqdel}.parquet) back into the
-                # single native delta file it came from: both halves
-                # carry the original relative path in their flattened
-                # file name
                 content = e["data_file"].get("content", 0)
-                if path.startswith("data/__mor__/"):
-                    flat = path.rsplit("/", 1)[-1]
-                    for suffix in (".data.parquet", ".eqdel.parquet"):
-                        if flat.endswith(suffix):
-                            flat = flat.removesuffix(suffix)
-                    path = "data/" + flat.replace("%2F", "/")
-                    content = 0  # fused back to the native delta file
                 if path.startswith("data/__posdel__/"):
                     # fuse the per-partition translated parts
                     # (<orig>.<k>.posdel.parquet) back to the single
@@ -1503,9 +1363,9 @@ def read_exported_table(dest):
       data files; content=1 manifests carry delete files;
     - position deletes (record content=1) drop ``(file_path, pos)``
       rows from data files with ``sequence_number <=`` the delete's;
-    - equality deletes (record content=2) drop rows matching the
-      delete rows' ``equality_ids`` columns from data files with
-      ``sequence_number`` STRICTLY below the delete's;
+    - equality deletes (record content=2) raise ``ValueError``: the
+      engine never writes them, and skipping one would resurrect the
+      rows it deletes;
     - identity partition values (path-only in the data files, Spark
       ``partitionBy`` layout) are re-injected from each entry's
       manifest ``partition`` record and cast per the Iceberg schema —
@@ -1539,14 +1399,12 @@ def read_exported_table(dest):
         doc["schemas"][0],
     )
     schema_fields = schema_doc["fields"]
-    fid_to_name = {f["id"]: f["name"] for f in schema_fields}
     col_order = [f["name"] for f in schema_fields]
     col_type = {f["name"]: f["type"] for f in schema_fields}
 
     _, mlist = read_container_file(dest / snap_entry["manifest-list"])
     data_entries: list[dict] = []
     pos_deletes: list[dict] = []
-    eq_deletes: list[dict] = []
     for mf in mlist:
         _, entries = read_container_file(dest / mf["manifest_path"])
         for e in entries:
@@ -1563,12 +1421,14 @@ def read_exported_table(dest):
                 "path": rec["file_path"],
                 "seq": seq,
                 "partition": rec.get("partition") or {},
-                "equality_ids": rec.get("equality_ids"),
             }
             content = rec.get("content", 0)
-            (data_entries if content == 0
-             else pos_deletes if content == 1
-             else eq_deletes).append(item)
+            if content == 2:
+                raise ValueError(
+                    f"equality-delete file {rec['file_path']!r}: "
+                    f"equality deletes are not supported"
+                )
+            (pos_deletes if content == 1 else data_entries).append(item)
 
     # (file_path -> [(pos, delete_seq)]) from every live position-
     # delete file; applied per target data file below
@@ -1578,14 +1438,6 @@ def read_exported_table(dest):
         for fp, p in zip(t.column("file_path").to_pylist(),
                          t.column("pos").to_pylist()):
             posmap.setdefault(fp, []).append((p, d["seq"]))
-
-    # equality deletes: the delete rows' key tuples + their seq
-    eqs = []
-    for d in eq_deletes:
-        cols = [fid_to_name[i] for i in d["equality_ids"]]
-        t = _pq.read_table(dest / d["path"], columns=cols)
-        keys = set(zip(*(t.column(c).to_pylist() for c in cols)))
-        eqs.append({"seq": d["seq"], "cols": cols, "keys": keys})
 
     def _cast_partition(val, ice_type):
         if val is None or not isinstance(val, str):
@@ -1621,24 +1473,12 @@ def read_exported_table(dest):
         }
         if drop:
             pdf = pdf[~pdf.index.isin(drop)]
-        # metadata-only identity partition columns — injected BEFORE
-        # equality deletes so a delete keyed on a partition column
-        # sees its values (the spec reads these from manifest
-        # partition metadata exactly like any other column)
+        # metadata-only identity partition columns (the spec reads
+        # these from manifest partition metadata exactly like any
+        # other column)
         for pname, pval in de["partition"].items():
             if pname not in pdf.columns and pname in col_type:
                 pdf[pname] = _cast_partition(pval, col_type[pname])
-        for eq in eqs:
-            if de["seq"] < eq["seq"] and len(pdf):
-                missing = [c for c in eq["cols"] if c not in pdf.columns]
-                if missing:
-                    # silently skipping would resurrect deleted rows
-                    raise ValueError(
-                        f"equality-delete key column(s) {missing} absent "
-                        f"from data file {de['path']}"
-                    )
-                keyvals = list(zip(*(pdf[c] for c in eq["cols"])))
-                pdf = pdf[[kv not in eq["keys"] for kv in keyvals]]
         frames.append(pdf)
 
     out = pd.concat(frames, ignore_index=True) if frames else pd.DataFrame(
@@ -1661,16 +1501,16 @@ def compat_notes() -> list[str]:
     needs a real catalog's conditional put); schema-history field-ids
     (evolve_field_ids + FIELD_IDS_PROP — renames keep their id,
     dropped ids are retired forever, adds take last-column-id + 1,
-    threaded through every ALTER primitive and preferred at export);
-    MOR equality deletes (pending merge-delta files translate to v2
-    equality-delete + data pairs with per-snapshot DELETE manifests —
-    the sequence rule reproduces newest-wins resolve exactly).
+    threaded through every ALTER primitive and preferred at export).
 
-    Closed later in r5: position deletes — ``write.delete.mode =
-    merge-on-read`` DELETEs commit native (file_name, pos) delete
-    files which export as v2 position-delete parquet (reserved
-    field-ids 2147483546/2147483545, sorted, split per target
-    partition value) under content=1 DELETE manifests."""
+    Closed later in r5: position deletes — merge-on-read DELETE,
+    UPDATE and MERGE (``write.{delete,update,merge}.mode``) commit
+    native (file_name, pos) delete files, the engine's one MOR form,
+    which export as v2 position-delete parquet (reserved field-ids
+    2147483546/2147483545, sorted, split per target partition value)
+    under content=1 DELETE manifests. Equality deletes (content=2)
+    are never written and are refused on import rather than read as
+    data."""
     return [
         "pre-existing tables that evolved before this engine version "
         "have no recorded id history; their first post-upgrade ALTER "

@@ -1,4 +1,4 @@
-"""MERGE INTO — file-scoped copy-on-write upsert.
+"""MERGE INTO — file-scoped upsert, copy-on-write or merge-on-read.
 
 Engine equivalent of the reference's
 ``MERGE INTO target USING source ON target.invoiceid =
@@ -8,18 +8,25 @@ INSERT *`` (template scripts/bronze-silver.py:254-269, executed
 supports CDC deletes (``Op='D'`` — implied by the DMS convention the
 fixtures use, FIXTURES.md §1).
 
-Execution strategy (what Iceberg's COW RowLevelCommand does, built
-from DataFrame ops so Catalyst owns the physical plan):
+Execution strategy (what Iceberg's RowLevelCommand does, built from
+DataFrame ops so Catalyst owns the physical plan):
 
 1. *Touched-file discovery*: semi-join target(key, _file) against the
    distinct source keys; only data files that actually contain a
    matched key are rewritten. The scan is column-pruned to the key,
    and at 100 TB this is the difference between rewriting a handful
    of files and rewriting the table.
-2. *Rewrite*: rows of touched files anti-joined against source keys
-   (drop matched rows) unioned with the source's upsert rows
-   (update + insert in one pass). Untouched files are carried over in
-   the manifest unchanged.
+2. *Rewrite* (copy-on-write, the default): rows of touched files
+   anti-joined against source keys (drop matched rows) unioned with
+   the source's upsert rows (update + insert in one pass). Untouched
+   files are carried over in the manifest unchanged.
+   *Position deletes* (``write.merge.mode = merge-on-read``, the
+   reference sets it at scripts/bronze-silver.py:179-194): the
+   matched rows of touched files are position-deleted and the upsert
+   rows appended as new files, in one ``merge`` snapshot — no data
+   file is rewritten, and reads drop the deleted rows until a
+   compaction materializes them (Iceberg's Spark MERGE in
+   merge-on-read mode writes the same).
 3. The deduped source key set is broadcast to both joins (the CDC
    case: a micro-batch of changed keys vs a huge target).
 
@@ -81,17 +88,6 @@ def merge_into(
     else:
         deletes = None
         upserts = source
-
-    # merge-on-read path: append delta files, defer resolution to read
-    # time (the Iceberg write.merge.mode table property — the
-    # reference sets it at scripts/bronze-silver.py:179-194)
-    if table.properties.get("write.merge.mode") == "merge-on-read":
-        delta = _project_to(upserts, table).withColumn("_op", F.lit("u"))
-        if deletes is not None:
-            delta = delta.unionByName(
-                _project_to(deletes, table).withColumn("_op", F.lit("d"))
-            )
-        return table.append_merge_delta(delta, keys)
 
     upsert_rows = _project_to(upserts, table)
     all_keys = upserts.select(*keys)
@@ -168,8 +164,17 @@ def merge_into(
         # Pure insert: no file rewrite at all, just new files.
         return table.replace_files([], upsert_rows, operation="merge")
 
-    # 2. rewrite only touched files (live view: any position deletes
-    # on them are applied, else the COW rewrite would resurrect rows)
+    # 2. merge-on-read: position-delete the matched live rows of the
+    # touched files and append the upserts, in one snapshot
+    if snap.properties.get("write.merge.mode") == "merge-on-read":
+        matched = table._read_live(
+            spark, snap, touched_rel, keep_pos=True
+        ).join(all_keys, keys, "left_semi")
+        return table._commit_positions(snap, "merge", matched, upsert_rows)
+
+    # 2. copy-on-write: rewrite only touched files (live view: any
+    # position deletes on them are applied, else the rewrite would
+    # resurrect rows)
     touched_df = table._read_live(spark, snap, touched_rel)
     kept = touched_df.join(all_keys, keys, "left_anti")
     rewritten = kept.unionByName(upsert_rows)

@@ -858,8 +858,7 @@ class SqlSession:
 
     # engine-internal properties that must not leak into emitted DDL
     # (they are derived state, re-created by the engine itself)
-    _INTERNAL_PROPS = ("iceberg.field-ids", "schema.renames",
-                       "merge-on-read.key")
+    _INTERNAL_PROPS = ("iceberg.field-ids", "schema.renames")
 
     def _show_create(self, ident: str) -> DataFrame:
         """``SHOW CREATE TABLE t`` — emit canonical, RE-EXECUTABLE DDL

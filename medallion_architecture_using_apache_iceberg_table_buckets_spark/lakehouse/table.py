@@ -131,10 +131,10 @@ class Snapshot:
     stats: dict[str, dict] = field(default_factory=dict)
     # live POSITION-delete files (rel to data/): parquet files of
     # (file_name string, pos long) rows naming physically-deleted rows
-    # of the files in ``files``. The engine's merge-on-read DELETE
-    # representation (Iceberg v2 position deletes, content=1) next to
-    # the key-based merge-delta (equality-delete) one. Absent in
-    # pre-upgrade snapshot JSON -> default [] (backward compatible).
+    # of the files in ``files``. The engine's one merge-on-read
+    # representation (Iceberg v2 position deletes, content=1), written
+    # by MOR DELETE, UPDATE and MERGE alike. Absent in pre-upgrade
+    # snapshot JSON -> default [] (backward compatible).
     delete_files: list[str] = field(default_factory=list)
 
     def to_json(self) -> str:
@@ -677,11 +677,11 @@ class Table:
         added: list[str] = []
         # the index makes every BASENAME table-unique: a partitioned
         # write emits the same part-NNNNN-<jobuuid> name in every
-        # partition dir it touches, and position deletes / MOR
-        # sequence resolution key rows by basename (URI-safe, unlike
-        # escaped partition segments) — without this, a position
-        # delete recorded in one partition would delete the same
-        # row position in EVERY partition sharing the part name
+        # partition dir it touches, and position deletes key rows by
+        # basename (URI-safe, unlike escaped partition segments) —
+        # without this, a position delete recorded in one partition
+        # would delete the same row position in EVERY partition
+        # sharing the part name
         for i, rel in enumerate(_list_parquet(staging)):
             rel_p = Path(rel)
             dest_rel = rel_p.parent / f"{batch}-{i:05d}-{rel_p.name}"
@@ -881,14 +881,10 @@ class Table:
         zero data IO, the Puffin-stats NDV read path. Exact-or-bail
         posture like metadata_aggregate: raises
         MetadataAggregateUnsupported when any live file lacks the
-        sketch (non-append rewrites don't re-derive them), when MOR
-        deltas/deletes are pending, or after a rename (sketches key
+        sketch (non-append rewrites don't re-derive them), when
+        position deletes are live, or after a rename (sketches key
         by the physical write-time name)."""
         snap = self.current_snapshot()
-        if self._delta_files(snap):
-            raise MetadataAggregateUnsupported(
-                "pending merge-on-read deltas: sketches predate them"
-            )
         if snap.delete_files:
             raise MetadataAggregateUnsupported(
                 "position-delete files present: deleted rows remain"
@@ -1282,38 +1278,52 @@ class Table:
         if not touched:
             return cur
         if mode == "merge-on-read":
-            return self._delete_positions(spark, cur, touched, condition)
+            return self._commit_positions(
+                cur, "delete",
+                self._read_live(spark, cur, touched, keep_pos=True).filter(
+                    F.expr(condition)
+                ),
+            )
         kept = self._read_live(spark, cur, touched).filter(
             ~F.expr(condition) | F.expr(condition).isNull()
         )
         return self.replace_files(touched, kept, operation="delete")
 
-    def _delete_positions(
+    def _commit_positions(
         self,
-        spark: SparkSession,
         cur: Snapshot,
-        touched: list[str],
-        condition: str,
+        operation: str,
+        matched: DataFrame,
+        rows: DataFrame | None = None,
     ) -> Snapshot:
-        """Write one position-delete file set for the rows of
-        ``touched`` matching ``condition`` and commit a metadata-only
-        ``delete`` snapshot (files unchanged, delete_files grown).
+        """The merge-on-read row-level commit behind DELETE, UPDATE and
+        MERGE: position-delete the rows of ``matched`` (a ``keep_pos``
+        live read of ``cur``) and append ``rows`` as new data files.
+        Both sides of the swap land in ONE snapshot, so readers never
+        observe the intermediate state; ``cur`` comes back when
+        neither side wrote anything.
 
         The live read drops already-deleted rows BEFORE the match, so
         each (file, pos) appears in at most one live delete file —
         the invariant the logical row accounting in _next_snapshot
-        relies on."""
-        df = self._read_live(spark, cur, touched, keep_pos=True)
-        added = self._write_position_deletes(
-            df.filter(F.expr(condition)).select(
+        and the COUNT(*) pushdown rely on."""
+        del_added = self._write_position_deletes(
+            matched.select(
                 F.col(self.POS_FILE_COL).alias("file_name"),
                 F.col(self.POS_POS_COL).alias("pos"),
             )
         )
-        if not added:
+        data_added = [] if rows is None else [
+            f
+            for f in self._write_files(rows, cur.partition_by)
+            if _file_rows(self.data_root / f) > 0
+        ]
+        if not del_added and not data_added:
             return cur
-        return self._commit_metadata(
-            cur, "delete", delete_files=cur.delete_files + added
+        return self._next_snapshot(
+            operation, cur.files + data_added, data_added, [],
+            schema_from_json(cur.schema_json), cur.version,
+            delete_files=cur.delete_files + del_added,
         )
 
     UPDATE_MODE_PROP = "write.update.mode"  # Iceberg's property name
@@ -1380,135 +1390,28 @@ class Table:
         condition: str,
     ) -> Snapshot:
         """MOR UPDATE: position-delete the matching rows and append
-        their updated versions — both sides of the swap land in ONE
-        snapshot, so readers never observe the intermediate state."""
+        their updated versions in one snapshot."""
         schema = schema_from_json(cur.schema_json)
-        names = [f.name for f in schema.fields]
         by_name = {f.name: f for f in schema.fields}
-        df = self._read_live(spark, cur, touched, keep_pos=True)
-        matched = df.filter(F.expr(condition)).persist()
-        del_added = self._write_position_deletes(
-            matched.select(
-                F.col(self.POS_FILE_COL).alias("file_name"),
-                F.col(self.POS_POS_COL).alias("pos"),
-            )
-        )
-        if not del_added:
-            matched.unpersist()
-            return cur
+        matched = self._read_live(
+            spark, cur, touched, keep_pos=True
+        ).filter(F.expr(condition)).persist()
         updated = matched.select(
             *[
                 F.expr(assignments[n]).cast(by_name[n].dataType).alias(n)
                 if n in assignments
                 else F.col(n)
-                for n in names
+                for n in by_name
             ]
         )
-        data_added = self._write_files(updated, cur.partition_by)
-        matched.unpersist()
-        return self._next_snapshot(
-            "update",
-            cur.files + data_added,
-            data_added,
-            [],
-            schema,
-            cur.version,
-            delete_files=cur.delete_files + del_added,
-        )
+        try:
+            return self._commit_positions(cur, "update", matched, updated)
+        finally:
+            matched.unpersist()
 
     # ------------------------------------------------------------------
-    # merge-on-read deltas + compaction
+    # compaction
     # ------------------------------------------------------------------
-    MOR_OP_COL = "_op"
-    MOR_SEQ_COL = "_seq"
-
-    def append_merge_delta(self, delta_df: DataFrame, keys: list[str]) -> Snapshot:
-        """MOR merge: append an upsert/delete delta file set instead of
-        rewriting base files (operation ``merge-delta``).
-
-        ``delta_df`` carries the table columns plus ``_op``
-        ('u' upsert / 'd' delete), one row per key. The declared table
-        schema is unchanged; read() resolves deltas (newest sequence
-        wins). This is the high-churn-table mode: merge cost is
-        O(delta), reads pay the resolve until compact() runs —
-        exactly the Iceberg COW/MOR trade (SURVEY.md §2.1 S13).
-        """
-        base = self._current_version()
-        cur = self._load(base)
-        added = self._write_files(delta_df, cur.partition_by)
-        return self._next_snapshot(
-            "merge-delta",
-            cur.files + added,
-            added,
-            [],
-            schema_from_json(cur.schema_json),
-            base,
-            new_properties={"merge-on-read.key": ",".join(keys)},
-        )
-
-    def _file_sequence(self) -> dict[str, int]:
-        """file (rel path) -> version of the snapshot that added it."""
-        seq: dict[str, int] = {}
-        for s in self.snapshots():
-            for f in s.added_files:
-                seq[f] = s.version
-        return seq
-
-    def _delta_files(self, snap: Snapshot) -> set[str]:
-        delta: set[str] = set()
-        for s in self.snapshots():
-            if s.version <= snap.version and s.operation == "merge-delta":
-                delta.update(s.added_files)
-        return delta & set(snap.files)
-
-    def _resolve_mor(self, spark: SparkSession, snap: Snapshot) -> DataFrame:
-        """Newest-sequence-wins resolve of base + delta files."""
-        from pyspark.sql import Window
-
-        keys = [
-            k for k in snap.properties.get("merge-on-read.key", "").split(",") if k
-        ]
-        schema = schema_from_json(snap.schema_json)
-        # position deletes name PHYSICAL rows (base or delta files
-        # alike) — the live read applies them before the key-wise
-        # newest-wins resolve so a deleted delta row can't win its key.
-        # It then keeps the attach column, which already holds the
-        # basename: input_file_name() is illegal once the anti-join
-        # adds a second file source.
-        df = self._read_live(
-            spark, snap, keep_pos=bool(snap.delete_files),
-            schema=T.StructType(
-                schema.fields
-                + [T.StructField(self.MOR_OP_COL, T.StringType())]
-            ),
-        )
-        # keyed by basename, not full rel path: input_file_name()
-        # percent-encodes partition dirs (escaped chars arrive as
-        # %25XX), while basenames are uuid-hex + part names — always
-        # URI-safe and unique per file (uuid batch prefix + per-file
-        # index assigned at staging promote, see _write_files)
-        seq_rows = [
-            (f.rsplit("/", 1)[-1], v)
-            for f, v in self._file_sequence().items()
-            if f in set(snap.files)
-        ]
-        seq_df = local_frame(spark, seq_rows, "base_name string, _seq long")
-        df = df.withColumn(
-            "_base",
-            F.col(self.POS_FILE_COL)
-            if snap.delete_files
-            else F.element_at(F.split(F.input_file_name(), "/"), -1),
-        )
-        df = df.join(
-            F.broadcast(seq_df), F.col("_base") == F.col("base_name"), "left"
-        )
-        w = Window.partitionBy(*keys).orderBy(F.desc(self.MOR_SEQ_COL))
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("_rn") == 1) & (F.coalesce(F.col(self.MOR_OP_COL), F.lit("u")) != "d"))
-            .select(*[f.name for f in schema.fields])
-        )
-
     def compact(
         self,
         spark: SparkSession,
@@ -1517,9 +1420,9 @@ class Table:
         zorder_by: list[str] | None = None,
         zorder_bits: int = 16,
     ) -> Snapshot:
-        """Rewrite the table to plain base files: resolves MOR deltas
-        and merges small files (the maintenance pass every
-        streaming-append/MOR table needs).
+        """Rewrite the table to plain base files: materializes
+        position deletes and merges small files (the maintenance pass
+        every streaming-append/MOR table needs).
 
         ``sort_by`` range-partitions and sorts the rewrite on the
         given columns — data clustering, so Parquet row-group min/max
@@ -1738,9 +1641,8 @@ class Table:
     # reads
     # ------------------------------------------------------------------
     # attach-column names for position-delete resolution: basename of
-    # the source file (uuid-unique, URI-safe — same keying as the MOR
-    # resolve) and the row's ordinal within it (_metadata.row_index,
-    # exactly Iceberg's ``pos``)
+    # the source file (uuid-unique, URI-safe) and the row's ordinal
+    # within it (_metadata.row_index, exactly Iceberg's ``pos``)
     POS_FILE_COL = "_pd_file"
     POS_POS_COL = "_pd_pos"
 
@@ -1908,7 +1810,6 @@ class Table:
         snap: Snapshot,
         files: list[str] | None = None,
         keep_pos: bool = False,
-        schema: T.StructType | None = None,
         deletes: Snapshot | None = None,
     ) -> DataFrame:
         """The live rows of ``files`` (default: every data file of
@@ -1919,8 +1820,7 @@ class Table:
         never resurrects a deleted row.
 
         ``keep_pos`` keeps the attach columns (source basename and row
-        ordinal); ``schema`` widens the read (the MOR resolve adds
-        ``_op``); ``deletes`` takes the position deletes from another
+        ordinal); ``deletes`` takes the position deletes from another
         snapshot (the changelog's start side).
 
         The delete side is tiny relative to the table in the intended
@@ -1932,7 +1832,7 @@ class Table:
         df = self._read_files(
             spark,
             snap.files if files is None else files,
-            schema or schema_from_json(snap.schema_json),
+            schema_from_json(snap.schema_json),
             renames=self._snap_renames(snap),
             attach_pos=attach,
         )
@@ -1969,22 +1869,16 @@ class Table:
             snap = self.snapshot_by_id(snapshot_id)
         else:
             snap = self.current_snapshot()
-        if self._delta_files(snap):
-            return self._resolve_mor(spark, snap)
         return self._read_live(spark, snap)
 
     def scan(self, spark: SparkSession, where: str | None = None) -> DataFrame:
         """Predicate-planned scan: manifest partition pruning + file
         skipping on column stats BEFORE the read, then the residual
         filter on what's left — Iceberg's planFiles() shape. With no
-        predicate (or a MOR delta pending) this is read()."""
+        predicate this is read()."""
         snap = self.current_snapshot()
         if not where:
             return self.read(spark)
-        if self._delta_files(snap):
-            # delta resolution needs every base+delta file; the
-            # residual filter still applies
-            return self.read(spark).filter(F.expr(where))
         from .bloom_index import prune_files_by_bloom
 
         files = self._prune_files_by_predicate(spark, snap.files, where)
@@ -2018,7 +1912,6 @@ class Table:
         Exactness contract — raises ``MetadataAggregateUnsupported``
         (callers fall back to a real scan) whenever stats cannot
         answer EXACTLY:
-        - pending MOR merge deltas (row counts need a resolve);
         - position-delete files, UNLESS the request is COUNT(*) only:
           live rows per data file = recorded rows − the per-target
           delete counts the commit recorded into the manifest
@@ -2071,10 +1964,6 @@ class Table:
         count_of = dict(count_of or {})
         group_by = list(group_by)
         snap = self.current_snapshot()
-        if self._delta_files(snap):
-            raise MetadataAggregateUnsupported(
-                "pending merge-on-read deltas: row counts need resolve"
-            )
         deleted_by_base: dict[str, int] = {}
         if snap.delete_files:
             # Pure position-delete snapshots still answer COUNT(*)
@@ -2425,9 +2314,7 @@ class Table:
         present and payload-equal cancels (a COW rewrite carries
         unchanged rows into new files — not a change), differing
         payload emits the UPDATE pair. Without keys it degrades to a
-        set-diff (INSERT/DELETE only). Pending MOR merge-deltas are
-        refused (compact first) — their key-wise resolve hides row
-        provenance, the same restriction Iceberg's changelog has.
+        set-diff (INSERT/DELETE only).
         """
         start = self.snapshot_by_id(start_snapshot_id)
         end = (
@@ -2435,10 +2322,6 @@ class Table:
             if end_snapshot_id is None
             else self.snapshot_by_id(end_snapshot_id)
         )
-        if self._delta_files(start) or self._delta_files(end):
-            raise ValueError(
-                "changelog with pending merge-deltas: run compact() first"
-            )
         start_files, end_files = set(start.files), set(end.files)
         added = sorted(end_files - start_files)
         removed = sorted(start_files - end_files)
@@ -2745,18 +2628,10 @@ class Table:
         """Full-table scan plus Iceberg's row-lineage metadata columns
         ``_file`` (data file, rel to data/) and ``_pos`` (row ordinal
         within it — the same pos position deletes target). Live
-        position deletes are applied; a table with pending MOR
-        merge-deltas must compact first (resolved rows have no single
-        source file, same as Iceberg's changelog limitation)."""
+        position deletes are applied."""
         snap = self.current_snapshot()
-        if self._delta_files(snap):
-            raise ValueError(
-                "metadata-column read with pending merge-deltas: "
-                "run compact() first"
-            )
         df = self._read_live(spark, snap, keep_pos=True)
-        # basename -> rel path (the broadcast-map shape _resolve_mor
-        # uses; basenames are uuid-unique)
+        # basename -> rel path (basenames are uuid-unique)
         rel_rows = [(f.rsplit("/", 1)[-1], f) for f in snap.files]
         rel_df = local_frame(
             spark, rel_rows, "_mc_base string, _file string"
@@ -2795,9 +2670,9 @@ class Table:
     def rewrite_position_deletes(self, spark: SparkSession) -> Snapshot:
         """Consolidate the live position-delete file set into one
         sorted file (Iceberg's rewrite_position_delete_files
-        procedure): every MOR DELETE/UPDATE commit adds a small delete
-        file, and reads anti-join ALL of them — a maintenance pass
-        caps that fan-in without touching any data file. Entries are
+        procedure): every MOR DELETE/UPDATE/MERGE commit adds a small
+        delete file, and reads anti-join ALL of them — a maintenance
+        pass caps that fan-in without touching any data file. Entries are
         carried verbatim (including ones referencing since-removed
         files — inert but accounting-neutral), so the logical row
         count is unchanged by construction."""
@@ -2830,15 +2705,8 @@ class Table:
         ``min_group`` small files to be worth a rewrite. Live
         position deletes on the chosen files are applied (the rewrite
         materializes them for those files only; delete entries for
-        untouched files stay live). Refuses while MOR merge-deltas
-        are pending — their key-wise resolve spans files, so only the
-        full compact() can fold them."""
+        untouched files stay live)."""
         snap = self.current_snapshot()
-        if self._delta_files(snap):
-            raise ValueError(
-                "binpack with pending merge-deltas: the key-wise "
-                "resolve spans files — run full compact() instead"
-            )
         by_dir: dict[str, list[str]] = {}
         for f in snap.files:
             try:
@@ -2913,7 +2781,6 @@ class Table:
             raise ValueError("must keep at least the current snapshot")
         cur = self._current_version()
         cutoff = cur - keep_last + 1
-        current_files = set(self.current_snapshot().files)
         # named refs pin their target snapshots (Iceberg retains every
         # ref head through expiration)
         pinned = {r["snapshot_id"] for r in self.refs().values()}
@@ -2923,13 +2790,6 @@ class Table:
             and s.snapshot_id not in pinned
             and (older_than_ms is None or s.timestamp_ms < older_than_ms)
         ]
-        for s in to_expire:
-            if s.operation == "merge-delta" and set(s.added_files) & current_files:
-                raise ValueError(
-                    "cannot expire a merge-delta snapshot whose delta files "
-                    "are still live: MOR resolution needs their sequence — "
-                    "run compact() first"
-                )
         expired = []
         for s in to_expire:
             (self.snap_root / f"v{s.version:08d}.json").unlink(missing_ok=True)

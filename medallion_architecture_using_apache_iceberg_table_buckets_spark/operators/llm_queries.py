@@ -524,10 +524,11 @@ def incremental_scan_changelog(spark, sf_dir):
 
 def mor_merge_compact(spark, sf_dir):
     """Merge-on-read end-to-end (SURVEY S13): a MOR table takes an
-    upsert delta and a CDC-delete delta WITHOUT rewriting base files,
-    resolves them on read, then ``compact`` rewrites everything to
-    plain base files — returned post-compact so both the delta-merge
-    write path and the compaction rewrite are exercised."""
+    upsert MERGE and a CDC-delete MERGE WITHOUT rewriting base files
+    (matched rows are position-deleted, upserts appended), reads drop
+    the deleted rows, then ``compact`` rewrites everything to plain
+    base files — returned post-compact so both the MOR merge write
+    path and the compaction rewrite are exercised."""
     import tempfile
 
     from ..lakehouse import Catalog, merge_into
@@ -549,7 +550,8 @@ def mor_merge_compact(spark, sf_dir):
         "value", F.col("value") * 2
     )
     merge_into(spark, t, upd, on="event_id")
-    assert t.current_snapshot().operation == "merge-delta"
+    snap = t.current_snapshot()
+    assert snap.operation == "merge" and snap.delete_files
     dele = (
         e.filter((F.col("event_id") >= 500) & (F.col("event_id") < 700))
         .withColumn("Op", F.lit("D"))

@@ -2,12 +2,11 @@
 binpack): only small files rewrite; big files and other partitions
 carry over untouched."""
 
-import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse import (
     Catalog,
+    merge_into,
 )
 
 SCHEMA = T.StructType(
@@ -117,16 +116,25 @@ def test_binpack_materializes_deletes_of_chosen_files_only(spark, tmp_path):
 
 
 def test_binpack_refuses_pending_mor_deltas(spark, tmp_path):
+    # a merge-on-read MERGE leaves position deletes, which binpack
+    # materializes into its rewrite like any other
     cat = Catalog(tmp_path / "wh")
     t = cat.create_table(
         "d", "t5", SCHEMA,
         properties={"write.merge.mode": "merge-on-read"},
     )
-    t.append(make(spark, [(1, "a", "v")]))
-    delta = make(spark, [(1, "a", "v2")]).withColumn("_op", F.lit("u"))
-    t.append_merge_delta(delta, keys=["k"])
-    with pytest.raises(ValueError, match="compact"):
-        t.compact_binpack(spark)
+    t.append(make(spark, [(1, "a", "v"), (2, "a", "w")]).coalesce(1))
+    merge_into(spark, t, make(spark, [(1, "a", "v2")]), on="k")
+    assert t.current_snapshot().operation == "merge"
+    assert t.current_snapshot().delete_files
+    t.compact_binpack(spark)
+    snap = t.current_snapshot()
+    assert snap.operation == "replace"
+    assert snap.delete_files == [] and len(snap.files) == 1
+    assert snap.summary["total_records"] == 2
+    assert {(r["k"], r["v"]) for r in t.read(spark).collect()} == {
+        (1, "v2"), (2, "w"),
+    }
 
 
 def test_call_rewrite_data_files_small_file_bytes(spark, tmp_path):

@@ -1,6 +1,5 @@
 """Row-level CDC changelog between snapshots (Table.changelog)."""
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -126,19 +125,23 @@ def test_keyless_set_diff_and_empty_range(spark, tmp_path):
 
 
 def test_changelog_refuses_pending_deltas(spark, tmp_path):
+    # a merge-on-read MERGE is position deletes plus new files, so
+    # the changelog pairs the deleted and appended rows per key
     cat = Catalog(tmp_path / "wh")
     t = cat.create_table(
         "d", "t6", SCHEMA,
         properties={"write.merge.mode": "merge-on-read"},
     )
-    t.append(make(spark, [(1, "a", 1.0)]))
+    t.append(make(spark, [(1, "a", 1.0), (2, "c", 3.0)]))
     s0 = t.current_snapshot().snapshot_id
-    t.append_merge_delta(
-        make(spark, [(1, "b", 2.0)]).withColumn("_op", F.lit("u")),
-        keys=["k"],
-    )
-    with pytest.raises(ValueError, match="compact"):
-        t.changelog(spark, s0, keys=["k"])
+    merge_into(spark, t, make(spark, [(1, "b", 2.0), (5, "e", 5.0)]), on="k")
+    assert t.current_snapshot().operation == "merge"
+    assert t.current_snapshot().delete_files
+    assert _changes(t.changelog(spark, s0, keys=["k"])) == {
+        ("UPDATE_BEFORE", 1, "a", 1.0),
+        ("UPDATE_AFTER", 1, "b", 2.0),
+        ("INSERT", 5, "e", 5.0),
+    }
 
 
 def test_changelog_applies_back_to_end_state(spark, tmp_path):

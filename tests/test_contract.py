@@ -134,6 +134,60 @@ def test_commits_and_first_write_have_one_home():
     assert first_write == ["lakehouse/catalog.py:write"], first_write
 
 
+def test_one_merge_on_read_form():
+    # merge-on-read is position deletes alone: the key-based
+    # merge-delta form and its read-time resolve are gone
+    import ast
+    from pathlib import Path
+
+    import medallion_architecture_using_apache_iceberg_table_buckets_spark as mats
+
+    root = Path(mats.__file__).parent
+    gone = ("merge-delta", "_delta_files", "_resolve_mor",
+            "append_merge_delta", "__mor__")
+    hits = [
+        f"{path.relative_to(root)}:{i}"
+        for path in sorted(root.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if any(g in line for g in gone)
+    ]
+    assert hits == [], f"position deletes are the one MOR form: {hits}"
+
+    # reads are not O(history): read, scan and _read_live, and every
+    # Table method they reach, never list the snapshots. Two reached
+    # lookups only run on request and stay out of the walk: time
+    # travel to a given snapshot id, and scan's partition-predicate
+    # pruner, which gathers the identity columns of retained specs
+    table = next(
+        n for n in ast.parse((root / "lakehouse" / "table.py").read_text()).body
+        if isinstance(n, ast.ClassDef) and n.name == "Table"
+    )
+    methods = {
+        n.name: n for n in table.body if isinstance(n, ast.FunctionDef)
+    }
+    on_request = {"snapshot_by_id", "_prune_files_by_predicate"}
+
+    def self_calls(fn):
+        return {
+            n.func.attr
+            for n in ast.walk(fn)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and isinstance(n.func.value, ast.Name)
+            and n.func.value.id == "self"
+        }
+
+    reached, todo = set(), ["read", "scan", "_read_live"]
+    while todo:
+        name = todo.pop()
+        if name in reached or name in on_request or name not in methods:
+            continue
+        reached.add(name)
+        todo.extend(self_calls(methods[name]))
+    listing = sorted(m for m in reached if "snapshots" in self_calls(methods[m]))
+    assert listing == [], f"reads list the snapshot history in {listing}"
+
+
 def test_sorted_compaction_clusters(spark, tmp_path):
     from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse import Catalog
 

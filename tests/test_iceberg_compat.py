@@ -449,17 +449,64 @@ def test_field_ids_survive_schema_evolution(spark, tmp_path):
     assert "iceberg.field-ids" not in doc["properties"]
 
 
-def test_mor_deltas_export_as_equality_deletes(spark, tmp_path):
-    """Pending merge-delta files export as Iceberg v2 equality-delete
-    + data file pairs. Three checks: (1) layout — DELETE manifests
-    (content=1) alongside data manifests, equality_ids on content=2
-    entries, self-contained data dir; (2) SEMANTICS — an independent
-    'Iceberg reader' (DuckDB applying the sequence rule: equality
-    deletes hit data files with seq strictly less) reproduces the
-    engine's MOR-resolved read exactly; (3) import fuses each pair
-    back into its native delta file."""
+def _duckdb_spec_rows(dest, cols):
+    """DuckDB as the Iceberg reader over an export: the current
+    snapshot's live data files minus the ``(file_path, pos)`` rows its
+    position-delete files name at an equal or later sequence number.
+    Identity partition columns come from the Hive path."""
     import duckdb
 
+    from medallion_architecture_using_apache_iceberg_table_buckets_spark.functions.avro_codec import (
+        read_container_file,
+    )
+    from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse.iceberg_compat import (
+        current_metadata_version,
+    )
+
+    meta = dest / "metadata"
+    doc = json.loads(
+        (meta / f"v{current_metadata_version(meta)}.metadata.json").read_text()
+    )
+    head = next(
+        s for s in doc["snapshots"]
+        if s["snapshot-id"] == doc["current-snapshot-id"]
+    )
+    _, mlist = read_container_file(dest / head["manifest-list"])
+    live, dels = [], []
+    for mf in mlist:
+        _, entries = read_container_file(dest / mf["manifest_path"])
+        for e in entries:
+            if e["status"] != 2:
+                (dels if mf["content"] == 1 else live).append(
+                    (e["data_file"]["file_path"], e["sequence_number"])
+                )
+    con = duckdb.connect()
+    parts = []
+    for path, seq in live:
+        named = [
+            f"SELECT pos FROM '{dest}/{dp}' WHERE file_path = '{path}'"
+            for dp, dseq in dels if dseq >= seq
+        ]
+        cond = (
+            f"file_row_number NOT IN ({' UNION ALL '.join(named)})"
+            if named else "TRUE"
+        )
+        parts.append(
+            f"SELECT {', '.join(cols)} FROM read_parquet('{dest}/{path}', "
+            f"file_row_number = true, hive_partitioning = true) "
+            f"WHERE {cond}"
+        )
+    return con.execute(" UNION ALL ".join(parts)).fetchall()
+
+
+def test_mor_deltas_export_as_equality_deletes(spark, tmp_path):
+    """A merge-on-read MERGE exports as Iceberg v2 position deletes,
+    the table's one MOR form. Three checks: (1) layout — one DELETE
+    manifest (content=1) of content=1 entries alongside the data
+    manifest, no equality deletes, self-contained data dir; (2)
+    SEMANTICS — DuckDB applying the position deletes reproduces the
+    engine's read exactly, across chained merges and a CDC delete;
+    (3) import rebuilds the native data and delete file sets."""
     from medallion_architecture_using_apache_iceberg_table_buckets_spark.functions.avro_codec import (
         read_container_file,
     )
@@ -476,21 +523,22 @@ def test_mor_deltas_export_as_equality_deletes(spark, tmp_path):
     t.append(spark.createDataFrame([(i, f"v{i}", float(i)) for i in range(10)], sch))
     from pyspark.sql import functions as F
 
-    # delta 1: upsert ids 0-2, then a CDC delete of id 3
+    # merge 1: upsert ids 0-2, then a CDC delete of id 3
     up = spark.createDataFrame(
         [(0, "u0", 100.0), (1, "u1", 101.0), (2, "u2", 102.0)], sch)
     merge_into(spark, t, up, on="id")
     dele = spark.createDataFrame([(3, "x", 0.0)], sch).withColumn("Op", F.lit("D"))
     merge_into(spark, t, dele, on="id", delete_predicate="Op = 'D'")
-    # delta 2 re-upserts id 0 (newest-wins across chained deltas)
+    # merge 3 re-upserts id 0: it position-deletes merge 1's row
     merge_into(spark, t, spark.createDataFrame([(0, "u0b", 200.0)], sch), on="id")
-    assert t.current_snapshot().operation == "merge-delta"
+    head = t.current_snapshot()
+    assert head.operation == "merge" and head.removed_files == []
+    assert len(head.delete_files) == 3
 
     dest = export_iceberg_dir(t, tmp_path / "export")
     meta = dest / "metadata"
 
     # (1) layout
-    head = t.current_snapshot()
     _, mlist = read_container_file(meta / f"snap-{head.snapshot_id}.avro")
     contents = sorted(mf["content"] for mf in mlist)
     assert contents == [0, 1], "expected one data + one delete manifest"
@@ -498,10 +546,10 @@ def test_mor_deltas_export_as_equality_deletes(spark, tmp_path):
     _, del_entries = read_container_file(
         meta / del_mf["manifest_path"].removeprefix("metadata/")
     )
-    id_fid = 1  # first column
+    assert del_entries
     for e in del_entries:
-        assert e["data_file"]["content"] == 2
-        assert e["data_file"]["equality_ids"] == [id_fid]
+        assert e["data_file"]["content"] == 1
+        assert "equality_ids" not in e["data_file"]
         assert (dest / e["data_file"]["file_path"]).exists()
     data_mf = next(mf for mf in mlist if mf["content"] == 0)
     _, data_entries = read_container_file(
@@ -509,27 +557,10 @@ def test_mor_deltas_export_as_equality_deletes(spark, tmp_path):
     )
     for e in data_entries:
         assert e["data_file"]["content"] == 0
-        assert e["data_file"].get("equality_ids") is None
         assert (dest / e["data_file"]["file_path"]).exists()  # self-contained
 
     # (2) semantics: DuckDB plays the Iceberg reader over the export
-    con = duckdb.connect()
-    live = [(e["data_file"]["file_path"], e["sequence_number"])
-            for e in data_entries if e["status"] in (0, 1)]
-    dels = [(e["data_file"]["file_path"], e["sequence_number"])
-            for e in del_entries if e["status"] in (0, 1)]
-    parts = []
-    for path, seq in live:
-        cond = " AND ".join(
-            f"id NOT IN (SELECT id FROM '{dest}/{dp}')"
-            for dp, dseq in dels if dseq > seq
-        ) or "TRUE"
-        parts.append(
-            f"SELECT id, v, amount FROM '{dest}/{path}' WHERE {cond}"
-        )
-    got = con.execute(
-        " UNION ALL ".join(parts) + " ORDER BY id"
-    ).fetchall()
+    got = sorted(_duckdb_spec_rows(dest, ["id", "v", "amount"]))
     want = [
         tuple(r) for r in sorted(
             t.read(spark).select("id", "v", "amount").collect()
@@ -539,13 +570,39 @@ def test_mor_deltas_export_as_equality_deletes(spark, tmp_path):
     assert any(r[0] == 0 and r[1] == "u0b" for r in got)  # newest wins
     assert not any(r[0] == 3 for r in got)  # delete applied
 
-    # (3) import fuses the pairs back into native delta files
+    # (3) import rebuilds the native file and delete-file sets
     back = import_iceberg_dir(dest)
     native = t.snapshots()
     assert len(back) == len(native)
     for b, n in zip(back, native):
         assert b.files == sorted(n.files)
         assert b.added_files == sorted(n.added_files)
+        assert b.delete_files == sorted(n.delete_files)
+
+
+def test_import_refuses_equality_deletes():
+    """An equality-delete file (content=2) holds the KEYS of deleted
+    rows: import names it and refuses instead of filing its key rows
+    as live data."""
+    import pytest
+
+    from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse.iceberg_compat import (
+        snapshot_from_iceberg,
+    )
+
+    snap_entry = {
+        "snapshot-id": 7,
+        "timestamp-ms": 0,
+        "summary": {"operation": "delete"},
+    }
+    manifest = [
+        {"status": 1, "data-file": {"content": 0,
+                                    "file-path": "data/a.parquet"}},
+        {"status": 1, "data-file": {"content": 2,
+                                    "file-path": "data/eq-1.parquet"}},
+    ]
+    with pytest.raises(ValueError, match="eq-1.parquet"):
+        snapshot_from_iceberg(snap_entry, manifest, "{}", [], {})
 
 
 def test_refs_export_as_v2_refs_map(spark, tmp_path):
@@ -571,11 +628,11 @@ def test_refs_export_as_v2_refs_map(spark, tmp_path):
 def test_external_spec_reader_reconstructs_current_rows(spark, tmp_path):
     """A reader implementing ONLY the published v2 protocol
     (version-hint -> metadata.json -> manifest list -> manifests ->
-    parquet, position deletes at seq <=, equality deletes at seq <,
-    identity partition values from the manifest partition record)
-    must reproduce the engine's current-table read byte-for-byte —
-    across hidden-transform partitioning, identity partitioning with
-    path-only columns, MOR equality deletes, and position deletes."""
+    parquet, position deletes at seq <=, identity partition values
+    from the manifest partition record) must reproduce the engine's
+    current-table read byte-for-byte — across hidden-transform
+    partitioning, identity partitioning with path-only columns, a
+    merge-on-read MERGE, and merge-on-read DELETE."""
     from pyspark.sql import functions as F
 
     from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse.iceberg_compat import (
@@ -613,7 +670,7 @@ def test_external_spec_reader_reconstructs_current_rows(spark, tmp_path):
     cols_b = ["id", "seg", "amount"]
     assert ext_rows(dest_b, cols_b) == rows_of(tb.read(spark), cols_b)
 
-    # (C) MOR equality deletes (pending deltas) + chained upserts
+    # (C) merge-on-read MERGE (position deletes) + chained upserts
     sch_c = T.StructType.fromDDL("id long, v string, amount double")
     cat_c = Catalog(tmp_path / "wh_c")
     tc = cat_c.create_table(
@@ -627,10 +684,14 @@ def test_external_spec_reader_reconstructs_current_rows(spark, tmp_path):
     merge_into(spark, tc, dele, on="id", delete_predicate="Op = 'D'")
     merge_into(spark, tc, spark.createDataFrame(
         [(0, "u0b", 200.0)], sch_c), on="id")
-    assert tc.current_snapshot().operation == "merge-delta"
+    assert tc.current_snapshot().operation == "merge"
+    assert tc.current_snapshot().delete_files
     dest_c = export_iceberg_dir(tc, tmp_path / "exp_c")
     cols_c = ["id", "v", "amount"]
     assert ext_rows(dest_c, cols_c) == rows_of(tc.read(spark), cols_c)
+    assert sorted(_duckdb_spec_rows(dest_c, cols_c)) == rows_of(
+        tc.read(spark), cols_c
+    )
 
     # (D) position deletes (MOR DELETE mode): dropped (file, pos) rows
     cat_d = Catalog(tmp_path / "wh_d")
@@ -682,11 +743,11 @@ def test_external_spec_reader_across_partition_evolution(spark, tmp_path):
 
 
 def test_external_reader_eq_delete_on_partition_column(spark, tmp_path):
-    """Equality deletes keyed on an identity-partition column: the
-    key values live ONLY in the path + manifest partition record, so
-    the spec reader must re-inject partition columns BEFORE applying
-    equality deletes. (It used to inject after, silently skipping
-    such deletes and resurrecting every deleted row.)"""
+    """A merge-on-read MERGE keyed on an identity-partition column:
+    the key values live ONLY in the path + manifest partition record.
+    The merge position-deletes the matched rows, and both spec
+    readers (read_exported_table, DuckDB) drop exactly those rows
+    and re-inject the partition column."""
     from pyspark.sql import functions as F
 
     from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse.iceberg_compat import (
@@ -706,7 +767,8 @@ def test_external_reader_eq_delete_on_partition_column(spark, tmp_path):
         [(3, "b", 0.0), (4, "a", 0.0)], sch).withColumn("Op", F.lit("D"))
     merge_into(
         spark, t, dele, on=["id", "seg"], delete_predicate="Op = 'D'")
-    assert t.current_snapshot().operation == "merge-delta"
+    assert t.current_snapshot().operation == "merge"
+    assert t.current_snapshot().delete_files
 
     engine = sorted(
         tuple(r[c] for c in ("id", "seg", "amount"))
@@ -721,14 +783,14 @@ def test_external_reader_eq_delete_on_partition_column(spark, tmp_path):
         for i in range(len(pdf))
     )
     assert ext == engine
+    assert sorted(_duckdb_spec_rows(dest, ["id", "seg", "amount"])) == engine
 
 
 def test_external_reader_eq_delete_on_float_partition(spark, tmp_path):
-    """Float identity-partition + equality delete keyed on it: the
-    re-injected key must be TYPED float32 on both the eqdel and data
-    sides. It used to stringify (str vs float never equality-matches,
-    resurrecting deleted rows), and a float64 injection would still
-    miss non-representable values like 0.1."""
+    """Float identity-partition + a merge-on-read MERGE keyed on it:
+    the matched rows are position-deleted, and the spec readers
+    re-inject the float32 partition value (0.1 is not representable,
+    so a float64 or string injection would not compare equal)."""
     from pyspark.sql import functions as F
 
     from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse.iceberg_compat import (
@@ -748,7 +810,8 @@ def test_external_reader_eq_delete_on_float_partition(spark, tmp_path):
         [(3, 0.2, 0.0), (4, 0.1, 0.0)], sch).withColumn("Op", F.lit("D"))
     merge_into(
         spark, t, dele, on=["id", "fseg"], delete_predicate="Op = 'D'")
-    assert t.current_snapshot().operation == "merge-delta"
+    assert t.current_snapshot().operation == "merge"
+    assert t.current_snapshot().delete_files
 
     engine = sorted(
         (r["id"], round(float(r["fseg"]), 6), r["amount"])
@@ -763,3 +826,8 @@ def test_external_reader_eq_delete_on_float_partition(spark, tmp_path):
         for i in range(len(pdf))
     )
     assert ext == engine
+    duck = sorted(
+        (i, round(float(f), 6), a)
+        for i, f, a in _duckdb_spec_rows(dest, ["id", "fseg", "amount"])
+    )
+    assert duck == engine

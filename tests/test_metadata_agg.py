@@ -4,7 +4,7 @@ The contract under test: ``Table.metadata_aggregate`` answers
 COUNT(*)/MIN/MAX/COUNT(col) purely from manifest statistics — proven
 by DELETING the data file bytes before querying — and refuses
 (``MetadataAggregateUnsupported``) in every state where stats cannot
-be exact: MOR deltas, position deletes, missing stats entries,
+be exact: position deletes (except COUNT(*)), missing stats entries,
 stats-ineligible types, non-constant group columns.
 """
 
@@ -150,18 +150,36 @@ def test_refusals(spark, cat):
 
 
 def test_refuses_on_merge_delta(spark, cat):
+    # a merge-on-read MERGE position-deletes the matched row and
+    # appends its upsert: COUNT(*) stays an exact manifest fold,
+    # column stats still bail (the deleted row is in the stats)
+    from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse import (
+        merge_into,
+    )
+
     df = _frame(spark).where("v is not null")
-    t = cat.create_table("m", "d", df.schema)
+    t = cat.create_table(
+        "m", "d", df.schema,
+        properties={"write.merge.mode": "merge-on-read"},
+    )
     t.append(df)
-    t.append_merge_delta(
+    merge_into(
+        spark, t,
         spark.createDataFrame(
-            [Row(k="z", v=7, price=1.0, d=datetime.date(2024, 3, 1))],
+            [Row(k="z", v=7, price=1.0, d=datetime.date(2024, 3, 1)),
+             Row(k="y", v=8, price=2.0, d=datetime.date(2024, 3, 2))],
             df.schema,
         ),
-        keys=["v"],
+        on="v",
+    )
+    snap = t.current_snapshot()
+    assert snap.operation == "merge" and snap.delete_files
+    assert t.read(spark).count() == 5
+    assert (
+        t.metadata_aggregate(spark, count_alias="c").collect()[0]["c"] == 5
     )
     with pytest.raises(MetadataAggregateUnsupported):
-        t.metadata_aggregate(spark, count_alias="c")
+        t.metadata_aggregate(spark, count_alias="c", max_of={"v": "hi"})
 
 
 def test_survives_column_rename(spark, cat):

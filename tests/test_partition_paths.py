@@ -131,8 +131,8 @@ def test_gold_null_partition_change_falls_back_to_full(spark, tmp_path):
 
 
 def test_mor_resolve_with_escaped_partition_keys(spark, tmp_path):
-    """MOR delta resolution joins manifest sequence info per file;
-    escaped partition dirs must not break the newest-wins resolve."""
+    """A merge-on-read MERGE on an escaped partition value: discovery
+    pruning and the position deletes must reach the escaped dir."""
     cat = Catalog(tmp_path / "wh")
     t = cat.create_table(
         "d", "mor", SCHEMA, partition_by=["k"],

@@ -169,8 +169,9 @@ def test_vacuum_keeps_live_delete_files(spark, tmp_path):
 
 
 def test_position_deletes_with_mor_merge_deltas(spark, tmp_path):
-    """Position deletes name PHYSICAL rows, so a position-deleted
-    delta row must not win its key in the MOR resolve."""
+    """A merge-on-read MERGE is itself position deletes: its matched
+    base row is deleted by position, and a later DELETE of the
+    upserted row removes the key (no older version comes back)."""
     cat = Catalog(tmp_path / "wh")
     t = cat.create_table(
         "d",
@@ -182,12 +183,16 @@ def test_position_deletes_with_mor_merge_deltas(spark, tmp_path):
         },
     )
     t.append(make(spark, [(1, "a", "base1"), (2, "a", "base2")]))
-    delta = make(spark, [(1, "a", "delta1")]).withColumn("_op", F.lit("u"))
-    t.append_merge_delta(delta, keys=["id"])
+    merge = merge_into(spark, t, make(spark, [(1, "a", "delta1")]), on="id")
+    assert merge.operation == "merge" and merge.removed_files == []
+    assert len(merge.delete_files) == 1
     assert {r["v"] for r in t.read(spark).collect()} == {"delta1", "base2"}
-    # delete the DELTA row by position: key 1 falls back to base1
-    t.delete_where(spark, "v = 'delta1'")
-    assert {r["v"] for r in t.read(spark).collect()} == {"base1", "base2"}
+    # delete the merged row by position: each (file, pos) lands in
+    # one delete file, and the logical count follows
+    snap = t.delete_where(spark, "v = 'delta1'")
+    assert len(snap.delete_files) == 2
+    assert snap.summary["total_records"] == 1
+    assert {r["v"] for r in t.read(spark).collect()} == {"base2"}
 
 
 def test_files_metadata_table_contents(spark, tmp_path):

@@ -3,11 +3,11 @@ metadata columns (_file/_pos)."""
 
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse import (
     Catalog,
+    merge_into,
 )
 
 SCHEMA = T.StructType(
@@ -151,10 +151,16 @@ def test_read_with_metadata_refuses_pending_deltas(spark, tmp_path):
         "d", "t7", SCHEMA,
         properties={"write.merge.mode": "merge-on-read"},
     )
-    t.append(spark.createDataFrame([(1, "a")], SCHEMA))
-    delta = spark.createDataFrame([(1, "b")], SCHEMA).withColumn(
-        "_op", F.lit("u")
-    )
-    t.append_merge_delta(delta, keys=["k"])
-    with pytest.raises(ValueError, match="compact"):
-        t.read_with_metadata(spark)
+    t.append(spark.createDataFrame([(1, "a"), (2, "c")], SCHEMA).coalesce(1))
+    base = t.current_snapshot().files
+    merge_into(spark, t, spark.createDataFrame([(1, "b")], SCHEMA), on="k")
+    snap = t.current_snapshot()
+    assert snap.operation == "merge" and snap.delete_files
+    # the merged row lives in the new file at pos 0; the base row it
+    # replaced is position-deleted, the untouched one keeps pos 1
+    got = {
+        (r["k"], r["v"], r["_file"], r["_pos"])
+        for r in t.read_with_metadata(spark).collect()
+    }
+    (added,) = snap.added_files
+    assert got == {(1, "b", added, 0), (2, "c", base[0], 1)}

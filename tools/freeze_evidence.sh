@@ -10,7 +10,6 @@
 #   MIRROR_r<N>_full_sf0.01.log    full registry at sf0.01
 #   MIRROR_r<N>_full_sf0.1.log     full registry at sf0.1
 #   MIRROR_r<N>_window_sf0.01.log  the driver window (first 50)
-#   PLANS.md                       regenerated plan dumps
 #   pytest output on stdout        full suite
 # Set ROUND (e.g. ROUND=r11) for the log names.
 set -e
@@ -34,5 +33,4 @@ rm -f "MIRROR_${ROUND}_window_sf0.01.log"
 MIRROR_LOG="MIRROR_${ROUND}_window_sf0.01.log" \
   python tools/check_oracles.py /root/testdata/sf0.01 $NAMES
 
-python tools/dump_plans.py
 python -m pytest tests/ -q
