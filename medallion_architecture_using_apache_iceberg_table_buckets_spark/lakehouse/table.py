@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import json
 import logging
+import operator
 import os
 import re
 import shutil
@@ -406,10 +407,13 @@ class Table:
         return out
 
     def snapshot_by_id(self, snapshot_id: int) -> Snapshot:
-        for s in self.snapshots():
-            if s.snapshot_id == snapshot_id:
-                return s
-        raise KeyError(f"snapshot {snapshot_id} not found under {self.root}")
+        """One manifest load: every snapshot's id is its version."""
+        try:
+            return self._load(operator.index(snapshot_id))
+        except (OSError, TypeError):
+            raise KeyError(
+                f"snapshot {snapshot_id} not found under {self.root}"
+            ) from None
 
     @property
     def schema(self) -> T.StructType:
@@ -626,7 +630,9 @@ class Table:
             out.append((toks[0], desc))
         return out
 
-    def _write_files(self, df: DataFrame, partition_by: list[str]) -> list[str]:
+    def _write_files(
+        self, df: DataFrame, partition_by: list[str], keep_layout: bool = False
+    ) -> list[str]:
         """Write df as parquet into the canonical layout; return new rel paths.
 
         Executors write to a staging dir; the driver then renames the
@@ -634,13 +640,24 @@ class Table:
         pure metadata ops, O(#files), no data copy on a real
         FileSystem either.
 
+        A partitioned table clusters its rows by partition value
+        before writing (``write.distribution-mode = hash``, also the
+        default when the property is unset, as in Iceberg's Spark
+        writes since 1.2), so each table partition gets ~one file per
+        write instead of one per task. ``none`` turns it off.
+
         A declared ``write.sort-order`` (ALTER TABLE ... WRITE ORDERED
         BY) locally sorts every task's rows before writing — Iceberg's
         default task-scoped sort — so parquet row-group min/max stay
         tight on the order columns and manifest skipping prunes them;
-        ``write.distribution-mode = range`` additionally range-
-        partitions first, making whole FILES disjoint on the order key
+        ``write.distribution-mode = range`` range-partitions on the
+        order instead, making whole FILES disjoint on the order key
         (the global-clustering trade: one extra shuffle per write).
+
+        ``keep_layout`` is for compaction, whose callers already
+        distribute the rows (range-sorted, z-ordered, a set partition
+        count, binpack's coalesce): no partition-value rebalance is
+        added, so their files keep the layout they asked for.
         """
         batch = uuid.uuid4().hex[:12]
         staging = self.root / f"_staging-{batch}"
@@ -650,15 +667,16 @@ class Table:
                 df = df.withColumn(
                     t.partition_col, t.expr(df.schema[t.col].dataType)
                 )
-        dist = self.properties.get(self.DIST_MODE_PROP, "none")
-        if dist == "hash" and transforms:
-            # Iceberg's default distribution for partitioned writes:
+        dist = self.properties.get(self.DIST_MODE_PROP, "hash")
+        if dist == "hash" and transforms and not keep_layout:
             # cluster rows by partition value so each table partition
             # is written by few tasks. Without it every task holding
             # any row of partition P opens a file in P — an append
             # from T tasks across P partitions lands T*P small files,
             # the classic 100 TB small-file explosion; with it, ~P.
-            df = df.repartition(*[t.partition_col for t in transforms])
+            # A rebalance rather than a repartition: AQE coalesces the
+            # tiny shuffle partitions and splits a skewed one
+            df = df.hint("rebalance", *[t.partition_col for t in transforms])
         order = self._parse_sort_order()
         if order:
             cols = [
@@ -938,16 +956,19 @@ class Table:
         df: DataFrame,
         operation: str = "merge",
         delete_files: list[str] | None = None,
+        *,
+        _keep_layout: bool = False,
     ) -> Snapshot:
         """Copy-on-write file swap: rewrite `removed` as the rows of `df`.
 
         The primitive under MERGE INTO (lakehouse/merge.py) — same
         shape as Iceberg's COW RowLevelCommand file rewrite.
         ``delete_files`` overrides the position-delete carry-forward
-        (binpack prunes materialized entries)."""
+        (binpack prunes materialized entries); binpack also passes
+        ``_keep_layout`` so its coalesce is not re-shuffled."""
         base = self._current_version()
         cur = self._load(base)
-        added = self._write_files(df, cur.partition_by)
+        added = self._write_files(df, cur.partition_by, _keep_layout)
         removed_set = set(removed)
         files = [f for f in cur.files if f not in removed_set] + added
         return self._next_snapshot(
@@ -1433,6 +1454,9 @@ class Table:
         listed column, so manifest skipping prunes filters on any of
         them, not just the leading sort key (Iceberg's zorder
         strategy). Columns must be pre-scaled into [0, 2^bits).
+        With any of ``sort_by``, ``zorder_by`` or ``target_partitions``
+        the write keeps that layout (no partition-value rebalance); a
+        plain ``compact()`` writes through the table's distribution.
         """
         if sort_by and zorder_by:
             raise ValueError("pass sort_by or zorder_by, not both")
@@ -1457,7 +1481,10 @@ class Table:
             df = df.repartition(target_partitions)
         base = self._current_version()
         cur = self._load(base)
-        added = self._write_files(df, cur.partition_by)
+        added = self._write_files(
+            df, cur.partition_by,
+            keep_layout=bool(zorder_by or sort_by or target_partitions),
+        )
         return self._next_snapshot(
             "replace", added, added, cur.files,
             schema_from_json(cur.schema_json), base,
@@ -2273,8 +2300,14 @@ class Table:
             )
         start = self.snapshot_by_id(start_snapshot_id)
         if not allow_replace:
-            for s in self.snapshots():
-                if start.version < s.version <= end.version and s.operation not in (
+            # only the versions in the range: a branch's head can sit
+            # above main's, so the range may include other refs' commits
+            for v in range(start.version + 1, end.version + 1):
+                try:
+                    s = self._load(v)
+                except OSError:  # expired
+                    continue
+                if s.operation not in (
                     "append",
                     "create",
                     "evolve-schema",  # metadata-only: adds no files
@@ -2760,7 +2793,7 @@ class Table:
                 # fully-materialized delete files drop out entirely
         return self.replace_files(
             chosen, rewritten, operation="replace",
-            delete_files=new_delete_files,
+            delete_files=new_delete_files, _keep_layout=True,
         )
 
     def expire_snapshots(

@@ -153,11 +153,11 @@ def test_one_merge_on_read_form():
     ]
     assert hits == [], f"position deletes are the one MOR form: {hits}"
 
-    # reads are not O(history): read, scan and _read_live, and every
-    # Table method they reach, never list the snapshots. Two reached
-    # lookups only run on request and stay out of the walk: time
-    # travel to a given snapshot id, and scan's partition-predicate
-    # pruner, which gathers the identity columns of retained specs
+    # reads are not O(history): read, scan, _read_live and
+    # read_incremental, and every Table method they reach, never list
+    # the snapshots. One reached lookup only runs on request and stays
+    # out of the walk: scan's partition-predicate pruner, which
+    # gathers the identity columns of retained specs
     table = next(
         n for n in ast.parse((root / "lakehouse" / "table.py").read_text()).body
         if isinstance(n, ast.ClassDef) and n.name == "Table"
@@ -165,7 +165,7 @@ def test_one_merge_on_read_form():
     methods = {
         n.name: n for n in table.body if isinstance(n, ast.FunctionDef)
     }
-    on_request = {"snapshot_by_id", "_prune_files_by_predicate"}
+    on_request = {"_prune_files_by_predicate"}
 
     def self_calls(fn):
         return {
@@ -177,7 +177,7 @@ def test_one_merge_on_read_form():
             and n.func.value.id == "self"
         }
 
-    reached, todo = set(), ["read", "scan", "_read_live"]
+    reached, todo = set(), ["read", "scan", "_read_live", "read_incremental"]
     while todo:
         name = todo.pop()
         if name in reached or name in on_request or name not in methods:
@@ -189,29 +189,42 @@ def test_one_merge_on_read_form():
 
 
 def test_sorted_compaction_clusters(spark, tmp_path):
+    # an unpartitioned and a partitioned table: a sorted compaction
+    # keeps its range layout, so a partitioned table's write does not
+    # rebalance the sorted rows by partition value
     from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse import Catalog
-
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("v", T.LongType())]
-    )
-    cat = Catalog(tmp_path / "wh")
-    t = cat.create_table("d", "t", schema)
-    t.append(spark.createDataFrame([(i % 97, i) for i in range(5000)], schema))
-    t.compact(spark, target_partitions=4, sort_by=["id"])
-    files = t.current_snapshot().files
-    assert len(files) == 4
-    # range clustering: per-file id ranges must be (near) disjoint
     import pyarrow.parquet as pq
 
-    ranges = []
-    for f in files:
-        md = pq.ParquetFile(t.data_root / f)
-        col = md.metadata.row_group(0).column(0).statistics
-        ranges.append((col.min, col.max))
-    ranges.sort()
-    overlaps = sum(1 for a, b in zip(ranges, ranges[1:]) if a[1] > b[0])
-    assert overlaps == 0
-    assert t.read(spark).count() == 5000
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("v", T.LongType()),
+            T.StructField("p", T.StringType()),
+        ]
+    )
+    rows = [(i % 97, i, f"p{i % 3}") for i in range(5000)]
+    cat = Catalog(tmp_path / "wh")
+    for name, partition_by in (("t", []), ("tp", ["p"])):
+        t = cat.create_table("d", name, schema, partition_by=partition_by)
+        t.append(spark.createDataFrame(rows, schema))
+        t.compact(spark, target_partitions=4, sort_by=["id"])
+        by_part = {}
+        for f in t.current_snapshot().files:
+            by_part.setdefault(f.rsplit("/", 1)[0] if "/" in f else "", []).append(f)
+        assert len(by_part) == (3 if partition_by else 1)
+        for files in by_part.values():
+            # 4 range tasks, each holding rows of every partition
+            assert len(files) == 4
+            # range clustering: per-file id ranges must be disjoint
+            ranges = []
+            for f in files:
+                md = pq.ParquetFile(t.data_root / f)
+                col = md.metadata.row_group(0).column(0).statistics
+                ranges.append((col.min, col.max))
+            ranges.sort()
+            overlaps = sum(1 for a, b in zip(ranges, ranges[1:]) if a[1] > b[0])
+            assert overlaps == 0
+        assert t.read(spark).count() == 5000
 
 
 def test_csv_modes(spark, tmp_path):

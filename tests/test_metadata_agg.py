@@ -362,7 +362,13 @@ def test_sql_group_by_peephole(spark, cat):
     sess.sql("CREATE NAMESPACE m")
     sess.sql("USE m")
     df = _frame(spark)
-    t = cat.create_table("m", "gb", df.schema, partition_by=["k"])
+    # distribution none: each task writes its own files, so this
+    # 5-row frame lands one row per file (the default hash
+    # distribution would pack each partition into one file)
+    t = cat.create_table(
+        "m", "gb", df.schema, partition_by=["k"],
+        properties={"write.distribution-mode": "none"},
+    )
     t.append(df)
     for f in t.current_snapshot().files:
         os.remove(t.data_root / f)
@@ -379,7 +385,7 @@ def test_sql_group_by_peephole(spark, cat):
     n = sess.sql("SELECT COUNT(*) FROM gb GROUP BY k").collect()
     assert sorted(r[0] for r in n) == [1, 2, 2]
 
-    # this unforced write landed one row per file, so even the
+    # the write landed one row per file, so even the
     # non-partition column v is file-constant and the stats-range
     # grouper answers it exactly (data bytes are gone — only the
     # metadata path can)

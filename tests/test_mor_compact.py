@@ -138,13 +138,16 @@ def _cdc_sequence(seed):
 
 
 def test_cow_and_mor_merge_agree(spark, tmp_path):
-    """Both-ways check of MERGE's two write modes: one seeded CDC
-    sequence (upserts, deletes through delete_predicate, a re-insert
-    of a deleted key, a composite key, an identity partition with an
-    escaped value) applied to a copy-on-write and a merge-on-read
-    twin leaves identical rows and COUNT(*) after every batch, and
-    identical changelog and post-compaction rows at the end. Frames
-    are Arrow-built (local_frame) so no Python worker runs."""
+    """Both-ways check of MERGE's two write modes and of the two
+    partitioned-write distributions: one seeded CDC sequence
+    (upserts, deletes through delete_predicate, a re-insert of a
+    deleted key, a composite key, an identity partition with an
+    escaped value) applied to a copy-on-write twin (hash distribution,
+    the default), a copy-on-write twin with
+    ``write.distribution-mode=none`` and a merge-on-read twin leaves
+    identical rows and COUNT(*) after every batch, and identical
+    changelog and post-compaction rows at the end. Frames are
+    Arrow-built (local_frame) so no Python worker runs."""
     from medallion_architecture_using_apache_iceberg_table_buckets_spark.session import (
         local_frame,
     )
@@ -155,16 +158,25 @@ def test_cow_and_mor_merge_agree(spark, tmp_path):
     keys = ["region", "id"]
     base, batches = _cdc_sequence(seed=11)
     cat = Catalog(tmp_path / "wh")
-    cow, mor = (
-        cat.create_table(
-            "d", mode.replace("-", "_"), sch, partition_by=["region"],
-            properties={"write.merge.mode": mode},
-        )
-        for mode in ("copy-on-write", "merge-on-read")
+    twins = {
+        "cow": {"write.merge.mode": "copy-on-write"},
+        "cow_none": {
+            "write.merge.mode": "copy-on-write",
+            "write.distribution-mode": "none",
+        },
+        "mor": {"write.merge.mode": "merge-on-read"},
+    }
+    cow, cow_none, mor = (
+        cat.create_table("d", name, sch, partition_by=["region"], properties=props)
+        for name, props in twins.items()
     )
-    for t in (cow, mor):
-        t.append(local_frame(spark, base, sch))
-    start = [t.current_snapshot().snapshot_id for t in (cow, mor)]
+    tables = (cow, cow_none, mor)
+    # every task holds every region, so the distributions differ
+    for t in tables:
+        t.append(local_frame(spark, base, sch).repartition(4))
+    assert len(cow.current_snapshot().files) == 3
+    assert len(cow_none.current_snapshot().files) > 3
+    start = [t.current_snapshot().snapshot_id for t in tables]
 
     def rows(df):
         return sorted(tuple(r) for r in df.collect())
@@ -174,25 +186,25 @@ def test_cow_and_mor_merge_agree(spark, tmp_path):
             spark, batch,
             "Op string, region string, id long, v string, amount double",
         )
-        for t in (cow, mor):
+        for t in tables:
             merge_into(spark, t, src, on=keys, delete_predicate="Op = 'D'")
         snap = mor.current_snapshot()
         assert snap.operation == "merge" and snap.removed_files == []
         live = rows(cow.read(spark))
-        assert rows(mor.read(spark)) == live
+        assert [rows(t.read(spark)) for t in (cow_none, mor)] == [live] * 2
         assert [
             t.metadata_aggregate(spark, count_alias="n").collect()[0]["n"]
-            for t in (cow, mor)
-        ] == [len(live)] * 2
+            for t in tables
+        ] == [len(live)] * 3
     assert mor.current_snapshot().delete_files
 
     changes = [
-        rows(t.changelog(spark, s, keys=keys))
-        for t, s in zip((cow, mor), start)
+        rows(t.changelog(spark, s, keys=keys)) for t, s in zip(tables, start)
     ]
-    assert changes[0] and changes[0] == changes[1]
+    assert changes[0] and changes[1:] == [changes[0]] * 2
 
-    for t in (cow, mor):
+    for t in tables:
         t.compact(spark)
     assert not mor.current_snapshot().delete_files
-    assert rows(mor.read(spark)) == rows(cow.read(spark))
+    compacted = [rows(t.read(spark)) for t in tables]
+    assert compacted[1:] == [compacted[0]] * 2

@@ -249,9 +249,11 @@ def test_merge_prune_collect_is_capped(spark, tmp_path, monkeypatch):
 
 
 def test_hash_distribution_mode_collapses_small_files(spark, tmp_path):
-    """write.distribution-mode=hash clusters rows by partition value
-    before the write, so an N-task append to a partitioned table
-    produces ~1 file per partition instead of tasks x partitions."""
+    """write.distribution-mode=hash — also the default when a
+    partitioned table leaves the property unset — clusters rows by
+    partition value before the write, so an N-task append to a
+    partitioned table produces ~1 file per partition instead of
+    tasks x partitions; ``none`` keeps the per-task layout."""
     from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse import (
         Catalog,
     )
@@ -265,18 +267,20 @@ def test_hash_distribution_mode_collapses_small_files(spark, tmp_path):
     df = spark.createDataFrame(rows, schema).repartition(8)
 
     cat = Catalog(tmp_path / "wh")
-    spread = cat.create_table("d", "spread", schema, partition_by=["state"])
-    spread.append(df)
-    n_spread = len(spread.current_snapshot().files)
+    n_files = {}
+    for name, props in (
+        ("spread", {"write.distribution-mode": "none"}),
+        ("packed", {"write.distribution-mode": "hash"}),
+        ("unset", {}),
+    ):
+        t = cat.create_table(
+            "d", name, schema, partition_by=["state"], properties=props
+        )
+        t.append(df)
+        n_files[name] = len(t.current_snapshot().files)
+        assert {r["state"] for r in t.read(spark).collect()} == {"SC", "CT", "PW"}
+        assert t.read(spark).count() == 300
 
-    packed = cat.create_table(
-        "d", "packed", schema, partition_by=["state"],
-        properties={"write.distribution-mode": "hash"},
-    )
-    packed.append(df)
-    n_packed = len(packed.current_snapshot().files)
-
-    assert n_spread > 3  # the explosion the mode exists to prevent
-    assert n_packed == 3  # one file per partition value
-    assert {r["state"] for r in packed.read(spark).collect()} == {"SC", "CT", "PW"}
-    assert packed.read(spark).count() == 300
+    assert n_files["spread"] > 3  # the explosion the mode exists to prevent
+    assert n_files["packed"] == 3  # one file per partition value
+    assert n_files["unset"] == 3  # unset means hash on a partitioned table
