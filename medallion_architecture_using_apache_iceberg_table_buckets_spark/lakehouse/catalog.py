@@ -9,9 +9,10 @@ tree: ``<warehouse>/<namespace>/<table>``.
 ``write`` is the one create-on-first-write path: the first append or
 overwrite of a missing table creates it from the frame's schema
 (scripts/raw-bronze.py:180-185). SQL runs through ``sql_session``
-(lakehouse/sql.py), which attaches the active namespace's tables as
-bare-name views with ``<table>.history``-style metadata tables — the
-reference's interactive queries (README.md:220-229).
+(lakehouse/sql.py), which attaches the active namespace's tables a
+statement names as bare-name views with ``<table>.history``-style
+metadata tables — the reference's interactive queries
+(README.md:220-229).
 """
 
 from __future__ import annotations

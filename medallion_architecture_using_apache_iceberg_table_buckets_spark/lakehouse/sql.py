@@ -12,6 +12,18 @@ other statement (SELECT/WITH/...) to Spark SQL with the current
 namespace's tables attached as bare-name temp views — the same
 resolution ``USE <ns>`` buys in the reference.
 
+A statement attaches only the tables and stored views whose names
+its text mentions (closed over the bodies of the views it names),
+and a session plans a table's read once per snapshot: it keeps each
+attached frame under a key built from the table's ``CURRENT``
+version and the ``os.stat`` of that version's manifest, and calls
+``Table.read`` again only when the key changes. Every commit writes
+a new version, and a table dropped and recreated, or renamed into a
+freed name, reaches its version through a different manifest file,
+so the key never reads manifest JSON and never goes stale. A stored
+view is replayed when its body or a base's key changes; a
+time-travel read is keyed by its own snapshot's manifest.
+
 Catalog name prefixes (``s3tablesbucket.example_namespace``) are
 accepted and ignored: this engine IS the catalog.
 
@@ -31,6 +43,7 @@ from pyspark.sql import functions as F
 from ..session import local_frame
 from .catalog import Catalog
 from .merge import merge_into
+from .table import _word_refs
 
 _CREATE_NS = re.compile(
     r"^\s*CREATE\s+NAMESPACE\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s*$", re.I
@@ -302,6 +315,17 @@ def _balanced_paren_end(s: str) -> int | None:
     return None
 
 
+def _named_in(text: str, names) -> list[str]:
+    """The ``names`` that ``text`` mentions as whole words, matched as
+    Spark resolves identifiers: case-insensitively, backticks
+    ignored. An over-approximation (a column or a string literal of
+    the same spelling matches too), so it only ever attaches more."""
+    folded = {n.lower(): n for n in names}
+    return [
+        folded[n] for n in _word_refs(text.lower().replace("`", " "), folded)
+    ]
+
+
 class SqlSession:
     """Statement dispatcher bound to one catalog + current namespace."""
 
@@ -314,6 +338,9 @@ class SqlSession:
         self.spark = spark
         self.catalog = catalog
         self.namespace = namespace
+        # (ns, name, snapshot id or None) -> (key, planned frame) of the
+        # tables, stored views and time-travel reads this session attached
+        self._frames: dict[tuple[str, str, int | None], tuple] = {}
 
     # -- identifier helpers --------------------------------------------
     def _ns_of(self, ident: str) -> str:
@@ -333,34 +360,121 @@ class SqlSession:
     def _empty(self) -> DataFrame:
         return self.spark.range(0).drop("id")
 
-    def _attach_current(self) -> None:
-        """Bare-name snapshot views for the active namespace (what
-        ``USE ns`` buys in the reference), then the namespace's
-        STORED SQL views re-resolved against that state (the Iceberg
-        view-spec read model: a view always reflects the current
-        table snapshots). Views register in creation order, so later
-        views may build on earlier ones; a view whose base was
-        dropped is skipped (its next direct use raises normally)."""
+    def _bind(self, view: str, slot: tuple, key, build) -> None:
+        """Register the frame cached under ``slot`` as temp view
+        ``view``, first re-planning it with ``build()`` when its cached
+        key differs from ``key`` (a None key is never cached). The
+        registration itself is repeated on every use: another session
+        on the same SparkSession may have bound the name since."""
+        hit = self._frames.get(slot)
+        if hit is None or key is None or hit[0] != key:
+            hit = self._frames[slot] = (key, build())
+        hit[1].createOrReplaceTempView(view)
+
+    def _forget(self, ns: str, name: str) -> None:
+        """Evict every frame of ``ns.name`` and unbind its bare name, so
+        a later statement naming it fails to resolve instead of reading
+        a stale frame (DROP TABLE / DROP VIEW / RENAME TO)."""
+        for slot in [k for k in self._frames if k[:2] == (ns, name)]:
+            del self._frames[slot]
+        self.spark.catalog.dropTempView(name)
+
+    def _attach_current(self, text: str) -> None:
+        """Bare-name views for the active namespace's tables and STORED
+        SQL views that ``text`` — the statement Spark is about to
+        analyze — names (what ``USE ns`` buys in the reference). The
+        names are matched by :func:`_named_in`, closed over the bodies
+        of the named views.
+
+        A table's frame is re-planned (``Table.read``) only when its
+        key — the ``CURRENT`` version plus the ``os.stat`` of that
+        version's manifest, see :meth:`Table.manifest_key` — changed since
+        this session last attached it. A stored view is re-resolved
+        (the Iceberg view-spec read model: a view always reflects the
+        current table snapshots) only when its body or the key of a
+        table or view it names changed. Names this session attached
+        before that no longer resolve here are unbound, and a view
+        that cannot be resolved (base dropped) is left unbound, so
+        their use raises Spark's not-found error."""
         if self.namespace is None:
             return
-        for name in self.catalog.tables(self.namespace):
-            t = self.catalog.table(self.namespace, name)
-            t.read(self.spark).createOrReplaceTempView(name)
-        # Fixpoint replay: creation order resolves forward references
-        # in the common case, and the retry loop covers bodies whose
-        # dependencies land later in the registry (e.g. a REPLACEd
-        # view re-appended after its dependents). Views that still
-        # fail are stale (base table gone) and are skipped; their next
-        # direct use raises normally.
-        pending = list(self.catalog.views(self.namespace).items())
+        ns = self.namespace
+        tables = self.catalog.tables(ns)
+        views = self.catalog.views(ns)
+        known = [*tables, *views]
+        names: set[str] = set()
+        texts = [text]
+        for body in texts:
+            for n in _named_in(body, known):
+                if n not in names:
+                    names.add(n)
+                    if n in views:
+                        texts.append(views[n])
+        bound = {k[1] for k in self._frames if k[2] is None}
+        for slot in [
+            k for k in self._frames if k[0] == ns and k[1] not in known
+        ]:
+            del self._frames[slot]
+        for name in _named_in("\n".join(texts), bound - names):
+            self.spark.catalog.dropTempView(name)
+
+        keys = {}
+        for name in tables:
+            if name in names:
+                t = self.catalog.table(ns, name)
+                # key before read: a commit in between only costs a
+                # re-plan at the next statement
+                keys[name] = t.manifest_key()
+                self._bind(
+                    name, (ns, name, None), keys[name],
+                    lambda t=t: t.read(self.spark),
+                )
+
+        def key_of(name: str, path: tuple = ()):
+            if name not in views:
+                return keys.get(name)
+            body = views[name]
+            if (
+                name in path
+                or _META_REF.search(body)
+                or _TIME_TRAVEL.search(body)
+            ):
+                # a cycle, or a metadata table or time-travel ref that
+                # resolves against state (refs, history) no table key
+                # covers: a fresh object never matches, so it replays
+                return object()
+            return body, tuple(
+                (d, key_of(d, path + (name,)))
+                for d in _named_in(body, known)
+            )
+
+        # An unchanged view binds its cached frame; a changed one is
+        # unbound first so no body resolves against its stale frame,
+        # then replayed to a fixpoint: creation order resolves forward
+        # references in the common case, and the retry covers bodies
+        # whose dependencies land later in the registry (a REPLACEd
+        # view is re-appended after its dependents). Views that still
+        # fail are stale (base gone) and stay unbound.
+        pending = []
+        for vname, vsql in views.items():
+            if vname not in names:
+                continue
+            key, hit = key_of(vname), self._frames.get((ns, vname, None))
+            if hit is not None and hit[0] == key:
+                hit[1].createOrReplaceTempView(vname)
+                continue
+            self._frames.pop((ns, vname, None), None)
+            self.spark.catalog.dropTempView(vname)
+            pending.append((vname, vsql, key))
         while pending:
             still = []
-            for vname, vsql in pending:
+            for vname, vsql, key in pending:
                 try:
                     df = self.spark.sql(self._rewrite_refs(vsql))
                 except Exception:
-                    still.append((vname, vsql))
+                    still.append((vname, vsql, key))
                     continue
+                self._frames[(ns, vname, None)] = (key, df)
                 df.createOrReplaceTempView(vname)
             if len(still) == len(pending):
                 break  # no progress: remaining views are stale
@@ -386,10 +500,8 @@ class SqlSession:
         ns, name = self._table_of(ident)
         if self.catalog.view_exists(ns, name) and if_not_exists:
             return self._empty()
-        self._attach_current()
-        self.spark.sql(self._rewrite_refs(body)).schema  # analyze-only
+        self._sql(body).schema  # analyze-only
         self.catalog.create_view(ns, name, body, replace=bool(replace))
-        self._attach_current()  # make it usable in this statement seq
         return self._empty()
 
     # -- statement-text rewrites (metadata tables, time travel) --------
@@ -435,7 +547,12 @@ class SqlSession:
                 )
             sid = older[-1].snapshot_id
         view = f"__{ns}__{name}__v{sid}"
-        t.read(self.spark, snapshot_id=sid).createOrReplaceTempView(view)
+        # a snapshot never changes; a None key (manifest expired) lets
+        # the read raise
+        self._bind(
+            view, (ns, name, sid), t.manifest_key(sid),
+            lambda: t.read(self.spark, snapshot_id=sid),
+        )
         return f"{m.group(1)} {view}"
 
     def _rewrite_refs(self, s: str) -> str:
@@ -445,6 +562,13 @@ class SqlSession:
         starting inside string literals are left alone."""
         s = _sub_unquoted(_META_REF, self._meta_sub, s)
         return _sub_unquoted(_TIME_TRAVEL, self._tt_sub, s)
+
+    def _sql(self, text: str) -> DataFrame:
+        """``text`` on Spark SQL, after the reference rewrites and with
+        the lakehouse names it mentions attached."""
+        text = self._rewrite_refs(text)
+        self._attach_current(text)
+        return self.spark.sql(text)
 
     # -- dispatch ------------------------------------------------------
     def sql(self, statement: str) -> DataFrame:
@@ -476,6 +600,7 @@ class SqlSession:
             if not self.catalog.table_exists(ns, name) and not m.group(1):
                 raise ValueError(f"table {ns}.{name} does not exist")
             self.catalog.drop_table(ns, name)
+            self._forget(ns, name)
             return self._empty()
         if m := _DROP_NS.match(s):
             ns = self._ns_of(m.group(2))
@@ -496,6 +621,7 @@ class SqlSession:
                     return self._empty()
                 raise ValueError(f"view {ns}.{name} does not exist")
             self.catalog.drop_view(ns, name)
+            self._forget(ns, name)
             return self._empty()
         if m := _SHOW_VIEWS.match(s):
             ns = self._ns_of(m.group(1)) if m.group(1) else self.namespace
@@ -513,8 +639,7 @@ class SqlSession:
             return self._describe(m.group(1))
         if m := _INSERT_OVERWRITE.match(s):
             ns, name = self._table_of(m.group(1))
-            self._attach_current()
-            src = self.spark.sql(self._rewrite_refs(m.group(2).strip()))
+            src = self._sql(m.group(2).strip())
             t = self.catalog.table(ns, name)
             self._check_insert_shape(src, t, ns, name)
             t.overwrite(self._cast_positional(src, t))
@@ -544,9 +669,7 @@ class SqlSession:
             return self._empty()
         if m := _INSERT.match(s):
             ns, name = self._table_of(m.group(1))
-            self._attach_current()
-            # SELECT or VALUES
-            src = self.spark.sql(self._rewrite_refs(m.group(2).strip()))
+            src = self._sql(m.group(2).strip())  # SELECT or VALUES
             t = self.catalog.table(ns, name)
             self._check_insert_shape(src, t, ns, name)
             t.append(self._cast_positional(src, t))
@@ -562,9 +685,8 @@ class SqlSession:
             if out is not None:
                 return out
         # everything else (SELECT / WITH / ...) runs on Spark SQL with
-        # the active namespace attached as bare-name views
-        self._attach_current()
-        return self.spark.sql(self._rewrite_refs(s))
+        # the active namespace's names it mentions attached
+        return self._sql(s)
 
     NDV_READ_PROP = "read.ndv-from-sketches"
 
@@ -772,7 +894,7 @@ class SqlSession:
             else:
                 new_ns, new_name = ns, tgt
             self.catalog.rename_table(ns, name, new_ns, new_name)
-            self._attach_current()  # refresh the view registrations
+            self._forget(ns, name)
             return self._empty()
         if a := _ALTER_CREATE_REF.match(action):
             kind, ref = a.group(1).lower(), a.group(2)
@@ -1072,8 +1194,7 @@ class SqlSession:
             if if_not_exists:
                 return self._empty()
             raise ValueError(f"table {ns}.{name} already exists")
-        self._attach_current()
-        df = self.spark.sql(self._rewrite_refs(select.strip()))
+        df = self._sql(select.strip())
         partition_by, properties = _table_clauses(part, props_raw)
         self.catalog.write(
             ns, name, df, partition_by=partition_by, properties=properties
@@ -1087,15 +1208,16 @@ class SqlSession:
         target_alias = head.group(2) or "target"
         rest = s[head.end():].lstrip()
 
-        self._attach_current()  # USING may reference lakehouse tables
+        # USING may reference lakehouse tables
         if rest.startswith("("):
             end = _balanced_paren_end(rest)
             if end is None:
                 raise ValueError("unbalanced parentheses in MERGE USING")
-            source_df = self.spark.sql(self._rewrite_refs(rest[1:end]))
+            source_df = self._sql(rest[1:end])
             rest = rest[end + 1 :]
         else:
             m = re.match(r"([\w.]+)", rest)
+            self._attach_current(m.group(1))
             source_df = self.spark.table(m.group(1))
             rest = rest[m.end():]
 

@@ -27,7 +27,6 @@ FileSystem API.
 from __future__ import annotations
 
 import json
-import logging
 import operator
 import os
 import re
@@ -39,6 +38,7 @@ from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Iterable
 
+from pyspark.logger import PySparkLogger
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -78,7 +78,10 @@ def _quiet_probe():
     into permanently restoring CRITICAL as the "previous" level and
     silencing real error contexts for the rest of the session."""
     names = ("SQLQueryContextLogger", "DataFrameQueryContextLogger")
-    lgs = [logging.getLogger(n) for n in names]
+    # through PySparkLogger: the first call creates the logger, and a
+    # plain logging.Logger rejects the errorClass= keyword PySpark logs
+    # with, turning every later AnalysisException into a TypeError
+    lgs = [PySparkLogger.getLogger(n) for n in names]
 
     def _mute(_record):
         return False
@@ -376,10 +379,26 @@ class Table:
     def current_snapshot(self) -> Snapshot:
         return self._load(self._current_version())
 
+    def _manifest_path(self, version: int) -> Path:
+        return self.snap_root / f"v{version:08d}.json"
+
+    def manifest_key(self, version: int | None = None) -> tuple | None:
+        """Identity of snapshot ``version``'s manifest (default: the
+        current one) from one ``os.stat`` and no JSON: the version,
+        inode, mtime and size. A commit writes a new version; a table
+        dropped and recreated, or renamed into a freed name, reaches
+        the same version through a different manifest file. None when
+        the manifest is gone (expired, or the table dropped)."""
+        try:
+            if version is None:
+                version = self._current_version()
+            st = os.stat(self._manifest_path(version))
+        except OSError:
+            return None
+        return (version, st.st_dev, st.st_ino, st.st_mtime_ns, st.st_size)
+
     def _load(self, version: int) -> Snapshot:
-        return Snapshot.from_json(
-            (self.snap_root / f"v{version:08d}.json").read_text()
-        )
+        return Snapshot.from_json(self._manifest_path(version).read_text())
 
     def _max_version(self) -> int:
         """Highest snapshot version on disk — branch commits can sit
@@ -401,7 +420,7 @@ class Table:
         skipped."""
         out = []
         for v in range(1, self._max_version() + 1):
-            p = self.snap_root / f"v{v:08d}.json"
+            p = self._manifest_path(v)
             if p.exists():
                 out.append(Snapshot.from_json(p.read_text()))
         return out
@@ -437,7 +456,7 @@ class Table:
                     f"concurrent commit detected on {self.root}: expected "
                     f"v{expected_parent_version}, found v{actual}"
                 )
-        (self.snap_root / f"v{snap.version:08d}.json").write_text(snap.to_json())
+        self._manifest_path(snap.version).write_text(snap.to_json())
         tmp = self.root / f".CURRENT.{uuid.uuid4().hex}"
         tmp.write_text(str(snap.version))
         os.replace(tmp, self.root / CURRENT_PTR)
@@ -520,7 +539,7 @@ class Table:
                 f"head {expected_head}, found {refs[branch]['snapshot_id']}"
             )
         self.snap_root.mkdir(parents=True, exist_ok=True)
-        (self.snap_root / f"v{snap.version:08d}.json").write_text(snap.to_json())
+        self._manifest_path(snap.version).write_text(snap.to_json())
         refs[branch]["snapshot_id"] = snap.snapshot_id
         self._write_refs(refs)
         return snap
@@ -2211,7 +2230,8 @@ class Table:
             )
 
         # refuse on ANY unparseable recorded value (raw non-null but
-        # cast null) — manifest-sized probe, exact-or-bail contract
+        # cast null) — manifest-sized probe, exact-or-bail contract;
+        # a plain COUNT(*) casts nothing, so it runs no probe job
         bad = F.lit(False)
         for col in const_cols:
             bad = bad | (
@@ -2224,7 +2244,7 @@ class Table:
                     F.col(f"_{side}_{col}").isNotNull()
                     & typed(f"_{side}_{col}", col).isNull()
                 )
-        if mdf.filter(bad).limit(1).count() > 0:
+        if (const_cols or val_cols) and mdf.filter(bad).limit(1).count() > 0:
             raise MetadataAggregateUnsupported(
                 "a recorded stats value does not cast back through its"
                 " declared type"
@@ -2495,7 +2515,7 @@ class Table:
         triple collapses to one live count here."""
         rows = []
         for s in self.snapshots():
-            p = self.snap_root / f"v{s.version:08d}.json"
+            p = self._manifest_path(s.version)
             live = set(s.files)
             added = len(live & set(s.added_files))
             rows.append(
@@ -2825,7 +2845,7 @@ class Table:
         ]
         expired = []
         for s in to_expire:
-            (self.snap_root / f"v{s.version:08d}.json").unlink(missing_ok=True)
+            self._manifest_path(s.version).unlink(missing_ok=True)
             expired.append(s.snapshot_id)
         return expired
 

@@ -809,3 +809,39 @@ def test_randomized_mor_count_against_read(spark, cat):
         assert got == (expected_w if where else expected), (
             trial, where, got,
         )
+
+
+def test_count_star_builds_without_a_job(spark, cat):
+    """A plain COUNT(*) casts no recorded value back, so building its
+    frame runs no probe job."""
+    df = _frame(spark)
+    t = cat.create_table("m", "nojob", df.schema)
+    t.append(df)
+    sc = spark.sparkContext
+    group = "test_count_star_builds_without_a_job"
+    sc.setJobGroup(group, "plan only")
+    try:
+        out = t.metadata_aggregate(spark, count_alias="n")
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert out.collect()[0]["n"] == 5
+
+
+def test_uncastable_recorded_value_refused(spark, cat):
+    """A recorded min that does not cast back through the column's
+    type refuses MIN, while COUNT(*), which reads no value, answers."""
+    import json as _json
+
+    df = spark.createDataFrame([(1, 1.0), (2, 2.0)], "v int, price double")
+    t = cat.create_table("m", "castback", df.schema)
+    t.append(df.coalesce(1))
+    p = t._manifest_path(t._current_version())
+    d = _json.loads(p.read_text())
+    for st in d["stats"].values():
+        st["v"][0] = "not-an-int"
+    p.write_text(_json.dumps(d))
+
+    with pytest.raises(MetadataAggregateUnsupported, match="cast back"):
+        t.metadata_aggregate(spark, min_of={"v": "lo"})
+    assert t.metadata_aggregate(spark, count_alias="n").collect()[0]["n"] == 2

@@ -804,3 +804,203 @@ def test_quiet_probe_is_reentrant():
         )
     assert lg.level == before_level
     assert list(lg.filters) == before_filters
+
+
+def test_quiet_probe_keeps_analysis_errors_typed(spark):
+    """The probe must create PySpark's query-context loggers as
+    PySparkLoggers: a plain logger rejects the ``errorClass=`` keyword
+    PySpark logs with, so every later AnalysisException (a mistyped
+    column, a dropped table) surfaced as a TypeError."""
+    import logging
+
+    from pyspark.errors import AnalysisException
+
+    from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse.table import (
+        _quiet_probe,
+    )
+
+    loggers = logging.Logger.manager.loggerDict
+    names = ("SQLQueryContextLogger", "DataFrameQueryContextLogger")
+    saved = {n: loggers.pop(n, None) for n in names}
+    try:
+        with _quiet_probe():
+            pass
+        with pytest.raises(AnalysisException, match="UNRESOLVED_COLUMN"):
+            spark.sql("SELECT nope FROM range(1)").collect()
+    finally:
+        for n, lg in saved.items():
+            if lg is not None:
+                loggers[n] = lg
+
+
+# -- referenced-only attach and the per-snapshot frame cache ---------
+def _rows(sess, stmt):
+    return sorted(tuple(r) for r in sess.sql(stmt).collect())
+
+
+def _kv(spark, *keys):
+    return spark.createDataFrame([(k,) for k in keys], "k long")
+
+
+def test_dropped_renamed_or_dropped_view_name_is_not_found(spark, sess):
+    """DROP TABLE, ALTER TABLE ... RENAME TO and DROP VIEW unbind the
+    old name: a later SELECT fails analysis instead of reading the
+    frame attached before (which pointed at deleted files)."""
+    from pyspark.errors import AnalysisException
+
+    sess.sql("CREATE NAMESPACE d")
+    sess.sql("USE d")
+    for name in ("t", "u"):
+        sess.sql(f"CREATE TABLE {name} (k BIGINT)")
+        sess.sql(f"INSERT INTO {name} VALUES (1)")
+    sess.sql("CREATE VIEW w AS SELECT k FROM u")
+    assert _rows(sess, "SELECT k FROM t") == [(1,)]
+    assert _rows(sess, "SELECT k FROM w") == [(1,)]
+
+    sess.sql("DROP TABLE t")
+    with pytest.raises(AnalysisException, match="TABLE_OR_VIEW_NOT_FOUND"):
+        sess.sql("SELECT k FROM t").collect()
+    sess.sql("DROP VIEW w")
+    with pytest.raises(AnalysisException, match="TABLE_OR_VIEW_NOT_FOUND"):
+        sess.sql("SELECT k FROM w").collect()
+    assert _rows(sess, "SELECT k FROM u") == [(1,)]
+    sess.sql("ALTER TABLE u RENAME TO u2")
+    with pytest.raises(AnalysisException, match="TABLE_OR_VIEW_NOT_FOUND"):
+        sess.sql("SELECT k FROM u").collect()
+    assert _rows(sess, "SELECT k FROM u2") == [(1,)]
+    # a name attached from another namespace does not resolve here
+    sess.sql("CREATE NAMESPACE e")
+    sess.sql("USE e")
+    with pytest.raises(AnalysisException, match="TABLE_OR_VIEW_NOT_FOUND"):
+        sess.sql("SELECT k FROM u2").collect()
+
+
+def test_commit_between_selects_shows_up(spark, sess):
+    sess.sql("CREATE NAMESPACE c")
+    sess.sql("USE c")
+    t = sess.catalog.create_table("c", "t", _kv(spark).schema)
+    t.append(_kv(spark, 1))
+    assert _rows(sess, "SELECT k FROM t") == [(1,)]
+    t.append(_kv(spark, 2))
+    assert _rows(sess, "SELECT k FROM t") == [(1,), (2,)]
+
+
+def test_view_over_changed_base_re_resolves(spark, sess):
+    sess.sql("CREATE NAMESPACE vc")
+    sess.sql("USE vc")
+    t = sess.catalog.create_table("vc", "base", _kv(spark).schema)
+    t.append(_kv(spark, 1))
+    sess.sql("CREATE VIEW v AS SELECT k * 10 AS k10 FROM base")
+    assert _rows(sess, "SELECT k10 FROM v") == [(10,)]
+    t.append(_kv(spark, 2))
+    assert _rows(sess, "SELECT k10 FROM v") == [(10,), (20,)]
+
+
+def test_recreated_table_at_same_version_shows_new_rows(spark, sess):
+    """A table dropped and recreated restarts at v1, so the version
+    alone cannot tell the two tables apart."""
+    sess.sql("CREATE NAMESPACE rc")
+    sess.sql("USE rc")
+    cat = sess.catalog
+    t = cat.create_table("rc", "t", _kv(spark).schema)
+    t.append(_kv(spark, 1))
+    old_version = t._current_version()
+    assert _rows(sess, "SELECT k FROM t") == [(1,)]
+    cat.drop_table("rc", "t")
+    t = cat.create_table("rc", "t", _kv(spark).schema)
+    t.append(_kv(spark, 2))
+    assert t._current_version() == old_version
+    assert _rows(sess, "SELECT k FROM t") == [(2,)]
+
+
+def test_table_renamed_into_freed_name_shows_its_rows(spark, sess):
+    sess.sql("CREATE NAMESPACE rn")
+    sess.sql("USE rn")
+    cat = sess.catalog
+    for name, k in (("a", 1), ("b", 2)):
+        cat.create_table("rn", name, _kv(spark).schema).append(_kv(spark, k))
+    assert _rows(sess, "SELECT k FROM a") == [(1,)]
+    cat.drop_table("rn", "a")
+    cat.rename_table("rn", "b", "rn", "a")
+    assert _rows(sess, "SELECT k FROM a") == [(2,)]
+
+
+def test_sessions_over_two_catalogs_share_one_spark_session(spark, tmp_path):
+    """Temp views are global to the SparkSession: each statement binds
+    its own frames again, and each session keeps its own keys."""
+    one = Catalog(tmp_path / "one").sql_session(spark)
+    two = Catalog(tmp_path / "two").sql_session(spark)
+    for sess, k in ((one, 1), (two, 2)):
+        sess.sql("CREATE NAMESPACE n")
+        sess.sql("USE n")
+        sess.catalog.create_table("n", "t", _kv(spark).schema).append(
+            _kv(spark, k)
+        )
+    assert _rows(one, "SELECT k FROM t") == [(1,)]
+    assert _rows(two, "SELECT k FROM t") == [(2,)]
+    assert _rows(one, "SELECT k FROM t") == [(1,)]
+    two.catalog.table("n", "t").append(_kv(spark, 3))
+    assert _rows(two, "SELECT k FROM t") == [(2,), (3,)]
+    assert _rows(one, "SELECT k FROM t") == [(1,)]
+
+
+def test_time_travel_to_expired_snapshot_still_raises(spark, sess):
+    sess.sql("CREATE NAMESPACE tt")
+    sess.sql("USE tt")
+    t = sess.catalog.create_table("tt", "t", _kv(spark).schema)
+    first = t.append(_kv(spark, 1)).snapshot_id
+    t.append(_kv(spark, 2))
+    stmt = f"SELECT k FROM t VERSION AS OF {first}"
+    assert _rows(sess, stmt) == [(1,)]
+    assert _rows(sess, stmt) == [(1,)]
+    t.expire_snapshots(keep_last=1)
+    with pytest.raises(KeyError):
+        sess.sql(stmt).collect()
+
+
+def test_select_plans_a_table_once_per_snapshot(spark, sess, monkeypatch):
+    """A SELECT plans only the tables it names, and only when one of
+    them committed since this session last planned it."""
+    from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse.table import (
+        Table,
+    )
+
+    sess.sql("CREATE NAMESPACE pc")
+    sess.sql("USE pc")
+    cat = sess.catalog
+    for name in ("a", "b", "c"):
+        cat.create_table("pc", name, _kv(spark).schema).append(_kv(spark, 1))
+    read, calls = Table.read, []
+
+    def counting_read(self, *args, **kwargs):
+        calls.append(self.root.name)
+        return read(self, *args, **kwargs)
+
+    monkeypatch.setattr(Table, "read", counting_read)
+
+    def reads(stmt):
+        calls.clear()
+        sess.sql(stmt).collect()
+        return calls[:]
+
+    stmt = "SELECT k FROM a WHERE k > 0"
+    assert reads(stmt) == ["a"]
+    assert reads(stmt) == []
+    cat.table("pc", "a").append(_kv(spark, 2))
+    assert reads(stmt) == ["a"]
+    cat.table("pc", "b").append(_kv(spark, 2))
+    assert reads(stmt) == []
+
+
+def test_view_over_metadata_table_re_resolves(spark, sess):
+    """A branch moves no table's CURRENT version, so a view over
+    ``t.refs`` replays on every use."""
+    sess.sql("CREATE NAMESPACE vr")
+    sess.sql("USE vr")
+    sess.catalog.create_table("vr", "t", _kv(spark).schema).append(
+        _kv(spark, 1)
+    )
+    sess.sql("CREATE VIEW r AS SELECT name FROM t.refs")
+    assert _rows(sess, "SELECT name FROM r") == [("main",)]
+    sess.sql("ALTER TABLE t CREATE BRANCH b")
+    assert _rows(sess, "SELECT name FROM r") == [("b",), ("main",)]
