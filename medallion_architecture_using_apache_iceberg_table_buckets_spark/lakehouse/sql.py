@@ -20,9 +20,9 @@ version and the ``os.stat`` of that version's manifest, and calls
 ``Table.read`` again only when the key changes. Every commit writes
 a new version, and a table dropped and recreated, or renamed into a
 freed name, reaches its version through a different manifest file,
-so the key never reads manifest JSON and never goes stale. A stored
-view is replayed when its body or a base's key changes; a
-time-travel read is keyed by its own snapshot's manifest.
+so the key reads no manifest JSON. A stored view the statement
+names is replayed on every statement; a time-travel read is kept,
+one per table, under its own snapshot's manifest.
 
 Catalog name prefixes (``s3tablesbucket.example_namespace``) are
 accepted and ignored: this engine IS the catalog.
@@ -338,9 +338,12 @@ class SqlSession:
         self.spark = spark
         self.catalog = catalog
         self.namespace = namespace
-        # (ns, name, snapshot id or None) -> (key, planned frame) of the
-        # tables, stored views and time-travel reads this session attached
+        # (ns, table, snapshot id or None) -> (key, planned frame) of the
+        # tables and time-travel reads this session attached
         self._frames: dict[tuple[str, str, int | None], tuple] = {}
+        # bare names this session registered as temp views for the
+        # current namespace (temp views are global to the SparkSession)
+        self._bound: set[str] = set()
 
     # -- identifier helpers --------------------------------------------
     def _ns_of(self, ident: str) -> str:
@@ -363,21 +366,33 @@ class SqlSession:
     def _bind(self, view: str, slot: tuple, key, build) -> None:
         """Register the frame cached under ``slot`` as temp view
         ``view``, first re-planning it with ``build()`` when its cached
-        key differs from ``key`` (a None key is never cached). The
-        registration itself is repeated on every use: another session
-        on the same SparkSession may have bound the name since."""
-        hit = self._frames.get(slot)
+        key differs from ``key``. A None key (manifest gone) drops the
+        slot and is never cached. The registration itself is repeated
+        on every use: another session on the same SparkSession may have
+        bound the name since."""
+        hit = self._frames.pop(slot, None)
         if hit is None or key is None or hit[0] != key:
-            hit = self._frames[slot] = (key, build())
+            hit = (key, build())
+        if key is not None:
+            self._frames[slot] = hit
         hit[1].createOrReplaceTempView(view)
 
+    def _unbind(self, names) -> None:
+        """Drop the bare-name temp views ``names`` this session
+        registered for the current namespace."""
+        for name in list(names):
+            self._bound.discard(name)
+            self.spark.catalog.dropTempView(name)
+
     def _forget(self, ns: str, name: str) -> None:
-        """Evict every frame of ``ns.name`` and unbind its bare name, so
-        a later statement naming it fails to resolve instead of reading
-        a stale frame (DROP TABLE / DROP VIEW / RENAME TO)."""
+        """Evict every frame of ``ns.name`` and, when this session bound
+        it as a bare name, unbind it, so a later statement naming it
+        fails to resolve instead of reading a stale frame (DROP TABLE /
+        DROP VIEW / RENAME TO)."""
         for slot in [k for k in self._frames if k[:2] == (ns, name)]:
             del self._frames[slot]
-        self.spark.catalog.dropTempView(name)
+        if ns == self.namespace and name in self._bound:
+            self._unbind([name])
 
     def _attach_current(self, text: str) -> None:
         """Bare-name views for the active namespace's tables and STORED
@@ -388,20 +403,25 @@ class SqlSession:
 
         A table's frame is re-planned (``Table.read``) only when its
         key — the ``CURRENT`` version plus the ``os.stat`` of that
-        version's manifest, see :meth:`Table.manifest_key` — changed since
-        this session last attached it. A stored view is re-resolved
-        (the Iceberg view-spec read model: a view always reflects the
-        current table snapshots) only when its body or the key of a
-        table or view it names changed. Names this session attached
-        before that no longer resolve here are unbound, and a view
-        that cannot be resolved (base dropped) is left unbound, so
+        version's manifest, see ``Table._manifest_key`` — changed since
+        this session last attached it. A named stored view is replayed
+        on every statement (the Iceberg view-spec read model: a view
+        always reflects the current table snapshots). Frames of tables
+        outside the namespace, or gone from it, are evicted; names this
+        session bound that no longer resolve here are unbound, and a
+        view that cannot be resolved (base dropped) is left unbound, so
         their use raises Spark's not-found error."""
-        if self.namespace is None:
-            return
         ns = self.namespace
-        tables = self.catalog.tables(ns)
+        tables = self.catalog.tables(ns) if ns is not None else []
+        for slot in [
+            k for k in self._frames if k[0] != ns or k[1] not in tables
+        ]:
+            del self._frames[slot]
+        if ns is None:
+            return
         views = self.catalog.views(ns)
         known = [*tables, *views]
+        self._unbind([n for n in self._bound if n not in known])
         names: set[str] = set()
         texts = [text]
         for body in texts:
@@ -410,72 +430,37 @@ class SqlSession:
                     names.add(n)
                     if n in views:
                         texts.append(views[n])
-        bound = {k[1] for k in self._frames if k[2] is None}
-        for slot in [
-            k for k in self._frames if k[0] == ns and k[1] not in known
-        ]:
-            del self._frames[slot]
-        for name in _named_in("\n".join(texts), bound - names):
-            self.spark.catalog.dropTempView(name)
 
-        keys = {}
         for name in tables:
             if name in names:
                 t = self.catalog.table(ns, name)
                 # key before read: a commit in between only costs a
                 # re-plan at the next statement
-                keys[name] = t.manifest_key()
                 self._bind(
-                    name, (ns, name, None), keys[name],
+                    name, (ns, name, None), t._manifest_key(),
                     lambda t=t: t.read(self.spark),
                 )
+                self._bound.add(name)
 
-        def key_of(name: str, path: tuple = ()):
-            if name not in views:
-                return keys.get(name)
-            body = views[name]
-            if (
-                name in path
-                or _META_REF.search(body)
-                or _TIME_TRAVEL.search(body)
-            ):
-                # a cycle, or a metadata table or time-travel ref that
-                # resolves against state (refs, history) no table key
-                # covers: a fresh object never matches, so it replays
-                return object()
-            return body, tuple(
-                (d, key_of(d, path + (name,)))
-                for d in _named_in(body, known)
-            )
-
-        # An unchanged view binds its cached frame; a changed one is
-        # unbound first so no body resolves against its stale frame,
-        # then replayed to a fixpoint: creation order resolves forward
-        # references in the common case, and the retry covers bodies
-        # whose dependencies land later in the registry (a REPLACEd
-        # view is re-appended after its dependents). Views that still
-        # fail are stale (base gone) and stay unbound.
-        pending = []
-        for vname, vsql in views.items():
-            if vname not in names:
-                continue
-            key, hit = key_of(vname), self._frames.get((ns, vname, None))
-            if hit is not None and hit[0] == key:
-                hit[1].createOrReplaceTempView(vname)
-                continue
-            self._frames.pop((ns, vname, None), None)
-            self.spark.catalog.dropTempView(vname)
-            pending.append((vname, vsql, key))
+        # The named views are unbound first so no body resolves against
+        # a frame from an earlier statement, then replayed to a
+        # fixpoint: creation order resolves forward references in the
+        # common case, and the retry covers bodies whose dependencies
+        # land later in the registry (a REPLACEd view is re-appended
+        # after its dependents). Views that still fail are stale (base
+        # gone) and stay unbound.
+        pending = [(v, body) for v, body in views.items() if v in names]
+        self._unbind([v for v, _ in pending])
         while pending:
             still = []
-            for vname, vsql, key in pending:
+            for vname, vsql in pending:
                 try:
                     df = self.spark.sql(self._rewrite_refs(vsql))
                 except Exception:
-                    still.append((vname, vsql, key))
+                    still.append((vname, vsql))
                     continue
-                self._frames[(ns, vname, None)] = (key, df)
                 df.createOrReplaceTempView(vname)
+                self._bound.add(vname)
             if len(still) == len(pending):
                 break  # no progress: remaining views are stale
             pending = still
@@ -547,10 +532,15 @@ class SqlSession:
                 )
             sid = older[-1].snapshot_id
         view = f"__{ns}__{name}__v{sid}"
-        # a snapshot never changes; a None key (manifest expired) lets
-        # the read raise
+        # a snapshot never changes, so its frame is kept, one per table;
+        # a None key (manifest expired) lets the read raise
+        for slot in [
+            k for k in self._frames
+            if k[:2] == (ns, name) and k[2] not in (None, sid)
+        ]:
+            del self._frames[slot]
         self._bind(
-            view, (ns, name, sid), t.manifest_key(sid),
+            view, (ns, name, sid), t._manifest_key(sid),
             lambda: t.read(self.spark, snapshot_id=sid),
         )
         return f"{m.group(1)} {view}"
@@ -585,6 +575,8 @@ class SqlSession:
             ns = self._ns_of(m.group(1))
             if ns not in self.catalog.namespaces():
                 raise ValueError(f"namespace {ns!r} does not exist")
+            if ns != self.namespace:
+                self._unbind(self._bound)
             self.namespace = ns
             return self._empty()
         if m := _SHOW_TABLES.match(s):

@@ -382,13 +382,21 @@ class Table:
     def _manifest_path(self, version: int) -> Path:
         return self.snap_root / f"v{version:08d}.json"
 
-    def manifest_key(self, version: int | None = None) -> tuple | None:
+    def _manifest_key(self, version: int | None = None) -> tuple | None:
         """Identity of snapshot ``version``'s manifest (default: the
         current one) from one ``os.stat`` and no JSON: the version,
-        inode, mtime and size. A commit writes a new version; a table
-        dropped and recreated, or renamed into a freed name, reaches
-        the same version through a different manifest file. None when
-        the manifest is gone (expired, or the table dropped)."""
+        device, inode, mtime and size. SqlSession keeps planned reads
+        under it. A commit writes a new version; a table dropped and
+        recreated, or renamed into a freed name, reaches the same
+        version through a different manifest file. None when the
+        manifest is gone (expired, or the table dropped).
+
+        The recreate case relies on the filesystem: the new manifest
+        must differ from the old one in inode or in mtime. A filesystem
+        that hands the freed inode straight back and whose timestamps
+        are coarser than the time between the drop and the new commit
+        would give an equal key when the two manifests are also equal
+        in size."""
         try:
             if version is None:
                 version = self._current_version()

@@ -992,15 +992,49 @@ def test_select_plans_a_table_once_per_snapshot(spark, sess, monkeypatch):
     assert reads(stmt) == []
 
 
-def test_view_over_metadata_table_re_resolves(spark, sess):
-    """A branch moves no table's CURRENT version, so a view over
-    ``t.refs`` replays on every use."""
-    sess.sql("CREATE NAMESPACE vr")
-    sess.sql("USE vr")
-    sess.catalog.create_table("vr", "t", _kv(spark).schema).append(
-        _kv(spark, 1)
+def test_user_temp_view_named_like_a_table_of_another_namespace(
+    spark, sess
+):
+    """The session unbinds only the bare names it bound itself: a temp
+    view the caller registers after ``USE`` under the name of a table
+    the session read in the namespace before survives, and so does one
+    whose name a ``DROP TABLE`` in another namespace repeats."""
+    for ns in ("a", "b"):
+        sess.sql(f"CREATE NAMESPACE {ns}")
+        sess.catalog.create_table(ns, "src", _kv(spark).schema).append(
+            _kv(spark, 1)
+        )
+    sess.sql("CREATE NAMESPACE c")
+    sess.sql("USE a")
+    assert _rows(sess, "SELECT k FROM src") == [(1,)]
+    sess.sql("USE c")
+    spark.createDataFrame([(7,), (8,)], "k long").createOrReplaceTempView(
+        "src"
     )
-    sess.sql("CREATE VIEW r AS SELECT name FROM t.refs")
-    assert _rows(sess, "SELECT name FROM r") == [("main",)]
-    sess.sql("ALTER TABLE t CREATE BRANCH b")
-    assert _rows(sess, "SELECT name FROM r") == [("b",), ("main",)]
+    try:
+        assert _rows(sess, "SELECT k FROM src") == [(7,), (8,)]
+        sess.sql("DROP TABLE b.src")
+        assert _rows(sess, "SELECT k FROM src") == [(7,), (8,)]
+    finally:
+        spark.catalog.dropTempView("src")
+
+
+def test_kept_frames_stay_bounded(spark, sess):
+    """Time travel keeps one frame per table, an expired snapshot's
+    frame is dropped, and a table's frame leaves with its namespace."""
+    sess.sql("CREATE NAMESPACE kf")
+    sess.sql("CREATE NAMESPACE other")
+    sess.sql("USE kf")
+    t = sess.catalog.create_table("kf", "t", _kv(spark).schema)
+    sids = [t.append(_kv(spark, k)).snapshot_id for k in (1, 2, 3)]
+    assert _rows(sess, "SELECT k FROM t") == [(1,), (2,), (3,)]
+    for n, sid in enumerate(sids, start=1):
+        assert len(_rows(sess, f"SELECT k FROM t VERSION AS OF {sid}")) == n
+        assert set(sess._frames) == {("kf", "t", None), ("kf", "t", sid)}
+    t.expire_snapshots(keep_last=1)
+    with pytest.raises(KeyError):
+        sess.sql(f"SELECT k FROM t VERSION AS OF {sids[0]}")
+    assert set(sess._frames) == {("kf", "t", None)}
+    sess.sql("USE other")
+    sess.sql("SELECT 1").collect()
+    assert sess._frames == {}
