@@ -22,7 +22,16 @@ a new version, and a table dropped and recreated, or renamed into a
 freed name, reaches its version through a different manifest file,
 so the key reads no manifest JSON. A stored view the statement
 names is replayed on every statement; a time-travel read is kept,
-one per table, under its own snapshot's manifest.
+one per table, under its own snapshot's manifest. Bare names are
+temp views of the shared SparkSession, so the sessions on one
+SparkSession record which of them bound each name: a statement that
+names one another session bound, and that this namespace does not
+define, unbinds it instead of reading that session's table.
+
+``SELECT`` lists of COUNT(*)/COUNT/MIN/MAX over one table, of its
+current or a ``VERSION``/``TIMESTAMP AS OF`` snapshot, are answered
+from manifest statistics by ``Table.metadata_aggregate`` without a
+Spark job whenever the statistics answer exactly.
 
 Catalog name prefixes (``s3tablesbucket.example_namespace``) are
 accepted and ignored: this engine IS the catalog.
@@ -35,6 +44,7 @@ plans (merge_into's file-scoped COW, snapshot-scoped view reads).
 from __future__ import annotations
 
 import re
+import weakref
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
@@ -89,18 +99,27 @@ _CTAS = re.compile(
     r"AS\s+((?:SELECT|WITH)\b.+)$",
     re.I | re.S,
 )
+# Iceberg-style time travel after a table name:
+#   VERSION AS OF 123 / FOR SYSTEM_VERSION AS OF 123 / VERSION AS OF 'ref'
+#   TIMESTAMP AS OF '2026-01-01 00:00:00' / FOR SYSTEM_TIME AS OF ...
+_AS_OF = (
+    r"(?:FOR\s+)?"
+    r"(?:(?:SYSTEM_VERSION|VERSION)\s+AS\s+OF\s+(?:(?P<ver>\d+)|'(?P<ref>\w+)')"
+    r"|(?:SYSTEM_TIME|TIMESTAMP)\s+AS\s+OF\s+'(?P<ts>[^']*)')"
+)
 # aggregate pushdown peephole: SELECT <item>[, <item> ...] FROM
-# <table> [WHERE <pred>] [GROUP BY <cols>] where every item is
-# COUNT(*) / COUNT(col) / MIN(col) / MAX(col) or a GROUP BY column
-# (no JOIN / subquery / ORDER / HAVING) is answered from manifest
-# statistics when exact — Iceberg's aggregate-push-down surface;
-# anything else (or an unsupported snapshot state / a predicate or
-# grouping not decidable from file-constant columns) falls through
-# to the normal scan path
+# <table> [<time travel>] [WHERE <pred>] [GROUP BY <cols>] where every
+# item is COUNT(*) / COUNT(col) / MIN(col) / MAX(col) or a GROUP BY
+# column (no JOIN / subquery / ORDER / HAVING) is answered from the
+# manifest statistics of the current or the time-travel snapshot when
+# exact — Iceberg's aggregate-push-down surface; anything else (or an
+# unsupported snapshot state / a predicate or grouping not decidable
+# from file-constant columns) falls through to the normal scan path
 _AGG_ONLY = re.compile(
-    r"^\s*SELECT\s+(.+?)\s*FROM\s+([\w.]+)"
-    r"(?:\s+WHERE\s+(.+?))?"
-    r"(?:\s+GROUP\s+BY\s+((?:`?\w+`?)(?:\s*,\s*`?\w+`?)*))?\s*$",
+    r"^\s*SELECT\s+(?P<sel>.+?)\s*FROM\s+(?P<tbl>[\w.]+)"
+    r"(?:\s+" + _AS_OF + r")?"
+    r"(?:\s+WHERE\s+(?P<where>.+?))?"
+    r"(?:\s+GROUP\s+BY\s+(?P<grp>(?:`?\w+`?)(?:\s*,\s*`?\w+`?)*))?\s*$",
     re.I | re.S,
 )
 # NDV peephole: a single approx_count_distinct over a bare table —
@@ -134,14 +153,9 @@ _META_REF = re.compile(
     r"\.(history|snapshots|files|refs|partitions|entries|manifests)\b",
     re.I,
 )
-# Iceberg-style time travel in statement text:
-#   FROM t VERSION AS OF 123 / FOR SYSTEM_VERSION AS OF 123
-#   FROM t TIMESTAMP AS OF '2026-01-01 00:00:00' / FOR SYSTEM_TIME AS OF ...
+# time travel in statement text: FROM/JOIN <table> <_AS_OF clause>
 _TIME_TRAVEL = re.compile(
-    r"\b(FROM|JOIN)\s+((?:\w+\.)*\w+)\s+(?:FOR\s+)?"
-    r"(?:(?:SYSTEM_VERSION|VERSION)\s+AS\s+OF\s+(?:(\d+)|'(\w+)')"
-    r"|(?:SYSTEM_TIME|TIMESTAMP)\s+AS\s+OF\s+'([^']*)')",
-    re.I,
+    r"\b(FROM|JOIN)\s+((?:\w+\.)*\w+)\s+" + _AS_OF, re.I
 )
 _ALTER = re.compile(r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+(.+)$", re.I | re.S)
 _ALTER_ADD = re.compile(r"^ADD\s+COLUMNS?\s+(.+)$", re.I | re.S)
@@ -315,6 +329,12 @@ def _balanced_paren_end(s: str) -> int | None:
     return None
 
 
+# Bare-name temp views are global to a SparkSession, so each SparkSession
+# keeps which SqlSession bound each name last (name -> that session's
+# token; a token outlives its session, whose views stay registered).
+_BINDERS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def _named_in(text: str, names) -> list[str]:
     """The ``names`` that ``text`` mentions as whole words, matched as
     Spark resolves identifiers: case-insensitively, backticks
@@ -341,9 +361,10 @@ class SqlSession:
         # (ns, table, snapshot id or None) -> (key, planned frame) of the
         # tables and time-travel reads this session attached
         self._frames: dict[tuple[str, str, int | None], tuple] = {}
-        # bare names this session registered as temp views for the
-        # current namespace (temp views are global to the SparkSession)
-        self._bound: set[str] = set()
+        # bare name -> token of the SqlSession that registered it as a
+        # temp view last, shared by every SqlSession on this SparkSession
+        self._binders: dict[str, object] = _BINDERS.setdefault(spark, {})
+        self._token = object()
 
     # -- identifier helpers --------------------------------------------
     def _ns_of(self, ident: str) -> str:
@@ -363,6 +384,10 @@ class SqlSession:
     def _empty(self) -> DataFrame:
         return self.spark.range(0).drop("id")
 
+    def _bound(self) -> list[str]:
+        """Bare names whose temp view this session registered last."""
+        return [n for n, who in self._binders.items() if who is self._token]
+
     def _bind(self, view: str, slot: tuple, key, build) -> None:
         """Register the frame cached under ``slot`` as temp view
         ``view``, first re-planning it with ``build()`` when its cached
@@ -378,10 +403,9 @@ class SqlSession:
         hit[1].createOrReplaceTempView(view)
 
     def _unbind(self, names) -> None:
-        """Drop the bare-name temp views ``names`` this session
-        registered for the current namespace."""
+        """Drop the bare-name temp views ``names``."""
         for name in list(names):
-            self._bound.discard(name)
+            self._binders.pop(name, None)
             self.spark.catalog.dropTempView(name)
 
     def _forget(self, ns: str, name: str) -> None:
@@ -391,7 +415,7 @@ class SqlSession:
         DROP VIEW / RENAME TO)."""
         for slot in [k for k in self._frames if k[:2] == (ns, name)]:
             del self._frames[slot]
-        if ns == self.namespace and name in self._bound:
+        if ns == self.namespace and name in self._bound():
             self._unbind([name])
 
     def _attach_current(self, text: str) -> None:
@@ -417,11 +441,19 @@ class SqlSession:
             k for k in self._frames if k[0] != ns or k[1] not in tables
         ]:
             del self._frames[slot]
+        views = self.catalog.views(ns) if ns is not None else {}
+        known = [*tables, *views]
+        # a name another session bound resolves to that session's table:
+        # unbind it when the statement names it and this namespace has
+        # no such table or view (that session binds it again when it
+        # next needs it)
+        others = [n for n, who in self._binders.items() if who is not self._token]
+        self._unbind(
+            [n for n in _named_in(text, others) if n not in known]
+            + [n for n in self._bound() if n not in known]
+        )
         if ns is None:
             return
-        views = self.catalog.views(ns)
-        known = [*tables, *views]
-        self._unbind([n for n in self._bound if n not in known])
         names: set[str] = set()
         texts = [text]
         for body in texts:
@@ -440,7 +472,7 @@ class SqlSession:
                     name, (ns, name, None), t._manifest_key(),
                     lambda t=t: t.read(self.spark),
                 )
-                self._bound.add(name)
+                self._binders[name] = self._token
 
         # The named views are unbound first so no body resolves against
         # a frame from an earlier statement, then replayed to a
@@ -460,7 +492,7 @@ class SqlSession:
                     still.append((vname, vsql))
                     continue
                 df.createOrReplaceTempView(vname)
-                self._bound.add(vname)
+                self._binders[vname] = self._token
             if len(still) == len(pending):
                 break  # no progress: remaining views are stale
             pending = still
@@ -512,25 +544,34 @@ class SqlSession:
         df.createOrReplaceTempView(view)
         return f"{m.group(1)} {view}"
 
+    def _as_of(self, ns: str, name: str, m: re.Match) -> int | None:
+        """Snapshot id of table ``ns.name`` that the ``_AS_OF`` clause
+        matched in ``m`` names — a version, a branch or tag, or the
+        newest snapshot at or before a timestamp — or None when ``m``
+        holds no such clause."""
+        ver, ref, ts = m.group("ver", "ref", "ts")
+        if ver is not None:
+            return int(ver)
+        if ref is None and ts is None:
+            return None
+        t = self.catalog.table(ns, name)
+        if ref is not None:
+            return t._resolve_ref(ref).snapshot_id  # a branch or tag
+        ts_ms = _iso_to_epoch_ms(ts)
+        older = [s for s in t.snapshots() if s.timestamp_ms <= ts_ms]
+        if not older:
+            raise ValueError(
+                f"no snapshot of {ns}.{name} at or before {ts!r}"
+            )
+        return older[-1].snapshot_id
+
     def _tt_sub(self, m: re.Match) -> str:
         resolved = self._known(m.group(2))
         if resolved is None:
             return m.group(0)
         ns, name = resolved
         t = self.catalog.table(ns, name)
-        if m.group(3) is not None:
-            sid = int(m.group(3))
-        elif m.group(4) is not None:
-            # VERSION AS OF '<ref>': a named branch or tag
-            sid = t._resolve_ref(m.group(4)).snapshot_id
-        else:
-            ts_ms = _iso_to_epoch_ms(m.group(5))
-            older = [s for s in t.snapshots() if s.timestamp_ms <= ts_ms]
-            if not older:
-                raise ValueError(
-                    f"no snapshot of {ns}.{name} at or before {m.group(5)!r}"
-                )
-            sid = older[-1].snapshot_id
+        sid = self._as_of(ns, name, m)
         view = f"__{ns}__{name}__v{sid}"
         # a snapshot never changes, so its frame is kept, one per table;
         # a None key (manifest expired) lets the read raise
@@ -576,7 +617,7 @@ class SqlSession:
             if ns not in self.catalog.namespaces():
                 raise ValueError(f"namespace {ns!r} does not exist")
             if ns != self.namespace:
-                self._unbind(self._bound)
+                self._unbind(self._bound())
             self.namespace = ns
             return self._empty()
         if m := _SHOW_TABLES.match(s):
@@ -718,17 +759,16 @@ class SqlSession:
 
     def _agg_meta(self, m: re.Match) -> DataFrame | None:
         """Metadata-only COUNT(*)/COUNT(col)/MIN/MAX select —
-        optionally GROUP BY file-constant columns — when the target
-        is a lakehouse table and the snapshot state allows an exact
-        answer; None = let the normal Spark-SQL scan path handle it.
+        optionally GROUP BY file-constant columns, optionally of a
+        time-travel snapshot — when the target is a lakehouse table and
+        the snapshot state allows an exact answer; None = let the
+        normal Spark-SQL scan path handle it.
         Default column names are exactly Spark's own (``count(1)``,
         ``min(x)``, ...) so both paths are indistinguishable to the
         caller, and the output keeps select-list order."""
         from .table import MetadataAggregateUnsupported
 
-        sel, tbl, where, grp = (
-            m.group(1), m.group(2), m.group(3), m.group(4),
-        )
+        sel, tbl, where, grp = m.group("sel", "tbl", "where", "grp")
         if _AGG_VETO.search(sel) or (
             where is not None and _AGG_VETO.search(where)
         ):
@@ -779,9 +819,14 @@ class SqlSession:
         if known is None:
             return None
         ns, name = known
+        t = self.catalog.table(ns, name)
+        sid = self._as_of(ns, name, m)
+        # an expired snapshot raises KeyError here, as the scan path does
+        snap = None if sid is None else t.snapshot_by_id(sid)
         try:
-            out = self.catalog.table(ns, name).metadata_aggregate(
+            out = t.metadata_aggregate(
                 self.spark,
+                snapshot=snap,
                 where=where,
                 group_by=group_cols,
                 count_alias=count_alias,
@@ -791,6 +836,13 @@ class SqlSession:
             )
         except MetadataAggregateUnsupported:
             return None
+        # the answer's columns are the group columns, then COUNT(*), the
+        # MINs, MAXes and COUNTs, each under its output name already
+        made = group_cols + [count_alias] * (count_alias is not None) + [
+            *min_of.values(), *max_of.values(), *count_of.values()
+        ]
+        if ordered == [(c, c) for c in made]:
+            return out
         return out.select(
             *[F.col(f"`{src}`").alias(dst) for src, dst in ordered]
         )

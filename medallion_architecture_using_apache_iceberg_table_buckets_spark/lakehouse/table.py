@@ -35,6 +35,7 @@ import time
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field
+from decimal import Decimal
 from pathlib import Path
 from typing import Iterable
 
@@ -238,6 +239,30 @@ def _is_float_nan(v) -> bool:
     return isinstance(v, float) and math.isnan(v)
 
 
+def _group_key(v):
+    """Python dict key that groups ``v`` as Spark's GROUP BY does: every
+    NaN is one group (float equality already merges -0.0 with 0.0), and
+    binary values become hashable."""
+    if _is_float_nan(v):
+        return "NaN"
+    if isinstance(v, bytearray):
+        return bytes(v)
+    return v
+
+
+def _sql_ident(name: str) -> str:
+    """``name`` as a quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_string(s: str | None) -> str:
+    """``s`` as a Spark SQL string expression, whatever its characters
+    and whatever the session's string-literal escaping setting."""
+    if s is None:
+        return "CAST(NULL AS STRING)"
+    return f"CAST(X'{s.encode().hex()}' AS STRING)"
+
+
 # Stats-format version stamped into every per-file stats entry under
 # the reserved ":stats_version:" key (":" can never collide with a
 # column identifier). Version 2 = the NaN-aware fold: a float/double
@@ -278,6 +303,25 @@ def _delete_file_stats(path: Path) -> dict:
     }
 
 
+def _footer_bounds(st, dtype: T.DataType) -> tuple:
+    """(min, max) of one column chunk's footer statistics. pyarrow
+    cannot decode a decimal stored as INT32/INT64 (Spark's layout up to
+    precision 18), so those bounds are scaled from the raw unscaled
+    integers."""
+    if isinstance(dtype, T.DecimalType) and st.physical_type in (
+        "INT32", "INT64"
+    ):
+        return tuple(
+            Decimal(v).scaleb(-dtype.scale) for v in (st.min_raw, st.max_raw)
+        )
+    return st.min, st.max
+
+
+def _stats_str(v) -> str:
+    # a Decimal's str() turns exponential below 1E-6 ("1E-10")
+    return format(v, "f") if isinstance(v, Decimal) else str(v)
+
+
 def _file_column_stats(path: Path, schema: T.StructType) -> dict:
     """Per-column [min, max, null_count, num_values] from the Parquet
     FOOTER (no data pages read) for stats-eligible top-level columns.
@@ -291,7 +335,9 @@ def _file_column_stats(path: Path, schema: T.StructType) -> dict:
     import pyarrow.parquet as pq
 
     eligible = {
-        f.name for f in schema.fields if isinstance(f.dataType, _STATS_TYPES)
+        f.name: f.dataType
+        for f in schema.fields
+        if isinstance(f.dataType, _STATS_TYPES)
     }
     md = pq.ParquetFile(path).metadata
     agg: dict[str, list] = {}
@@ -313,7 +359,11 @@ def _file_column_stats(path: Path, schema: T.StructType) -> dict:
                 continue
             cur = agg.setdefault(name, [None, None, 0, 0])
             if n_vals > 0:
-                lo, hi = st.min, st.max
+                try:
+                    lo, hi = _footer_bounds(st, eligible[name])
+                except Exception:  # bounds pyarrow cannot decode
+                    broken.add(name)
+                    continue
                 # NaN poisons the fold: every Python comparison with
                 # NaN is false, so a NaN bound recorded in a LATER row
                 # group would be silently dropped and the stored range
@@ -336,8 +386,8 @@ def _file_column_stats(path: Path, schema: T.StructType) -> dict:
             continue
         try:
             out[name] = [
-                None if lo is None else str(lo),
-                None if hi is None else str(hi),
+                None if lo is None else _stats_str(lo),
+                None if hi is None else _stats_str(hi),
                 nulls,
                 rows,
             ]
@@ -1950,6 +2000,7 @@ class Table:
         min_of: dict[str, str] | None = None,
         max_of: dict[str, str] | None = None,
         count_of: dict[str, str] | None = None,
+        snapshot: Snapshot | None = None,
     ) -> DataFrame:
         """COUNT(*) / MIN / MAX / COUNT(col) answered ENTIRELY from
         manifest statistics — zero data or footer IO at query time.
@@ -1961,7 +2012,18 @@ class Table:
         a full scan. The engine records per-file exact row counts and
         per-column [min, max, null_count, num_values] in the snapshot
         at commit (``_file_column_stats`` — footer read once per
-        append), so the aggregate folds over a manifest-sized frame.
+        append), so the aggregate folds over O(#files) manifest rows.
+
+        The fold finishes on the driver and no Spark job runs: Spark's
+        own ``try_cast`` types the recorded strings (and evaluates the
+        ``where`` per file) in a projection over a local relation,
+        which the optimizer evaluates without a job; the counts are
+        exact Python sums and MIN/MAX pick the file with the least or
+        greatest typed value. The result is a local relation of the
+        winning recorded strings through the same ``try_cast``, with
+        Spark's own values, types and column names. ``snapshot``
+        (default: the current one) answers for a time-travel snapshot
+        from its own stats, schema, renames and position deletes.
 
         Exactness contract — raises ``MetadataAggregateUnsupported``
         (callers fall back to a real scan) whenever stats cannot
@@ -2016,8 +2078,10 @@ class Table:
         min_of = dict(min_of or {})
         max_of = dict(max_of or {})
         count_of = dict(count_of or {})
+        if count_alias is None and not (min_of or max_of or count_of):
+            raise ValueError("metadata_aggregate: nothing to compute")
         group_by = list(group_by)
-        snap = self.current_snapshot()
+        snap = self.current_snapshot() if snapshot is None else snapshot
         deleted_by_base: dict[str, int] = {}
         if snap.delete_files:
             # Pure position-delete snapshots still answer COUNT(*)
@@ -2140,7 +2204,10 @@ class Table:
         nan_sensitive = (
             (set(min_of) | set(max_of)) & float_cols
         )
-        rows = []
+        # per file with live rows: (index, *recorded strings) — the
+        # constant columns' values, then each value column's min and max
+        # — and, by index, its live rows and per-column non-null counts
+        rows, live, nonnull = [], {}, {}
         for i, f in enumerate(snap.files):
             st = snap.stats.get(f)
             if st is None or ":rows:" not in st:
@@ -2162,7 +2229,7 @@ class Table:
                 )
             if live_rows == 0:
                 continue  # empty file: contributes nothing, no entries
-            row: list = [i, live_rows]
+            row: list = [i]
             # group value: identity-partition path segment first (any
             # type, the exact written form), else a file-constant
             # stats range
@@ -2205,6 +2272,7 @@ class Table:
                         f"group/where column {col!r} is not constant"
                         f" in {f!r}"
                     )
+            nn = []
             for col in val_cols:
                 ent = next(
                     (st[nm] for nm in names_for(col) if nm in st), None
@@ -2214,87 +2282,170 @@ class Table:
                         f"no stats entry for {col!r} in {f!r}"
                     )
                 lo, hi, nulls, n = ent
-                row += [lo, hi, int(n) - int(nulls)]
+                row += [lo, hi]
+                nn.append(int(n) - int(nulls))
             rows.append(tuple(row))
+            live[i], nonnull[i] = live_rows, nn
 
-        fields = [
-            T.StructField("_fidx", T.IntegerType(), False),
-            T.StructField("_rows", T.LongType(), False),
-        ]
-        for col in const_cols:
-            fields.append(T.StructField(f"_g_{col}", T.StringType()))
-        for col in val_cols:
-            fields += [
-                T.StructField(f"_min_{col}", T.StringType()),
-                T.StructField(f"_max_{col}", T.StringType()),
-                T.StructField(f"_nn_{col}", T.LongType(), False),
-            ]
-        mdf = local_frame(spark, rows, T.StructType(fields))
-
-        def typed(raw: str, col: str):
-            return F.expr(
-                f"try_cast(`{raw}` AS "
-                f"{by_name[col].dataType.simpleString()})"
+        # Spark's own try_cast types each recorded string and the WHERE
+        # evaluates per file, in a projection over a local relation of
+        # the per-file rows (Arrow-built: it grows with the file count);
+        # Catalyst's ConvertToLocalRelation evaluates that projection
+        # inside the optimizer, so the collect runs no job.
+        def typed(raw: str, col: str) -> str:
+            return (
+                f"try_cast({_sql_ident(raw)} AS"
+                f" {by_name[col].dataType.simpleString()})"
             )
+
+        def order_key(name: str, col: str) -> str:
+            # instants order and group as instants: a naive Python
+            # datetime repeats wall-clock times across a DST fall-back
+            dt = by_name[col].dataType
+            if isinstance(dt, T.TimestampType):
+                return f"unix_micros({_sql_ident(name)})"
+            if isinstance(dt, T.DateType):
+                return f"unix_date({_sql_ident(name)})"
+            return _sql_ident(name)
+
+        # (recorded column, typed column, source column) in key order;
+        # the typed constant columns carry their own names, which the
+        # WHERE resolves against
+        cols = [(f"_g_{c}", c, c) for c in const_cols] + [
+            (f"_{side}_{c}", f"_t{side}_{c}", c)
+            for c in val_cols
+            for side in ("min", "max")
+        ]
+        recorded = {r[0]: r[1:] for r in rows}
+        if rows and (cols or where is not None):
+            inner = ["_fidx"] + [
+                f"{typed(raw, c)} AS {_sql_ident(name)}"
+                for raw, name, c in cols
+            ]
+            # newlines end any line comment the predicate carries
+            keep = "TRUE" if where is None else f"(\n{where}\n)"
+            outer = ["_fidx", f"{keep} AS _keep"] + [
+                f"{order_key(name, c)} AS _k{k}"
+                for k, (_, name, c) in enumerate(cols)
+            ]
+            per_file = local_frame(
+                spark, rows,
+                T.StructType(
+                    [T.StructField("_fidx", T.IntegerType(), False)]
+                    + [T.StructField(raw, T.StringType()) for raw, _, _ in cols]
+                ),
+            )
+            evaluated = [
+                (r[0], r[1], tuple(r[2:]))
+                for r in per_file.selectExpr(*inner)
+                .selectExpr(*outer)
+                .collect()
+            ]
+        else:
+            evaluated = [(i, True, ()) for i in live]
 
         # refuse on ANY unparseable recorded value (raw non-null but
-        # cast null) — manifest-sized probe, exact-or-bail contract;
-        # a plain COUNT(*) casts nothing, so it runs no probe job
-        bad = F.lit(False)
-        for col in const_cols:
-            bad = bad | (
-                F.col(f"_g_{col}").isNotNull()
-                & typed(f"_g_{col}", col).isNull()
-            )
-        for col in val_cols:
-            for side in ("min", "max"):
-                bad = bad | (
-                    F.col(f"_{side}_{col}").isNotNull()
-                    & typed(f"_{side}_{col}", col).isNull()
+        # cast null), in every file, kept by the WHERE or not
+        for i, _, ks in evaluated:
+            if any(
+                s is not None and k is None for s, k in zip(recorded[i], ks)
+            ):
+                raise MetadataAggregateUnsupported(
+                    "a recorded stats value does not cast back through its"
+                    " declared type"
                 )
-        if (const_cols or val_cols) and mdf.filter(bad).limit(1).count() > 0:
-            raise MetadataAggregateUnsupported(
-                "a recorded stats value does not cast back through its"
-                " declared type"
+
+        # The fold, on the driver: exact integer sums, and per group and
+        # value column the (key, recorded string) of the least min and
+        # the greatest max, all-null ranges ignored as SQL ignores NULLs.
+        n_grp, n_const, n_val = len(group_by), len(const_cols), len(val_cols)
+
+        def new_group(ks: tuple, raws: tuple) -> dict:
+            return {
+                # Spark's grouping normalises -0.0 to 0.0
+                "g": [
+                    "0.0" if col in float_cols and k == 0 else raw
+                    for col, k, raw in zip(group_by, ks, raws)
+                ],
+                "rows": 0,
+                "lo": [None] * n_val,
+                "hi": [None] * n_val,
+                "nn": [0] * n_val,
+            }
+
+        groups = {} if group_by else {(): new_group((), ())}
+        for i, kept, ks in evaluated:
+            if not kept:
+                continue  # false or NULL drops the whole file
+            gkey = tuple(_group_key(k) for k in ks[:n_grp])
+            acc = groups.get(gkey)
+            if acc is None:
+                acc = groups[gkey] = new_group(ks, recorded[i])
+            acc["rows"] += live[i]
+            for j in range(n_val):
+                at = n_const + 2 * j
+                lo, hi = ks[at], ks[at + 1]
+                if lo is not None and (
+                    acc["lo"][j] is None or lo < acc["lo"][j][0]
+                ):
+                    acc["lo"][j] = (lo, recorded[i][at])
+                if hi is not None and (
+                    acc["hi"][j] is None or hi > acc["hi"][j][0]
+                ):
+                    acc["hi"][j] = (hi, recorded[i][at + 1])
+                acc["nn"][j] += nonnull[i][j]
+
+        # The answer: an inline table (one row per group) of the winning
+        # recorded strings through the same try_cast, so values, types
+        # and names are Spark's own. It is one parse on the JVM, and a
+        # local relation, so no job runs either.
+        def recorded_of(w) -> str:
+            return _sql_string(None if w is None else w[1])
+
+        names = [f"_g_{col}" for col in group_by] + ["_rows"] + [
+            f"_{kind}_{col}" for col in val_cols for kind in ("min", "max", "nn")
+        ]
+        values = [
+            (
+                *map(_sql_string, acc["g"]),
+                f"CAST({acc['rows']} AS BIGINT)",
+                *(
+                    v
+                    for lo, hi, nn in zip(acc["lo"], acc["hi"], acc["nn"])
+                    for v in (
+                        recorded_of(lo), recorded_of(hi),
+                        f"CAST({nn} AS BIGINT)",
+                    )
+                ),
             )
-
-        sel = [F.col("_rows")]
-        for col in const_cols:
-            sel.append(typed(f"_g_{col}", col).alias(col))
-        for col in val_cols:
-            sel += [
-                typed(f"_min_{col}", col).alias(f"_tmin_{col}"),
-                typed(f"_max_{col}", col).alias(f"_tmax_{col}"),
-                F.col(f"_nn_{col}"),
-            ]
-        t = mdf.select(*sel)
-        if where is not None:
-            # per-FILE evaluation with Spark's exact SQL semantics:
-            # false or NULL drops the whole file — row-exact because
-            # every kept column is file-constant
-            t = t.filter(F.expr(where))
-
-        aggs = []
+            # a GROUP BY over no file: one typed row, filtered out below
+            for acc in groups.values()
+            or [new_group((None,) * n_grp, (None,) * n_grp)]
+        ]
+        sel = [
+            f"{typed(f'_g_{col}', col)} AS {_sql_ident(col)}"
+            for col in group_by
+        ]
         if count_alias is not None:
-            aggs.append(
-                F.coalesce(F.sum("_rows"), F.lit(0).cast("long")).alias(
-                    count_alias
-                )
-            )
-        for col, alias in min_of.items():
-            aggs.append(F.min(f"_tmin_{col}").alias(alias))
-        for col, alias in max_of.items():
-            aggs.append(F.max(f"_tmax_{col}").alias(alias))
-        for col, alias in count_of.items():
-            aggs.append(
-                F.coalesce(F.sum(f"_nn_{col}"), F.lit(0).cast("long"))
-                .alias(alias)
-            )
-        if not aggs:
-            raise ValueError("metadata_aggregate: nothing to compute")
-        if group_by:
-            return t.groupBy(*group_by).agg(*aggs)
-        return t.agg(*aggs)
+            sel.append(f"_rows AS {_sql_ident(count_alias)}")
+        sel += [
+            f"{typed(f'_min_{col}', col)} AS {_sql_ident(alias)}"
+            for col, alias in min_of.items()
+        ]
+        sel += [
+            f"{typed(f'_max_{col}', col)} AS {_sql_ident(alias)}"
+            for col, alias in max_of.items()
+        ]
+        sel += [
+            f"{_sql_ident(f'_nn_{col}')} AS {_sql_ident(alias)}"
+            for col, alias in count_of.items()
+        ]
+        return spark.sql(
+            f"SELECT {', '.join(sel)} FROM VALUES "
+            + ", ".join("(" + ", ".join(v) + ")" for v in values)
+            + f" AS _v({', '.join(map(_sql_ident, names))})"
+            + ("" if groups else " WHERE FALSE")
+        )
 
     def read_incremental(
         self,
@@ -2346,7 +2497,8 @@ class Table:
                         f"incremental read crosses non-append snapshot "
                         f"{s.snapshot_id} ({s.operation})"
                     )
-        new_files = [f for f in end.files if f not in set(start.files)]
+        old_files = set(start.files)
+        new_files = [f for f in end.files if f not in old_files]
         return self._read_files(
             spark,
             new_files,

@@ -1,5 +1,7 @@
 import os
 import sys
+import uuid
+from contextlib import contextmanager
 
 import pytest
 
@@ -19,3 +21,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def no_jobs(spark):
+    """``with no_jobs(label):`` fails when its body starts a Spark job."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def check(label: str = "no_jobs"):
+        group = f"no_jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, label)
+        try:
+            yield
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], label
+
+    return check

@@ -66,7 +66,7 @@ def test_time_travel_and_incremental(spark, cat):
     assert inc_all.count() == 3
 
 
-def test_read_plans_without_a_job(spark, cat):
+def test_read_plans_without_a_job(spark, cat, no_jobs):
     # more files than Spark's default listing threshold (32): building
     # a read must not start a listing job for files the manifest names
     t = cat.create_table("demo", "tmany", SCHEMA)
@@ -75,15 +75,9 @@ def test_read_plans_without_a_job(spark, cat):
     assert len(t.current_snapshot().files) >= 40
     sess = cat.sql_session(spark)
     sess.sql("USE demo")
-    sc = spark.sparkContext
-    group = "test_read_plans_without_a_job"
-    sc.setJobGroup(group, "plan only")
-    try:
+    with no_jobs("plan only"):
         df = t.read(spark)
         q = sess.sql("SELECT state, count(*) AS n FROM tmany GROUP BY state")
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
     assert df.count() == 400
     assert [tuple(r) for r in q.collect()] == [("SC", 400)]
 

@@ -811,21 +811,116 @@ def test_randomized_mor_count_against_read(spark, cat):
         )
 
 
-def test_count_star_builds_without_a_job(spark, cat):
-    """A plain COUNT(*) casts no recorded value back, so building its
-    frame runs no probe job."""
-    df = _frame(spark)
-    t = cat.create_table("m", "nojob", df.schema)
+def test_count_star_builds_without_a_job(spark, cat, no_jobs):
+    """Every shape the manifest fold serves builds and collects without
+    a Spark job, and each answer equals Spark's own aggregate over
+    ``Table.read``: COUNT(*), COUNT(col), MIN/MAX over int, double,
+    decimal, date and timestamp, GROUP BY a partition column (the null
+    partition included), WHERE on a partition column, and COUNT(*)
+    under position deletes. A partition value holding a quote, a
+    backslash and a non-ASCII letter comes back unchanged."""
+    import decimal
+
+    dt, dec = datetime.datetime, decimal.Decimal
+    df = spark.createDataFrame(
+        [
+            ("a", 10, 1.5, dec("3.10"), datetime.date(2024, 1, 3),
+             dt(2024, 1, 3, 8, 0)),
+            ("a", None, -2.25, dec("-1.05"), datetime.date(2024, 1, 1), None),
+            ("b", 7, 99.125, None, None, dt(2023, 12, 31, 23, 59, 59)),
+            ("b", 42, 0.5, dec("12.00"), datetime.date(2024, 2, 1),
+             dt(2024, 2, 1, 12, 30)),
+            (None, 5, 3.5, dec("0.01"), datetime.date(2023, 12, 31),
+             dt(2024, 6, 1)),
+            # a partition value that must survive quoting into SQL text
+            ("q'\\ü", 3, 4.5, dec("7.77"), datetime.date(2022, 5, 5),
+             dt(2022, 5, 5, 5, 5)),
+        ],
+        "k string, v int, price double, amt decimal(10,2), d date,"
+        " ts timestamp",
+    )
+    t = cat.create_table("m", "nojob", df.schema, partition_by=["k"])
     t.append(df)
-    sc = spark.sparkContext
-    group = "test_count_star_builds_without_a_job"
-    sc.setJobGroup(group, "plan only")
+    t.append(df.where("v > 8"))  # a second file in partitions a and b
+
+    def scan(where=None, group_by=(), count_alias="cnt", min_of=None,
+             max_of=None, count_of=None):
+        base = t.read(spark)
+        if where:
+            base = base.filter(where)
+        aggs = [F.count(F.lit(1)).alias(count_alias)] if count_alias else []
+        aggs += [F.min(c).alias(a) for c, a in (min_of or {}).items()]
+        aggs += [F.max(c).alias(a) for c, a in (max_of or {}).items()]
+        aggs += [F.count(c).alias(a) for c, a in (count_of or {}).items()]
+        return base.groupBy(*group_by).agg(*aggs) if group_by else base.agg(*aggs)
+
+    def both_ways(spec):
+        with no_jobs(repr(spec)):
+            got = t.metadata_aggregate(spark, **spec)
+            rows = got.collect()
+        exp = scan(**spec)
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in exp.schema
+        ], spec
+        key = lambda r: tuple(repr(x) for x in r)
+        assert sorted(map(key, rows)) == sorted(map(key, exp.collect())), spec
+
+    cols = ("v", "price", "amt", "d", "ts")
+    for spec in (
+        {"count_alias": "n"},
+        {"count_alias": None, "count_of": {c: f"nn_{c}" for c in cols}},
+        {
+            "min_of": {c: f"lo_{c}" for c in cols},
+            "max_of": {c: f"hi_{c}" for c in cols},
+        },
+        {
+            "group_by": ["k"], "min_of": {"ts": "lo"},
+            "max_of": {"amt": "hi"}, "count_of": {"v": "nv"},
+        },
+        {"where": "k = 'b'", "max_of": {"d": "hi"}},
+        {
+            "where": "k IS NULL OR k = 'a'", "group_by": ["k"],
+            "min_of": {"price": "lo"},
+        },
+    ):
+        both_ways(spec)
+
+    t.delete_where(spark, "v = 42", mode="merge-on-read")
+    both_ways({"count_alias": "n"})
+    both_ways({"group_by": ["k"], "count_alias": "n"})
+
+
+def test_timestamp_min_max_order_by_instant(spark, cat):
+    """MIN/MAX over a timestamp pick the earliest and latest instant
+    even where the driver's local wall clock repeats across a DST
+    fall-back (01:30 EDT comes before 01:15 EST)."""
+    import time
+
+    # 2024-11-03 05:30 and 06:15 UTC, one file each
+    frames = [
+        spark.sql(f"SELECT timestamp_seconds({1730592000 + 60 * m}) AS ts")
+        for m in (5 * 60 + 30, 6 * 60 + 15)
+    ]
+    t = cat.create_table("m", "dst", frames[0].schema)
+    for f in frames:
+        t.append(f)
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
     try:
-        out = t.metadata_aggregate(spark, count_alias="n")
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        got = t.metadata_aggregate(
+            spark, count_alias=None, min_of={"ts": "lo"}, max_of={"ts": "hi"}
+        ).collect()[0]
+        exp = t.read(spark).agg(
+            F.min("ts").alias("lo"), F.max("ts").alias("hi")
+        ).collect()[0]
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert out.collect()[0]["n"] == 5
+        if old is None:
+            os.environ.pop("TZ")
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+    assert (got["lo"], got["hi"]) == (exp["lo"], exp["hi"])
 
 
 def test_uncastable_recorded_value_refused(spark, cat):

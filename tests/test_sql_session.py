@@ -246,7 +246,7 @@ def test_metadata_tables_via_sql(spark, sess):
     assert lit[0]["s"] == "not FROM orders.history"
 
 
-def test_time_travel_via_sql(spark, sess):
+def test_time_travel_via_sql(spark, sess, no_jobs):
     sess.sql("CREATE NAMESPACE IF NOT EXISTS ns")
     sess.sql("USE ns")
     t = sess.catalog.create_table("ns", "orders", SCHEMA)
@@ -255,15 +255,16 @@ def test_time_travel_via_sql(spark, sess):
     ts1 = [s for s in t.snapshots() if s.snapshot_id == v1][0].timestamp_ms
     t.append(spark.createDataFrame([(2, "B", 2)], SCHEMA))
 
-    assert sess.sql("SELECT count(*) FROM orders").collect()[0][0] == 2
+    def count(stmt):
+        # a time-travel COUNT(*) is answered from that snapshot's
+        # manifest: no Spark job runs
+        with no_jobs(stmt):
+            return sess.sql(stmt).collect()[0][0]
+
+    assert count("SELECT count(*) FROM orders") == 2
+    assert count(f"SELECT count(*) FROM orders VERSION AS OF {v1}") == 1
     assert (
-        sess.sql(f"SELECT count(*) FROM orders VERSION AS OF {v1}").collect()[0][0]
-        == 1
-    )
-    assert (
-        sess.sql(
-            f"SELECT count(*) FROM orders FOR SYSTEM_VERSION AS OF {v1}"
-        ).collect()[0][0]
+        count(f"SELECT count(*) FROM orders FOR SYSTEM_VERSION AS OF {v1}")
         == 1
     )
     import datetime as dt
@@ -271,10 +272,7 @@ def test_time_travel_via_sql(spark, sess):
     stamp = dt.datetime.fromtimestamp(
         ts1 / 1000, dt.timezone.utc
     ).strftime("%Y-%m-%d %H:%M:%S.%f+00:00")
-    got = sess.sql(
-        f"SELECT count(*) FROM orders TIMESTAMP AS OF '{stamp}'"
-    ).collect()[0][0]
-    assert got == 1
+    assert count(f"SELECT count(*) FROM orders TIMESTAMP AS OF '{stamp}'") == 1
     with pytest.raises(ValueError, match="no snapshot"):
         sess.sql(
             "SELECT * FROM orders TIMESTAMP AS OF '1999-01-01 00:00:00+00:00'"
@@ -942,6 +940,35 @@ def test_sessions_over_two_catalogs_share_one_spark_session(spark, tmp_path):
     two.catalog.table("n", "t").append(_kv(spark, 3))
     assert _rows(two, "SELECT k FROM t") == [(2,), (3,)]
     assert _rows(one, "SELECT k FROM t") == [(1,)]
+
+
+def test_session_does_not_answer_from_another_sessions_table(
+    spark, tmp_path
+):
+    """A bare name another SqlSession bound on the same SparkSession
+    does not resolve in a session whose namespace has no such table,
+    and the session that bound it still reads it. A temp view the
+    caller registered without a SqlSession still resolves."""
+    from pyspark.errors import AnalysisException
+
+    one = Catalog(tmp_path / "one").sql_session(spark)
+    two = Catalog(tmp_path / "two").sql_session(spark)
+    for sess in (one, two):
+        sess.sql("CREATE NAMESPACE n")
+    one.catalog.create_table("n", "t", _kv(spark).schema).append(
+        _kv(spark, 1)
+    )
+    one.sql("USE n")
+    assert _rows(one, "SELECT k FROM t") == [(1,)]
+    two.sql("USE n")
+    with pytest.raises(AnalysisException, match="TABLE_OR_VIEW_NOT_FOUND"):
+        two.sql("SELECT k FROM t").collect()
+    assert _rows(one, "SELECT k FROM t") == [(1,)]
+    spark.createDataFrame([(7,)], "k long").createOrReplaceTempView("u")
+    try:
+        assert _rows(two, "SELECT k FROM u") == [(7,)]
+    finally:
+        spark.catalog.dropTempView("u")
 
 
 def test_time_travel_to_expired_snapshot_still_raises(spark, sess):
