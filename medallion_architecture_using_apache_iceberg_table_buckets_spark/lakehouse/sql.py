@@ -28,10 +28,26 @@ SparkSession record which of them bound each name: a statement that
 names one another session bound, and that this namespace does not
 define, unbinds it instead of reading that session's table.
 
-``SELECT`` lists of COUNT(*)/COUNT/MIN/MAX over one table, of its
-current or a ``VERSION``/``TIMESTAMP AS OF`` snapshot, are answered
-from manifest statistics by ``Table.metadata_aggregate`` without a
-Spark job whenever the statistics answer exactly.
+Statements the manifest already decides start no Spark job:
+
+- ``SELECT`` lists of COUNT(*)/COUNT/MIN/MAX over one table, of its
+  current or a ``VERSION``/``TIMESTAMP AS OF`` snapshot, are answered
+  from manifest statistics by ``Table.metadata_aggregate`` whenever
+  the statistics answer exactly;
+- any other single-table ``SELECT ... WHERE`` (same shape, same time
+  travel) reads only the files whose manifest min/max bounds can hold
+  a matching row (``Table._prune_files_by_stats``); when none can, it
+  runs over an empty local relation, so a lookup of an absent key
+  reads no file. Spark still evaluates the ``WHERE`` and the select
+  list, so pruning only drops files that hold no matching row;
+- ``SELECT COUNT(*) FROM <t>.history`` counts main's snapshot log
+  (``Table.main_log``) on the driver;
+- ``USE``, DDL and the other statements that return nothing return a
+  local relation with no columns and no rows.
+
+``TIMESTAMP AS OF`` picks the newest snapshot of main's snapshot log at
+or before the timestamp, so an unpublished branch commit never
+answers it.
 
 Catalog name prefixes (``s3tablesbucket.example_namespace``) are
 accepted and ignored: this engine IS the catalog.
@@ -49,11 +65,13 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..schema import schema_from_json
 from ..session import local_frame
 from .catalog import Catalog
 from .merge import merge_into
-from .table import _word_refs
+from .table import _sql_ident, _sql_type, _word_refs
 
 _CREATE_NS = re.compile(
     r"^\s*CREATE\s+NAMESPACE\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s*$", re.I
@@ -117,7 +135,7 @@ _AS_OF = (
 # from file-constant columns) falls through to the normal scan path
 _AGG_ONLY = re.compile(
     r"^\s*SELECT\s+(?P<sel>.+?)\s*FROM\s+(?P<tbl>[\w.]+)"
-    r"(?:\s+" + _AS_OF + r")?"
+    r"(?:\s+(?P<asof>" + _AS_OF + r"))?"
     r"(?:\s+WHERE\s+(?P<where>.+?))?"
     r"(?:\s+GROUP\s+BY\s+(?P<grp>(?:`?\w+`?)(?:\s*,\s*`?\w+`?)*))?\s*$",
     re.I | re.S,
@@ -151,6 +169,13 @@ _AGG_VETO = re.compile(
 _META_REF = re.compile(
     r"\b(FROM|JOIN)\s+((?:\w+\.)*\w+)"
     r"\.(history|snapshots|files|refs|partitions|entries|manifests)\b",
+    re.I,
+)
+# ``SELECT COUNT(*) FROM <table>.history``: the length of main's
+# snapshot log, counted on the driver
+_HISTORY_COUNT = re.compile(
+    r"^\s*SELECT\s+COUNT\s*\(\s*\*\s*\)(?:\s+AS\s+`?(\w+)`?)?"
+    r"\s+FROM\s+((?:\w+\.)*\w+)\.history\s*$",
     re.I,
 )
 # time travel in statement text: FROM/JOIN <table> <_AS_OF clause>
@@ -365,6 +390,7 @@ class SqlSession:
         # temp view last, shared by every SqlSession on this SparkSession
         self._binders: dict[str, object] = _BINDERS.setdefault(spark, {})
         self._token = object()
+        self._nothing: DataFrame | None = None
 
     # -- identifier helpers --------------------------------------------
     def _ns_of(self, ident: str) -> str:
@@ -382,7 +408,11 @@ class SqlSession:
         return self.namespace, parts[-1]
 
     def _empty(self) -> DataFrame:
-        return self.spark.range(0).drop("id")
+        """No columns and no rows: a local relation, so collecting it
+        starts no job. Built once per session."""
+        if self._nothing is None:
+            self._nothing = local_frame(self.spark, [], T.StructType([]))
+        return self._nothing
 
     def _bound(self) -> list[str]:
         """Bare names whose temp view this session registered last."""
@@ -547,8 +577,8 @@ class SqlSession:
     def _as_of(self, ns: str, name: str, m: re.Match) -> int | None:
         """Snapshot id of table ``ns.name`` that the ``_AS_OF`` clause
         matched in ``m`` names — a version, a branch or tag, or the
-        newest snapshot at or before a timestamp — or None when ``m``
-        holds no such clause."""
+        newest snapshot of main's snapshot log at or before a
+        timestamp — or None when ``m`` holds no such clause."""
         ver, ref, ts = m.group("ver", "ref", "ts")
         if ver is not None:
             return int(ver)
@@ -558,7 +588,7 @@ class SqlSession:
         if ref is not None:
             return t._resolve_ref(ref).snapshot_id  # a branch or tag
         ts_ms = _iso_to_epoch_ms(ts)
-        older = [s for s in t.snapshots() if s.timestamp_ms <= ts_ms]
+        older = [s for s in t.main_log() if s.timestamp_ms <= ts_ms]
         if not older:
             raise ValueError(
                 f"no snapshot of {ns}.{name} at or before {ts!r}"
@@ -709,12 +739,18 @@ class SqlSession:
             return self._empty()
         if _MERGE_HEAD.match(s):
             return self._merge(s)
+        if m := _HISTORY_COUNT.match(s):
+            out = self._history_count(m)
+            if out is not None:
+                return out
         if m := _NDV_ONLY.match(s):
             out = self._ndv_meta(m)
             if out is not None:
                 return out
         if m := _AGG_ONLY.match(s):
             out = self._agg_meta(m)
+            if out is None:
+                out = self._planned_select(m, s)
             if out is not None:
                 return out
         # everything else (SELECT / WITH / ...) runs on Spark SQL with
@@ -847,10 +883,77 @@ class SqlSession:
             *[F.col(f"`{src}`").alias(dst) for src, dst in ordered]
         )
 
+    def _history_count(self, m: re.Match) -> DataFrame | None:
+        """``SELECT COUNT(*) FROM t.history``: the length of main's
+        snapshot log as an inline table, under Spark's own column name
+        (``count(1)``) unless aliased; None when ``t`` is no lakehouse
+        table."""
+        known = self._known(m.group(2))
+        if known is None:
+            return None
+        n = len(self.catalog.table(*known).main_log())
+        alias = _sql_ident(m.group(1) or "count(1)")
+        return self.spark.sql(
+            f"SELECT * FROM VALUES (CAST({n} AS BIGINT)) AS _v({alias})"
+        )
+
+    def _planned_select(self, m: re.Match, s: str) -> DataFrame | None:
+        """A single-table ``SELECT ... WHERE`` (the ``_AGG_ONLY`` shape,
+        no GROUP BY) over only the files of its snapshot whose manifest
+        bounds can hold a matching row: the table name and its AS OF
+        clause in ``s`` are replaced, under the table's name as alias,
+        by a statement-private view of the surviving files or, when
+        none survives, by an empty relation of the snapshot's schema
+        that the optimizer turns into an empty local relation (no
+        position-delete join, no file read, no job). None when no file
+        was pruned, so the kept frame answers as before, or when the
+        statement is not that shape."""
+        sel, tbl, where, grp, asof = m.group(
+            "sel", "tbl", "where", "grp", "asof"
+        )
+        if (
+            where is None
+            or grp is not None
+            or _AGG_VETO.search(sel)
+            or _AGG_VETO.search(where)
+            # a qualified name resolves only under time travel
+            or ("." in tbl and asof is None)
+        ):
+            return None
+        known = self._known(tbl)
+        if known is None:
+            return None
+        ns, name = known
+        t = self.catalog.table(ns, name)
+        sid = self._as_of(ns, name, m)
+        # an expired snapshot raises KeyError here, as the scan path does
+        snap = t.current_snapshot() if sid is None else t.snapshot_by_id(sid)
+        files = t._prune_files_by_stats(
+            self.spark, snap.files, where, snapshot=snap
+        )
+        if len(files) == len(snap.files):
+            return None
+        head, tail = s[: m.start("tbl")], s[m.end("asof" if asof else "tbl"):]
+        # one table and no subquery, so no other name needs attaching
+        alias = _sql_ident(name)
+        if not files:
+            cols = ", ".join(
+                f"CAST(NULL AS {_sql_type(f.dataType)})"
+                f" AS {_sql_ident(f.name)}"
+                for f in schema_from_json(snap.schema_json).fields
+            )
+            return self.spark.sql(
+                f"{head}(SELECT {cols} WHERE FALSE) AS {alias}{tail}"
+            )
+        view = f"__{ns}__{name}__files"
+        t._read_live(self.spark, snap, files).createOrReplaceTempView(view)
+        try:
+            return self.spark.sql(f"{head}{view} AS {alias}{tail}")
+        finally:
+            self.spark.catalog.dropTempView(view)
+
     # -- CREATE TABLE --------------------------------------------------
     def _create_table(self, m) -> DataFrame:
-        from pyspark.sql import types as T
-
         if_not_exists, ident = bool(m.group(1)), m.group(2)
         cols, part, props_raw = m.group(3), m.group(4), m.group(5)
         ns, name = self._table_of(ident)
@@ -910,8 +1013,6 @@ class SqlSession:
         """ADD/RENAME/DROP COLUMN onto the lakehouse schema-evolution
         primitives (Table.add_column/rename_column/drop_column) —
         metadata-only commits, no data rewrite, like Iceberg v2."""
-        from pyspark.sql import types as T
-
         ns, name = self._table_of(m.group(1))
         t = self.catalog.table(ns, name)
         action = m.group(2).strip()

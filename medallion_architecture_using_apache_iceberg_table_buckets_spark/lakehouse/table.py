@@ -204,6 +204,32 @@ _COL_CMP_RE = re.compile(
 _CMP_COL_RE = re.compile(
     r"^\s*(.+?)\s*(<=|>=|!=|<>|==|=|<|>)\s*`?([A-Za-z_]\w*)`?\s*$"
 )
+# the side of such a conjunct that may prune: a plain literal (a signed
+# number, a string, TRUE/FALSE/NULL), a typed DATE/TIMESTAMP literal,
+# or a CAST of one of those. It is evaluated once, when files are
+# planned, so a column, a clock read or a random draw never qualifies.
+_LITERAL_RE = re.compile(
+    r"[-+]?\s*(?:\d+\.?\d*|\.\d+)(?:E[-+]?\d+)?(?:BD|[LSYDF])?"
+    r"|(?:(?:DATE|TIMESTAMP(?:_NTZ|_LTZ)?)\s*)?"
+    r"(?:'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\")"
+    r"|TRUE|FALSE|NULL",
+    re.I | re.S,
+)
+_CAST_RE = re.compile(
+    r"CAST\s*\((.+)\s+AS\s+\w+(?:\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\))?\s*\)",
+    re.I | re.S,
+)
+
+
+def _is_literal(text: str) -> bool:
+    """True when ``text`` is a literal side under ``_LITERAL_RE`` and
+    ``_CAST_RE``, parenthesised or not."""
+    t = text.strip()
+    while t.startswith("(") and t.endswith(")"):
+        t = t[1:-1].strip()
+    if m := _CAST_RE.fullmatch(t):
+        return _is_literal(m.group(1))
+    return _LITERAL_RE.fullmatch(t) is not None
 
 
 def _list_parquet(root: Path) -> list[str]:
@@ -253,6 +279,19 @@ def _group_key(v):
 def _sql_ident(name: str) -> str:
     """``name`` as a quoted Spark SQL identifier."""
     return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_type(dt: T.DataType) -> str:
+    """``dt`` as Spark SQL type text, struct field names quoted."""
+    if isinstance(dt, T.StructType):
+        return "STRUCT<" + ", ".join(
+            f"{_sql_ident(f.name)}: {_sql_type(f.dataType)}" for f in dt.fields
+        ) + ">"
+    if isinstance(dt, T.ArrayType):
+        return f"ARRAY<{_sql_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"MAP<{_sql_type(dt.keyType)}, {_sql_type(dt.valueType)}>"
+    return dt.simpleString()
 
 
 def _sql_string(s: str | None) -> str:
@@ -1167,13 +1206,18 @@ class Table:
         return out
 
     def _prune_files_by_stats(
-        self, spark: SparkSession, files: list[str], condition: str
+        self,
+        spark: SparkSession,
+        files: list[str],
+        condition: str,
+        snapshot: Snapshot | None = None,
     ) -> list[str]:
         """Manifest-level FILE skipping on per-file column min/max:
         AND-conjuncts of ``condition`` of the shape ``col <op>
-        literal`` (or reversed) drop every file whose footer-derived
-        range cannot contain a matching row — before any data file or
-        even footer is opened at scan time.
+        literal`` (or reversed) drop every file of ``files`` whose
+        range, as ``snapshot``'s manifest (default: the current one)
+        records it, cannot contain a matching row — before any data
+        file or even footer is opened at scan time.
 
         This is the Iceberg scan-planning move that matters most at
         100 TB: with millions of files, evaluating predicates against
@@ -1185,12 +1229,30 @@ class Table:
         itself (try_cast through the declared type), never a
         hand-rolled comparator. All-null files drop out of comparison
         conjuncts naturally (NULL range -> NULL predicate -> no
-        match), which is exactly SQL's answer."""
-        snap = self.current_snapshot()
+        match), which is exactly SQL's answer.
+
+        Only a literal side prunes (``_is_literal``: a plain, typed,
+        signed or CAST literal): the comparison is evaluated once per
+        file at planning time, so ``x < rand()`` or ``ts <
+        current_timestamp()`` would prune on a value the scan never
+        sees. Any other conjunct keeps every file.
+
+        One evaluation: one statement filters an inline table of the
+        per-file bounds by every conjunct's range test ANDed together,
+        and one collect returns the surviving files; Catalyst evaluates
+        it as a local relation with no job, in a handful of py4j calls
+        whatever the number of files or conjuncts. (An Arrow-built
+        relation takes about 35 calls, which cost twice the time at a
+        few dozen files; the statement text grows with the file
+        count.) A filter Spark cannot evaluate (a literal that fails
+        to cast to its column's type) keeps every file."""
+        snap = self.current_snapshot() if snapshot is None else snapshot
         if not files or not snap.stats:
             return files
         flip = {"<": ">", ">": "<", "<=": ">=", ">=": "<="}
-        by_name = {f.name: f for f in self.schema.fields}
+        by_name = {
+            f.name: f for f in schema_from_json(snap.schema_json).fields
+        }
 
         def parse(conj: str):
             c = _unwrap_conjunct(conj)
@@ -1203,18 +1265,11 @@ class Table:
                 if m and m.group(3) in by_name:
                     lit, op, col = m.groups()
                     op = flip.get(op, op)
-            if col is None or not isinstance(
-                by_name[col].dataType, _STATS_TYPES
+            if (
+                col is None
+                or not isinstance(by_name[col].dataType, _STATS_TYPES)
+                or not _is_literal(lit)
             ):
-                return None
-            try:  # the literal side must be a constant expression:
-                # resolving against a 1-col relation rejects any other
-                # column reference; 'id' (that relation's column) is
-                # rejected explicitly below
-                spark.range(1).select(F.expr(lit)).schema
-            except Exception:
-                return None
-            if re.search(r"\bid\b|`", lit, re.I):
                 return None
             return col, op, lit
 
@@ -1223,6 +1278,7 @@ class Table:
         ]
         if not supported:
             return files
+        cols = list(dict.fromkeys(col for col, _, _ in supported))
 
         rows, kept_passthrough = [], []
         for i, f in enumerate(files):
@@ -1230,8 +1286,8 @@ class Table:
             if st is None:
                 kept_passthrough.append(f)
                 continue
-            row = [i]
-            for col, _op, _lit in supported:
+            row = [str(i)]
+            for col in cols:
                 ent = st.get(col)
                 if ent is not None and not _stats_nan_aware(st) and (
                     isinstance(
@@ -1243,47 +1299,47 @@ class Table:
                     # could wrongly skip) — treat as no stats: keep
                     ent = None
                 if ent is None:
-                    row += [None, None, False]
+                    row += [_sql_string(None)] * 2 + ["FALSE"]
                 else:
-                    row += [ent[0], ent[1], True]
-            rows.append(tuple(row))
+                    row += [_sql_string(ent[0]), _sql_string(ent[1]), "TRUE"]
+            rows.append(f"({', '.join(row)})")
         if not rows:
             return files
 
-        fields = [T.StructField("_fidx", T.IntegerType(), False)]
-        for j in range(len(supported)):
-            fields += [
-                T.StructField(f"_min_{j}", T.StringType()),
-                T.StructField(f"_max_{j}", T.StringType()),
-                T.StructField(f"_has_{j}", T.BooleanType(), False),
-            ]
-        sdf = local_frame(spark, rows, T.StructType(fields))
-        keep = F.lit(True)
-        for j, (col, op, lit) in enumerate(supported):
+        names = ["_fidx"] + [
+            f"_{kind}_{j}"
+            for j in range(len(cols))
+            for kind in ("min", "max", "has")
+        ]
+        tests = []
+        for col, op, lit in supported:
+            j = cols.index(col)
             dt = by_name[col].dataType.simpleString()
-            tmin = F.expr(f"try_cast(_min_{j} AS {dt})")
-            tmax = F.expr(f"try_cast(_max_{j} AS {dt})")
-            lit_c = F.expr(lit)
-            if op in ("=", "=="):
-                rng = (tmin <= lit_c) & (lit_c <= tmax)
-            elif op == "<":
-                rng = tmin < lit_c
-            elif op == "<=":
-                rng = tmin <= lit_c
-            elif op == ">":
-                rng = tmax > lit_c
-            elif op == ">=":
-                rng = tmax >= lit_c
-            else:  # != / <> : only an all-constant file can be skipped
-                rng = ~((tmin == lit_c) & (tmax == lit_c))
-            unparseable = (
-                F.col(f"_min_{j}").isNotNull() & tmin.isNull()
-            ) | (F.col(f"_max_{j}").isNotNull() & tmax.isNull())
-            keep = keep & (~F.col(f"_has_{j}") | unparseable | rng)
-        kept_idx = {
-            r["_fidx"]
-            for r in sdf.filter(keep).select("_fidx").collect()
-        }
+            lo = f"try_cast(_min_{j} AS {dt})"
+            hi = f"try_cast(_max_{j} AS {dt})"
+            v = f"({lit})"
+            inside = f"{lo} <= {v} AND {v} <= {hi}"
+            rng = {
+                "=": inside, "==": inside,
+                "<": f"{lo} < {v}", "<=": f"{lo} <= {v}",
+                ">": f"{hi} > {v}", ">=": f"{hi} >= {v}",
+                # != / <> : only an all-constant file can be skipped
+            }.get(op, f"NOT ({lo} = {v} AND {hi} = {v})")
+            tests.append(
+                f"(NOT _has_{j}"
+                f" OR (_min_{j} IS NOT NULL AND {lo} IS NULL)"
+                f" OR (_max_{j} IS NOT NULL AND {hi} IS NULL)"
+                f" OR ({rng}))"
+            )
+        try:
+            with _quiet_probe():
+                kept = spark.sql(
+                    f"SELECT _fidx FROM VALUES {', '.join(rows)}"
+                    f" AS _v({', '.join(names)}) WHERE {' AND '.join(tests)}"
+                ).collect()
+        except Exception:
+            return files
+        kept_idx = {r["_fidx"] for r in kept}
         out = list(kept_passthrough)
         out.extend(f for i, f in enumerate(files) if i in kept_idx)
         return out
@@ -1345,7 +1401,9 @@ class Table:
         candidates = self._prune_files_by_predicate(
             spark, snap.files, condition
         )
-        candidates = self._prune_files_by_stats(spark, candidates, condition)
+        candidates = self._prune_files_by_stats(
+            spark, candidates, condition, snapshot=snap
+        )
         return self._files_matching(spark, snap, candidates, where=condition)
 
     DELETE_MODE_PROP = "write.delete.mode"  # Iceberg's property name
@@ -1979,14 +2037,19 @@ class Table:
         """Predicate-planned scan: manifest partition pruning + file
         skipping on column stats BEFORE the read, then the residual
         filter on what's left — Iceberg's planFiles() shape. With no
-        predicate this is read()."""
+        predicate this is read().
+
+        The stats step (``_prune_files_by_stats``) reads the bounds of
+        the snapshot this scan reads, prunes only on conjuncts whose
+        other side is a literal, and evaluates every conjunct in one
+        jobless collect."""
         snap = self.current_snapshot()
         if not where:
             return self.read(spark)
         from .bloom_index import prune_files_by_bloom
 
         files = self._prune_files_by_predicate(spark, snap.files, where)
-        files = self._prune_files_by_stats(spark, files, where)
+        files = self._prune_files_by_stats(spark, files, where, snapshot=snap)
         files = prune_files_by_bloom(spark, self, files, where)
         return self._read_live(spark, snap, files).filter(F.expr(where))
 
@@ -2153,19 +2216,20 @@ class Table:
         refd: list[str] = []
         if where is not None:
             refd = _word_refs(where, by_name)
-            probe = local_frame(
-                spark, [],
-                T.StructType(
-                    [by_name[c] for c in refd]
-                    # column-free predicates (WHERE 1=1) still need a
-                    # relation to resolve against
-                    or [T.StructField("_probe_", T.IntegerType())]
-                ),
-            )
+            # one statement resolves the predicate over a typed inline
+            # table of just those columns (column-free predicates, WHERE
+            # 1=1, still need a relation); it is analyzed, never run
+            probe = [
+                (c, _sql_type(by_name[c].dataType)) for c in refd
+            ] or [("_probe_", "int")]
+            nulls = ", ".join(f"CAST(NULL AS {t})" for _, t in probe)
+            probe_cols = ", ".join(_sql_ident(c) for c, _ in probe)
             try:
                 with _quiet_probe():
-                    fdf = probe.filter(F.expr(where))
-                    fdf.schema  # parse + resolve
+                    analyzed = spark.sql(
+                        f"SELECT * FROM VALUES ({nulls}) AS _p({probe_cols})"
+                        f" WHERE (\n{where}\n)"
+                    )._jdf.queryExecution().analyzed()
             except Exception as e:
                 raise MetadataAggregateUnsupported(
                     f"predicate {where!r} is not decidable from "
@@ -2176,11 +2240,7 @@ class Table:
             # row-granular sampling into file-granular — ask
             # Catalyst's own deterministic flag, no name list
             try:
-                exprs = fdf._jdf.queryExecution().analyzed().expressions()
-                where_det = all(
-                    exprs.apply(i).deterministic()
-                    for i in range(exprs.size())
-                )
+                where_det = analyzed.deterministic()
             except Exception:
                 where_det = False  # introspection failed: bail to scan
             if not where_det:
@@ -2613,10 +2673,31 @@ class Table:
     # metadata tables (reference scripts/bronze-silver.py:119 queries
     # `<table>.history`; Iceberg also exposes .snapshots / .files)
     # ------------------------------------------------------------------
+    def main_log(self) -> list[Snapshot]:
+        """main's snapshot log, oldest first: ``CURRENT`` and its parent
+        chain back to the first snapshot or to the first expired one.
+        A branch commit enters it only once main reaches it by
+        fast-forward; a rollback commits forward, so what it undid
+        stays in the log."""
+        log = [self.current_snapshot()]
+        while True:
+            pid = log[-1].parent_id
+            # ids are versions, so a parent's is always the smaller
+            if pid is None or pid >= log[-1].version:
+                break
+            try:
+                log.append(self._load(pid))
+            except OSError:
+                break  # expired
+        return log[::-1]
+
     def history_df(self, spark: SparkSession) -> DataFrame:
+        """``<table>.history``: main's snapshot log (``main_log``).
+        ``snapshots_df`` lists every retained snapshot, branch heads
+        included."""
         rows = [
             (s.timestamp_ms, s.snapshot_id, s.parent_id, True)
-            for s in self.snapshots()
+            for s in self.main_log()
         ]
         df = local_frame(
             spark, rows,

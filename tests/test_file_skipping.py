@@ -130,3 +130,51 @@ def test_timestamp_stats_prune(spark, tmp_path):
         spark, t.current_snapshot().files, "ts >= TIMESTAMP '2024-01-05 00:00:00'"
     )
     assert kept == [fs[1]]
+
+
+def test_prune_by_stats_skips_nonliteral_sides(spark, tmp_path):
+    # rand() would be drawn once per file while planning: a file whose
+    # minimum beats that draw would be dropped although the scan draws
+    # again per row, so only a literal side may prune
+    t, files = _mk(spark, tmp_path, [[(i, float(i))] for i in range(8)])
+    all_files = t.current_snapshot().files
+    assert t._prune_files_by_stats(spark, all_files, "k < rand()") == all_files
+    assert t._prune_files_by_stats(spark, all_files, "rand() > k") == all_files
+    # literal sides still prune: signed, CAST, parenthesised
+    assert t._prune_files_by_stats(spark, all_files, "k = -1") == []
+    assert set(
+        t._prune_files_by_stats(spark, all_files, "k >= CAST('6' AS BIGINT)")
+    ) == {files[6][0], files[7][0]}
+    assert set(t._prune_files_by_stats(spark, all_files, "v < (1.5)")) == {
+        files[0][0], files[1][0]
+    }
+
+
+def test_clock_and_column_sides_keep_every_file(spark, tmp_path):
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType()),
+            T.StructField("ts", T.TimestampType()),
+        ]
+    )
+    cat = Catalog(tmp_path / "wh")
+    t = cat.create_table("d", "clock_t", schema)
+    for year in (2001, 2002):
+        t.append(
+            spark.createDataFrame(
+                [(year, dt.datetime(year, 1, 1))], schema
+            ).coalesce(1)
+        )
+    all_files = t.current_snapshot().files
+    for cond in (
+        "ts > current_timestamp()",
+        "current_timestamp() < ts",
+        "ts >= now() AND k > 0",
+        "k > ts",
+        "k = k",
+    ):
+        assert t._prune_files_by_stats(spark, all_files, cond) == all_files, cond
+    # a typed literal on the same column still prunes
+    assert t._prune_files_by_stats(
+        spark, all_files, "ts > TIMESTAMP '2001-06-01 00:00:00'"
+    ) == [t.current_snapshot().added_files[0]]

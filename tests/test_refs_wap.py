@@ -168,3 +168,47 @@ def test_sql_surface_branches(spark, tmp_path, no_jobs):
     sess.sql("ALTER TABLE demo.st DROP TAG IF EXISTS nosuch")
     with pytest.raises(KeyError):
         sess.sql("ALTER TABLE demo.st DROP TAG nosuch")
+
+
+def test_timestamp_as_of_and_history_follow_main(spark, cat, t, no_jobs):
+    """TIMESTAMP AS OF and ``<t>.history`` read main's snapshot log: an
+    unpublished branch commit answers neither until main reaches it by
+    fast-forward."""
+    import time
+    from datetime import datetime, timezone
+
+    def now() -> str:
+        time.sleep(0.002)
+        return datetime.now(timezone.utc).isoformat()
+
+    t.create_branch("audit")
+    staged = t.append(mk(spark, [(3, "staged")]), branch="audit")
+    sess = SqlSession(spark, cat, namespace="demo")
+    at = now()
+    stmt = f"SELECT COUNT(*) FROM reft TIMESTAMP AS OF '{at}'"
+    assert sess.sql(stmt).collect()[0][0] == 2
+    ids = sess.sql(f"SELECT id FROM reft TIMESTAMP AS OF '{at}'").collect()
+    assert sorted(r.id for r in ids) == [1, 2]
+    history = [r.snapshot_id for r in t.history_df(spark).collect()]
+    assert staged.snapshot_id not in history
+    assert staged.snapshot_id in {
+        r.snapshot_id for r in t.snapshots_df(spark).collect()
+    }
+    stmt = "SELECT COUNT(*) FROM reft.history"
+    with no_jobs(stmt):
+        assert sess.sql(stmt).collect() == [(len(history),)]
+
+    t.fast_forward("audit")
+    at = now()
+    assert sess.sql(
+        f"SELECT COUNT(*) FROM reft TIMESTAMP AS OF '{at}'"
+    ).collect()[0][0] == 3
+    history = [r.snapshot_id for r in t.history_df(spark).collect()]
+    assert history[-1] == staged.snapshot_id
+    assert sess.sql(stmt).collect() == [(len(history),)]
+
+    # a rollback commits forward: what it undid stays in the log
+    rolled = t.rollback_to(history[-2])
+    assert [r.snapshot_id for r in t.history_df(spark).collect()] == [
+        *history, rolled.snapshot_id
+    ]

@@ -1065,3 +1065,97 @@ def test_kept_frames_stay_bounded(spark, sess):
     sess.sql("USE other")
     sess.sql("SELECT 1").collect()
     assert sess._frames == {}
+
+
+def test_planned_selects_equal_spark_over_the_snapshot(
+    spark, sess, no_jobs, monkeypatch
+):
+    """A single-table ``SELECT ... WHERE`` reads only the files whose
+    manifest bounds can hold a match. Each answer equals Spark's over
+    ``Table.read`` of the same snapshot; an absent-key lookup, current
+    or time-travelled, and ``COUNT(*)`` over ``t.history`` start no
+    job; a statement naming the table twice is not planned."""
+    import re
+
+    from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse.table import (
+        Table,
+    )
+
+    sess.sql("CREATE NAMESPACE pf")
+    with no_jobs("USE"):
+        assert sess.sql("USE pf").collect() == []
+    schema = "k long, v string"
+    cow = sess.catalog.create_table("pf", "cow", _kv(spark).schema)
+    mor = sess.catalog.create_table(
+        "pf", "mor", spark.createDataFrame([], schema).schema,
+        properties={"write.delete.mode": "merge-on-read"},
+    )
+    for lo in (0, 10, 20):
+        cow.append(_kv(spark, *range(lo, lo + 10)).coalesce(1))
+        mor.append(
+            spark.createDataFrame(
+                [(k, f"v{k}") for k in range(lo, lo + 10)], schema
+            ).coalesce(1)
+        )
+    first = cow.main_log()[1].snapshot_id  # the first append
+    mor.delete_where(spark, "k IN (12, 25)")
+    assert mor.current_snapshot().delete_files
+
+    def agrees(stmt, t, sid=None):
+        t.read(spark, snapshot_id=sid).createOrReplaceTempView("pf_ref")
+        ref = re.sub(
+            r"FROM (\w+)(?: VERSION AS OF \d+)?", "FROM pf_ref \\1", stmt
+        )
+        got, want = sess.sql(stmt), spark.sql(ref)
+        assert got.columns == want.columns, stmt
+        assert sorted(got.collect()) == sorted(want.collect()), stmt
+        return sorted(tuple(r) for r in got.collect())
+
+    for stmt, sid in (
+        ("SELECT * FROM cow WHERE k = -1", None),
+        (f"SELECT k FROM cow VERSION AS OF {first} WHERE k = 15", first),
+        ("SELECT * FROM mor WHERE k = -3", None),
+    ):
+        with no_jobs(stmt):
+            assert sess.sql(stmt).collect() == []
+        assert agrees(stmt, cow if "cow" in stmt else mor, sid) == []
+
+    assert agrees("SELECT k FROM cow WHERE k = 15", cow) == [(15,)]
+    assert agrees(f"SELECT * FROM cow VERSION AS OF {first} WHERE k = 5",
+                  cow, first) == [(5,)]
+    snap = cow.current_snapshot()
+    some = "k >= 5 AND k < 15"
+    assert len(cow._prune_files_by_stats(spark, snap.files, some)) == 2
+    assert agrees(f"SELECT k * 2 AS k2 FROM cow WHERE {some}", cow) == [
+        (2 * k,) for k in range(5, 15)
+    ]
+    # deleted rows stay deleted in the pruned read of a MOR table
+    assert agrees("SELECT k, v FROM mor WHERE k >= 11 AND k < 26", mor) == [
+        (k, f"v{k}") for k in range(11, 26) if k not in (12, 25)
+    ]
+
+    planned = []
+    prune = Table._prune_files_by_stats
+
+    def spy(self, *args, **kwargs):
+        planned.append(args)
+        return prune(self, *args, **kwargs)
+
+    monkeypatch.setattr(Table, "_prune_files_by_stats", spy)
+    cow.read(spark).createOrReplaceTempView("pf_all")
+    for stmt in (
+        "SELECT k FROM cow WHERE k = 3 UNION ALL "
+        "SELECT k FROM cow WHERE k = 25",
+        "SELECT a.k FROM cow a JOIN cow b ON a.k = b.k WHERE a.k = 3",
+    ):
+        ref = re.sub(r"\b(FROM|JOIN) cow\b", r"\1 pf_all", stmt)
+        assert _rows(sess, stmt) == sorted(
+            tuple(r) for r in spark.sql(ref).collect()
+        )
+    assert planned == []
+
+    stmt = "SELECT COUNT(*) FROM cow.history"
+    with no_jobs(stmt):
+        got = sess.sql(stmt).collect()
+    assert got == [(cow.history_df(spark).count(),)] == [(4,)]
+    assert sess.sql(stmt).columns == ["count(1)"]
