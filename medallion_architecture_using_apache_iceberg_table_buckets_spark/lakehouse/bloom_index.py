@@ -11,10 +11,15 @@ metadata layout.
 Build is one distributed pass over the table (k xxhash64 probes per
 value, bit positions aggregated per file — all JVM-side expressions,
 one shuffle keyed by file), the index is a bitmap per (file, column)
-stored hex-packed under ``<table>/index/``, and the scan planner
-drops every file whose bitmap misses any probe bit of an equality
-conjunct. Conservative contract throughout: unindexed file, missing
-column, non-equality or non-literal conjunct -> keep the file.
+stored hex-packed under ``<table>/index/`` with the type each column
+was hashed as, and the bloom step of ``Table._plan_files`` drops
+every file whose bitmap misses any probe bit of an equality conjunct.
+It reads conjuncts through the same literal-only parse as the stats
+step (``table._literal_comparisons``) and computes every probe's
+positions in one statement that starts no Spark job. Conservative
+contract throughout: unindexed file, missing column, a column whose
+type changed since the build, a non-equality or non-literal conjunct
+-> keep the file.
 
 Files are immutable, so index entries never go stale: files written
 after the build are simply absent (kept, never pruned) until the next
@@ -26,11 +31,12 @@ from __future__ import annotations
 
 import json
 import os
-import re
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from ..schema import schema_from_json
 
 INDEX_DIR = "index"
 INDEX_FILE = "bloom.json"
@@ -38,13 +44,13 @@ DEFAULT_BITS = 8192
 DEFAULT_HASHES = 4
 
 
-def _positions(col, num_bits: int, num_hashes: int) -> list:
-    """k bloom positions of a value: pmod(xxhash64(v, seed), m) for
-    seed = 0..k-1. xxhash64 is a JVM built-in, so build and probe
-    hash identically as long as both sides use the value's declared
-    column type."""
+def _positions(value: str, num_bits: int, num_hashes: int) -> list[str]:
+    """SQL text of the k bloom positions of ``value`` (SQL text):
+    pmod(xxhash64(v, seed), m) for seed = 0..k-1. xxhash64 is a JVM
+    built-in, so build and probe hash identically as long as both
+    sides type the value as the column was typed at the build."""
     return [
-        F.pmod(F.xxhash64(col, F.lit(seed)), F.lit(num_bits))
+        f"pmod(xxhash64({value}, {seed}), {num_bits})"
         for seed in range(num_hashes)
     ]
 
@@ -60,6 +66,8 @@ def build_bloom_index(
     positions of every value, packed to a hex bitmap on the driver
     (#files x m/8 bytes — index-sized, not data-sized) and written
     atomically to ``<table>/index/bloom.json``."""
+    from .table import _sql_ident
+
     snap = table.current_snapshot()
     schema = table.schema
     declared = {f.name for f in schema.fields}
@@ -70,7 +78,9 @@ def build_bloom_index(
         spark, snap.files, schema, attach_pos=True
     )
     per_col = [
-        F.array(*_positions(F.col(c), num_bits, num_hashes)).alias(c)
+        F.array(
+            *map(F.expr, _positions(_sql_ident(c), num_bits, num_hashes))
+        ).alias(c)
         for c in cols
     ]
     agg = (
@@ -88,6 +98,11 @@ def build_bloom_index(
         "num_bits": num_bits,
         "num_hashes": num_hashes,
         "snapshot_id": snap.snapshot_id,
+        "types": {
+            f.name: f.dataType.simpleString()
+            for f in schema.fields
+            if f.name in cols
+        },
         "columns": {c: {} for c in cols},
     }
     nbytes = (num_bits + 7) // 8
@@ -112,58 +127,61 @@ def load_bloom_index(table) -> dict | None:
     return json.loads(p.read_text())
 
 
-_EQ_RE = re.compile(r"^\s*`?([A-Za-z_]\w*)`?\s*(?:==|=)\s*(.+?)\s*$")
-
-
 def prune_files_by_bloom(
     spark: SparkSession,
     table,
     files: list[str],
     condition: str,
     index: dict | None = None,
+    snapshot=None,
+    qualifier: str | None = None,
 ) -> list[str]:
     """Drop files whose bloom bitmap cannot contain a match for some
-    ``col = literal`` AND-conjunct of ``condition``. Probe positions
-    are computed by Spark itself (literal cast through the declared
-    column type), so build and probe can never disagree on hashing."""
-    from .table import _split_conjuncts, _unwrap_conjunct
+    ``col = literal`` AND-conjunct of ``condition``, read by
+    ``_literal_comparisons`` over the schema of ``snapshot`` (default:
+    the current one), ``qualifier`` as there. A column probes only
+    under the type it was indexed as. Spark computes every probe's
+    positions, the literal try-cast to its column's type, in one
+    statement over a one-row inline table that Catalyst answers with
+    no job; a NULL or a literal that does not cast gives no signal."""
+    from .table import _literal_comparisons, _quiet_probe, _sql_type
 
     index = index if index is not None else load_bloom_index(table)
     if not index or not files:
         return files
-    by_name = {f.name: f for f in table.schema.fields}
+    snap = table.current_snapshot() if snapshot is None else snapshot
+    types = index.get("types", {})
+    probes = [
+        (f, lit)
+        for f, op, lit in _literal_comparisons(
+            condition, schema_from_json(snap.schema_json).fields, qualifier
+        )
+        if op in ("=", "==")
+        and f.name in index["columns"]
+        and types.get(f.name) == f.dataType.simpleString()
+    ]
+    if not probes:
+        return files
     m, k = index["num_bits"], index["num_hashes"]
-    probes: list[tuple[dict, list[int]]] = []
-    for conj in _split_conjuncts(condition):
-        mt = _EQ_RE.match(_unwrap_conjunct(conj))
-        if not mt:
-            continue
-        col, lit = mt.groups()
-        if col not in index["columns"] or col not in by_name:
-            continue
-        if re.search(r"\bid\b|`", lit, re.I):
-            continue  # same column-reference guard as the stats pruner
-        try:
-            typed = F.expr(lit).cast(by_name[col].dataType)
-            row = (
-                spark.range(1)
-                .select(
-                    typed.isNull().alias("is_null"),
-                    *[
-                        p.alias(f"p{i}")
-                        for i, p in enumerate(_positions(typed, m, k))
-                    ],
-                )
-                .first()
-            )
-        except Exception:
-            continue  # not a constant expression: keep files
-        if row["is_null"]:
-            # col = NULL matches nothing, and xxhash64(NULL, seed)
-            # degenerates to the seed — no pruning signal, keep files
-            continue
-        pos = [row[f"p{i}"] for i in range(k)]
-        probes.append((index["columns"][col], pos))
+    sel = []
+    for i, (f, lit) in enumerate(probes):
+        v = f"try_cast(({lit}) AS {_sql_type(f.dataType)})"
+        sel.append(f"{v} IS NULL AS n{i}")
+        sel += [f"{p} AS p{i}_{s}" for s, p in enumerate(_positions(v, m, k))]
+    try:
+        with _quiet_probe():
+            row = spark.sql(
+                f"SELECT {', '.join(sel)} FROM VALUES (1) AS _o(x)"
+            ).collect()[0]
+    except Exception:
+        return files
+    # col = NULL matches nothing, and xxhash64(NULL, seed) degenerates
+    # to the seed: no pruning signal, keep files
+    probes = [
+        (index["columns"][f.name], [row[f"p{i}_{s}"] for s in range(k)])
+        for i, (f, _) in enumerate(probes)
+        if not row[f"n{i}"]
+    ]
     if not probes:
         return files
     out = []

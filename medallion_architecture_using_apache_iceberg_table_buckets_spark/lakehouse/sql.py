@@ -35,11 +35,15 @@ Statements the manifest already decides start no Spark job:
   from manifest statistics by ``Table.metadata_aggregate`` whenever
   the statistics answer exactly;
 - any other single-table ``SELECT ... WHERE`` (same shape, same time
-  travel) reads only the files whose manifest min/max bounds can hold
-  a matching row (``Table._prune_files_by_stats``); when none can, it
-  runs over an empty local relation, so a lookup of an absent key
-  reads no file. Spark still evaluates the ``WHERE`` and the select
-  list, so pruning only drops files that hold no matching row;
+  travel) reads only the files ``Table._plan_files`` keeps, the one
+  planner ``Table.scan`` and DELETE/UPDATE use too: the files whose
+  manifest min/max bounds, and bloom bitmaps where the table has an
+  index, can hold a matching row. A column is matched as Spark
+  resolves it, case-insensitively and qualified or not by the table's
+  name. When no file survives, the statement runs over an empty local
+  relation, so a lookup of an absent key reads no file. Spark still
+  evaluates the ``WHERE`` and the select list, so pruning only drops
+  files that hold no matching row;
 - ``SELECT COUNT(*) FROM <t>.history`` counts main's snapshot log
   (``Table.main_log``) on the driver;
 - ``USE``, DDL and the other statements that return nothing return a
@@ -899,8 +903,9 @@ class SqlSession:
 
     def _planned_select(self, m: re.Match, s: str) -> DataFrame | None:
         """A single-table ``SELECT ... WHERE`` (the ``_AGG_ONLY`` shape,
-        no GROUP BY) over only the files of its snapshot whose manifest
-        bounds can hold a matching row: the table name and its AS OF
+        no GROUP BY) over only the files of its snapshot that
+        ``Table._plan_files`` keeps, a column qualified by the table's
+        name included: the table name and its AS OF
         clause in ``s`` are replaced, under the table's name as alias,
         by a statement-private view of the surviving files or, when
         none survives, by an empty relation of the snapshot's schema
@@ -928,8 +933,8 @@ class SqlSession:
         sid = self._as_of(ns, name, m)
         # an expired snapshot raises KeyError here, as the scan path does
         snap = t.current_snapshot() if sid is None else t.snapshot_by_id(sid)
-        files = t._prune_files_by_stats(
-            self.spark, snap.files, where, snapshot=snap
+        files = t._plan_files(
+            self.spark, snap, where, qualifier=tbl.rsplit(".", 1)[-1]
         )
         if len(files) == len(snap.files):
             return None

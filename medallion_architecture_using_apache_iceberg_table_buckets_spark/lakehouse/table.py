@@ -59,9 +59,9 @@ MAIN_BRANCH = "main"
 def _quiet_probe():
     """Scope PySpark's Python-side query-context loggers above ERROR.
 
-    The analyzer-gate probes below (partition-prune conjunct
-    resolution, ``metadata_aggregate``'s WHERE decidability gate)
-    EXPECT resolution failures on their bail path — that is the whole
+    The analyzer-gate probes below (the file-pruning statements,
+    ``metadata_aggregate``'s WHERE decidability gate) EXPECT
+    resolution failures on their bail path — that is the whole
     point of asking Spark's analyzer instead of hand-walking the
     expression. But PySpark 4 logs every query-context exception at
     ERROR through ``SQLQueryContextLogger`` /
@@ -99,7 +99,7 @@ def _quiet_probe():
 def _word_refs(expr_text: str, names: Iterable[str]) -> list[str]:
     """Names from ``names`` that appear as whole words in
     ``expr_text`` — the same over-approximation of column references
-    both analyzer probes use (a string literal containing a column
+    the analyzer probes use (a string literal containing a column
     name is a false positive, which only makes the callers MORE
     conservative, never less)."""
     return [
@@ -196,18 +196,11 @@ def _unwrap_conjunct(conj: str) -> str:
     return c
 
 
-# ``col <op> literal`` and ``literal <op> col``: the conjunct shapes the
-# stats pruner tests against per-file min/max
-_COL_CMP_RE = re.compile(
-    r"^\s*`?([A-Za-z_]\w*)`?\s*(<=|>=|!=|<>|==|=|<|>)\s*(.+?)\s*$"
-)
-_CMP_COL_RE = re.compile(
-    r"^\s*(.+?)\s*(<=|>=|!=|<>|==|=|<|>)\s*`?([A-Za-z_]\w*)`?\s*$"
-)
-# the side of such a conjunct that may prune: a plain literal (a signed
-# number, a string, TRUE/FALSE/NULL), a typed DATE/TIMESTAMP literal,
-# or a CAST of one of those. It is evaluated once, when files are
-# planned, so a column, a clock read or a random draw never qualifies.
+# the side of a ``col <op> literal`` conjunct that may prune files: a
+# plain literal (a signed number, a string, TRUE/FALSE/NULL), a typed
+# DATE/TIMESTAMP literal, or a CAST of one of those. It is evaluated
+# once, when files are planned, so a column, a clock read or a random
+# draw never qualifies.
 _LITERAL_RE = re.compile(
     r"[-+]?\s*(?:\d+\.?\d*|\.\d+)(?:E[-+]?\d+)?(?:BD|[LSYDF])?"
     r"|(?:(?:DATE|TIMESTAMP(?:_NTZ|_LTZ)?)\s*)?"
@@ -230,6 +223,63 @@ def _is_literal(text: str) -> bool:
     if m := _CAST_RE.fullmatch(t):
         return _is_literal(m.group(1))
     return _LITERAL_RE.fullmatch(t) is not None
+
+
+# ``col <op> literal`` and ``literal <op> col``, where ``col`` is a plain
+# or backquoted identifier, optionally qualified by one more
+_IDENT = r"(?:`(?:[^`]|``)+`|[A-Za-z_]\w*)"
+_COL_REF = rf"{_IDENT}(?:\s*\.\s*{_IDENT})?"
+_CMP_OP = r"(<=|>=|!=|<>|==|=|<|>)"
+_COL_CMP_RE = re.compile(rf"^\s*({_COL_REF})\s*{_CMP_OP}\s*(.+?)\s*$", re.S)
+_CMP_COL_RE = re.compile(rf"^\s*(.+?)\s*{_CMP_OP}\s*({_COL_REF})\s*$", re.S)
+_FLIP = {"<": ">", ">": "<", "<=": ">=", ">=": "<="}
+
+
+def _column_of(
+    ref: str, fields: list[T.StructField], qualifier: str | None
+) -> T.StructField | None:
+    """The one field of ``fields`` that ``ref`` names under Spark's
+    default case-insensitive resolution, qualified only by
+    ``qualifier`` and only when that names no field (a struct field
+    ``s.k`` is not column ``k``); None otherwise."""
+    *qual, name = [
+        p[1:-1].replace("``", "`") if p.startswith("`") else p
+        for p in re.findall(_IDENT, ref.lower())
+    ]
+    names = [f.name.lower() for f in fields]
+    if qual and (qual[0] != (qualifier or "").lower() or qual[0] in names):
+        return None
+    return fields[names.index(name)] if names.count(name) == 1 else None
+
+
+def _literal_comparisons(
+    condition: str,
+    fields: list[T.StructField],
+    qualifier: str | None = None,
+) -> list[tuple[T.StructField, str, str]]:
+    """``(field, op, literal)`` for each AND-conjunct of ``condition``
+    shaped ``col <op> literal`` or ``literal <op> col`` (flipped to
+    read column first): ``col`` resolves by ``_column_of`` and the
+    other side passes ``_is_literal``, a quoted one for a string
+    column (Spark compares ``s = 1`` as numbers, so ``'01'`` matches
+    it). The one parse behind the stats and bloom file pruning steps;
+    a conjunct it leaves out keeps every file."""
+    out = []
+    for conj in _split_conjuncts(condition):
+        c = _unwrap_conjunct(conj)
+        for rx, col, lit, flip in (
+            (_COL_CMP_RE, 1, 3, {}), (_CMP_COL_RE, 3, 1, _FLIP)
+        ):
+            if not (m := rx.match(c)):
+                continue
+            f, side = _column_of(m.group(col), fields, qualifier), m.group(lit)
+            if f and _is_literal(side) and (
+                not isinstance(f.dataType, T.StringType)
+                or side.lstrip()[0] in "'\""
+            ):
+                out.append((f, flip.get(m.group(2), m.group(2)), side))
+                break
+    return out
 
 
 def _list_parquet(root: Path) -> list[str]:
@@ -366,9 +416,8 @@ def _file_column_stats(path: Path, schema: T.StructType) -> dict:
     FOOTER (no data pages read) for stats-eligible top-level columns.
 
     Values are serialized as plain strings the engine later try_casts
-    back through the declared column type — the same
-    evaluate-with-SQL-semantics trick the partition pruner uses, so
-    no hand-rolled comparator can disagree with Spark. Columns with
+    back through the declared column type (``_prune_files_by_stats``),
+    so no hand-rolled comparator can disagree with Spark. Columns with
     incomplete row-group stats are omitted (conservative: no entry =
     never skipped on that column)."""
     import pyarrow.parquet as pq
@@ -1092,118 +1141,32 @@ class Table:
             delete_files=delete_files,
         )
 
-    def _prune_files_by_predicate(
-        self, spark: SparkSession, files: list[str], condition: str
+    def _plan_files(
+        self,
+        spark: SparkSession,
+        snap: Snapshot,
+        where: str,
+        qualifier: str | None = None,
     ) -> list[str]:
-        """Partition-predicate pruning for the DELETE/UPDATE discovery
-        scan: AND-conjuncts of ``condition`` that reference ONLY
-        identity partition columns are evaluated against the
-        manifest's partition-directory values; files in partitions
-        that cannot satisfy them are skipped before any data is read.
+        """The data files of ``snap`` that may hold a row matching
+        ``where``, planned from the manifest alone: the stats step
+        (``_prune_files_by_stats``), then the bloom step
+        (``bloom_index.prune_files_by_bloom``). Both read ``where``
+        through ``_literal_comparisons`` and type its literals with
+        ``snap``'s schema. Partitions are not pruned here: the read
+        names each file under its partition directory, so Catalyst
+        prunes identity partitions at the scan (``PartitionFilters``)
+        and never on a nondeterministic conjunct. ``scan``, DELETE/
+        UPDATE discovery and ``SqlSession``'s planned SELECT all plan
+        through here."""
+        from .bloom_index import prune_files_by_bloom
 
-        At 100 TB a ``DELETE WHERE event_type='error'`` on an
-        event_type-partitioned table must not scan every partition —
-        this is the manifest-side equivalent of Iceberg's partition
-        filter on RowLevelCommand. The evaluation itself is a tiny
-        Spark job over one row per distinct partition (exact SQL
-        semantics, including nulls and casts, with no hand-rolled
-        expression interpreter). Conservative by construction: any
-        unresolvable conjunct, unparseable value, or missing segment
-        keeps the file."""
-        # identity transforms from EVERY retained spec, not just the
-        # current one: after a partition-spec evolution the historical
-        # layouts remain prunable (the evaluation below is per-file
-        # and a file missing a segment is kept, so a column that was
-        # never a partition for some files costs nothing)
-        seen: dict[str, object] = {}
-        for s in self.snapshots():
-            for t in parse_spec(list(s.partition_by)):
-                if t.kind == "identity":
-                    seen.setdefault(t.col, t)
-        idents = list(seen.values())
-        by_name = {f.name: f for f in self.schema.fields}
-        idents = [t for t in idents if t.col in by_name]
-        if not idents or not files:
-            return files
-
-        empty = local_frame(
-            spark, [], T.StructType([by_name[t.col] for t in idents])
+        files = self._prune_files_by_stats(
+            spark, snap.files, where, snapshot=snap, qualifier=qualifier
         )
-        probe_cols = {t.col for t in idents}
-        outside = [c for c in by_name if c not in probe_cols]
-        usable = []
-        for conj in _split_conjuncts(condition):
-            # cheap pre-screen: a conjunct word-referencing any table
-            # column OUTSIDE the probe schema can never resolve
-            # against it — skip without paying the analyzer exception
-            # (a literal containing such a name skips pruning for
-            # this conjunct: conservative, files are kept)
-            if _word_refs(conj, outside):
-                continue
-            try:
-                with _quiet_probe():
-                    empty.filter(F.expr(conj)).schema  # resolution probe
-                usable.append(conj)
-            except Exception:
-                continue
-        if not usable:
-            return files
-
-        # group files by their partition-dir values (driver-side
-        # manifest strings; O(#files), no data read)
-        groups: dict[tuple, list[str]] = {}
-        unpruned: list[str] = []
-        for f in files:
-            pv = partition_values(f)
-            if all(t.col in pv for t in idents):
-                groups.setdefault(
-                    tuple(pv[t.col] for t in idents), []
-                ).append(f)
-            else:
-                unpruned.append(f)  # pre-spec or opaque layout: keep
-        if not groups:
-            return files
-
-        keys = list(groups)
-        rows = [key + (i,) for i, key in enumerate(keys)]
-        raw_cols = [f"_raw_{t.col}" for t in idents]
-        pdf = local_frame(
-            spark, rows,
-            T.StructType(
-                [T.StructField(c, T.StringType()) for c in raw_cols]
-                + [T.StructField("_pidx", T.IntegerType(), False)]
-            ),
+        return prune_files_by_bloom(
+            spark, self, files, where, snapshot=snap, qualifier=qualifier
         )
-        typed = pdf.select(
-            "_pidx",
-            *raw_cols,
-            *[
-                F.expr(
-                    f"try_cast(`_raw_{t.col}` AS "
-                    f"{by_name[t.col].dataType.simpleString()})"
-                ).alias(t.col)
-                for t in idents
-            ],
-        )
-        # keep when the conjuncts hold — or when a non-null raw value
-        # failed to cast (unparseable written form: keep, don't guess)
-        unparseable = F.lit(False)
-        pred = F.lit(True)
-        for t in idents:
-            unparseable = unparseable | (
-                F.col(f"_raw_{t.col}").isNotNull() & F.col(t.col).isNull()
-            )
-        for conj in usable:
-            pred = pred & F.expr(conj)
-        kept_idx = {
-            r["_pidx"]
-            for r in typed.filter(unparseable | pred).select("_pidx").collect()
-        }
-        out = list(unpruned)
-        for i, key in enumerate(keys):
-            if i in kept_idx:
-                out.extend(groups[key])
-        return out
 
     def _prune_files_by_stats(
         self,
@@ -1211,31 +1174,32 @@ class Table:
         files: list[str],
         condition: str,
         snapshot: Snapshot | None = None,
+        qualifier: str | None = None,
     ) -> list[str]:
         """Manifest-level FILE skipping on per-file column min/max:
         AND-conjuncts of ``condition`` of the shape ``col <op>
-        literal`` (or reversed) drop every file of ``files`` whose
-        range, as ``snapshot``'s manifest (default: the current one)
-        records it, cannot contain a matching row — before any data
-        file or even footer is opened at scan time.
+        literal`` (or reversed; ``_literal_comparisons``, with
+        ``qualifier`` the one accepted column qualifier) drop every
+        file of ``files`` whose range, as ``snapshot``'s manifest
+        (default: the current one) records it, cannot contain a
+        matching row — before any data file or even footer is opened
+        at scan time.
 
         This is the Iceberg scan-planning move that matters most at
         100 TB: with millions of files, evaluating predicates against
         manifest stats costs O(#files) driver-side metadata, while
         "let Parquet row-group stats handle it" still opens every
-        footer. Same conservative contract as the partition pruner —
-        unsupported conjuncts, missing stats, or unparseable values
-        keep the file; comparison semantics are evaluated by Spark
-        itself (try_cast through the declared type), never a
-        hand-rolled comparator. All-null files drop out of comparison
-        conjuncts naturally (NULL range -> NULL predicate -> no
-        match), which is exactly SQL's answer.
+        footer. Conservative: unsupported conjuncts, missing stats, or
+        unparseable values keep the file; comparison semantics are
+        evaluated by Spark itself (try_cast through the declared type),
+        never a hand-rolled comparator. All-null files drop out of
+        comparison conjuncts naturally (NULL range -> NULL predicate ->
+        no match), which is exactly SQL's answer.
 
-        Only a literal side prunes (``_is_literal``: a plain, typed,
-        signed or CAST literal): the comparison is evaluated once per
-        file at planning time, so ``x < rand()`` or ``ts <
-        current_timestamp()`` would prune on a value the scan never
-        sees. Any other conjunct keeps every file.
+        Only a literal side prunes (``_is_literal``): the comparison
+        is evaluated once per file at planning time, so ``x < rand()``
+        or ``ts < current_timestamp()`` would prune on a value the scan
+        never sees.
 
         One evaluation: one statement filters an inline table of the
         per-file bounds by every conjunct's range test ANDed together,
@@ -1249,32 +1213,14 @@ class Table:
         snap = self.current_snapshot() if snapshot is None else snapshot
         if not files or not snap.stats:
             return files
-        flip = {"<": ">", ">": "<", "<=": ">=", ">=": "<="}
-        by_name = {
-            f.name: f for f in schema_from_json(snap.schema_json).fields
-        }
-
-        def parse(conj: str):
-            c = _unwrap_conjunct(conj)
-            m = _COL_CMP_RE.match(c)
-            col, op, lit = (None, None, None)
-            if m and m.group(1) in by_name:
-                col, op, lit = m.groups()
-            else:
-                m = _CMP_COL_RE.match(c)
-                if m and m.group(3) in by_name:
-                    lit, op, col = m.groups()
-                    op = flip.get(op, op)
-            if (
-                col is None
-                or not isinstance(by_name[col].dataType, _STATS_TYPES)
-                or not _is_literal(lit)
-            ):
-                return None
-            return col, op, lit
-
+        fields = schema_from_json(snap.schema_json).fields
+        by_name = {f.name: f for f in fields}
         supported = [
-            p for p in (parse(c) for c in _split_conjuncts(condition)) if p
+            (f.name, op, lit)
+            for f, op, lit in _literal_comparisons(
+                condition, fields, qualifier
+            )
+            if isinstance(f.dataType, _STATS_TYPES)
         ]
         if not supported:
             return files
@@ -1395,16 +1341,12 @@ class Table:
     ) -> list[str]:
         """Data files containing at least one row matching
         ``condition`` — the discovery scan behind row-level DELETE and
-        UPDATE (file-scoped COW, same shape as MERGE's). Partition
-        predicates and column stats prune the scan via the manifest
-        first."""
-        candidates = self._prune_files_by_predicate(
-            spark, snap.files, condition
+        UPDATE (file-scoped COW, same shape as MERGE's), over the
+        files ``_plan_files`` keeps."""
+        return self._files_matching(
+            spark, snap, self._plan_files(spark, snap, condition),
+            where=condition,
         )
-        candidates = self._prune_files_by_stats(
-            spark, candidates, condition, snapshot=snap
-        )
-        return self._files_matching(spark, snap, candidates, where=condition)
 
     DELETE_MODE_PROP = "write.delete.mode"  # Iceberg's property name
 
@@ -1917,9 +1859,12 @@ class Table:
         if hidden:
             df = df.drop(*hidden)
         if attach_pos:
+            # a metadata column, not the nondeterministic
+            # input_file_name(), so a filter over the read still
+            # reaches the scan and prunes partitions
             df = df.withColumn(
                 self.POS_FILE_COL,
-                F.element_at(F.split(F.input_file_name(), "/"), -1),
+                F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
             ).withColumn(self.POS_POS_COL, F.col("_metadata.row_index"))
         return df
 
@@ -2019,9 +1964,12 @@ class Table:
         """Full-table scan, optionally time-traveled to a snapshot or
         a named ref (branch/tag — ``VERSION AS OF 'name'``).
 
-        Partition pruning: files live under Hive-style ``col=value``
-        dirs and the read carries an explicit schema, so Catalyst
-        prunes partitions and pushes predicates into the Parquet scan.
+        Partition pruning is Catalyst's: each file is read under its
+        Hive-style ``col=value`` dirs with an explicit schema, one
+        relation per partition layout, so a filter on an identity
+        partition column, of the current spec or an older one, becomes
+        the scan's ``PartitionFilters`` and other predicates are pushed
+        into the Parquet reader.
         """
         if snapshot_id is not None and ref is not None:
             raise ValueError("pass snapshot_id or ref, not both")
@@ -2034,24 +1982,17 @@ class Table:
         return self._read_live(spark, snap)
 
     def scan(self, spark: SparkSession, where: str | None = None) -> DataFrame:
-        """Predicate-planned scan: manifest partition pruning + file
-        skipping on column stats BEFORE the read, then the residual
-        filter on what's left — Iceberg's planFiles() shape. With no
-        predicate this is read().
-
-        The stats step (``_prune_files_by_stats``) reads the bounds of
-        the snapshot this scan reads, prunes only on conjuncts whose
-        other side is a literal, and evaluates every conjunct in one
-        jobless collect."""
+        """Predicate-planned scan, Iceberg's planFiles() shape: the
+        manifest steps of ``_plan_files`` (column stats, then the bloom
+        index) drop files BEFORE the read, then ``where`` filters what
+        is left, and Catalyst prunes partitions as in ``read``. With no
+        predicate this is read()."""
         snap = self.current_snapshot()
         if not where:
             return self.read(spark)
-        from .bloom_index import prune_files_by_bloom
-
-        files = self._prune_files_by_predicate(spark, snap.files, where)
-        files = self._prune_files_by_stats(spark, files, where, snapshot=snap)
-        files = prune_files_by_bloom(spark, self, files, where)
-        return self._read_live(spark, snap, files).filter(F.expr(where))
+        return self._read_live(
+            spark, snap, self._plan_files(spark, snap, where)
+        ).filter(F.expr(where))
 
     def metadata_aggregate(
         self,

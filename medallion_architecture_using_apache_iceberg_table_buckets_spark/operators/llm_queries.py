@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..session import local_frame
+from ..session import local_frame, scan_files
 from . import dedup as D
 from . import sampling as SA
 from . import similarity as S
@@ -1506,11 +1506,10 @@ def partition_evolution_scan(spark, sf_dir):
     t.append(e.filter(F.col("event_id") % 2 == 1))
     sigs = {partition_signature(f) for f in t.current_snapshot().files}
     assert ("event_type",) in sigs and ("_p_event_id_bucket",) in sigs, sigs
-    # old identity dirs still prune under the NEW spec
-    pruned = t._prune_files_by_predicate(
-        spark, t.current_snapshot().files, "event_type = 'click'"
-    )
-    assert not any(f.startswith("event_type=error/") for f in pruned)
+    # old identity dirs still prune under the NEW spec: the planned
+    # scan selects no file of another event_type directory
+    pruned = scan_files(t.scan(spark, "event_type = 'click'"))
+    assert not any("/event_type=error/" in f for f in pruned)
     return (
         t.read(spark)
         .groupBy("event_type")

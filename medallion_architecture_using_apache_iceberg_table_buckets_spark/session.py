@@ -123,3 +123,26 @@ def local_frame(
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, struct)
+
+
+def scan_files(df: DataFrame) -> list[str]:
+    """Paths of the data files that the file scans in ``df``'s physical
+    plan select after partition pruning: the files a run reads, which
+    its ``numFiles`` scan metric counts. Plans ``df`` and starts no
+    job; a later run of the same ``df`` reports ``numFiles`` 0."""
+    out, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        p = todo.pop()
+        if p.nodeName() == "AdaptiveSparkPlan":
+            todo.append(p.executedPlan())
+        elif p.getClass().getSimpleName() == "FileSourceScanExec":
+            for d in p.selectedPartitions().partitionDirectories():
+                files = d.files()
+                out += [
+                    files.apply(j).getPath().toString()
+                    for j in range(files.size())
+                ]
+        else:
+            kids = p.children()
+            todo += [kids.apply(i) for i in range(kids.size())]
+    return sorted(out)

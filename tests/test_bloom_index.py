@@ -132,3 +132,46 @@ def test_rebuild_after_compact(spark, tmp_path):
     kept = prune_files_by_bloom(spark, t, files, "k = 'key-000005'")
     assert len(kept) <= len(files)
     assert t.scan(spark, "k = 'key-000005'").count() == 1
+
+
+def test_random_probe_keeps_every_file(spark, tmp_path):
+    # the probe side is drawn once per row at scan time, so no value
+    # drawn while planning may prune
+    t = _table(spark, tmp_path)
+    t.build_bloom_index(spark, ["n"])
+    files = t.current_snapshot().files
+    for _ in range(3):
+        assert prune_files_by_bloom(
+            spark, t, files, "n = CAST(rand() * 6000 AS BIGINT)"
+        ) == files
+
+
+def test_literal_probes_start_no_job(spark, tmp_path, no_jobs):
+    t = _table(spark, tmp_path)
+    t.build_bloom_index(spark, ["k", "n"])
+    files = t.current_snapshot().files
+    with no_jobs("bloom probes"):
+        kept = prune_files_by_bloom(
+            spark, t, files, "n = 7 AND `K` = 'key-000007'"
+        )
+        scan = t.scan(spark, "n = 1234")
+    assert len(kept) < len(files)
+    assert scan.collect() == []
+
+
+def test_promoted_column_is_not_probed(spark, tmp_path):
+    # the index hashed the column as int; after promotion to bigint a
+    # probe hashes as bigint and would miss every indexed value
+    cat = Catalog(tmp_path / "wh")
+    t = cat.create_table(
+        "d", "t", T.StructType([T.StructField("n", T.IntegerType())])
+    )
+    for b in range(4):
+        t.append(
+            spark.createDataFrame(
+                [(b + 4 * i,) for i in range(50)], "n int"
+            ).coalesce(1)
+        )
+    t.build_bloom_index(spark, ["n"])
+    t.promote_column("n", T.LongType())
+    assert [r["n"] for r in t.scan(spark, "n = 5").collect()] == [5]

@@ -153,11 +153,9 @@ def test_one_merge_on_read_form():
     ]
     assert hits == [], f"position deletes are the one MOR form: {hits}"
 
-    # reads are not O(history): read, scan, _read_live and
-    # read_incremental, and every Table method they reach, never list
-    # the snapshots. One reached lookup only runs on request and stays
-    # out of the walk: scan's partition-predicate pruner, which
-    # gathers the identity columns of retained specs
+    # reads are not O(history): read, scan, _read_live,
+    # read_incremental and DELETE/UPDATE discovery (_touched_by), and
+    # every Table method they reach, never list the snapshots
     table = next(
         n for n in ast.parse((root / "lakehouse" / "table.py").read_text()).body
         if isinstance(n, ast.ClassDef) and n.name == "Table"
@@ -165,7 +163,6 @@ def test_one_merge_on_read_form():
     methods = {
         n.name: n for n in table.body if isinstance(n, ast.FunctionDef)
     }
-    on_request = {"_prune_files_by_predicate"}
 
     def self_calls(fn):
         return {
@@ -177,10 +174,12 @@ def test_one_merge_on_read_form():
             and n.func.value.id == "self"
         }
 
-    reached, todo = set(), ["read", "scan", "_read_live", "read_incremental"]
+    reached, todo = set(), [
+        "read", "scan", "_read_live", "read_incremental", "_touched_by"
+    ]
     while todo:
         name = todo.pop()
-        if name in reached or name in on_request or name not in methods:
+        if name in reached or name not in methods:
             continue
         reached.add(name)
         todo.extend(self_calls(methods[name]))

@@ -12,6 +12,9 @@ from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse i
     Catalog,
     merge_into,
 )
+from medallion_architecture_using_apache_iceberg_table_buckets_spark.session import (
+    scan_files,
+)
 
 SCHEMA = T.StructType(
     [
@@ -71,9 +74,10 @@ def test_pruning_stays_conservative_across_specs(spark, tmp_path):
     # predicate on the OLD partition column: old files prune by dir,
     # new files (no dir) are kept and filtered by data
     assert {r["k"] for r in t.scan(spark, "p = 'b'").collect()} == {3, 4}
-    files = t._prune_files_by_predicate(
-        spark, t.current_snapshot().files, "p = 'b'"
-    )
+    files = [
+        f.rsplit("/data/", 1)[1]
+        for f in scan_files(t.scan(spark, "p = 'b'"))
+    ]
     # the p=a old dir pruned away, unpartitioned new files kept
     assert not any(f.startswith("p=a/") for f in files)
     assert any("/" not in f for f in files)

@@ -17,6 +17,9 @@ from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse.t
 from medallion_architecture_using_apache_iceberg_table_buckets_spark.pipeline import (
     build_gold_mart,
 )
+from medallion_architecture_using_apache_iceberg_table_buckets_spark.session import (
+    scan_files,
+)
 
 SCHEMA = T.StructType(
     [T.StructField("k", T.StringType()), T.StructField("v", T.LongType())]
@@ -146,10 +149,17 @@ def test_mor_resolve_with_escaped_partition_keys(spark, tmp_path):
     assert got == {"a:b": 10, "plain": 2}
 
 
+def _dirs(files):
+    """The partition directories (below the table's data root) of the
+    data files a planned scan selects."""
+    return {f.rsplit("/data/", 1)[1].rsplit("/", 1)[0] for f in files}
+
+
 def test_delete_update_partition_pruning(spark, tmp_path):
-    """A partition-scoped DELETE/UPDATE must discover against only the
-    matching partition's files (VERDICT r02 #6): the manifest-side
-    predicate pruning cuts the candidate list before any data read."""
+    """A partition-scoped scan reads only the matching partitions'
+    files, and a partition-scoped DELETE/UPDATE discovers against only
+    those (VERDICT r02 #6): Catalyst prunes identity partitions at the
+    scan, the files its numFiles metric counts (``scan_files``)."""
     cat = Catalog(tmp_path / "wh")
     cat.create_namespace("ns")
     sc = T.StructType(
@@ -167,27 +177,38 @@ def test_delete_update_partition_pruning(spark, tmp_path):
     files = t.current_snapshot().files
     assert len({f.rsplit("/", 1)[0] for f in files}) == 6
 
-    # single-col equality: only error partitions survive pruning
-    pruned = t._prune_files_by_predicate(
-        spark, files, "event_type = 'error' AND v >= 0"
-    )
-    assert pruned and all("event_type=error" in f for f in pruned)
+    def scanned(cond):
+        return _dirs(scan_files(t.scan(spark, cond)))
+
+    # single-col equality: only error partitions are read
+    assert scanned("event_type = 'error' AND v >= 0") == {
+        "event_type=error/day=1", "event_type=error/day=2"
+    }
     # conjunct on both partition cols
-    pruned2 = t._prune_files_by_predicate(
-        spark, files, "event_type = 'error' AND day = 2"
-    )
-    assert pruned2 and all(
-        "event_type=error" in f and "day=2" in f for f in pruned2
-    )
+    assert scanned("event_type = 'error' AND day = 2") == {
+        "event_type=error/day=2"
+    }
     # non-partition-only predicate: nothing pruned
-    assert sorted(
-        t._prune_files_by_predicate(spark, files, "v = 3 OR event_type = 'x'")
-    ) == sorted(files)
-    # IN-list and function-of-partition-col conjuncts evaluate exactly
-    pruned3 = t._prune_files_by_predicate(
-        spark, files, "upper(event_type) IN ('CLICK', 'BUY')"
+    assert scanned("v = 3 OR event_type = 'x'") == _dirs(
+        scan_files(t.read(spark))
     )
-    assert pruned3 and not any("event_type=error" in f for f in pruned3)
+    assert len(scanned("v = 3 OR event_type = 'x'")) == 6
+    # IN-list and function-of-partition-col conjuncts evaluate exactly
+    assert {d.split("/")[0] for d in scanned(
+        "upper(event_type) IN ('CLICK', 'BUY')"
+    )} == {"event_type=click", "event_type=buy"}
+    # a run's numFiles metric counts the same files
+    cond = "event_type = 'error' AND day = 2"
+    assert len(scan_files(t.scan(spark, cond))) == 1
+    df = t.scan(spark, cond)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    assert "PartitionFilters: [isnotnull(event_type" in plan.toString()
+    leaves = plan.collectLeaves()
+    assert sum(
+        leaves.apply(i).metrics().apply("numFiles").value()
+        for i in range(leaves.size())
+    ) == 1
 
     # end-to-end: the delete snapshot only rewrites error files
     t.delete_where(spark, "event_type = 'error' AND v >= 0")
@@ -209,21 +230,34 @@ def test_partition_pruning_null_and_nasty_values(spark, tmp_path):
             [(k, i) for i, k in enumerate(NASTY)] + [(None, 99)], SCHEMA
         )
     )
-    files = t.current_snapshot().files
-    # IS NULL keeps exactly the default partition
-    kept = t._prune_files_by_predicate(spark, files, "k IS NULL")
-    assert kept and all("__HIVE_DEFAULT_PARTITION__" in f for f in kept)
-    # equality on an escaped value resolves through unescaping
-    kept2 = t._prune_files_by_predicate(spark, files, "k = 'c=d'")
-    assert len(kept2) >= 1 and all("__HIVE" not in f for f in kept2)
-    assert {r["v"] for r in
-            t._read_files(spark, kept2, t.schema).collect()} == {3}
-    # null partition cannot satisfy an equality conjunct
-    assert not any("__HIVE" in f for f in kept2)
+    # IS NULL reads exactly the default partition
+    assert _dirs(scan_files(t.scan(spark, "k IS NULL"))) == {
+        "k=__HIVE_DEFAULT_PARTITION__"
+    }
+    # equality on an escaped value resolves through unescaping, and
+    # the null partition cannot satisfy it
+    kept = t.scan(spark, "k = 'c=d'")
+    assert _dirs(scan_files(kept)) == {partition_segment("k", "c=d")}
+    assert {r["v"] for r in kept.collect()} == {3}
     # update through the pruned path stays correct
     t.update_where(spark, {"v": "v + 100"}, "k = 'p%q'")
     got = {r["k"]: r["v"] for r in t.read(spark).collect()}
     assert got["p%q"] == 102 and got["a:b"] == 0
+
+
+def test_nondeterministic_predicate_prunes_no_partition(spark, tmp_path):
+    """``rand() < 0.5`` is drawn per row, never once per partition: a
+    scan under it keeps rows of every partition (each of 8 holds 100
+    rows, so a partition loses all of them with probability 2^-100)."""
+    cat = Catalog(tmp_path / "wh")
+    t = cat.create_table("ns", "t", SCHEMA, partition_by=["k"])
+    t.append(
+        spark.createDataFrame(
+            [(f"p{i % 8}", i) for i in range(800)], SCHEMA
+        )
+    )
+    got = {r["k"] for r in t.scan(spark, "rand() < 0.5").collect()}
+    assert got == {f"p{i}" for i in range(8)}
 
 
 def test_merge_prune_collect_is_capped(spark, tmp_path, monkeypatch):
@@ -284,3 +318,21 @@ def test_hash_distribution_mode_collapses_small_files(spark, tmp_path):
     assert n_files["spread"] > 3  # the explosion the mode exists to prevent
     assert n_files["packed"] == 3  # one file per partition value
     assert n_files["unset"] == 3  # unset means hash on a partitioned table
+
+
+def test_merge_on_read_scan_prunes_partitions(spark, tmp_path):
+    # live position deletes attach each row's file and position to the
+    # read; the scan still prunes the other partitions
+    cat = Catalog(tmp_path / "wh")
+    t = cat.create_table(
+        "ns", "t", SCHEMA, partition_by=["k"],
+        properties={"write.delete.mode": "merge-on-read"},
+    )
+    t.append(spark.createDataFrame([("a", 1), ("b", 2), ("a", 3)], SCHEMA))
+    t.delete_where(spark, "v = 3")
+    assert t.current_snapshot().delete_files
+    kept = t.scan(spark, "k = 'a'")
+    assert {d for d in _dirs(scan_files(kept)) if d.startswith("k=")} == {
+        "k=a"
+    }
+    assert [(r["k"], r["v"]) for r in kept.collect()] == [("a", 1)]

@@ -1159,3 +1159,44 @@ def test_planned_selects_equal_spark_over_the_snapshot(
         got = sess.sql(stmt).collect()
     assert got == [(cow.history_df(spark).count(),)] == [(4,)]
     assert sess.sql(stmt).columns == ["count(1)"]
+
+
+def test_cased_and_qualified_lookups_are_planned(spark, sess, no_jobs):
+    """A column is matched as Spark resolves it: in any case, and
+    qualified or not by the name the statement gives the table. An
+    absent-key lookup in either form reads no file, and every answer
+    equals Spark's over ``Table.read``. A struct field ``s.k`` is not
+    column ``k``: it keeps every file."""
+    schema = "k long, s struct<k: long>"
+    sess.sql("CREATE NAMESPACE qf")
+    sess.sql("USE qf")
+    t = sess.catalog.create_table(
+        "qf", "t", spark.createDataFrame([], schema).schema
+    )
+    for lo in (0, 10, 20):
+        t.append(
+            spark.createDataFrame(
+                [(k, (-k,)) for k in range(lo, lo + 10)], schema
+            ).coalesce(1)
+        )
+    t.read(spark).createOrReplaceTempView("qf_ref")
+
+    def agrees(stmt):
+        ref = stmt.replace("FROM t", "FROM qf_ref t")
+        got = sorted(tuple(r) for r in sess.sql(stmt).collect())
+        assert got == sorted(
+            tuple(r) for r in spark.sql(ref).collect()
+        ), stmt
+        return got
+
+    for stmt in (
+        "SELECT t.k FROM t WHERE t.k = -3",
+        "SELECT * FROM t WHERE K = -3",
+        "SELECT k FROM t WHERE `T`.`K` = -3 AND k >= 0",
+    ):
+        with no_jobs(stmt):
+            assert sess.sql(stmt).collect() == []
+        assert agrees(stmt) == []
+    assert agrees("SELECT t.k FROM t WHERE T.K = 15") == [(15,)]
+    assert agrees("SELECT k FROM t WHERE s.k = -15") == [(15,)]
+    assert agrees("SELECT k FROM t WHERE t.s.k = -25") == [(25,)]
