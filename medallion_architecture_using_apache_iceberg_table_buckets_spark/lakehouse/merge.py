@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .table import Snapshot, Table
+from .table import Snapshot, Table, _sql_ident, _sql_type
 from .transforms import parse_spec, partition_segment
 
 # Upper bound on distinct partition-key values collected for discovery
@@ -54,11 +54,16 @@ def _project_to(df: DataFrame, table: Table) -> DataFrame:
 
     Mirrors the reference behavior where the silver schema excludes
     bronze-only columns (`Op`, `input_file`, ...) — the merge writes
-    only the declared columns (SURVEY.md §7.4).
+    only the declared columns (SURVEY.md §7.4). One ``selectExpr`` of
+    SQL casts: the same Cast per column as ``F.col(c).cast(type)``,
+    without the py4j round trips of building each column and type.
     """
-    schema = table.schema
-    return df.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
+    return df.selectExpr(
+        *[
+            f"CAST({_sql_ident(f.name)} AS {_sql_type(f.dataType)})"
+            f" AS {_sql_ident(f.name)}"
+            for f in table.schema.fields
+        ]
     )
 
 

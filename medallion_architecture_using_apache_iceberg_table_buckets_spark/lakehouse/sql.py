@@ -46,6 +46,8 @@ Statements the manifest already decides start no Spark job:
   files that hold no matching row;
 - ``SELECT COUNT(*) FROM <t>.history`` counts main's snapshot log
   (``Table.main_log``) on the driver;
+- ``SHOW NAMESPACES``/``TABLES``/``VIEWS`` list the catalog as an
+  inline ``VALUES`` table;
 - ``USE``, DDL and the other statements that return nothing return a
   local relation with no columns and no rows.
 
@@ -75,7 +77,7 @@ from ..schema import schema_from_json
 from ..session import local_frame
 from .catalog import Catalog
 from .merge import merge_into
-from .table import _sql_ident, _sql_type, _word_refs
+from .table import _sql_ident, _sql_string, _sql_type, _word_refs
 
 _CREATE_NS = re.compile(
     r"^\s*CREATE\s+NAMESPACE\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s*$", re.I
@@ -418,6 +420,27 @@ class SqlSession:
             self._nothing = local_frame(self.spark, [], T.StructType([]))
         return self._nothing
 
+    def _listing(self, columns: str, rows: list[tuple]) -> DataFrame:
+        """A catalog listing: ``rows`` under ``columns`` (``name type``
+        pairs, each type string or boolean) as one inline ``VALUES``
+        statement, which Catalyst answers as a local relation with no
+        job and no Arrow batch to ship. No rows keep the same schema."""
+        cols = [c.split() for c in columns.split(", ")]
+        proto = tuple(False if t == "boolean" else "" for _, t in cols)
+        body = ", ".join(
+            "(" + ", ".join(
+                ("TRUE" if v else "FALSE") if isinstance(v, bool)
+                else _sql_string(v)
+                for v in row
+            ) + ")"
+            for row in rows or [proto]
+        )
+        return self.spark.sql(
+            f"SELECT * FROM VALUES {body}"
+            f" AS _v({', '.join(_sql_ident(n) for n, _ in cols)})"
+            + ("" if rows else " WHERE FALSE")
+        )
+
     def _bound(self) -> list[str]:
         """Bare names whose temp view this session registered last."""
         return [n for n, who in self._binders.items() if who is self._token]
@@ -642,9 +665,8 @@ class SqlSession:
             self.catalog.create_namespace(self._ns_of(m.group(1)))
             return self._empty()
         if _SHOW_NS.match(s):
-            return local_frame(
-                self.spark, [(ns,) for ns in self.catalog.namespaces()],
-                "namespace string",
+            return self._listing(
+                "namespace string", [(ns,) for ns in self.catalog.namespaces()]
             )
         if m := _USE.match(s):
             ns = self._ns_of(m.group(1))
@@ -658,9 +680,9 @@ class SqlSession:
             ns = self._ns_of(m.group(1)) if m.group(1) else self.namespace
             if ns is None:
                 raise ValueError("SHOW TABLES needs USE <ns> or IN <ns>")
-            return local_frame(
-                self.spark, [(ns, t, False) for t in self.catalog.tables(ns)],
+            return self._listing(
                 "namespace string, tableName string, isTemporary boolean",
+                [(ns, t, False) for t in self.catalog.tables(ns)],
             )
         if m := _DROP_TABLE.match(s):
             ns, name = self._table_of(m.group(2))
@@ -694,9 +716,9 @@ class SqlSession:
             ns = self._ns_of(m.group(1)) if m.group(1) else self.namespace
             if ns is None:
                 raise ValueError("SHOW VIEWS needs USE <ns> or IN <ns>")
-            rows = [(ns, v) for v in sorted(self.catalog.views(ns))]
-            return local_frame(
-                self.spark, rows or [], "namespace string, viewName string"
+            return self._listing(
+                "namespace string, viewName string",
+                [(ns, v) for v in sorted(self.catalog.views(ns))],
             )
         if m := _ALTER.match(s):
             return self._alter_table(m)
@@ -910,9 +932,11 @@ class SqlSession:
         by a statement-private view of the surviving files or, when
         none survives, by an empty relation of the snapshot's schema
         that the optimizer turns into an empty local relation (no
-        position-delete join, no file read, no job). None when no file
-        was pruned, so the kept frame answers as before, or when the
-        statement is not that shape."""
+        position-delete join, no file read, no job). Planning decides
+        integer conjuncts on an integral column on the driver, so a
+        lookup of an absent integer key is this one statement. None
+        when no file was pruned, so the kept frame answers as before,
+        or when the statement is not that shape."""
         sel, tbl, where, grp, asof = m.group(
             "sel", "tbl", "where", "grp", "asof"
         )

@@ -415,11 +415,14 @@ def _file_column_stats(path: Path, schema: T.StructType) -> dict:
     """Per-column [min, max, null_count, num_values] from the Parquet
     FOOTER (no data pages read) for stats-eligible top-level columns.
 
-    Values are serialized as plain strings the engine later try_casts
-    back through the declared column type (``_prune_files_by_stats``),
-    so no hand-rolled comparator can disagree with Spark. Columns with
-    incomplete row-group stats are omitted (conservative: no entry =
-    never skipped on that column)."""
+    Values are serialized as plain strings (``str(int)`` for integral
+    columns). ``_prune_files_by_stats`` compares an integral column's
+    bounds with a plain integer literal in exact driver arithmetic,
+    and try_casts them back through the declared column type in a
+    Spark statement for every typed comparison, so no hand-rolled
+    comparator can disagree with Spark. Columns with incomplete
+    row-group stats are omitted (conservative: no entry = never
+    skipped on that column)."""
     import pyarrow.parquet as pq
 
     eligible = {
@@ -489,6 +492,139 @@ def _file_column_stats(path: Path, schema: T.StructType) -> dict:
     out[":rows:"] = md.num_rows
     out[":stats_version:"] = STATS_VERSION
     return out
+
+
+# bits of each integral type whose bounds the stats step compares on
+# the driver (``_int_range_may_match``)
+_INT_BITS = {
+    T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32, T.LongType: 64
+}
+_LONG_HALF = 1 << 63
+_PLAIN_INT_RE = re.compile(r"-?[0-9]+")
+# a bound Spark's string-to-integer cast reads: an optional sign and
+# digits, with ASCII whitespace around them (it trims more, which only
+# keeps a file here that Spark might drop)
+_BOUND_INT_RE = re.compile(r"\s*([-+]?[0-9]+)\s*", re.A)
+
+
+def _plain_int(lit: str) -> int | None:
+    """The value of a plain integer literal (``-?digits``): Spark types
+    it int, bigint or decimal(38,0), each compared with an integral
+    column exactly, as Python's ``int`` is. None for every other
+    literal, including one past decimal(38,0) (Spark refuses it)."""
+    if not _PLAIN_INT_RE.fullmatch(lit):
+        return None
+    v = int(lit)
+    return v if abs(v) < 10**38 else None
+
+
+def _int_range_may_match(
+    ent: list | None, dtype: T.DataType, op: str, v: int
+) -> bool:
+    """Whether a file whose stats entry for an integral column is
+    ``ent`` may hold a row with ``col <op> v``: exactly the range test
+    ``_prune_by_statement`` asks Spark, under SQL's three-valued logic.
+    No entry, or a recorded bound that ``try_cast`` to ``dtype`` turns
+    NULL (not an integer, or out of the type's range), keeps the file;
+    a NULL bound makes the range test NULL, which drops it, except
+    where Spark folds the comparison to a constant."""
+    if ent is None:
+        return True
+    half = 1 << (_INT_BITS[type(dtype)] - 1)
+    bounds = []
+    for b in ent[:2]:
+        m = _BOUND_INT_RE.fullmatch(b) if isinstance(b, str) else None
+        if b is not None and not (m and -half <= int(m[1]) < half):
+            return True
+        bounds.append(None if b is None else int(m[1]))
+    lo, hi = bounds
+    if op in ("<", "<=", ">", ">=") and not -_LONG_HALF <= v < _LONG_HALF:
+        # Spark's analyzer folds an ordering comparison of an integral
+        # column with a literal past the long range to TRUE or FALSE,
+        # NULL rows included (DecimalPrecision)
+        return (v > 0) == (op in ("<", "<="))
+    if op in ("=", "=="):
+        return lo is not None and hi is not None and lo <= v <= hi
+    if op in ("<", "<="):
+        return lo is not None and (lo < v if op == "<" else lo <= v)
+    if op in (">", ">="):
+        return hi is not None and (hi > v if op == ">" else hi >= v)
+    # != / <> : NOT (lo = v AND hi = v), only an all-constant file drops
+    return (lo is not None and lo != v) or (hi is not None and hi != v)
+
+
+def _prune_by_statement(
+    spark: SparkSession,
+    snap: Snapshot,
+    files: list[str],
+    comparisons: list[tuple[T.StructField, str, str]],
+) -> list[str]:
+    """The files of ``files`` (each with a stats entry in ``snap``)
+    whose recorded range may satisfy every ``(field, op, literal)`` of
+    ``comparisons``, in input order, decided by Spark: one statement
+    filters an inline table of the per-file bounds, try_cast through
+    the declared type, by every conjunct's range test ANDed together,
+    and one collect returns the surviving files. Catalyst evaluates it
+    as a local relation with no job, in a handful of py4j calls
+    whatever the number of files or conjuncts. (An Arrow-built
+    relation takes about 35 calls, which cost twice the time at a few
+    dozen files; the statement text grows with the file count.) A
+    filter Spark cannot evaluate (a literal that fails to cast to its
+    column's type) keeps every file."""
+    cols = list(dict.fromkeys(f for f, _, _ in comparisons))
+    rows = []
+    for i, f in enumerate(files):
+        st = snap.stats[f]
+        row = [str(i)]
+        for col in cols:
+            ent = st.get(col.name)
+            if ent is not None and not _stats_nan_aware(st) and (
+                isinstance(col.dataType, (T.FloatType, T.DoubleType))
+            ):
+                # pre-NaN-aware float bounds may exclude a real
+                # NaN row (NaN orders greatest, so e.g. col > 5
+                # could wrongly skip) — treat as no stats: keep
+                ent = None
+            if ent is None:
+                row += [_sql_string(None)] * 2 + ["FALSE"]
+            else:
+                row += [_sql_string(ent[0]), _sql_string(ent[1]), "TRUE"]
+        rows.append(f"({', '.join(row)})")
+    names = ["_fidx"] + [
+        f"_{kind}_{j}"
+        for j in range(len(cols))
+        for kind in ("min", "max", "has")
+    ]
+    tests = []
+    for col, op, lit in comparisons:
+        j = cols.index(col)
+        dt = col.dataType.simpleString()
+        lo = f"try_cast(_min_{j} AS {dt})"
+        hi = f"try_cast(_max_{j} AS {dt})"
+        v = f"({lit})"
+        inside = f"{lo} <= {v} AND {v} <= {hi}"
+        rng = {
+            "=": inside, "==": inside,
+            "<": f"{lo} < {v}", "<=": f"{lo} <= {v}",
+            ">": f"{hi} > {v}", ">=": f"{hi} >= {v}",
+            # != / <> : only an all-constant file can be skipped
+        }.get(op, f"NOT ({lo} = {v} AND {hi} = {v})")
+        tests.append(
+            f"(NOT _has_{j}"
+            f" OR (_min_{j} IS NOT NULL AND {lo} IS NULL)"
+            f" OR (_max_{j} IS NOT NULL AND {hi} IS NULL)"
+            f" OR ({rng}))"
+        )
+    try:
+        with _quiet_probe():
+            kept = spark.sql(
+                f"SELECT _fidx FROM VALUES {', '.join(rows)}"
+                f" AS _v({', '.join(names)}) WHERE {' AND '.join(tests)}"
+            ).collect()
+    except Exception:
+        return files
+    kept_idx = {r["_fidx"] for r in kept}
+    return [f for i, f in enumerate(files) if i in kept_idx]
 
 
 class MetadataAggregateUnsupported(ValueError):
@@ -1153,7 +1289,11 @@ class Table:
         (``_prune_files_by_stats``), then the bloom step
         (``bloom_index.prune_files_by_bloom``). Both read ``where``
         through ``_literal_comparisons`` and type its literals with
-        ``snap``'s schema. Partitions are not pruned here: the read
+        ``snap``'s schema. The stats step decides an integral column
+        against a plain integer literal on the driver and asks one
+        Spark statement only for the typed conjuncts left, so a
+        lookup by integer key plans with no statement on a table with
+        no bloom index. Partitions are not pruned here: the read
         names each file under its partition directory, so Catalyst
         prunes identity partitions at the scan (``PartitionFilters``)
         and never on a nondeterministic conjunct. ``scan``, DELETE/
@@ -1183,112 +1323,61 @@ class Table:
         file of ``files`` whose range, as ``snapshot``'s manifest
         (default: the current one) records it, cannot contain a
         matching row — before any data file or even footer is opened
-        at scan time.
+        at scan time. Files with no stats entry come first, then the
+        kept files in input order.
 
         This is the Iceberg scan-planning move that matters most at
         100 TB: with millions of files, evaluating predicates against
         manifest stats costs O(#files) driver-side metadata, while
         "let Parquet row-group stats handle it" still opens every
         footer. Conservative: unsupported conjuncts, missing stats, or
-        unparseable values keep the file; comparison semantics are
-        evaluated by Spark itself (try_cast through the declared type),
-        never a hand-rolled comparator. All-null files drop out of
-        comparison conjuncts naturally (NULL range -> NULL predicate ->
-        no match), which is exactly SQL's answer.
+        unparseable values keep the file. All-null files drop out of
+        comparison conjuncts (NULL range -> NULL predicate -> no
+        match), which is exactly SQL's answer.
+
+        Two evaluators, one per conjunct type, with the same rules:
+        a conjunct comparing an integral column with a plain integer
+        literal (``_plain_int``) is exact integer arithmetic on the
+        driver (``_int_range_may_match``): both sides are integers,
+        which Spark also compares exactly after widening. Every other
+        (typed) comparison is evaluated by Spark itself, never a
+        hand-rolled comparator (``_prune_by_statement``), over the
+        files the integer conjuncts kept, so a point lookup on an
+        integer key plans with no Spark statement.
 
         Only a literal side prunes (``_is_literal``): the comparison
         is evaluated once per file at planning time, so ``x < rand()``
         or ``ts < current_timestamp()`` would prune on a value the scan
-        never sees.
-
-        One evaluation: one statement filters an inline table of the
-        per-file bounds by every conjunct's range test ANDed together,
-        and one collect returns the surviving files; Catalyst evaluates
-        it as a local relation with no job, in a handful of py4j calls
-        whatever the number of files or conjuncts. (An Arrow-built
-        relation takes about 35 calls, which cost twice the time at a
-        few dozen files; the statement text grows with the file
-        count.) A filter Spark cannot evaluate (a literal that fails
-        to cast to its column's type) keeps every file."""
+        never sees."""
         snap = self.current_snapshot() if snapshot is None else snapshot
         if not files or not snap.stats:
             return files
-        fields = schema_from_json(snap.schema_json).fields
-        by_name = {f.name: f for f in fields}
-        supported = [
-            (f.name, op, lit)
-            for f, op, lit in _literal_comparisons(
-                condition, fields, qualifier
-            )
-            if isinstance(f.dataType, _STATS_TYPES)
-        ]
-        if not supported:
-            return files
-        cols = list(dict.fromkeys(col for col, _, _ in supported))
-
-        rows, kept_passthrough = [], []
-        for i, f in enumerate(files):
-            st = snap.stats.get(f)
-            if st is None:
-                kept_passthrough.append(f)
+        exact, typed = [], []
+        for f, op, lit in _literal_comparisons(
+            condition, schema_from_json(snap.schema_json).fields, qualifier
+        ):
+            if not isinstance(f.dataType, _STATS_TYPES):
                 continue
-            row = [str(i)]
-            for col in cols:
-                ent = st.get(col)
-                if ent is not None and not _stats_nan_aware(st) and (
-                    isinstance(
-                        by_name[col].dataType, (T.FloatType, T.DoubleType)
-                    )
-                ):
-                    # pre-NaN-aware float bounds may exclude a real
-                    # NaN row (NaN orders greatest, so e.g. col > 5
-                    # could wrongly skip) — treat as no stats: keep
-                    ent = None
-                if ent is None:
-                    row += [_sql_string(None)] * 2 + ["FALSE"]
-                else:
-                    row += [_sql_string(ent[0]), _sql_string(ent[1]), "TRUE"]
-            rows.append(f"({', '.join(row)})")
-        if not rows:
+            v = _plain_int(lit) if type(f.dataType) in _INT_BITS else None
+            if v is None:
+                typed.append((f, op, lit))
+            else:
+                exact.append((f, op, v))
+        if not exact and not typed:
             return files
-
-        names = ["_fidx"] + [
-            f"_{kind}_{j}"
-            for j in range(len(cols))
-            for kind in ("min", "max", "has")
-        ]
-        tests = []
-        for col, op, lit in supported:
-            j = cols.index(col)
-            dt = by_name[col].dataType.simpleString()
-            lo = f"try_cast(_min_{j} AS {dt})"
-            hi = f"try_cast(_max_{j} AS {dt})"
-            v = f"({lit})"
-            inside = f"{lo} <= {v} AND {v} <= {hi}"
-            rng = {
-                "=": inside, "==": inside,
-                "<": f"{lo} < {v}", "<=": f"{lo} <= {v}",
-                ">": f"{hi} > {v}", ">=": f"{hi} >= {v}",
-                # != / <> : only an all-constant file can be skipped
-            }.get(op, f"NOT ({lo} = {v} AND {hi} = {v})")
-            tests.append(
-                f"(NOT _has_{j}"
-                f" OR (_min_{j} IS NOT NULL AND {lo} IS NULL)"
-                f" OR (_max_{j} IS NOT NULL AND {hi} IS NULL)"
-                f" OR ({rng}))"
+        passthrough = [f for f in files if snap.stats.get(f) is None]
+        kept = [
+            f
+            for f in files
+            if (st := snap.stats.get(f)) is not None
+            and all(
+                _int_range_may_match(st.get(c.name), c.dataType, op, v)
+                for c, op, v in exact
             )
-        try:
-            with _quiet_probe():
-                kept = spark.sql(
-                    f"SELECT _fidx FROM VALUES {', '.join(rows)}"
-                    f" AS _v({', '.join(names)}) WHERE {' AND '.join(tests)}"
-                ).collect()
-        except Exception:
-            return files
-        kept_idx = {r["_fidx"] for r in kept}
-        out = list(kept_passthrough)
-        out.extend(f for i, f in enumerate(files) if i in kept_idx)
-        return out
+        ]
+        if typed and kept:
+            kept = _prune_by_statement(spark, snap, kept, typed)
+        return passthrough + kept
 
     def _files_matching(
         self,
@@ -1866,6 +1955,15 @@ class Table:
                 self.POS_FILE_COL,
                 F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
             ).withColumn(self.POS_POS_COL, F.col("_metadata.row_index"))
+        # the file source puts identity partition columns last: restore
+        # the declared order (every file of a group shares its layout)
+        if any(
+            not k.startswith("_p_") for k in partition_signature(files[0])
+        ):
+            order = [f.name for f in schema.fields]
+            if attach_pos:
+                order += [self.POS_FILE_COL, self.POS_POS_COL]
+            df = df.select(*map(_sql_ident, order))
         return df
 
     # ------------------------------------------------------------------

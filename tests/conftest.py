@@ -39,3 +39,23 @@ def no_jobs(spark):
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], label
 
     return check
+
+
+@pytest.fixture()
+def sql_calls(monkeypatch):
+    """``calls = sql_calls()`` starts recording the text of every
+    ``SparkSession.sql`` statement into ``calls``."""
+    from pyspark.sql import SparkSession
+
+    def start() -> list:
+        calls = []
+        real = SparkSession.sql
+
+        def counted(self, *a, **kw):
+            calls.append(a[0] if a else kw.get("sqlQuery"))
+            return real(self, *a, **kw)
+
+        monkeypatch.setattr(SparkSession, "sql", counted)
+        return calls
+
+    return start

@@ -178,3 +178,133 @@ def test_clock_and_column_sides_keep_every_file(spark, tmp_path):
     assert t._prune_files_by_stats(
         spark, all_files, "ts > TIMESTAMP '2001-06-01 00:00:00'"
     ) == [t.current_snapshot().added_files[0]]
+
+
+def _stats_only_table(tmp_path, schema, stats, files):
+    """A table handle and a snapshot that carries only ``stats``: the
+    stats step reads nothing else, so manifests of any shape can be
+    made by hand."""
+    from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse.table import (
+        Snapshot,
+        Table,
+    )
+
+    snap = Snapshot(
+        version=1, snapshot_id=1, parent_id=None, timestamp_ms=0,
+        operation="append", files=files, added_files=files,
+        removed_files=[], schema_json=schema.json(), partition_by=[],
+        properties={}, stats=stats,
+    )
+    return Table(tmp_path / "t"), snap
+
+
+def test_integer_conjuncts_equal_spark_statement(spark, tmp_path):
+    """Both ways: the driver's integer decision and Spark's statement
+    over the same bounds keep the same files, in the same order, over
+    seeded random manifests with negative, zero and long bounds,
+    all-null files, files without stats or without an entry for the
+    column, corrupted bounds, all six operators in both orientations,
+    and literals inside, at and past the bounds and the long range."""
+    import random
+
+    from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse.table import (
+        _STATS_TYPES,
+        _literal_comparisons,
+        _prune_by_statement,
+    )
+
+    schema = T.StructType(
+        [
+            T.StructField("b", T.ByteType()),
+            T.StructField("i", T.IntegerType()),
+            T.StructField("l", T.LongType()),
+            T.StructField("d", T.DoubleType()),
+        ]
+    )
+    big = 2**63
+    limits = {"b": 2**7, "i": 2**31, "l": big}
+    rng = random.Random(20261020)
+
+    def bound_pair(col):
+        half = limits[col]
+        pick = rng.random()
+        if pick < 0.1:
+            return [None, None]  # all-null file
+        if pick < 0.15:
+            return ["12abc", str(rng.randint(0, 50))]
+        if pick < 0.2 and col == "i":
+            return [str(rng.randint(-50, 0)), "99999999999"]
+        if pick < 0.3:
+            return [str(-half), str(half - 1)]
+        lo = rng.choice([-half, -1000, -7, 0, 3, half - 10])
+        lo = max(-half, lo + rng.randint(0, 5))
+        return [str(lo), str(min(half - 1, lo + rng.randint(0, 20)))]
+
+    def reference(snap, files, cond):
+        comps = [
+            c for c in _literal_comparisons(cond, schema.fields)
+            if isinstance(c[0].dataType, _STATS_TYPES)
+        ]
+        if not comps:
+            return files
+        passthrough = [f for f in files if snap.stats.get(f) is None]
+        rest = [f for f in files if snap.stats.get(f) is not None]
+        return passthrough + _prune_by_statement(spark, snap, rest, comps)
+
+    ops = ["=", "!=", "<>", "<", "<=", ">", ">="]
+    checked = 0
+    for _ in range(4):
+        files = [f"f{j:02d}.parquet" for j in range(12)]
+        stats = {}
+        for f in files:
+            if rng.random() < 0.15:
+                continue  # no stats entry at all
+            st = {":rows:": 10, ":stats_version:": 2}
+            for col in ("b", "i", "l"):
+                if rng.random() < 0.9:
+                    st[col] = bound_pair(col) + [0, 10]
+            lo = rng.uniform(-5, 5)
+            st["d"] = [repr(lo), repr(lo + 1.0), 0, 10]
+            stats[f] = st
+        t, snap = _stats_only_table(tmp_path, schema, stats, files)
+        for _ in range(25):
+            col = rng.choice(["b", "i", "l"])
+            ent = next(
+                (st[col] for st in stats.values()
+                 if col in st and st[col][0] not in (None, "12abc")),
+                ["0", "0"],
+            )
+            v = rng.choice([
+                int(ent[0]), int(ent[1]), int(ent[0]) - 1, int(ent[1]) + 1,
+                0, -1, big, -big - 1, 10**20, -(10**20), limits[col],
+            ])
+            op = rng.choice(ops)
+            cond = (
+                f"{col} {op} {v}" if rng.random() < 0.5 else f"{v} {op} {col}"
+            )
+            if rng.random() < 0.3:
+                cond += f" AND d {rng.choice(ops)} {rng.uniform(-6, 6):.3f}"
+            got = t._prune_files_by_stats(spark, files, cond, snapshot=snap)
+            assert got == reference(snap, files, cond), cond
+            checked += 1
+    assert checked == 100
+
+
+def test_integer_lookup_plans_with_no_statement(spark, tmp_path, sql_calls):
+    """``k = -1`` over integral stats is decided on the driver: planning
+    it runs no Spark statement, and a typed conjunct beside it is still
+    one statement, over the files the integer conjunct kept."""
+    t, files = _mk(
+        spark,
+        tmp_path,
+        [[(i, float(i)) for i in range(lo, lo + 10)] for lo in (0, 10, 20)],
+    )
+    snap = t.current_snapshot()
+    calls = sql_calls()
+    assert t._plan_files(spark, snap, "k = -1") == []
+    assert t._plan_files(spark, snap, "k >= 10 AND 20 > k") == files[1]
+    assert calls == []
+    assert t._plan_files(spark, snap, "k >= 10 AND v < 25.0") == (
+        files[1] + files[2]
+    )
+    assert len(calls) == 1

@@ -232,3 +232,51 @@ def test_partitions_metadata_counts_position_deletes(spark, cat):
     assert sc["position_delete_file_count"] == 1
     assert sc["position_delete_record_count"] == 1
     assert rows[(("state", "CT"),)]["position_delete_file_count"] == 0
+
+
+def test_merge_projection_equals_per_column_casts(spark, cat):
+    """MERGE projects its source onto the target schema with one
+    ``selectExpr`` of SQL casts: the schema and rows equal the
+    per-column ``F.col(c).cast(type)`` projection, nested, decimal,
+    temporal and quoted names included, and source-only columns
+    dropped."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from medallion_architecture_using_apache_iceberg_table_buckets_spark.lakehouse.merge import (
+        _project_to,
+    )
+
+    target = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("amt", T.DecimalType(10, 2)),
+            T.StructField("day", T.DateType()),
+            T.StructField("odd name", T.StringType()),
+            T.StructField(
+                "s", T.StructType([T.StructField("a b", T.IntegerType())])
+            ),
+            T.StructField("xs", T.ArrayType(T.LongType())),
+            T.StructField("m", T.MapType(T.StringType(), T.DoubleType())),
+        ]
+    )
+    t = cat.create_table("demo", "proj", target)
+    src = spark.createDataFrame(
+        [
+            (7, "12.345", "2024-02-29", 5, (1,), [1, 2], {"k": 1}, "D"),
+            (None, None, None, None, None, None, None, None),
+        ],
+        "Op_ignored int, amt string, day string, `odd name` int, "
+        "s struct<`a b`: int>, xs array<int>, m map<string, int>, "
+        "id_src string",
+    ).withColumnRenamed("Op_ignored", "id")
+    got = _project_to(src, t)
+    ref = src.select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target.fields]
+    )
+    assert got.schema == ref.schema
+    assert got.collect() == ref.collect()
+    assert got.collect()[0] == (
+        7, Decimal("12.35"), dt.date(2024, 2, 29), "5", (1,), [1, 2],
+        {"k": 1.0},
+    )

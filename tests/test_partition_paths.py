@@ -336,3 +336,30 @@ def test_merge_on_read_scan_prunes_partitions(spark, tmp_path):
         "k=a"
     }
     assert [(r["k"], r["v"]) for r in kept.collect()] == [("a", 1)]
+
+
+def test_partitioned_reads_keep_declared_column_order(spark, tmp_path):
+    # the file source returns partition columns last; every read path
+    # answers in the declared order, attach columns after it
+    cat = Catalog(tmp_path / "wh")
+    t = cat.create_table(
+        "ns", "t", SCHEMA, partition_by=["k"],
+        properties={"write.delete.mode": "merge-on-read"},
+    )
+    t.append(spark.createDataFrame([("a", 1), ("b", 2), ("a", 3)], SCHEMA))
+    assert t.read(spark).columns == ["k", "v"]
+    assert t.scan(spark, "v > 1").columns == ["k", "v"]
+    assert sorted(tuple(r) for r in t.read(spark).collect()) == [
+        ("a", 1), ("a", 3), ("b", 2)
+    ]
+    sess = cat.sql_session(spark, "ns")
+    assert sess.sql("SELECT * FROM t").columns == ["k", "v"]
+    assert sess.sql("SELECT * FROM t WHERE v = 2").collect() == [("b", 2)]
+    t.delete_where(spark, "v = 3")
+    snap = t.current_snapshot()
+    assert t._read_live(spark, snap, keep_pos=True).columns == [
+        "k", "v", t.POS_FILE_COL, t.POS_POS_COL
+    ]
+    assert [tuple(r) for r in t.read(spark).orderBy("v").collect()] == [
+        ("a", 1), ("b", 2)
+    ]

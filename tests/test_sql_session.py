@@ -1200,3 +1200,67 @@ def test_cased_and_qualified_lookups_are_planned(spark, sess, no_jobs):
     assert agrees("SELECT t.k FROM t WHERE T.K = 15") == [(15,)]
     assert agrees("SELECT k FROM t WHERE s.k = -15") == [(15,)]
     assert agrees("SELECT k FROM t WHERE t.s.k = -25") == [(25,)]
+
+
+def test_absent_key_lookup_is_one_statement(spark, sess, sql_calls):
+    """Planning an absent integer key decides its files on the driver,
+    so ``SqlSession.sql`` of the lookup is one ``SparkSession.sql``
+    call: the statement over the empty relation."""
+    sess.sql("CREATE NAMESPACE one")
+    sess.sql("USE one")
+    t = sess.catalog.create_table("one", "t", SCHEMA)
+    for lo in (0, 10):
+        t.append(
+            spark.createDataFrame(
+                [(k, "c", k) for k in range(lo, lo + 10)], SCHEMA
+            ).coalesce(1)
+        )
+    stmt = "SELECT invoiceid, category FROM t WHERE invoiceid = -4"
+    assert sess.sql(stmt).collect() == []  # attaches t once
+    calls = sql_calls()
+    df = sess.sql(stmt)
+    assert len(calls) == 1, calls
+    assert df.collect() == [] and df.columns == ["invoiceid", "category"]
+
+
+def test_catalog_listings_keep_their_schema(spark, sess, no_jobs):
+    """SHOW NAMESPACES / TABLES / VIEWS answer with Spark's column names
+    and types, rows in catalog order, and no job; an empty namespace
+    gives zero rows under the same schema."""
+    sess.sql("CREATE NAMESPACE lst")
+    sess.sql("CREATE NAMESPACE lst_empty")
+    sess.sql("USE lst")
+    for name in ("zeta", "alpha", "mid"):
+        sess.catalog.create_table("lst", name, SCHEMA)
+    sess.sql("CREATE VIEW v2 AS SELECT invoiceid FROM alpha")
+    sess.sql("CREATE VIEW v1 AS SELECT invoiceid FROM zeta")
+
+    def types(df):
+        return [(f.name, f.dataType) for f in df.schema.fields]
+
+    with no_jobs("listings"):
+        ns = sess.sql("SHOW NAMESPACES")
+        assert types(ns) == [("namespace", T.StringType())]
+        assert [r[0] for r in ns.collect()] == sess.catalog.namespaces()
+        tables = sess.sql("SHOW TABLES")
+        assert types(tables) == [
+            ("namespace", T.StringType()),
+            ("tableName", T.StringType()),
+            ("isTemporary", T.BooleanType()),
+        ]
+        assert [tuple(r) for r in tables.collect()] == [
+            ("lst", t, False) for t in sess.catalog.tables("lst")
+        ]
+        views = sess.sql("SHOW VIEWS")
+        assert types(views) == [
+            ("namespace", T.StringType()), ("viewName", T.StringType())
+        ]
+        assert [tuple(r) for r in views.collect()] == [
+            ("lst", "v1"), ("lst", "v2")
+        ]
+        for stmt, full in (
+            ("SHOW TABLES IN lst_empty", tables),
+            ("SHOW VIEWS IN lst_empty", views),
+        ):
+            empty = sess.sql(stmt)
+            assert empty.collect() == [] and empty.schema == full.schema
